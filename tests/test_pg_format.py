@@ -13,6 +13,7 @@ same expected rows (exercising the pandas-UDF plumbing).
 from __future__ import annotations
 
 import datetime
+import os
 import re
 from decimal import Decimal
 
@@ -22,6 +23,20 @@ from greengage_spark.functions.pg_format import dch_tochar, num_tochar
 
 _SQLDIR = "/root/reference/src/test/regress/sql"
 _OUTDIR = "/root/reference/src/test/regress/expected"
+
+
+def _ref_text(path: str) -> str:
+    """A reference regression file's text; "" when the file is absent, so
+    every case parsed from it is empty and ``_cases`` skips the test."""
+    return open(path).read() if os.path.exists(path) else ""
+
+
+def _cases(cases, *texts: str) -> list:
+    """Parametrize list: one skipped param when a source file is absent."""
+    if not all(texts):
+        return [pytest.param(None, id="absent", marks=pytest.mark.skip(
+            reason="reference regress sql/expected file absent"))]
+    return sorted(cases)
 
 
 def _unq(s: str) -> str:
@@ -45,8 +60,8 @@ def _expected_rows(out: str, name: str, skip: set[int] | None = None):
 
 # ----------------------------------------------------------- NUM battery
 
-_NUM_SQL = open(f"{_SQLDIR}/numeric.sql").read()
-_NUM_OUT = open(f"{_OUTDIR}/numeric.out").read()
+_NUM_SQL = _ref_text(f"{_SQLDIR}/numeric.sql")
+_NUM_OUT = _ref_text(f"{_OUTDIR}/numeric.out")
 _NUM_DATA = [
     Decimal(v)
     for _, v in re.findall(
@@ -85,7 +100,7 @@ def test_num_tochar_v_shift(case):
     assert num_tochar(v, tmpl) == exp
 
 
-@pytest.mark.parametrize("name", sorted(_NUM_TEMPLATES))
+@pytest.mark.parametrize("name", _cases(_NUM_TEMPLATES, _NUM_SQL, _NUM_OUT))
 def test_num_tochar_vs_reference(name):
     tmpl = _NUM_TEMPLATES[name]
     exp = _expected_rows(_NUM_OUT, name)
@@ -94,8 +109,8 @@ def test_num_tochar_vs_reference(name):
     assert sorted(got) == sorted(exp), tmpl
 
 
-_I8_SQL = open(f"{_SQLDIR}/int8.sql").read()
-_I8_OUT = open(f"{_OUTDIR}/int8.out").read()
+_I8_SQL = _ref_text(f"{_SQLDIR}/int8.sql")
+_I8_OUT = _ref_text(f"{_OUTDIR}/int8.out")
 _I8_ROWS = [
     (Decimal(123), Decimal(456)),
     (Decimal(123), Decimal(4567890123456789)),
@@ -118,7 +133,7 @@ for _m in re.finditer(
         _I8_QUERIES[_m.group(1)] = (_calls, _neg)
 
 
-@pytest.mark.parametrize("name", sorted(_I8_QUERIES))
+@pytest.mark.parametrize("name", _cases(_I8_QUERIES, _I8_SQL, _I8_OUT))
 def test_num_tochar_int8_vs_reference(name):
     calls, neg = _I8_QUERIES[name]
     exp_lines = _expected_rows(_I8_OUT, name)
@@ -145,13 +160,15 @@ def test_num_tochar_int8_vs_reference(name):
 
 # ----------------------------------------------------------- DCH battery
 
-_TS_SQL = open(f"{_SQLDIR}/timestamp.sql").read()
-_TS_OUT = open(f"{_OUTDIR}/timestamp.out").read()
+_TS_SQL = _ref_text(f"{_SQLDIR}/timestamp.sql")
+_TS_OUT = _ref_text(f"{_OUTDIR}/timestamp.out")
 _MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep",
            "Oct", "Nov", "Dec"]
 
 
 def _ts_values():
+    if not _TS_OUT:
+        return [], set()
     j = _TS_OUT.find("SELECT '' AS \"64\", d1 FROM TIMESTAMP_TBL;")
     end = re.search(r"\(\d+ rows\)", _TS_OUT[j:])
     lines = [
@@ -191,7 +208,7 @@ _TS_TEMPLATES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_TS_TEMPLATES))
+@pytest.mark.parametrize("name", _cases(_TS_TEMPLATES, _TS_SQL, _TS_OUT))
 def test_dch_tochar_vs_reference(name):
     tmpl = _TS_TEMPLATES[name]
     exp = _expected_rows(_TS_OUT, name, skip=_TS_SKIP)
@@ -206,6 +223,9 @@ def test_dch_tochar_vs_reference(name):
 # ------------------------------------------------- end-to-end via Spark
 
 
+@pytest.mark.skipif(
+    not (_NUM_SQL and _NUM_OUT), reason="reference numeric.sql/.out absent"
+)
 def test_tochar_udf_end_to_end(spark):
     """Verbatim reference queries through transpile + Spark (UDF path)."""
     from greengage_spark.dialect.transpiler import pg_sql
@@ -247,7 +267,9 @@ _TONUM_CASES = re.findall(
 
 
 @pytest.mark.parametrize(
-    "case", _TONUM_CASES, ids=[f"{n}:{t}" for n, _, t in _TONUM_CASES]
+    "case",
+    _TONUM_CASES or _cases((), _NUM_SQL, _NUM_OUT),
+    ids=[f"{n}:{t}" for n, _, t in _TONUM_CASES] or None,
 )
 def test_num_tonumber_vs_reference(case):
     from greengage_spark.functions.pg_format import num_tonumber

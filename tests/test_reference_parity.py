@@ -18,6 +18,7 @@ documented equivalent from the same ``--start_equiv`` block.
 
 from __future__ import annotations
 
+import os
 import re
 from datetime import date, timedelta
 from decimal import Decimal
@@ -873,6 +874,38 @@ _TABLES = {
 }
 
 
+# The reference checkout's regression directory.  Files read from it are
+# optional: a case whose source file is absent is skipped with a reason,
+# every case whose SQL is embedded in this module still runs.
+_REGRESS = "/root/reference/src/test/regress"
+_HAVE_STD_DATA = all(
+    os.path.exists(f"{_REGRESS}/data/{f}") for f in ("tenk.data", "onek.data")
+)
+_STD_TABLE = re.compile(r"\b(tenk1|onek)\b", re.I)
+
+
+def _ref_text(path: str) -> str | None:
+    """Text of ``_REGRESS/path``, or None when the file is absent."""
+    full = f"{_REGRESS}/{path}"
+    return open(full).read() if os.path.exists(full) else None
+
+
+def _cases(cases: dict, *sources: str) -> list:
+    """Parametrize list for ``cases``: one skipped param when a source file
+    is absent, and a skip mark on each case over tenk1/onek (loaded from
+    the reference's data files) when those are absent."""
+    missing = [f for f in sources if not os.path.exists(f"{_REGRESS}/{f}")]
+    if missing:
+        return [pytest.param(None, id="absent", marks=pytest.mark.skip(
+            reason=f"reference file {missing[0]} absent"))]
+    no_data = pytest.mark.skip(reason="reference data tenk.data/onek.data absent")
+    return [
+        pytest.param(n, marks=no_data)
+        if not _HAVE_STD_DATA and _STD_TABLE.search(repr(cases[n])) else n
+        for n in sorted(cases)
+    ]
+
+
 @pytest.fixture(scope="module")
 def olap(spark):
     con = duckdb.connect()
@@ -882,7 +915,7 @@ def olap(spark):
     # The reference's own standard fixtures (create_table.sql:37-54, loaded
     # from data/tenk.data and data/onek.data by test_setup): registered
     # straight from the reference's data files, tab-separated, 16 columns.
-    _data_dir = "/root/reference/src/test/regress/data"
+    _data_dir = f"{_REGRESS}/data"
     _tenk_cols = [
         ("unique1", "int"), ("unique2", "int"), ("two", "int"), ("four", "int"),
         ("ten", "int"), ("twenty", "int"), ("hundred", "int"),
@@ -895,6 +928,8 @@ def olap(spark):
         f"'{n}': '{'INTEGER' if t == 'int' else 'VARCHAR'}'" for n, t in _tenk_cols
     ) + "}"
     for view, fname in (("tenk1", "tenk.data"), ("onek", "onek.data")):
+        if not _HAVE_STD_DATA:
+            break
         spark.read.csv(
             f"file:{_data_dir}/{fname}", sep="\t", schema=_spark_schema
         ).createOrReplaceTempView(view)
@@ -1291,13 +1326,13 @@ RECURSIVE_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(GROUP_QUERIES))
+@pytest.mark.parametrize("name", _cases(GROUP_QUERIES))
 def test_reference_group_query(olap, name):
     ref, duck = GROUP_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(WINDOW_QUERIES))
+@pytest.mark.parametrize("name", _cases(WINDOW_QUERIES))
 def test_reference_window_query(olap, name):
     ref, duck = WINDOW_QUERIES[name]
     _check(olap, ref, duck)
@@ -1412,13 +1447,13 @@ NOTIN_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(RECURSIVE_QUERIES))
+@pytest.mark.parametrize("name", _cases(RECURSIVE_QUERIES))
 def test_reference_recursive_query(olap, name):
     ref, duck = RECURSIVE_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(NOTIN_QUERIES))
+@pytest.mark.parametrize("name", _cases(NOTIN_QUERIES))
 def test_reference_notin_query(olap, name):
     ref, duck = NOTIN_QUERIES[name]
     _check(olap, ref, duck)
@@ -1603,7 +1638,7 @@ DQA_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(DQA_QUERIES))
+@pytest.mark.parametrize("name", _cases(DQA_QUERIES))
 def test_reference_dqa_query(olap, name):
     ref, duck = DQA_QUERIES[name]
     _check(olap, ref, duck)
@@ -1696,7 +1731,7 @@ GSETS_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(GSETS_QUERIES))
+@pytest.mark.parametrize("name", _cases(GSETS_QUERIES))
 def test_reference_groupingsets_query(olap, name):
     ref, duck = GSETS_QUERIES[name]
     _check(olap, ref, duck)
@@ -1888,7 +1923,7 @@ CSQ_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(CSQ_QUERIES))
+@pytest.mark.parametrize("name", _cases(CSQ_QUERIES))
 def test_reference_csq_query(olap, name):
     ref, duck = CSQ_QUERIES[name]
     _check(olap, ref, duck)
@@ -1933,7 +1968,7 @@ CSQ_SKIPLEVEL_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(CSQ_SKIPLEVEL_REJECTED))
+@pytest.mark.parametrize("name", _cases(CSQ_SKIPLEVEL_REJECTED))
 def test_reference_csq_skiplevel_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
@@ -1992,7 +2027,7 @@ BFV_OLAP_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_OLAP_QUERIES))
+@pytest.mark.parametrize("name", _cases(BFV_OLAP_QUERIES))
 def test_reference_bfv_olap_query(olap, name):
     ref, duck = BFV_OLAP_QUERIES[name]
     _check(olap, ref, duck)
@@ -2009,7 +2044,7 @@ BFV_OLAP_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_OLAP_REJECTED))
+@pytest.mark.parametrize("name", _cases(BFV_OLAP_REJECTED))
 def test_reference_bfv_olap_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
@@ -2069,7 +2104,7 @@ BFV_SUBQ_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_SUBQ_QUERIES))
+@pytest.mark.parametrize("name", _cases(BFV_SUBQ_QUERIES))
 def test_reference_bfv_subquery_query(olap, name):
     ref, duck = BFV_SUBQ_QUERIES[name]
     _check(olap, ref, duck)
@@ -2106,7 +2141,7 @@ BFV_CTE_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_CTE_QUERIES))
+@pytest.mark.parametrize("name", _cases(BFV_CTE_QUERIES))
 def test_reference_bfv_cte_query(olap, name):
     ref, duck = BFV_CTE_QUERIES[name]
     _check(olap, ref, duck)
@@ -2183,7 +2218,7 @@ BFV_JOINS_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_JOINS_QUERIES))
+@pytest.mark.parametrize("name", _cases(BFV_JOINS_QUERIES))
 def test_reference_bfv_joins_query(olap, name):
     ref, duck = BFV_JOINS_QUERIES[name]
     _check(olap, ref, duck)
@@ -2239,7 +2274,7 @@ BFV_AGG_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_AGG_QUERIES))
+@pytest.mark.parametrize("name", _cases(BFV_AGG_QUERIES))
 def test_reference_bfv_aggregate_query(olap, name):
     ref, duck = BFV_AGG_QUERIES[name]
     _check(olap, ref, duck)
@@ -2259,7 +2294,7 @@ BFV_AGG_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BFV_AGG_REJECTED))
+@pytest.mark.parametrize("name", _cases(BFV_AGG_REJECTED))
 def test_reference_bfv_aggregate_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
@@ -2468,7 +2503,7 @@ PERCENTILE_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(PERCENTILE_QUERIES))
+@pytest.mark.parametrize("name", _cases(PERCENTILE_QUERIES))
 def test_reference_percentile_query(olap, name):
     ref, duck = PERCENTILE_QUERIES[name]
     _check(olap, ref, duck)
@@ -2498,7 +2533,7 @@ PERCENTILE_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(PERCENTILE_REJECTED))
+@pytest.mark.parametrize("name", _cases(PERCENTILE_REJECTED))
 def test_reference_percentile_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
@@ -2607,7 +2642,7 @@ LASJ_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(LASJ_QUERIES))
+@pytest.mark.parametrize("name", _cases(LASJ_QUERIES))
 def test_reference_lasj_query(olap, name):
     ref, duck = LASJ_QUERIES[name]
     _check(olap, ref, duck)
@@ -2712,7 +2747,7 @@ FILTER_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(FILTER_QUERIES))
+@pytest.mark.parametrize("name", _cases(FILTER_QUERIES))
 def test_reference_filter_query(olap, name):
     ref, duck = FILTER_QUERIES[name]
     _check(olap, ref, duck)
@@ -2931,20 +2966,20 @@ DECODE_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(CASE_QUERIES))
+@pytest.mark.parametrize("name", _cases(CASE_QUERIES))
 def test_reference_case_query(olap, name):
     ref, duck = CASE_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(CASE_REJECTED))
+@pytest.mark.parametrize("name", _cases(CASE_REJECTED))
 def test_reference_case_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, CASE_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(DECODE_QUERIES))
+@pytest.mark.parametrize("name", _cases(DECODE_QUERIES))
 def test_reference_decode_query(olap, name):
     ref, duck = DECODE_QUERIES[name]
     _check(olap, ref, duck)
@@ -3008,7 +3043,7 @@ G2_QUERIES["g2_union_mixed"] = (
 )
 
 
-@pytest.mark.parametrize("name", sorted(G2_QUERIES))
+@pytest.mark.parametrize("name", _cases(G2_QUERIES))
 def test_reference_group2_query(olap, name):
     ref, duck = G2_QUERIES[name]
     _check(olap, ref, duck)
@@ -3222,13 +3257,13 @@ UNION_GP_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(QPUI_QUERIES))
+@pytest.mark.parametrize("name", _cases(QPUI_QUERIES))
 def test_reference_qpui_query(olap, name):
     ref, duck = QPUI_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(UNION_GP_QUERIES))
+@pytest.mark.parametrize("name", _cases(UNION_GP_QUERIES))
 def test_reference_union_gp_query(olap, name):
     ref, duck = UNION_GP_QUERIES[name]
     _check(olap, ref, duck)
@@ -3377,7 +3412,7 @@ JOIN_GP_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(JOIN_GP_QUERIES))
+@pytest.mark.parametrize("name", _cases(JOIN_GP_QUERIES))
 def test_reference_join_gp_query(olap, name):
     ref, duck = JOIN_GP_QUERIES[name]
     _check(olap, ref, duck)
@@ -3562,33 +3597,33 @@ DISTINCT_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(HAVING_QUERIES))
+@pytest.mark.parametrize("name", _cases(HAVING_QUERIES))
 def test_reference_having_query(olap, name):
     ref, duck = HAVING_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(HAVING_REJECTED))
+@pytest.mark.parametrize("name", _cases(HAVING_REJECTED))
 def test_reference_having_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, HAVING_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(IMPLICIT_QUERIES))
+@pytest.mark.parametrize("name", _cases(IMPLICIT_QUERIES))
 def test_reference_implicit_query(olap, name):
     ref, duck = IMPLICIT_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(IMPLICIT_REJECTED))
+@pytest.mark.parametrize("name", _cases(IMPLICIT_REJECTED))
 def test_reference_implicit_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, IMPLICIT_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(DISTINCT_QUERIES))
+@pytest.mark.parametrize("name", _cases(DISTINCT_QUERIES))
 def test_reference_distinct_query(olap, name):
     ref, duck = DISTINCT_QUERIES[name]
     _check(olap, ref, duck)
@@ -3972,26 +4007,26 @@ W2B_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(W2_QUERIES))
+@pytest.mark.parametrize("name", _cases(W2_QUERIES))
 def test_reference_window2_query(olap, name):
     ref, duck = W2_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(W2B_QUERIES))
+@pytest.mark.parametrize("name", _cases(W2B_QUERIES))
 def test_reference_window2b_query(olap, name):
     ref, duck = W2B_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(W2B_REJECTED))
+@pytest.mark.parametrize("name", _cases(W2B_REJECTED))
 def test_reference_window2b_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, W2B_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(LIMIT_QUERIES))
+@pytest.mark.parametrize("name", _cases(LIMIT_QUERIES))
 def test_reference_limit_query(olap, name):
     ref, duck = LIMIT_QUERIES[name]
     _check(olap, ref, duck)
@@ -4084,7 +4119,7 @@ AGG2_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(AGG2_QUERIES))
+@pytest.mark.parametrize("name", _cases(AGG2_QUERIES))
 def test_reference_agg2_query(olap, name):
     ref, duck = AGG2_QUERIES[name]
     _check(olap, ref, duck)
@@ -4193,7 +4228,7 @@ TS_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(TS_QUERIES))
+@pytest.mark.parametrize("name", _cases(TS_QUERIES))
 def test_reference_timeseries_query(olap, name):
     ref, duck = TS_QUERIES[name]
     _check(olap, ref, duck)
@@ -4474,7 +4509,7 @@ for _k, _expr in enumerate(_LIKE_CASES):
     STR_QUERIES[f"st_like_{_k:02d}"] = (f"SELECT {_expr} AS r", None)
 
 
-@pytest.mark.parametrize("name", sorted(STR_QUERIES))
+@pytest.mark.parametrize("name", _cases(STR_QUERIES))
 def test_reference_strings_query(olap, name):
     ref, duck = STR_QUERIES[name]
     _check(olap, ref, duck)
@@ -4608,7 +4643,7 @@ SUBSEL_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(SUBSEL_QUERIES))
+@pytest.mark.parametrize("name", _cases(SUBSEL_QUERIES))
 def test_reference_subselect_query(olap, name):
     ref, duck = SUBSEL_QUERIES[name]
     _check(olap, ref, duck)
@@ -4860,7 +4895,7 @@ QPSEL_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(QPSEL_QUERIES))
+@pytest.mark.parametrize("name", _cases(QPSEL_QUERIES))
 def test_reference_qp_select_query(olap, name):
     ref, duck = QPSEL_QUERIES[name]
     _check(olap, ref, duck)
@@ -4962,52 +4997,52 @@ BOOL_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(BOOL_QUERIES))
+@pytest.mark.parametrize("name", _cases(BOOL_QUERIES))
 def test_reference_boolean_query(olap, name):
     ref, duck = BOOL_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(BOOL_REJECTED))
+@pytest.mark.parametrize("name", _cases(BOOL_REJECTED))
 def test_reference_boolean_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, BOOL_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(QPSUB_QUERIES))
+@pytest.mark.parametrize("name", _cases(QPSUB_QUERIES))
 def test_reference_qp_subquery_query(olap, name):
     ref, duck = QPSUB_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(QPSUB_REJECTED))
+@pytest.mark.parametrize("name", _cases(QPSUB_REJECTED))
 def test_reference_qp_subquery_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, QPSUB_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(AGG3_QUERIES))
+@pytest.mark.parametrize("name", _cases(AGG3_QUERIES))
 def test_reference_agg3_query(olap, name):
     ref, duck = AGG3_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(AGG3_REJECTED))
+@pytest.mark.parametrize("name", _cases(AGG3_REJECTED))
 def test_reference_agg3_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
         pg_sql(spark, AGG3_REJECTED[name]).collect()
 
 
-@pytest.mark.parametrize("name", sorted(WITH_QUERIES))
+@pytest.mark.parametrize("name", _cases(WITH_QUERIES))
 def test_reference_with_query(olap, name):
     ref, duck = WITH_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(WITH_REJECTED))
+@pytest.mark.parametrize("name", _cases(WITH_REJECTED))
 def test_reference_with_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
@@ -5131,13 +5166,13 @@ DATE_REJECTED = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(DATE_QUERIES))
+@pytest.mark.parametrize("name", _cases(DATE_QUERIES))
 def test_reference_date_query(olap, name):
     ref, duck = DATE_QUERIES[name]
     _check(olap, ref, duck)
 
 
-@pytest.mark.parametrize("name", sorted(DATE_REJECTED))
+@pytest.mark.parametrize("name", _cases(DATE_REJECTED))
 def test_reference_date_rejected(olap, name):
     spark, _ = olap
     with pytest.raises(Exception):
@@ -5161,7 +5196,6 @@ def test_reference_date_rejected(olap, name):
 
 from greengage_spark.dialect.transpiler import duck_grouping_sql  # noqa: E402
 
-_REGRESS_SQL = "/root/reference/src/test/regress/sql"
 
 
 def _load_ref_selects(fname: str) -> list[tuple[str, bool]]:
@@ -5169,10 +5203,10 @@ def _load_ref_selects(fname: str) -> list[tuple[str, bool]]:
     .out ends in ERROR (PG raises division-by-zero on float 0 divisors —
     Spark's ANSI mode matches; DuckDB would return NULL) is checked as a
     must-raise instead of against the oracle."""
-    text = open(f"{_REGRESS_SQL}/{fname}").read()
-    out = open(
-        f"{_REGRESS_SQL.replace('/sql', '/expected')}/{fname[:-4]}.out"
-    ).read()
+    text = _ref_text(f"sql/{fname}")
+    out = _ref_text(f"expected/{fname[:-4]}.out")
+    if text is None or out is None:
+        return []
     text = re.sub(r"(?s)-- start_ignore.*?-- end_ignore", "", text)
     text = re.sub(r"--[^\n]*", "", text)
     pairs = []
@@ -5224,12 +5258,12 @@ def _check_or_error(olap, pair):
     _check(olap, q, duck_grouping_sql(q))
 
 
-@pytest.mark.parametrize("name", sorted(MDQA_QUERIES))
+@pytest.mark.parametrize("name", _cases(MDQA_QUERIES, "sql/qp_olap_mdqa.sql", "expected/qp_olap_mdqa.out"))
 def test_reference_mdqa_query(olap_tochar, name):
     _check_or_error(olap_tochar, MDQA_QUERIES[name])
 
 
-@pytest.mark.parametrize("name", sorted(OLAP_GROUPID_QUERIES))
+@pytest.mark.parametrize("name", _cases(OLAP_GROUPID_QUERIES, "sql/qp_olap_group.sql", "expected/qp_olap_group.out"))
 def test_reference_olap_groupid_query(olap_tochar, name):
     _check_or_error(olap_tochar, OLAP_GROUPID_QUERIES[name])
 
@@ -5265,10 +5299,10 @@ _INT_TBLS = {
 
 
 def _load_out_driven(fname: str, stop_at_mutation: bool = False) -> dict:
-    sql = open(f"{_REGRESS_SQL}/{fname}").read()
-    out = open(
-        f"{_REGRESS_SQL.replace('/sql', '/expected')}/{fname[:-4]}.out"
-    ).read()
+    sql = _ref_text(f"sql/{fname}")
+    out = _ref_text(f"expected/{fname[:-4]}.out")
+    if sql is None or out is None:
+        return {}
     sql = re.sub(r"--[^\n]*", "", sql)
     cases = {}
     n = 0
@@ -5394,12 +5428,12 @@ INT8_CASES = _load_out_driven("int8.sql")
 FLOAT8_CASES = _load_out_driven("float8.sql", stop_at_mutation=True)
 
 
-@pytest.mark.parametrize("name", sorted(INT4_CASES))
+@pytest.mark.parametrize("name", _cases(INT4_CASES, "sql/int4.sql", "expected/int4.out"))
 def test_reference_int4_query(int_tbls, name):
     _run_out_driven(int_tbls, *INT4_CASES[name])
 
 
-@pytest.mark.parametrize("name", sorted(INT8_CASES))
+@pytest.mark.parametrize("name", _cases(INT8_CASES, "sql/int8.sql", "expected/int8.out"))
 def test_reference_int8_query(int_tbls, name):
     _run_out_driven(int_tbls, *INT8_CASES[name])
 
@@ -5416,7 +5450,7 @@ def float8_tbl(spark):
     spark.catalog.dropTempView("FLOAT8_TBL")
 
 
-@pytest.mark.parametrize("name", sorted(FLOAT8_CASES))
+@pytest.mark.parametrize("name", _cases(FLOAT8_CASES, "sql/float8.sql", "expected/float8.out"))
 def test_reference_float8_query(float8_tbl, name):
     stmt, rows = FLOAT8_CASES[name]
     _run_out_driven(float8_tbl, stmt, rows, int_division=False)
@@ -5436,8 +5470,10 @@ def test_reference_float8_query(float8_tbl, name):
 def test_reference_update_script(spark, tmp_path):
     from greengage_spark.engine import GreengageEngine
 
-    sql = open(f"{_REGRESS_SQL}/update.sql").read()
-    out = open(f"{_REGRESS_SQL.replace('/sql', '/expected')}/update.out").read()
+    sql = _ref_text("sql/update.sql")
+    out = _ref_text("expected/update.out")
+    if sql is None or out is None:
+        pytest.skip("reference file sql/update.sql or expected/update.out absent")
     sql = re.sub(r"--[^\n]*", "", sql)
     eng = GreengageEngine(spark, str(tmp_path / "upd_wh"))
     cursor = 0
@@ -5492,8 +5528,10 @@ def test_reference_insert_script(spark, tmp_path):
     subqueries, TOASTed values — against the expected .out."""
     from greengage_spark.engine import GreengageEngine
 
-    sql = open(f"{_REGRESS_SQL}/insert.sql").read()
-    out = open(f"{_REGRESS_SQL.replace('/sql', '/expected')}/insert.out").read()
+    sql = _ref_text("sql/insert.sql")
+    out = _ref_text("expected/insert.out")
+    if sql is None or out is None:
+        pytest.skip("reference file sql/insert.sql or expected/insert.out absent")
     sql = re.sub(r"--[^\n]*", "", sql)
     eng = GreengageEngine(spark, str(tmp_path / "ins_wh"))
     cursor = 0
@@ -5737,7 +5775,7 @@ ARRAYS_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(ARRAYS_QUERIES))
+@pytest.mark.parametrize("name", _cases(ARRAYS_QUERIES))
 def test_reference_arrays_query(olap, name):
     ref, duck = ARRAYS_QUERIES[name]
     _check(olap, ref, duck)
@@ -5789,7 +5827,7 @@ HOROLOGY_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(HOROLOGY_QUERIES))
+@pytest.mark.parametrize("name", _cases(HOROLOGY_QUERIES))
 def test_reference_horology_query(olap, name):
     ref, duck = HOROLOGY_QUERIES[name]
     _check(olap, ref, duck)
