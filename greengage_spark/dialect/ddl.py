@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from greengage_spark.dialect.spans import close_of, split_top_level
+
 # ---------------- type mapping (SURVEY §1.2, pg_type.h) ----------------
 
 _TYPE_MAP = {
@@ -208,50 +210,6 @@ _CREATE_RE = re.compile(
 )
 
 
-def _matching_paren(s: str, open_idx: int) -> int:
-    depth = 0
-    in_str = False
-    for i in range(open_idx, len(s)):
-        ch = s[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parentheses in DDL")
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    parts, depth, cur, in_str = [], 0, [], False
-    for ch in s:
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return [p for p in parts if p]
-
-
 _CONSTRAINT_START = re.compile(
     r"^(primary\s+key|unique|check|foreign\s+key|constraint|exclude)\b", re.IGNORECASE
 )
@@ -291,18 +249,18 @@ def parse_create_table(ddl: str) -> TableDef:
         raise ValueError("not a CREATE TABLE statement")
     name = m.group("name").strip('"')
     open_idx = ddl.index("(", m.start("name"))
-    close_idx = _matching_paren(ddl, open_idx)
+    close_idx = close_of(ddl, open_idx)
     body = ddl[open_idx + 1 : close_idx]
     tail = ddl[close_idx + 1 :]
 
-    columns = [c for c in map(_parse_column, _split_top_level(body)) if c is not None]
+    columns = [c for c in map(_parse_column, split_top_level(body)) if c is not None]
     td = TableDef(name=name, columns=columns)
 
     mw = re.search(r"\bwith\s*\(", tail, re.IGNORECASE)
     if mw:
         w_open = tail.index("(", mw.start())
-        w_close = _matching_paren(tail, w_open)
-        for opt in _split_top_level(tail[w_open + 1 : w_close]):
+        w_close = close_of(tail, w_open)
+        for opt in split_top_level(tail[w_open + 1 : w_close]):
             k, _, v = opt.partition("=")
             td.storage_options[k.strip().lower()] = v.strip().lower()
 
@@ -317,18 +275,18 @@ def parse_create_table(ddl: str) -> TableDef:
             td.distribution = "replicated"
         else:
             d_open = tail.index("(", md.start())
-            d_close = _matching_paren(tail, d_open)
+            d_close = close_of(tail, d_open)
             td.distribution = "hash"
             td.dist_keys = tuple(
                 k.strip().strip('"')
-                for k in _split_top_level(tail[d_open + 1 : d_close])
+                for k in split_top_level(tail[d_open + 1 : d_close])
             )
 
     mp = re.search(r"\bpartition\s+by\s+(range|list)\s*\(", tail, re.IGNORECASE)
     if mp:
         td.partition_kind = mp.group(1).lower()
         p_open = tail.index("(", mp.start())
-        p_close = _matching_paren(tail, p_open)
+        p_close = close_of(tail, p_open)
         td.partition_col = tail[p_open + 1 : p_close].strip().strip('"')
         pos = p_close + 1
         # SUBPARTITION BY kind (col) [SUBPARTITION TEMPLATE (...)], repeated
@@ -341,7 +299,7 @@ def parse_create_table(ddl: str) -> TableDef:
             if not msb:
                 break
             sb_open = pos + msb.end() - 1
-            sb_close = _matching_paren(tail, sb_open)
+            sb_close = close_of(tail, sb_open)
             sub_kind = msb.group(1).lower()
             sub_col = tail[sb_open + 1 : sb_close].strip().strip('"')
             if "," in sub_col:
@@ -353,7 +311,7 @@ def parse_create_table(ddl: str) -> TableDef:
             mt = re.match(r"(?is)\s*subpartition\s+template\s*\(", tail[pos:])
             if mt:
                 t_open = pos + mt.end() - 1
-                t_close = _matching_paren(tail, t_open)
+                t_close = close_of(tail, t_open)
                 template_raw = tail[t_open : t_close + 1]
                 pos = t_close + 1
             td.subpartitions.append((sub_kind, sub_col, template_raw))
@@ -362,7 +320,7 @@ def parse_create_table(ddl: str) -> TableDef:
         ms = re.search(r"\(", tail[pos:])
         if ms:
             s_open = pos + ms.start()
-            td.partition_spec_raw = tail[s_open : _matching_paren(tail, s_open) + 1]
+            td.partition_spec_raw = tail[s_open : close_of(tail, s_open) + 1]
             if td.subpartitions and re.search(
                 r"(?is)\bsubpartition\b", td.partition_spec_raw
             ):

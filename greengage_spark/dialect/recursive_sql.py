@@ -24,6 +24,7 @@ from __future__ import annotations
 import re
 
 from greengage_spark.dialect import transpiler as _t
+from greengage_spark.dialect.spans import close_of, find_top_level
 
 _RECURSIVE_RE = re.compile(r"(?is)^\s*with\s+recursive\b")
 _NAME_RE = re.compile(r"\s*([A-Za-z_]\w*)")
@@ -59,7 +60,7 @@ def _parse(sql: str, head_re=None):
         rest = sql[i:].lstrip()
         i = len(sql) - len(rest)
         if rest.startswith("("):
-            j = _t._scan_matching(sql, i)
+            j = close_of(sql, i)
             cols = [c.strip() for c in sql[i + 1 : j].split(",")]
             i = j + 1
         m3 = _AS_RE.match(sql, i)
@@ -68,7 +69,7 @@ def _parse(sql: str, head_re=None):
         i = m3.end()
         if sql[i] != "(":
             raise ValueError(f"expected ( after AS at: {sql[i:i+40]!r}")
-        j = _t._scan_matching(sql, i)
+        j = close_of(sql, i)
         ctes.append((name, cols, sql[i + 1 : j]))
         i = j + 1
         rest = sql[i:].lstrip()
@@ -93,7 +94,7 @@ def _split_union(body: str):
     True when separator k (between term k and k+1) is UNION ALL."""
     terms, flags, pos = [], [], 0
     while True:
-        u = _t._find_top_level(body, "union", pos)
+        u = find_top_level(body, "union", pos)
         if u < 0:
             terms.append(body[pos:])
             return terms, flags

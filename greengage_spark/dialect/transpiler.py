@@ -17,8 +17,20 @@ accepts (src/backend/parser/gram.y) into Spark SQL:
 ILIKE, ||, BETWEEN SYMMETRIC-less forms, EXTRACT, INTERVAL literals and
 LATERAL pass through — Spark SQL parses them natively.
 
-The tokenizer understands PG string literals (''-escaped, E''), quoted
-identifiers, comments and numbers, so rewrites never fire inside strings.
+Lexing and span helpers live in ``dialect/spans.py``: its tokenizer
+understands PG string literals (''-escaped, E''), quoted identifiers,
+comments and numbers, so rewrites never fire inside strings, and its
+bracket matchers, depth-0 splitter and iterator, operand spans and
+call-site rewriter are the only copies the passes use.
+
+Pass-order contract: ``transpile()`` runs three string-level rewrites
+(DISTINCT ON, FROM generate_series, bit literals), then the token passes
+in the fixed order written there.  Each pass takes and returns the full
+token list and may rely on the passes before it — e.g. CAST typenames
+map before ``::`` casts emit Spark type tokens, geometry runs before the
+json arrows, and quoted identifiers and ''-literals are re-spelled for
+Spark last.  A new pass goes where its input forms still exist and its
+output cannot be re-read by a later pass.
 """
 
 from __future__ import annotations
@@ -26,40 +38,23 @@ from __future__ import annotations
 import re
 
 from greengage_spark.dialect.datetime_patterns import pg_pattern_to_java
-
-# ---------------------------------------------------------------- tokenizer
-
-_TOKEN_RE = re.compile(
-    r"""
-      (?P<string>   [Ee]'(?:[^'\\]|\\.|'')*' | '(?:[^']|'')*' )
-    | (?P<qident>   "[^"]*" )
-    | (?P<comment>  --[^\n]* | /\*.*?\*/ )
-    | (?P<number>   \d+\.\d*([Ee][+-]?\d+)? | \.\d+([Ee][+-]?\d+)? | \d+([Ee][+-]?\d+)? )
-    | (?P<ident>    [A-Za-z_][A-Za-z0-9_$]* )
-    | (?P<op>       ::|->>|->|\#>>|\#>|!~\*|!~|~\*|\|\|/|\|/|\|\||<=|>=|<>|!=|=>|<<|>> )
-    | (?P<ws>       \s+ )
-    | (?P<other>    . )
-    """,
-    re.VERBOSE | re.DOTALL,
+from greengage_spark.dialect.spans import (
+    CLOSE,
+    NON_FUNC_KEYWORDS,
+    close_of,
+    find_top_level,
+    is_ident,
+    is_string,
+    join_tokens,
+    match_close,
+    match_open,
+    operand_end,
+    operand_start,
+    rewrite_calls,
+    split_top,
+    tokenize,
+    top_level,
 )
-
-
-def tokenize(sql: str) -> list[str]:
-    toks: list[str] = []
-    for m in _TOKEN_RE.finditer(sql):
-        if m.lastgroup in ("ws", "comment"):
-            continue
-        toks.append(m.group(0))
-    return toks
-
-
-def _is_string(t: str) -> bool:
-    return t.endswith("'") and (t.startswith("'") or t[:1] in "eE" and t[1:2] == "'")
-
-
-def _is_ident(t: str) -> bool:
-    return bool(re.match(r'^[A-Za-z_"]', t)) and not _is_string(t)
-
 
 _ESTRING_ESCAPES = {
     "b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t",
@@ -134,69 +129,39 @@ def _pass_estrings(toks: list[str]) -> list[str]:
 
 
 def _count_capture_groups(pat: str) -> int:
-    """Count CAPTURING groups in a regex: unescaped ``(`` not followed by
-    ``?`` and not inside a bracket expression.  Escaped ``\\(`` and
-    non-capturing ``(?:`` / lookaround groups do not count (PG regexp.c
-    pg_regcomp re_nsub semantics)."""
+    """Count CAPTURING groups in a regex (PG regexp.c re_nsub): an
+    unescaped ``(`` not followed by ``?`` and outside every bracket
+    expression.  In a bracket expression a ``]`` right after ``[`` or
+    ``[^`` is literal, and ``[:class:]`` / ``[.coll.]`` / ``[=equiv=]``
+    items nest (regc_lex.c brackets)."""
     n, i = 0, 0
     while i < len(pat):
         c = pat[i]
         if c == "\\":
             i += 2
             continue
-        if c == "[":  # bracket expression — '(' inside is literal
+        if c == "[":
             i += 1
-            if i < len(pat) and pat[i] == "^":
+            if pat.startswith("^", i):
                 i += 1
-            if i < len(pat) and pat[i] == "]":
+            if pat.startswith("]", i):
                 i += 1
             while i < len(pat) and pat[i] != "]":
+                if pat[i] == "\\":
+                    i += 1
+                elif pat[i] == "[" and pat[i + 1 : i + 2] in (":", ".", "="):
+                    end = pat.find(pat[i + 1] + "]", i + 2)
+                    if end >= 0:
+                        i = end + 1
                 i += 1
-        elif c == "(":
-            if not (i + 1 < len(pat) and pat[i + 1] == "?"):
-                n += 1
+        elif c == "(" and not pat.startswith("?", i + 1):
+            n += 1
         i += 1
     return n
 
 
 def _is_operand_end(t: str) -> bool:
-    return t == ")" or t == "]" or _is_ident(t) or _is_string(t) or re.match(r"^[\d.]", t)
-
-
-# ------------------------------------------------------------- operand span
-
-# Keywords that can directly precede a parenthesized expression — never the
-# function name of a call (SELECT (a+b)::int, WHERE (x)~'p', ...).
-_NON_FUNC_KEYWORDS = {
-    "select", "from", "where", "and", "or", "not", "on", "as", "in", "is",
-    "by", "having", "when", "then", "else", "case", "end", "join", "union",
-    "all", "distinct", "between", "like", "ilike", "exists", "values",
-    "group", "order", "limit", "offset", "over", "partition", "interval",
-    "set", "returning",
-}
-
-
-def _operand_start(toks: list[str], end: int) -> int:
-    """Index of the first token of the operand that ends at toks[end]."""
-    i = end
-    if toks[i] in (")", "]"):
-        opener = "(" if toks[i] == ")" else "["
-        depth = 0
-        while i >= 0:
-            if toks[i] in (")", "]"):
-                depth += 1
-            elif toks[i] in ("(", "["):
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
-        # include a function name / array base before the paren
-        if i > 0 and _is_ident(toks[i - 1]) and toks[i - 1].lower() not in _NON_FUNC_KEYWORDS:
-            i -= 1
-    # qualified names: a.b.c
-    while i >= 2 and toks[i - 1] == "." and _is_ident(toks[i - 2]):
-        i -= 2
-    return i
+    return t == ")" or t == "]" or is_ident(t) or is_string(t) or re.match(r"^[\d.]", t)
 
 
 # ------------------------------------------------------------------- passes
@@ -241,32 +206,27 @@ def _pass_cast_typenames(toks: list[str]) -> list[str]:
     (length dropped), double precision → DOUBLE."""
     i = 0
     while i + 1 < len(toks):
-        if not (_is_ident(toks[i]) and toks[i].lower() == "cast" and toks[i + 1] == "("):
+        if not (is_ident(toks[i]) and toks[i].lower() == "cast" and toks[i + 1] == "("):
             i += 1
             continue
-        close = _args_span(toks, i + 1)
+        close = match_close(toks, i + 1)
         # the type name follows the LAST depth-1 AS inside the parens
-        depth, as_idx = 0, None
-        for j in range(i + 2, close):
-            t = toks[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_ident(t) and t.lower() == "as":
+        as_idx = None
+        for j, t in top_level(toks, i + 2):
+            if is_ident(t) and t.lower() == "as":
                 as_idx = j
         if as_idx is None:
             i += 1
             continue
         k = as_idx + 1
-        tname = toks[k].lower() if k < close and _is_ident(toks[k]) else None
+        tname = toks[k].lower() if k < close and is_ident(toks[k]) else None
         mapped = _TYPE_MAP.get(tname) if tname else None
         if tname == "double" and k + 1 < close and toks[k + 1].lower() == "precision":
             toks[k : k + 2] = ["DOUBLE"]
         elif mapped:
             end = k
             if end + 1 < close and toks[end + 1] == "(":
-                pclose = _args_span(toks, end + 1)
+                pclose = match_close(toks, end + 1)
                 if tname in _PARAMETERIZED:
                     mapped = "DECIMAL" + "".join(toks[end + 1 : pclose + 1])
                 end = pclose
@@ -287,6 +247,38 @@ _SEG_OPS = (
 )
 
 
+def _marker_binops(toks: list[str], marker: str, ops, kernel: str) -> list[str]:
+    """``marker(a) <glyph> marker(b)`` → ``kernel_<name>(a, b)``, or
+    ``(kernel_cmp(a, b) <op> 0)`` for the ordering glyphs of ``ops``;
+    rescans from the start after each rewrite."""
+    i = 0
+    while i < len(toks):
+        if toks[i] != marker:
+            i += 1
+            continue
+        lclose = match_close(toks, i + 1)
+        for glyph, name, cmpop in ops:
+            j = lclose + 1
+            k = j + len(glyph)
+            if tuple(toks[j:k]) != glyph or toks[k : k + 1] != [marker]:
+                continue
+            rclose = match_close(toks, k + 1)
+            left, right = toks[i + 2 : lclose], toks[k + 2 : rclose]
+            if name is not None:
+                expr = [f"{kernel}_{name}", "("] + left + [","] + right + [")"]
+            else:
+                expr = (
+                    ["(", f"{kernel}_cmp", "("] + left + [","] + right
+                    + [")", cmpop if cmpop != "<>" else "!=", "0", ")"]
+                )
+            toks = toks[:i] + expr + toks[rclose + 1 :]
+            i = 0
+            break
+        else:
+            i += 1
+    return toks
+
+
 def _pass_seg(toks: list[str]) -> list[str]:
     """contrib/seg (seg.c, segparse.y): ``expr::seg`` canonicalizes the
     interval text (plan time for literals — input errors surface like
@@ -295,7 +287,7 @@ def _pass_seg(toks: list[str]) -> list[str]:
     canonical string is both the stored value and the display form, so
     no output wrapping is needed.  seg_size/center/upper/lower lower
     to their kernels."""
-    if not any(_is_ident(t) and t.lower() == "seg" for t in toks):
+    if not any(is_ident(t) and t.lower() == "seg" for t in toks):
         return toks
     changed = True
     while changed:
@@ -303,9 +295,9 @@ def _pass_seg(toks: list[str]) -> list[str]:
         for i in range(len(toks) - 1):
             if toks[i] != "::" or toks[i + 1].lower() != "seg":
                 continue
-            start = _operand_start(toks, i - 1)
+            start = operand_start(toks, i - 1)
             operand = toks[start:i]
-            if len(operand) == 1 and _is_string(operand[0]):
+            if len(operand) == 1 and is_string(operand[0]):
                 from greengage_spark.functions.seg import canonical
 
                 v = canonical(operand[0][1:-1].replace("''", "'"))
@@ -321,71 +313,21 @@ def _pass_seg(toks: list[str]) -> list[str]:
             changed = True
             break
     # binary operators between two seg markers
-    changed = True
-    while changed:
-        changed = False
-        i = 0
-        while i < len(toks):
-            if toks[i] != "__gg_seg":
-                i += 1
-                continue
-            lclose = _args_span(toks, i + 1)
-            for glyph, name, cmpop in _SEG_OPS:
-                g = list(glyph)
-                j = lclose + 1
-                if toks[j : j + len(g)] != g:
-                    continue
-                k = j + len(g)
-                if k >= len(toks) or toks[k] != "__gg_seg":
-                    continue
-                rclose = _args_span(toks, k + 1)
-                left = toks[i + 2 : lclose]
-                right = toks[k + 2 : rclose]
-                if name is not None:
-                    expr = (
-                        [f"pg_seg_{name}", "("] + left + [","]
-                        + right + [")"]
-                    )
-                else:
-                    expr = (
-                        ["(", "pg_seg_cmp", "("] + left + [","] + right
-                        + [")", cmpop if cmpop != "<>" else "!=", "0", ")"]
-                    )
-                toks = toks[:i] + expr + toks[rclose + 1 :]
-                changed = True
-                break
-            else:
-                i += 1
-                continue
-            break
+    toks = _marker_binops(toks, "__gg_seg", _SEG_OPS, "pg_seg")
     # seg functions + leftover markers
-    out: list[str] = []
-    i = 0
-    while i < len(toks):
-        low = toks[i].lower() if _is_ident(toks[i]) else ""
-        if (
-            low in ("seg_size", "seg_center", "seg_upper", "seg_lower")
-            and i + 2 < len(toks)
-            and toks[i + 1] == "("
-            and toks[i + 2] == "__gg_seg"
-        ):
-            close = _args_span(toks, i + 1)
-            inner = toks[i + 4 : close - 1]
-            fn = {
-                "seg_size": "pg_seg_size", "seg_center": "pg_seg_center",
-                "seg_upper": "pg_seg_upperf", "seg_lower": "pg_seg_lowerf",
-            }[low]
-            out += [fn, "(", *inner, ")"]
-            i = close + 1
-            continue
-        if toks[i] == "__gg_seg":
-            close = _args_span(toks, i + 1)
-            out += ["(", *toks[i + 2 : close], ")"]
-            i = close + 1
-            continue
-        out.append(toks[i])
-        i += 1
-    return out
+    fns = {
+        "seg_size": "pg_seg_size", "seg_center": "pg_seg_center",
+        "seg_upper": "pg_seg_upperf", "seg_lower": "pg_seg_lowerf",
+    }
+
+    def lower(name: str, args: list[list[str]]) -> list[str] | None:
+        if name == "__gg_seg":
+            return ["(", *args[0], ")"]
+        if args[0][:1] == ["__gg_seg"]:
+            return [fns[name], "(", *args[0][2:-1], ")"]
+        return None
+
+    return rewrite_calls(toks, {"__gg_seg", *fns}, lower)
 
 
 _CUBE_OPS = (
@@ -417,26 +359,17 @@ def _grouping_cube_spans(toks, low) -> set[int]:
     """Token indexes belonging to GROUP BY clauses — CUBE there is the
     grouping construct (gram.y reserves it), never the contrib type."""
     spans: set[int] = set()
-    depths = []
-    d = 0
-    for t in toks:
-        if t == ")":
-            d -= 1
-        depths.append(d)
-        if t == "(":
-            d += 1
     enders = {"having", "order", "limit", "offset", "window",
-              "union", "intersect", "except", ";"}
+              "union", "intersect", "except"}
     i = 0
     while i < len(low) - 1:
         if low[i] == "group" and low[i + 1] == "by":
-            gd = depths[i]
-            j = i + 2
-            while j < len(low):
-                if depths[j] < gd or (depths[j] == gd and low[j] in enders):
-                    break
-                spans.add(j)
-                j += 1
+            j = next(
+                (k for k, t in top_level(toks, i + 2)
+                 if t in CLOSE or low[k] in enders),
+                len(toks),
+            )
+            spans.update(range(i + 2, j))
             i = j
         else:
             i += 1
@@ -446,7 +379,7 @@ def _grouping_cube_spans(toks, low) -> set[int]:
 def _cube_arg_is_array(arg: list[str]) -> bool:
     """Lexical array detection for the cube(float8[]...) constructor
     forms: ARRAY[...]/array(...) expressions or a ::float[]-style cast."""
-    low = [t.lower() if _is_ident(t) else t for t in arg]
+    low = [t.lower() if is_ident(t) else t for t in arg]
     if "array" in low:
         return True
     for k in range(len(arg) - 1):
@@ -466,7 +399,7 @@ def _pass_cube(toks: list[str]) -> list[str]:
     (@> <@ && and ordering) and the cube_* function family run via the
     parsed-corner kernels in functions/pgcube.py.  GROUP BY CUBE is the
     grouping construct and is never touched."""
-    low0 = [t.lower() if _is_ident(t) else "" for t in toks]
+    low0 = [t.lower() if is_ident(t) else "" for t in toks]
     if "cube" not in low0 and not any(c.startswith("cube_") for c in low0):
         return toks
     grouping = _grouping_cube_spans(toks, low0)
@@ -478,10 +411,10 @@ def _pass_cube(toks: list[str]) -> list[str]:
         for i in range(len(toks) - 1):
             if toks[i] != "::" or toks[i + 1].lower() != "cube":
                 continue
-            start = _operand_start(toks, i - 1)
+            start = operand_start(toks, i - 1)
             # extend left over chained casts ('(0)'::text::cube)
             while start >= 2 and toks[start - 1] == "::":
-                start = _operand_start(toks, start - 2)
+                start = operand_start(toks, start - 2)
             operand = toks[start:i]
             # a text-cast chain on a literal is still the input function
             while (
@@ -490,7 +423,7 @@ def _pass_cube(toks: list[str]) -> list[str]:
                 and operand[-1].lower() in ("text", "varchar", "cstring")
             ):
                 operand = operand[:-2]
-            if len(operand) == 1 and _is_string(operand[0]):
+            if len(operand) == 1 and is_string(operand[0]):
                 from greengage_spark.functions.pgcube import canonical
 
                 v = canonical(operand[0][1:-1].replace("''", "'"))
@@ -510,21 +443,21 @@ def _pass_cube(toks: list[str]) -> list[str]:
     changed = True
     while changed:
         changed = False
-        low = [t.lower() if _is_ident(t) else "" for t in toks]
+        low = [t.lower() if is_ident(t) else "" for t in toks]
         grouping = _grouping_cube_spans(toks, low)
         for i in range(len(toks) - 1):
             name = low[i]
             if toks[i : i + 1] == ["__gg_cube"] or toks[i + 1] != "(":
                 continue
             if name == "cube" and i not in grouping:
-                close = _args_span(toks, i + 1)
+                close = match_close(toks, i + 1)
                 inner = toks[i + 2 : close]
                 if any(
                     t.lower() == "cube" or t.lower().startswith("cube_")
-                    for t in inner if _is_ident(t)
+                    for t in inner if is_ident(t)
                 ):
                     continue  # resolve nested cube expressions first
-                args = _split_fn_args(inner)
+                args = split_top(inner)
                 repl = _lower_cube_ctor(args)
                 if repl is None:
                     continue
@@ -532,14 +465,14 @@ def _pass_cube(toks: list[str]) -> list[str]:
                 changed = True
                 break
             if name in _CUBE_FNS:
-                close = _args_span(toks, i + 1)
+                close = match_close(toks, i + 1)
                 inner = toks[i + 2 : close]
                 if any(
                     t.lower() == "cube" or t.lower().startswith("cube_")
-                    for t in inner if _is_ident(t)
+                    for t in inner if is_ident(t)
                 ):
                     continue
-                args = _split_fn_args(inner)
+                args = split_top(inner)
                 kern, ret_cube = _CUBE_FNS[name]
                 flat: list[str] = []
                 for k, a in enumerate(args):
@@ -553,79 +486,14 @@ def _pass_cube(toks: list[str]) -> list[str]:
                 changed = True
                 break
     # binary operators between two cube markers
-    changed = True
-    while changed:
-        changed = False
-        i = 0
-        while i < len(toks):
-            if toks[i] != "__gg_cube":
-                i += 1
-                continue
-            lclose = _args_span(toks, i + 1)
-            for glyph, name, cmpop in _CUBE_OPS:
-                g = list(glyph)
-                j = lclose + 1
-                if toks[j : j + len(g)] != g:
-                    continue
-                k = j + len(g)
-                if k >= len(toks) or toks[k] != "__gg_cube":
-                    continue
-                rclose = _args_span(toks, k + 1)
-                left = toks[i + 2 : lclose]
-                right = toks[k + 2 : rclose]
-                if name is not None:
-                    expr = (
-                        [f"pg_cube_{name}", "("] + left + [","]
-                        + right + [")"]
-                    )
-                else:
-                    expr = (
-                        ["(", "pg_cube_cmp", "("] + left + [","] + right
-                        + [")", cmpop if cmpop != "<>" else "!=", "0", ")"]
-                    )
-                toks = toks[:i] + expr + toks[rclose + 1 :]
-                changed = True
-                break
-            else:
-                i += 1
-                continue
-            break
+    toks = _marker_binops(toks, "__gg_cube", _CUBE_OPS, "pg_cube")
     # leftover markers unwrap to their canonical-string expression
-    out: list[str] = []
-    i = 0
-    while i < len(toks):
-        if toks[i] == "__gg_cube":
-            close = _args_span(toks, i + 1)
-            out += ["(", *toks[i + 2 : close], ")"]
-            i = close + 1
-            continue
-        out.append(toks[i])
-        i += 1
-    return out
-
-
-def _split_fn_args(inner: list[str]) -> list[list[str]]:
-    args: list[list[str]] = []
-    depth = 0
-    cur: list[str] = []
-    for t in inner:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if t == "," and depth == 0:
-            args.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        args.append(cur)
-    return args
+    return rewrite_calls(toks, {"__gg_cube"}, lambda _, args: ["(", *args[0], ")"])
 
 
 def _unwrap_cube(arg: list[str]) -> list[str]:
     if arg and arg[0] == "__gg_cube":
-        return arg[2 : _args_span(arg, 1)]
+        return arg[2 : match_close(arg, 1)]
     return arg
 
 
@@ -647,7 +515,7 @@ def _lower_cube_ctor(args: list[list[str]]) -> list[str] | None:
         ):
             a0 = a0[:-2]
         args = [a0] + list(args[1:])
-        if len(args[0]) == 1 and _is_string(args[0][0]):
+        if len(args[0]) == 1 and is_string(args[0][0]):
             # cube('text') = the input function
             from greengage_spark.functions.pgcube import canonical
 
@@ -680,7 +548,7 @@ def _intarrayish(span: list[str]) -> bool:
     A textual front-end cannot see column types, so bare columns must
     pass through a cast site ((col)::int[] | 5) — the documented subset,
     same rule as the md-array functions."""
-    low = [t.lower() if _is_ident(t) else t for t in span]
+    low = [t.lower() if is_ident(t) else t for t in span]
     if low and (low[0] == "array" or low[0] in _INTARR_EMITTED):
         return True
     for k in range(len(low) - 2):
@@ -696,9 +564,9 @@ def _intarrayish(span: list[str]) -> bool:
 
 def _extend_cast_left(toks: list[str], lstart: int) -> int:
     """Extend an operand start leftward over ``expr :: type [ ]`` casts
-    (the plain _operand_start stops at the type name)."""
+    (the plain operand_start stops at the type name)."""
     while lstart >= 2 and toks[lstart - 1] == "::":
-        lstart = _operand_start(toks, lstart - 2)
+        lstart = operand_start(toks, lstart - 2)
     return lstart
 
 
@@ -707,7 +575,7 @@ def _extend_cast_right(toks: list[str], rend: int) -> int:
     while (
         rend + 2 < len(toks)
         and toks[rend + 1] == "::"
-        and _is_ident(toks[rend + 2])
+        and is_ident(toks[rend + 2])
     ):
         rend += 2
         while (
@@ -734,7 +602,7 @@ def _pass_intarray_ops(toks: list[str]) -> list[str]:
     All JVM expressions, zero UDFs.  Runs before the cast passes so the
     ::int[] evidence is still visible.
     """
-    low0 = [t.lower() if _is_ident(t) else t for t in toks]
+    low0 = [t.lower() if is_ident(t) else t for t in toks]
     if not (
         "query_int" in low0
         or any(
@@ -761,9 +629,9 @@ def _pass_intarray_ops(toks: list[str]) -> list[str]:
         for i in range(len(toks) - 1):
             if toks[i] != "::" or toks[i + 1].lower() != "query_int":
                 continue
-            start = _operand_start(toks, i - 1)
+            start = operand_start(toks, i - 1)
             operand = toks[start:i]
-            if len(operand) == 1 and _is_string(operand[0]):
+            if len(operand) == 1 and is_string(operand[0]):
                 v = qi_canon(operand[0][1:-1].replace("''", "'"))
                 toks = (
                     toks[:start]
@@ -787,15 +655,15 @@ def _pass_intarray_ops(toks: list[str]) -> list[str]:
             if not (is_at or is_tld):
                 i += 1
                 continue
-            lstart = _extend_cast_left(toks, _operand_start(toks, i - 1))
-            rend = _extend_cast_right(toks, _operand_end(toks, i + 2))
+            lstart = _extend_cast_left(toks, operand_start(toks, i - 1))
+            rend = _extend_cast_right(toks, operand_end(toks, i + 2))
             left = toks[lstart:i]
             right = toks[i + 2 : rend + 1]
             arr, q = (left, right) if is_at else (right, left)
             if q and q[0] == "__gg_qint":
                 qtext = q[2][1:-1].replace("''", "'")
             elif (
-                len(q) == 1 and _is_string(q[0])
+                len(q) == 1 and is_string(q[0])
                 and (_intarrayish(arr) or is_tld)
             ):
                 qtext = q[0][1:-1].replace("''", "'")
@@ -807,17 +675,7 @@ def _pass_intarray_ops(toks: list[str]) -> list[str]:
             changed = True
             break
     # leftover query_int markers unwrap to their display literal
-    out: list[str] = []
-    i = 0
-    while i < len(toks):
-        if toks[i] == "__gg_qint":
-            close = _args_span(toks, i + 1)
-            out += toks[i + 2 : close]
-            i = close + 1
-            continue
-        out.append(toks[i])
-        i += 1
-    return out
+    return rewrite_calls(toks, {"__gg_qint"}, lambda _, args: args[0])
 
 
 def _pass_chkpass(toks: list[str]) -> list[str]:
@@ -828,7 +686,7 @@ def _pass_chkpass(toks: list[str]) -> list[str]:
     Literal input with a ':' prefix folds at plan time; plain literals
     stay runtime (the salt is random per evaluation, like PG's input
     function)."""
-    if not any(_is_ident(t) and t.lower() == "chkpass" for t in toks):
+    if not any(is_ident(t) and t.lower() == "chkpass" for t in toks):
         return toks
     # expr::chkpass -> __gg_chk(<string expr>)
     changed = True
@@ -837,11 +695,11 @@ def _pass_chkpass(toks: list[str]) -> list[str]:
         for i in range(len(toks) - 1):
             if toks[i] != "::" or toks[i + 1].lower() != "chkpass":
                 continue
-            start = _operand_start(toks, i - 1)
+            start = operand_start(toks, i - 1)
             operand = toks[start:i]
             if (
                 len(operand) == 1
-                and _is_string(operand[0])
+                and is_string(operand[0])
                 and operand[0][1:-1].startswith(":")
             ):
                 from greengage_spark.functions.chkpass import chkpass_in
@@ -864,33 +722,17 @@ def _pass_chkpass(toks: list[str]) -> list[str]:
             if toks[i] not in ("=", "<>", "!="):
                 continue
             neg = toks[i] != "="
-            la, ra = _operand_start(toks, i - 1), i + 1
+            la, ra = operand_start(toks, i - 1), i + 1
             left = toks[la:i]
             rclose = (
-                _args_span(toks, ra + 1) if toks[ra] == "__gg_chk" else None
+                match_close(toks, ra + 1) if toks[ra] == "__gg_chk" else None
             )
             if left and left[0] == "__gg_chk":
                 inner = left[2:-1]
                 rend = ra
                 # right operand span
-                if toks[ra] == "(" or _is_ident(toks[ra]) or _is_string(toks[ra]):
-                    # reuse generic operand scan: find end by balance
-                    depth = 0
-                    j = ra
-                    while j < len(toks):
-                        if toks[j] == "(":
-                            depth += 1
-                        elif toks[j] == ")":
-                            if depth == 0:
-                                break
-                            depth -= 1
-                        elif depth == 0 and j > ra and not (
-                            toks[j] == "." or toks[j - 1] == "."
-                            or toks[j] == "("
-                        ):
-                            break
-                        j += 1
-                    rend = j
+                if toks[ra] == "(" or is_ident(toks[ra]) or is_string(toks[ra]):
+                    rend = operand_end(toks, ra) + 1
                 right = toks[ra:rend]
                 expr = (
                     ["pg_chkpass_eq", "("] + inner + [","] + right + [")"]
@@ -911,29 +753,14 @@ def _pass_chkpass(toks: list[str]) -> list[str]:
                 changed = True
                 break
     # raw(__gg_chk(X)) / remaining markers
-    out: list[str] = []
-    i = 0
-    while i < len(toks):
-        if (
-            _is_ident(toks[i])
-            and toks[i].lower() == "raw"
-            and i + 2 < len(toks)
-            and toks[i + 1] == "("
-            and toks[i + 2] == "__gg_chk"
-        ):
-            close = _args_span(toks, i + 1)
-            inner = toks[i + 4 : close - 1]
-            out += ["pg_chkpass_raw", "(", *inner, ")"]
-            i = close + 1
-            continue
-        if toks[i] == "__gg_chk":
-            close = _args_span(toks, i + 1)
-            out += ["(", *toks[i + 2 : close], ")"]
-            i = close + 1
-            continue
-        out.append(toks[i])
-        i += 1
-    return out
+    def lower(name: str, args: list[list[str]]) -> list[str] | None:
+        if name == "__gg_chk":
+            return ["(", *args[0], ")"]
+        if args[0][:1] == ["__gg_chk"]:
+            return ["pg_chkpass_raw", "(", *args[0][2:-1], ")"]
+        return None
+
+    return rewrite_calls(toks, {"raw", "__gg_chk"}, lower)
 
 
 _ISN_TYPES = (
@@ -952,7 +779,7 @@ def _pass_isn(toks: list[str]) -> list[str]:
     strips the marker everywhere else.  isn_weak(bool) flips the weak
     input mode (a module flag, like the reference's C global)."""
     if not any(
-        _is_ident(t) and t.lower() in (
+        is_ident(t) and t.lower() in (
             "isn_weak", "is_valid", "make_valid", *_ISN_TYPES,
         )
         for t in toks
@@ -966,7 +793,7 @@ def _pass_isn(toks: list[str]) -> list[str]:
     i = 0
     while i + 3 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "isn_weak"
             and toks[i + 1] == "("
             and toks[i + 3] == ")"
@@ -985,9 +812,9 @@ def _pass_isn(toks: list[str]) -> list[str]:
             if toks[i] != "::" or toks[i + 1].lower() not in _ISN_TYPES:
                 continue
             t = toks[i + 1].lower()
-            start = _operand_start(toks, i - 1)
+            start = operand_start(toks, i - 1)
             operand = toks[start:i]
-            if len(operand) == 1 and _is_string(operand[0]):
+            if len(operand) == 1 and is_string(operand[0]):
                 v = _iparse(
                     operand[0][1:-1].replace("''", "'"), t, weak=weak
                 )
@@ -1023,10 +850,10 @@ def _pass_isn(toks: list[str]) -> list[str]:
     while changed:
         changed = False
         for i in range(len(toks) - 1):
-            low = toks[i].lower() if _is_ident(toks[i]) else ""
+            low = toks[i].lower() if is_ident(toks[i]) else ""
             if low not in ("is_valid", "make_valid") or toks[i + 1] != "(":
                 continue
-            close = _args_span(toks, i + 1)
+            close = match_close(toks, i + 1)
             inner = toks[i + 2 : close]
             if not inner or inner[0] != "__gg_isn":
                 continue
@@ -1051,60 +878,45 @@ def _pass_isn_resolve(toks: list[str], idisplay) -> list[str]:
     """Display-wrap __gg_isn markers that ARE a select-list item (PG's
     type output function runs on projection); strip markers elsewhere
     (joins/filters/grouping compare the bigint)."""
-    depths = []
-    d = 0
-    for t in toks:
-        if t == ")":
-            d -= 1
-        depths.append(d)
-        if t == "(":
-            d += 1
-
     # collect select-list item spans whose whole expr is one marker call
     wrap: set[int] = set()
     for i, t in enumerate(toks):
-        if not (_is_ident(t) and t.lower() == "select"):
+        if not (is_ident(t) and t.lower() == "select"):
             continue
-        gd = depths[i]
-        j = i + 1
-        if j < len(toks) and _is_ident(toks[j]) and toks[j].lower() == "distinct":
-            j += 1
-        item_start = j
-        while j <= len(toks):
-            boundary = j == len(toks) or depths[j] < gd or (
-                depths[j] == gd
-                and (
-                    toks[j] == ","
-                    or (_is_ident(toks[j]) and toks[j].lower() in ("from", "union", "intersect", "except"))
-                    or toks[j] == ";"
-                )
+        a = i + 1
+        if a < len(toks) and is_ident(toks[a]) and toks[a].lower() == "distinct":
+            a += 1
+        while True:
+            j = next(
+                (k for k, tk in top_level(toks, a)
+                 if tk in CLOSE or tk in (",", ";") or is_ident(tk)
+                 and tk.lower() in ("from", "union", "intersect", "except")),
+                len(toks),
             )
-            if boundary:
-                a, b = item_start, j
-                # strip [AS] alias tail
-                if b - a >= 2 and _is_ident(toks[b - 1]):
-                    if b - a >= 3 and _is_ident(toks[b - 2]) and toks[b - 2].lower() == "as":
-                        b -= 2
-                    elif toks[b - 1].lower() not in ("from",) and toks[b - 2] == ")":
-                        b -= 1
-                if (
-                    b > a
-                    and toks[a] == "__gg_isn"
-                    and a + 1 < len(toks)
-                    and toks[a + 1] == "("
-                    and _args_span(toks, a + 1) == b - 1
-                ):
-                    wrap.add(a)
-                if j == len(toks) or depths[j] < gd or toks[j] != ",":
-                    break
-                item_start = j + 1
-            j += 1
+            b = j
+            # strip [AS] alias tail
+            if b - a >= 2 and is_ident(toks[b - 1]):
+                if b - a >= 3 and is_ident(toks[b - 2]) and toks[b - 2].lower() == "as":
+                    b -= 2
+                elif toks[b - 1].lower() not in ("from",) and toks[b - 2] == ")":
+                    b -= 1
+            if (
+                b > a
+                and toks[a] == "__gg_isn"
+                and a + 1 < len(toks)
+                and toks[a + 1] == "("
+                and match_close(toks, a + 1) == b - 1
+            ):
+                wrap.add(a)
+            if j == len(toks) or toks[j] != ",":
+                break
+            a = j + 1
 
     out: list[str] = []
     i = 0
     while i < len(toks):
         if toks[i] == "__gg_isn":
-            close = _args_span(toks, i + 1)
+            close = match_close(toks, i + 1)
             body = toks[i + 2 : close]
             comma = len(body) - 2
             val, typ = body[:comma], body[comma + 1]
@@ -1136,7 +948,7 @@ def _pass_casts(toks: list[str]) -> list[str]:
             # marker _pass_geometry (which runs later) dispatches on
             pos = i + 1
             continue
-        start = _operand_start(toks, i - 1)
+        start = operand_start(toks, i - 1)
         end = i + 1
         mapped = _TYPE_MAP.get(tname)
         # '1 year'::interval → canonical Spark interval literal (gram.y
@@ -1144,7 +956,7 @@ def _pass_casts(toks: list[str]) -> list[str]:
         # Canonicalized to a single unit — MONTH for year-month, DAY/SECOND
         # for day-time — because Spark requires both bounds of a RANGE frame
         # to share one interval subtype (PG mixes '1 year' and '1 month').
-        if tname == "interval" and start == i - 1 and _is_string(toks[i - 1]):
+        if tname == "interval" and start == i - 1 and is_string(toks[i - 1]):
             toks = toks[:start] + _interval_literal(toks[i - 1]) + toks[i + 2 :]
             continue
         # non-literal ::interval (e.g. null::interval) — day-time subtype,
@@ -1170,7 +982,7 @@ def _pass_casts(toks: list[str]) -> list[str]:
         if (
             tname in ("bool", "boolean")
             and start == i - 1
-            and _is_string(toks[i - 1])
+            and is_string(toks[i - 1])
         ):
             lv = toks[i - 1].strip("'").strip().lower()
             # unique prefixes only: bare 'o' is ambiguous and errors in PG
@@ -1183,7 +995,7 @@ def _pass_casts(toks: list[str]) -> list[str]:
         if (
             tname in ("float8", "float", "float4", "real")
             and start == i - 1
-            and _is_string(toks[i - 1])
+            and is_string(toks[i - 1])
         ):
             lit = toks[i - 1].strip("'").strip()
             try:
@@ -1212,28 +1024,19 @@ def _pass_casts(toks: list[str]) -> list[str]:
         if (
             tname in ("numeric", "decimal")
             and start == i - 1
-            and _is_string(toks[i - 1])
+            and is_string(toks[i - 1])
             and toks[i - 1].strip("'").strip().lower() == "nan"
         ):
             mapped = "DOUBLE"
         if end + 1 < len(toks) and toks[end + 1] == "(":
-            j = end + 1
-            depth = 0
-            while j < len(toks):
-                if toks[j] == "(":
-                    depth += 1
-                elif toks[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = match_close(toks, end + 1)
             if tname in _PARAMETERIZED:
                 mapped = "DECIMAL" + "".join(toks[end + 1 : j + 1])
             end = j
         # array-typed cast: type[] — '{…}' literals become ARRAY(…) (array.c
         # array_in for the literal form; plain expressions cast to ARRAY<T>)
         if end + 2 < len(toks) and toks[end + 1] == "[" and toks[end + 2] == "]":
-            if start == i - 1 and _is_string(toks[i - 1]):
+            if start == i - 1 and is_string(toks[i - 1]):
                 # literal form: nesting depth comes from the literal
                 # itself — PG's T[] is dimension-agnostic (array.c)
                 arr_toks, depth = _pg_array_literal(toks[i - 1], mapped)
@@ -1402,22 +1205,6 @@ def _interval_literal(str_tok: str) -> list[str]:
 _ORDERED_AGG_FNS = {"string_agg", "listagg", "array_agg", "collect_list"}
 
 
-def _split_top_commas(toks: list[str]) -> list[list[str]]:
-    parts, cur, depth = [], [], 0
-    for t in toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if t == "," and depth == 0:
-            parts.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    parts.append(cur)
-    return parts
-
-
 def _ordered_array_agg(args: list[str], keys: list[str]) -> list[str]:
     """array_agg(x ORDER BY k...) → comparator-lambda array_sort rewrite.
 
@@ -1425,7 +1212,7 @@ def _ordered_array_agg(args: list[str], keys: list[str]) -> list[str]:
     them; Spark's bare array_agg drops nulls), and the comparator encodes
     the full PG sort spec per key: ASC/DESC with NULLS FIRST/LAST
     (defaults ASC→NULLS LAST, DESC→NULLS FIRST, nodeSort.c)."""
-    key_parts = _split_top_commas(keys)
+    key_parts = split_top(keys)
     dirs: list[str] = []
     nulls: list[str] = []
     cleaned: list[list[str]] = []
@@ -1434,14 +1221,14 @@ def _ordered_array_agg(args: list[str], keys: list[str]) -> list[str]:
         null_pos = None
         if (
             len(kp) >= 2
-            and _is_ident(kp[-2])
+            and is_ident(kp[-2])
             and kp[-2].lower() == "nulls"
             and kp[-1].lower() in ("first", "last")
         ):
             null_pos = kp[-1].lower()
             kp = kp[:-2]
         d = "asc"
-        if kp and _is_ident(kp[-1]) and kp[-1].lower() in ("asc", "desc"):
+        if kp and is_ident(kp[-1]) and kp[-1].lower() in ("asc", "desc"):
             d = kp[-1].lower()
             kp = kp[:-1]
         if null_pos is None:
@@ -1495,26 +1282,21 @@ def _pass_array_subquery(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if not (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "array"
             and i + 2 < len(toks)
             and toks[i + 1] == "("
-            and _is_ident(toks[i + 2])
+            and is_ident(toks[i + 2])
             and toks[i + 2].lower() == "select"
         ):
             i += 1
             continue
-        close = _match_paren(toks, i + 1)
+        close = match_close(toks, i + 1)
         inner = toks[i + 2 : close]
-        depth = 0
         ob = frm = None
         banned = False
-        for j, t in enumerate(inner):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_ident(t):
+        for j, t in top_level(inner):
+            if is_ident(t):
                 tl = t.lower()
                 if (
                     tl == "order"
@@ -1561,7 +1343,7 @@ def _pass_agg_order_by(toks: list[str]) -> list[str]:
     string_agg(x) concatenates with no delimiter."""
     i = 0
     while i < len(toks):
-        if _is_ident(toks[i]):
+        if is_ident(toks[i]):
             low = toks[i].lower()
             if low == "int_array_aggregate":
                 toks[i] = "array_agg"
@@ -1572,10 +1354,10 @@ def _pass_agg_order_by(toks: list[str]) -> list[str]:
             ):
                 # json_agg(x ORDER BY k) rides the ordered array_agg
                 # rewrite below, wrapped in to_json
-                close = _args_span(toks, i + 1)
+                close = match_close(toks, i + 1)
                 inner = toks[i + 2 : close]
                 has_ob = any(
-                    _is_ident(t)
+                    is_ident(t)
                     and t.lower() == "order"
                     and j + 1 < len(inner)
                     and inner[j + 1].lower() == "by"
@@ -1592,8 +1374,8 @@ def _pass_agg_order_by(toks: list[str]) -> list[str]:
                 and i + 1 < len(toks)
                 and toks[i + 1] == "("
             ):
-                close = _args_span(toks, i + 1)
-                args = _split_args(toks[i + 2 : close])
+                close = match_close(toks, i + 1)
+                args = split_top(toks[i + 2 : close])
                 if len(args) == 1:
                     # append the empty delimiter BEFORE any ORDER BY
                     a = args[0]
@@ -1601,7 +1383,7 @@ def _pass_agg_order_by(toks: list[str]) -> list[str]:
                         (
                             k
                             for k in range(len(a))
-                            if _is_ident(a[k])
+                            if is_ident(a[k])
                             and a[k].lower() == "order"
                             and k + 1 < len(a)
                             and a[k + 1].lower() == "by"
@@ -1617,36 +1399,20 @@ def _pass_agg_order_by(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if not (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() in _ORDERED_AGG_FNS
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
             i += 1
             continue
-        depth, close = 0, None
-        for j in range(i + 1, len(toks)):
-            if toks[j] == "(":
-                depth += 1
-            elif toks[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        ob, depth = None, 0
-        for j in range(i + 2, close):
-            if toks[j] == "(":
-                depth += 1
-            elif toks[j] == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and toks[j].lower() == "order"
-                and j + 1 < close
-                and toks[j + 1].lower() == "by"
-            ):
-                ob = j
-                break
+        close = match_close(toks, i + 1)
+        ob = next(
+            (j for j, t in top_level(toks, i + 2)
+             if t.lower() == "order" and toks[j + 1].lower() == "by"),
+            None,
+        )
+
         if ob is None:
             i += 1
             continue
@@ -1660,7 +1426,7 @@ def _pass_agg_order_by(toks: list[str]) -> list[str]:
             dargs = args
             distinct = (
                 bool(dargs)
-                and _is_ident(dargs[0])
+                and is_ident(dargs[0])
                 and dargs[0].lower() == "distinct"
             )
             if distinct:
@@ -1683,65 +1449,32 @@ _ORD_ALL_AGG = {"<": "MIN", "<=": "MIN", ">": "MAX", ">=": "MAX"}
 
 # tokens that terminate a leftward scan for a comparison's left operand —
 # comparison binds tighter than these boolean/clause constructs
-_LEFT_STOP = _NON_FUNC_KEYWORDS | {"intersect", "symmetric", "cross", "lateral"}
-
-
-def _match_paren(toks: list[str], open_idx: int) -> int:
-    depth = 0
-    for j in range(open_idx, len(toks)):
-        if toks[j] == "(":
-            depth += 1
-        elif toks[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    raise ValueError("unbalanced parentheses")
+_LEFT_STOP = NON_FUNC_KEYWORDS | {"intersect", "symmetric", "cross", "lateral"}
 
 
 def _left_operand_span(toks: list[str], i: int) -> int:
     """Start index of the left operand of the comparison at toks[i]."""
     j = i - 1
-    depth = 0
     while j >= 0:
         t = toks[j]
         if t in (")", "]"):
-            depth += 1
-        elif t in ("(", "["):
-            if depth == 0:
-                break
-            depth -= 1
-        elif depth == 0:
-            if t == ",":
-                break
-            if _is_ident(t) and t.lower() in _LEFT_STOP:
-                break
+            j = max(match_open(toks, j), 0) - 1
+            continue
+        if t in ("(", "[", ",") or (is_ident(t) and t.lower() in _LEFT_STOP):
+            break
         j -= 1
     return j + 1
 
 
 def _has_top_comma(toks: list[str]) -> bool:
-    depth = 0
-    for t in toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif t == "," and depth == 0:
-            return True
-    return False
+    return any(t == "," for _, t in top_level(toks))
 
 
 def _sub_top_from(sub: list[str]) -> int:
     """Index of the top-level FROM in a SELECT token list, or -1."""
-    depth = 0
-    for k, t in enumerate(sub):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.lower() == "from":
-            return k
-    return -1
+    return next(
+        (k for k, t in top_level(sub) if is_ident(t) and t.lower() == "from"), -1
+    )
 
 
 def _cnt_all(sub: list[str]) -> list[str]:
@@ -1823,20 +1556,20 @@ def _pass_quantified(toks: list[str]) -> list[str]:
     """
     i = 0
     while i + 2 < len(toks):
-        quant = toks[i + 1].lower() if _is_ident(toks[i + 1]) else None
+        quant = toks[i + 1].lower() if is_ident(toks[i + 1]) else None
         if (
             quant in ("any", "some", "all")
             and toks[i + 2] == "("
             and (
                 toks[i] in _QUANT_OPS
-                or (_is_ident(toks[i]) and toks[i].lower() in ("like", "ilike"))
+                or (is_ident(toks[i]) and toks[i].lower() in ("like", "ilike"))
             )
         ):
             op = toks[i]
-            close = _match_paren(toks, i + 2)
+            close = match_close(toks, i + 2)
             sub = toks[i + 3 : close]
             kind = "any" if quant in ("any", "some") else "all"
-            if sub and _is_ident(sub[0]) and sub[0].lower() == "values":
+            if sub and is_ident(sub[0]) and sub[0].lower() == "values":
                 # ANY/ALL (VALUES ...) is the subquery form too
                 # (gram.y select_with_parens includes values_clause)
                 sub = (
@@ -1855,7 +1588,7 @@ def _pass_quantified(toks: list[str]) -> list[str]:
                 arr = sub
                 if (
                     len(sub) == 1
-                    and _is_string(sub[0])
+                    and is_string(sub[0])
                     and sub[0][1:-1].lstrip().startswith("{")
                 ):
                     # bare '{…}' literal without a ::type[] cast — infer
@@ -1899,7 +1632,7 @@ def _pass_quantified(toks: list[str]) -> list[str]:
                 x
                 and x[0] == "("
                 and x[-1] == ")"
-                and _match_paren(x, 0) == len(x) - 1
+                and match_close(x, 0) == len(x) - 1
                 and _has_top_comma(x[1:-1])
             ):
                 fidx = _sub_top_from(sub)
@@ -1930,32 +1663,25 @@ def _pass_rank_needs_order(toks: list[str]) -> list[str]:
     i = 0
     while i + 3 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() in _RANK_FAMILY
             and toks[i + 1] == "("
         ):
-            argc = _match_paren(toks, i + 1)
+            argc = match_close(toks, i + 1)
             if (
                 argc + 2 < len(toks)
-                and _is_ident(toks[argc + 1])
+                and is_ident(toks[argc + 1])
                 and toks[argc + 1].lower() == "over"
                 and toks[argc + 2] == "("
             ):
-                spec_close = _match_paren(toks, argc + 2)
+                spec_close = match_close(toks, argc + 2)
                 spec = toks[argc + 3 : spec_close]
-                depth = 0
-                has_order = False
-                for t in spec:
-                    if t == "(":
-                        depth += 1
-                    elif t == ")":
-                        depth -= 1
-                    elif depth == 0 and _is_ident(t) and t.lower() == "order":
-                        has_order = True
-                        break
+                has_order = any(
+                    is_ident(t) and t.lower() == "order" for _, t in top_level(spec)
+                )
                 # a lone identifier is a named-window reference, which may
                 # carry its own ORDER BY — leave those untouched
-                is_window_ref = len(spec) == 1 and _is_ident(spec[0])
+                is_window_ref = len(spec) == 1 and is_ident(spec[0])
                 if not has_order and not is_window_ref:
                     toks = (
                         toks[:spec_close] + ["ORDER", "BY", "1"] + toks[spec_close:]
@@ -1976,34 +1702,26 @@ def _pass_rowvalue_scalar(toks: list[str]) -> list[str]:
             and toks[i - 1] == ")"
             and i + 2 < len(toks)
             and toks[i + 1] == "("
-            and _is_ident(toks[i + 2])
+            and is_ident(toks[i + 2])
             and toks[i + 2].lower() in ("select", "with")
         ):
             # left row value: scan back to the matching open paren
-            depth, lopen = 0, None
-            for j in range(i - 1, -1, -1):
-                if toks[j] == ")":
-                    depth += 1
-                elif toks[j] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        lopen = j
-                        break
-            inner = toks[lopen + 1 : i - 1] if lopen is not None else []
-            if lopen is None or not _has_top_comma(inner):
+            lopen = match_open(toks, i - 1)
+            inner = toks[lopen + 1 : i - 1] if lopen >= 0 else []
+            if lopen < 0 or not _has_top_comma(inner):
                 i += 1
                 continue
             # skip function calls: ident directly before the open paren
             if lopen > 0 and (
                 toks[lopen - 1] in (")", "]")
                 or (
-                    _is_ident(toks[lopen - 1])
-                    and toks[lopen - 1].lower() not in _NON_FUNC_KEYWORDS
+                    is_ident(toks[lopen - 1])
+                    and toks[lopen - 1].lower() not in NON_FUNC_KEYWORDS
                 )
             ):
                 i += 1
                 continue
-            rclose = _match_paren(toks, i + 1)
+            rclose = match_close(toks, i + 1)
             sub = toks[i + 2 : rclose]
             fidx = _sub_top_from(sub)
             if fidx < 0 or not _has_top_comma(sub[1:fidx]):
@@ -2028,13 +1746,13 @@ def _pass_avg_bigint_exact(toks: list[str]) -> list[str]:
     i = 0
     while i + 3 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "avg"
             and toks[i + 1] == "("
             and toks[i + 2].upper() == "CAST"
         ):
-            close = _match_paren(toks, i + 1)
-            inner_close = _match_paren(toks, i + 3)
+            close = match_close(toks, i + 1)
+            inner_close = match_close(toks, i + 3)
             if (
                 inner_close == close - 1
                 and toks[inner_close - 1].upper() == "BIGINT"
@@ -2055,7 +1773,7 @@ def _pass_count_noargs(toks: list[str]) -> list[str]:
     i = 0
     while i + 2 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "count"
             and toks[i + 1] == "("
             and toks[i + 2] == ")"
@@ -2077,7 +1795,7 @@ def _pass_agg_filter(toks: list[str]) -> list[str]:
     i = 0
     while i + 1 < len(toks):
         if not (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "filter"
             and toks[i + 1] == "("
             and i >= 1
@@ -2085,24 +1803,15 @@ def _pass_agg_filter(toks: list[str]) -> list[str]:
         ):
             i += 1
             continue
-        fclose = _match_paren(toks, i + 1)
+        fclose = match_close(toks, i + 1)
         inner = toks[i + 2 : fclose]
         if not inner or inner[0].lower() != "where":
             i += 1
             continue
         pred = inner[1:]
         # backward-match the aggregate's argument parens
-        depth = 0
-        aopen = None
-        for j in range(i - 1, -1, -1):
-            if toks[j] == ")":
-                depth += 1
-            elif toks[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    aopen = j
-                    break
-        if aopen is None or aopen == 0 or not _is_ident(toks[aopen - 1]):
+        aopen = match_open(toks, i - 1)
+        if aopen <= 0 or not is_ident(toks[aopen - 1]):
             i += 1
             continue
         args = toks[aopen + 1 : i - 1]
@@ -2113,15 +1822,9 @@ def _pass_agg_filter(toks: list[str]) -> list[str]:
         # FILTER (WHERE p)``) must stay OUTSIDE the per-argument CASE wrap —
         # _pass_agg_order_by consumes it later.  Split it off here.
         ob_tail: list[str] = []
-        depth2 = 0
-        for j2, t2 in enumerate(args):
-            if t2 == "(":
-                depth2 += 1
-            elif t2 == ")":
-                depth2 -= 1
-            elif (
-                depth2 == 0
-                and t2.lower() == "order"
+        for j2, t2 in top_level(args):
+            if (
+                t2.lower() == "order"
                 and j2 + 1 < len(args)
                 and args[j2 + 1].lower() == "by"
             ):
@@ -2131,7 +1834,7 @@ def _pass_agg_filter(toks: list[str]) -> list[str]:
         if args == ["*"]:
             arg_lists = [["1"]]
         else:
-            arg_lists = _split_args(args)
+            arg_lists = split_top(args)
         def _is_const_arg(a: list[str]) -> bool:
             # single string/numeric literal — CASE-wrapping it breaks
             # foldability requirements (e.g. listagg's delimiter) and adds
@@ -2255,8 +1958,8 @@ def _pass_date_minus(toks: list[str]) -> list[str]:
     def _is_date_lit_end(j: int) -> bool:
         if (
             j >= 1
-            and _is_string(toks[j])
-            and _is_ident(toks[j - 1])
+            and is_string(toks[j])
+            and is_ident(toks[j - 1])
             and toks[j - 1].lower() == "date"
         ):
             return True
@@ -2264,33 +1967,11 @@ def _pass_date_minus(toks: list[str]) -> list[str]:
         return (
             j >= 4
             and toks[j] == ")"
-            and _is_ident(toks[j - 1])
+            and is_ident(toks[j - 1])
             and toks[j - 1].lower() == "date"
-            and _is_ident(toks[j - 2])
+            and is_ident(toks[j - 2])
             and toks[j - 2].lower() == "as"
         )
-
-    def _right_span(start: int) -> int | None:
-        """End index (inclusive) of a simple right operand."""
-        if start >= len(toks):
-            return None
-        if (
-            _is_ident(toks[start])
-            and toks[start].lower() == "date"
-            and start + 1 < len(toks)
-            and _is_string(toks[start + 1])
-        ):
-            return start + 1
-        j = start
-        if _is_ident(toks[j]):
-            while j + 2 < len(toks) and toks[j + 1] == "." and _is_ident(toks[j + 2]):
-                j += 2
-            if j + 1 < len(toks) and toks[j + 1] == "(":
-                return _match_paren(toks, j + 1)
-            return j
-        if toks[j] == "(":
-            return _match_paren(toks, j)
-        return None
 
     i = 0
     while i < len(toks):
@@ -2300,25 +1981,25 @@ def _pass_date_minus(toks: list[str]) -> list[str]:
         def _right_is_cast_date(j: int) -> bool:
             if not (
                 j + 1 < len(toks)
-                and _is_ident(toks[j])
+                and is_ident(toks[j])
                 and toks[j].lower() == "cast"
                 and toks[j + 1] == "("
             ):
                 return False
-            c = _match_paren(toks, j + 1)
+            c = match_close(toks, j + 1)
             return (
                 c >= 2
-                and _is_ident(toks[c - 1])
+                and is_ident(toks[c - 1])
                 and toks[c - 1].lower() == "date"
-                and _is_ident(toks[c - 2])
+                and is_ident(toks[c - 2])
                 and toks[c - 2].lower() == "as"
             )
 
         right_is_date = (
             i + 2 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "date"
-            and _is_string(toks[i + 2])
+            and is_string(toks[i + 2])
         ) or _right_is_cast_date(i + 1)
         left_is_date = _is_date_lit_end(i - 1)
         if not (right_is_date or left_is_date):
@@ -2328,7 +2009,7 @@ def _pass_date_minus(toks: list[str]) -> list[str]:
         # (date_pl_interval), NOT date_mi — leave it to Spark
         if (
             i + 1 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in (
                 "interval", "time", "timestamp", "timestamptz",
             )
@@ -2339,22 +2020,23 @@ def _pass_date_minus(toks: list[str]) -> list[str]:
         if i == 0 or not _is_operand_end(toks[i - 1]):
             i += 1
             continue
-        if left_is_date and _is_string(toks[i - 1]):
+        if left_is_date and is_string(toks[i - 1]):
             lstart = i - 2  # DATE 'lit'
         else:
-            lstart = _operand_start(toks, i - 1)
+            lstart = operand_start(toks, i - 1)
             # absorb the CAST head the paren-scan stopped at
             if (
                 left_is_date
                 and lstart > 0
-                and _is_ident(toks[lstart - 1])
+                and is_ident(toks[lstart - 1])
                 and toks[lstart - 1].lower() == "cast"
             ):
                 lstart -= 1
-        rend = _right_span(i + 1)
-        if rend is None:
+        # the right operand: an identifier, call, typed literal or group
+        if i + 1 >= len(toks) or not (is_ident(toks[i + 1]) or toks[i + 1] == "("):
             i += 1
             continue
+        rend = operand_end(toks, i + 1)
         left = toks[lstart:i]
         right = toks[i + 1 : rend + 1]
         # don't fire on interval/timestamp arithmetic: a non-literal side
@@ -2379,12 +2061,12 @@ def _pass_date_input_literals(toks: list[str]) -> list[str]:
         t = toks[i]
         # typed literal: date '...' / timestamp '...'
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in ("date", "timestamp", "timestamptz")
             and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
             and (not out or out[-1] not in (".",))
-            and not (out and _is_ident(out[-1]) and out[-1].lower() == "as")
+            and not (out and is_ident(out[-1]) and out[-1].lower() == "as")
         ):
             folded = _fold_date_tokens(toks[i + 1], t.lower() != "date")
             if folded is not None:
@@ -2393,12 +2075,12 @@ def _pass_date_input_literals(toks: list[str]) -> list[str]:
                 continue
         # CAST ( '...' AS DATE/TIMESTAMP )
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() == "cast"
             and i + 6 < len(toks)
             and toks[i + 1] == "("
-            and _is_string(toks[i + 2])
-            and _is_ident(toks[i + 3])
+            and is_string(toks[i + 2])
+            and is_ident(toks[i + 3])
             and toks[i + 3].lower() == "as"
             and toks[i + 4].lower() in ("date", "timestamp", "timestamp_ntz")
             and toks[i + 5] == ")"
@@ -2517,13 +2199,13 @@ def _geo_span_type(toks: list[str], lo: int, hi: int) -> str | None:
     point/box/circle family, 'lseg'/'path'/'polygon' for the statically
     routed one, None when unmarked."""
     for k in range(lo, hi + 1):
-        t = toks[k].lower() if _is_ident(toks[k]) else toks[k]
+        t = toks[k].lower() if is_ident(toks[k]) else toks[k]
         nxt = toks[k + 1] if k + 1 <= hi else ""
         if t in _GEO_TYPES:
-            if _is_string(nxt) or nxt == "(" or (k > lo and toks[k - 1] == "::"):
+            if is_string(nxt) or nxt == "(" or (k > lo and toks[k - 1] == "::"):
                 return "rect"
         if t in _GEO_TYPES2:
-            if _is_string(nxt) or (k > lo and toks[k - 1] == "::"):
+            if is_string(nxt) or (k > lo and toks[k - 1] == "::"):
                 return t
         if t in _GEO_MARKERS2 and nxt == "(":
             return _GEO_MARKERS2[t]
@@ -2539,7 +2221,7 @@ def _geo_right_end(toks: list[str], j: int) -> int | None:
         while (
             end + 2 < len(toks)
             and toks[end + 1] == "::"
-            and _is_ident(toks[end + 2])
+            and is_ident(toks[end + 2])
         ):
             end += 2
         return end
@@ -2547,19 +2229,10 @@ def _geo_right_end(toks: list[str], j: int) -> int | None:
     if j >= len(toks):
         return None
     t = toks[j]
-    if _is_ident(t) and j + 1 < len(toks) and _is_string(toks[j + 1]):
+    if is_ident(t) and j + 1 < len(toks) and is_string(toks[j + 1]):
         return j + 1
-    if _is_ident(t) and j + 1 < len(toks) and toks[j + 1] == "(":
-        return _cast_tail(_match_paren(toks, j + 1))
-    if _is_string(t):
-        return _cast_tail(j)
-    if t == "(":
-        return _cast_tail(_match_paren(toks, j))
-    if _is_ident(t):
-        k = j
-        while k + 2 < len(toks) and toks[k + 1] == "." and _is_ident(toks[k + 2]):
-            k += 2
-        return _cast_tail(k)
+    if is_ident(t) or is_string(t) or t == "(":
+        return _cast_tail(operand_end(toks, j))
     return None
 
 
@@ -2570,11 +2243,11 @@ def _geo_strip(toks: list[str]) -> str:
     i = 0
     while i < len(toks):
         t = toks[i]
-        low = t.lower() if _is_ident(t) else t
+        low = t.lower() if is_ident(t) else t
         if (
             low in (_GEO_TYPES | _GEO_TYPES2)
             and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
         ):
             out.append(toks[i + 1])
             i += 2
@@ -2584,7 +2257,7 @@ def _geo_strip(toks: list[str]) -> str:
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _match_paren(toks, i + 1)
+            close = match_close(toks, i + 1)
             inner = toks[i + 2 : close]
             out.append(_geo_call(low, inner))
             i = close + 1
@@ -2596,24 +2269,13 @@ def _geo_strip(toks: list[str]) -> str:
             continue
         out.append(t)
         i += 1
-    return _join_tokens(out)
+    return join_tokens(out)
 
 
 def _geo_call(fn: str, inner_toks: list[str]) -> str:
     from greengage_spark.functions import geometry as geo
 
-    args: list[list[str]] = [[]]
-    depth = 0
-    for t in inner_toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if t == "," and depth == 0:
-            args.append([])
-        else:
-            args[-1].append(t)
-    sqls = [_geo_strip(a) for a in args if a]
+    sqls = [_geo_strip(a) for a in split_top(inner_toks) if a]
     if fn == "geo" or fn in _GEO_MARKERS2:
         return f"({sqls[0]})"  # identity markers: strip on emit
     if fn in _GEO_FUNCS:
@@ -2647,10 +2309,10 @@ def _pass_geometry(toks: list[str]) -> list[str]:
     thing)."""
     for i, t in enumerate(toks):
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in _GEO_UNSUPPORTED
             and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
         ):
             raise NotImplementedError(
                 f"geometric type {t.lower()!r} is not routed (geo_ops.c "
@@ -2668,7 +2330,7 @@ def _pass_geometry(toks: list[str]) -> list[str]:
             if k == 0:
                 return True
             p = toks[k - 1]
-            if _is_ident(p):
+            if is_ident(p):
                 return p.lower() in (
                     "select", "where", "and", "or", "not", "when", "then",
                     "else", "case", "on", "having", "by", "distinct", "all",
@@ -2727,16 +2389,16 @@ def _pass_geometry(toks: list[str]) -> list[str]:
             if rend is None or not _is_operand_end(toks[i - 1]):
                 i += 1
                 continue
-            lstart = _operand_start(toks, i - 1)
+            lstart = operand_start(toks, i - 1)
             # walk left through ::casts — for `(expr)::polygon @> x` the
             # operand scan stops at the bare type name
             while lstart > 0 and toks[lstart - 1] == "::":
-                lstart = _operand_start(toks, lstart - 2)
+                lstart = operand_start(toks, lstart - 2)
             # include a typed-literal prefix the operand scan missed
             if (
                 lstart > 0
-                and _is_string(toks[lstart])
-                and _is_ident(toks[lstart - 1])
+                and is_string(toks[lstart])
+                and is_ident(toks[lstart - 1])
                 and toks[lstart - 1].lower() in (_GEO_TYPES | _GEO_TYPES2)
             ):
                 lstart -= 1
@@ -2792,15 +2454,15 @@ def _pass_geometry(toks: list[str]) -> list[str]:
         i = 0
         while i < len(toks):
             t = toks[i]
-            low = t.lower() if _is_ident(t) else t
+            low = t.lower() if is_ident(t) else t
             if (
                 low in (_GEO_TYPES | _GEO_TYPES2)
                 and i + 1 < len(toks)
-                and _is_string(toks[i + 1])
+                and is_string(toks[i + 1])
             ):
                 prev = toks[i - 1] if i > 0 else ""
                 if prev != "." and not (
-                    _is_ident(prev) and prev.lower() == "as"
+                    is_ident(prev) and prev.lower() == "as"
                 ):
                     toks[i : i + 2] = [toks[i + 1]]
                     changed = True
@@ -2811,7 +2473,7 @@ def _pass_geometry(toks: list[str]) -> list[str]:
                 and toks[i + 1] == "("
                 and (i == 0 or toks[i - 1] != ".")
             ):
-                close = _match_paren(toks, i + 1)
+                close = match_close(toks, i + 1)
                 typ = _geo_span_type(toks, i + 2, close - 1)
                 fn_name = _GEO_TYPED_FN.get((low, typ))
                 if fn_name is not None:
@@ -2829,7 +2491,7 @@ def _pass_geometry(toks: list[str]) -> list[str]:
                 and toks[i + 1] == "("
                 and (i == 0 or toks[i - 1] != ".")
             ):
-                close = _match_paren(toks, i + 1)
+                close = match_close(toks, i + 1)
                 # typed area/center route via _GEO_TYPED_FN; the rect
                 # versions remain the arity-dispatched default
                 typ = _geo_span_type(toks, i + 2, close - 1)
@@ -2858,21 +2520,6 @@ def _pass_geometry(toks: list[str]) -> list[str]:
 _XML_FUNCS = {"xmlelement", "xmlforest", "xmlconcat", "xmlcomment"}
 
 
-def _xml_split_args(inner: list[str]) -> list[list[str]]:
-    args: list[list[str]] = [[]]
-    depth = 0
-    for t in inner:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if t == "," and depth == 0:
-            args.append([])
-        else:
-            args[-1].append(t)
-    return [a for a in args if a]
-
-
 def _xml_name(tok: str) -> str:
     return tok[1:-1] if tok.startswith('"') else tok.lower()
 
@@ -2883,19 +2530,19 @@ def _xml_expand(fn: str, inner: list[str], generated: set[str]) -> str:
     def _is_xml_arg(a: list[str]) -> bool:
         return len(a) == 1 and a[0] in generated
 
-    args = _xml_split_args(inner)
+    args = split_top(inner)
     if fn == "xmlcomment":
-        return xmlgen.comment(_join_tokens(args[0]))
+        return xmlgen.comment(join_tokens(args[0]))
     if fn == "xmlconcat":
-        return xmlgen.xml_concat([_join_tokens(a) for a in args])
+        return xmlgen.xml_concat([join_tokens(a) for a in args])
     if fn == "xmlforest":
         items = []
         for a in args:
-            if len(a) >= 3 and _is_ident(a[-2]) and a[-2].lower() == "as":
-                items.append((_xml_name(a[-1]), _join_tokens(a[:-2])))
+            if len(a) >= 3 and is_ident(a[-2]) and a[-2].lower() == "as":
+                items.append((_xml_name(a[-1]), join_tokens(a[:-2])))
             else:
                 # default name: the column's own name (xml.c map_sql_identifier)
-                items.append((_xml_name(a[-1]), _join_tokens(a)))
+                items.append((_xml_name(a[-1]), join_tokens(a)))
         return xmlgen.forest(items)
     # xmlelement(name tag [, xmlattributes(...)] [, content ...])
     if len(args[0]) < 2 or args[0][0].lower() != "name":
@@ -2905,22 +2552,22 @@ def _xml_expand(fn: str, inner: list[str], generated: set[str]) -> str:
     content: list[str] = []
     for a in args[1:]:
         if (
-            _is_ident(a[0])
+            is_ident(a[0])
             and a[0].lower() == "xmlattributes"
             and len(a) > 1
             and a[1] == "("
         ):
-            for item in _xml_split_args(a[2:-1]):
-                if len(item) >= 3 and _is_ident(item[-2]) and item[-2].lower() == "as":
+            for item in split_top(a[2:-1]):
+                if len(item) >= 3 and is_ident(item[-2]) and item[-2].lower() == "as":
                     attr_sqls.append(
-                        xmlgen.attribute(_xml_name(item[-1]), _join_tokens(item[:-2]))
+                        xmlgen.attribute(_xml_name(item[-1]), join_tokens(item[:-2]))
                     )
                 else:
                     attr_sqls.append(
-                        xmlgen.attribute(_xml_name(item[-1]), _join_tokens(item))
+                        xmlgen.attribute(_xml_name(item[-1]), join_tokens(item))
                     )
         else:
-            content.append((_join_tokens(a), _is_xml_arg(a)))
+            content.append((join_tokens(a), _is_xml_arg(a)))
     from greengage_spark.functions.xmlgen import element
 
     return element(tag, attr_sqls, content)
@@ -2935,14 +2582,14 @@ def _pass_xml(toks: list[str]) -> list[str]:
     while changed:
         changed = False
         for i, t in enumerate(toks):
-            if not (_is_ident(t) and t.lower() in _XML_FUNCS):
+            if not (is_ident(t) and t.lower() in _XML_FUNCS):
                 continue
             if i + 1 >= len(toks) or toks[i + 1] != "(":
                 continue
-            close = _match_paren(toks, i + 1)
+            close = match_close(toks, i + 1)
             inner = toks[i + 2 : close]
             if any(
-                _is_ident(x) and x.lower() in _XML_FUNCS for x in inner
+                is_ident(x) and x.lower() in _XML_FUNCS for x in inner
             ):
                 continue  # expand innermost first
             expansion = _xml_expand(t.lower(), inner, generated)
@@ -2959,23 +2606,18 @@ def _pass_xmlagg(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() == "xmlagg"
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _match_paren(toks, i + 1)
+            close = match_close(toks, i + 1)
             inner = toks[i + 2 : close]
-            k = None
-            depth = 0
-            for j, x in enumerate(inner):
-                if x == "(":
-                    depth += 1
-                elif x == ")":
-                    depth -= 1
-                elif depth == 0 and _is_ident(x) and x.lower() == "order":
-                    k = j
-                    break
+            k = next(
+                (j for j, x in top_level(inner)
+                 if is_ident(x) and x.lower() == "order"),
+                None,
+            )
             expr = inner[:k] if k is not None else inner
             tail = inner[k:] if k is not None else []
             out += ["string_agg", "("] + expr + [",", "''"] + tail + [")"]
@@ -2997,9 +2639,9 @@ def _pass_typed_literals(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if (
-            _is_ident(t)
+            is_ident(t)
             and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
             and t.lower() in _TYPE_MAP
             and t.lower() not in (
                 "date", "timestamp", "timestamptz", "char", "name",
@@ -3007,7 +2649,7 @@ def _pass_typed_literals(toks: list[str]) -> list[str]:
                 "point", "box", "circle",
             )
             and (not out or out[-1] not in (".",))
-            and not (out and _is_ident(out[-1]) and out[-1].lower() in ("as",))
+            and not (out and is_ident(out[-1]) and out[-1].lower() in ("as",))
         ):
             low = t.lower()
             lit = toks[i + 1][1:-1]
@@ -3121,29 +2763,29 @@ def _pass_similar_to(toks: list[str]) -> list[str]:
             (
                 i
                 for i, t in enumerate(toks)
-                if _is_ident(t)
+                if is_ident(t)
                 and t.lower() == "similar"
                 and i + 2 < len(toks)
-                and _is_ident(toks[i + 1])
+                and is_ident(toks[i + 1])
                 and toks[i + 1].lower() == "to"
-                and _is_string(toks[i + 2])
+                and is_string(toks[i + 2])
             ),
             None,
         )
         if idx is None:
             return toks
-        neg = idx > 0 and _is_ident(toks[idx - 1]) and toks[idx - 1].lower() == "not"
+        neg = idx > 0 and is_ident(toks[idx - 1]) and toks[idx - 1].lower() == "not"
         op_end = idx - 2 if neg else idx - 1
-        start = _operand_start(toks, op_end)
+        start = operand_start(toks, op_end)
         left = toks[start : op_end + 1]
         pat = toks[idx + 2][1:-1].replace("''", "'")
         after = idx + 3
         esc = "\\"
         if (
             after + 1 < len(toks)
-            and _is_ident(toks[after])
+            and is_ident(toks[after])
             and toks[after].lower() == "escape"
-            and _is_string(toks[after + 1])
+            and is_string(toks[after + 1])
         ):
             esc = toks[after + 1][1:-1].replace("''", "'")
             after += 2
@@ -3164,7 +2806,7 @@ def _pass_overlaps(toks: list[str]) -> list[str]:
             (
                 i
                 for i, t in enumerate(toks)
-                if _is_ident(t)
+                if is_ident(t)
                 and t.lower() == "overlaps"
                 and i > 0
                 and toks[i - 1] == ")"
@@ -3175,12 +2817,12 @@ def _pass_overlaps(toks: list[str]) -> list[str]:
         )
         if idx is None:
             return toks
-        lstart = _operand_start(toks, idx - 1)
+        lstart = operand_start(toks, idx - 1)
         if toks[lstart] != "(":
             return toks
-        rend = _match_paren(toks, idx + 1)
-        lpair = _split_top_commas(toks[lstart + 1 : idx - 1])
-        rpair = _split_top_commas(toks[idx + 2 : rend])
+        rend = match_close(toks, idx + 1)
+        lpair = split_top(toks[lstart + 1 : idx - 1])
+        rpair = split_top(toks[idx + 2 : rend])
         if len(lpair) != 2 or len(rpair) != 2:
             return toks
         s1 = lambda: ["least", "("] + lpair[0] + [","] + lpair[1] + [")"]
@@ -3208,23 +2850,23 @@ def _pass_at_time_zone(toks: list[str]) -> list[str]:
             (
                 i
                 for i, t in enumerate(toks)
-                if _is_ident(t)
+                if is_ident(t)
                 and t.lower() == "at"
                 and i + 2 < len(toks)
-                and _is_ident(toks[i + 1])
+                and is_ident(toks[i + 1])
                 and toks[i + 1].lower() == "time"
-                and _is_ident(toks[i + 2])
+                and is_ident(toks[i + 2])
                 and toks[i + 2].lower() == "zone"
             ),
             None,
         )
         if idx is None:
             return toks
-        start = _operand_start(toks, idx - 1)
+        start = operand_start(toks, idx - 1)
         # include a typed-literal keyword (TIMESTAMP '…' folds as one operand)
         if (
             start > 0
-            and _is_ident(toks[start - 1])
+            and is_ident(toks[start - 1])
             and toks[start - 1].lower() in ("timestamp", "timestamp_ntz", "date")
         ):
             start -= 1
@@ -3281,7 +2923,7 @@ def _pass_bit_casts(toks: list[str]) -> list[str]:
                 for i, t in enumerate(toks)
                 if t == "::"
                 and i + 1 < len(toks)
-                and _is_ident(toks[i + 1])
+                and is_ident(toks[i + 1])
                 and toks[i + 1].lower() in ("bit", "varbit")
             ),
             None,
@@ -3293,16 +2935,16 @@ def _pass_bit_casts(toks: list[str]) -> list[str]:
         varying = False
         if tlow == "varbit":
             varying = True
-        elif j < len(toks) and _is_ident(toks[j]) and toks[j].lower() == "varying":
+        elif j < len(toks) and is_ident(toks[j]) and toks[j].lower() == "varying":
             varying = True
             j += 1
         n = None
         if j + 2 < len(toks) and toks[j] == "(" and toks[j + 2] == ")":
             n = toks[j + 1]
             j += 3
-        start = _operand_start(toks, idx - 1)
+        start = operand_start(toks, idx - 1)
         left = toks[start:idx]
-        is_str = len(left) == 1 and _is_string(left[0])
+        is_str = len(left) == 1 and is_string(left[0])
         if n is None:
             new = ["("] + left + [")"] if len(left) > 1 else left
         elif is_str or varying:
@@ -3334,12 +2976,12 @@ def _pass_like_escape(toks: list[str]) -> list[str]:
     i = 0
     while i + 3 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() in ("like", "ilike")
-            and _is_string(toks[i + 1])
-            and _is_ident(toks[i + 2])
+            and is_string(toks[i + 1])
+            and is_ident(toks[i + 2])
             and toks[i + 2].lower() == "escape"
-            and _is_string(toks[i + 3])
+            and is_string(toks[i + 3])
         ):
             esc = toks[i + 3][1:-1]
             if len(esc) == 1:
@@ -3374,12 +3016,12 @@ def _pass_only_tables(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() == "only"
             and i + 1 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and i >= 1
-            and _is_ident(toks[i - 1])
+            and is_ident(toks[i - 1])
             and toks[i - 1].lower() in ("from", "join", "update", "delete")
         ):
             i += 1
@@ -3401,19 +3043,19 @@ def _pass_inline_named_windows(toks: list[str]) -> list[str]:
     defs: dict[str, list[str]] = {}
     i = 0
     while i < len(toks):
-        if not (_is_ident(toks[i]) and toks[i].lower() == "window" and i + 2 < len(toks)
-                and _is_ident(toks[i + 1]) and toks[i + 2].lower() == "as"):
+        if not (is_ident(toks[i]) and toks[i].lower() == "window" and i + 2 < len(toks)
+                and is_ident(toks[i + 1]) and toks[i + 2].lower() == "as"):
             i += 1
             continue
         j = i + 1
         while (
             j + 1 < len(toks)
-            and _is_ident(toks[j])
+            and is_ident(toks[j])
             and toks[j + 1].lower() == "as"
             and j + 2 < len(toks)
             and toks[j + 2] == "("
         ):
-            close = _match_paren(toks, j + 2)
+            close = match_close(toks, j + 2)
             defs[toks[j].lower()] = toks[j + 3 : close]
             j = close + 1
             if j < len(toks) and toks[j] == ",":
@@ -3428,14 +3070,14 @@ def _pass_inline_named_windows(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() == "over"
             and i + 2 < len(toks)
             and toks[i + 1] == "("
-            and _is_ident(toks[i + 2])
+            and is_ident(toks[i + 2])
             and toks[i + 2].lower() in defs
         ):
-            close = _match_paren(toks, i + 1)
+            close = match_close(toks, i + 1)
             rest = toks[i + 3 : close]
             if rest:  # extended reference — splice the definition in
                 out += ["over", "("] + defs[toks[i + 2].lower()] + rest + [")"]
@@ -3452,43 +3094,22 @@ def _pass_offset_before_limit(toks: list[str]) -> list[str]:
     swap when OFFSET precedes LIMIT at the same nesting depth."""
     i = 0
     while i < len(toks):
-        if _is_ident(toks[i]) and toks[i].lower() == "offset":
-            depth = 0
-            j = i + 1
-            off_end = None
-            while j < len(toks):
-                t = toks[j]
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif depth == 0 and _is_ident(t) and t.lower() == "limit":
-                    off_end = j
-                    break
-                elif depth == 0 and _is_ident(t) and t.lower() in (
-                    "union", "intersect", "except", "order", "window",
-                ):
-                    break
-                j += 1
-            if off_end is not None:
+        if is_ident(toks[i]) and toks[i].lower() == "offset":
+            off_end = next(
+                (j for j, t in top_level(toks, i + 1) if is_ident(t) and t.lower() in (
+                    "limit", "union", "intersect", "except", "order", "window",
+                )),
+                None,
+            )
+            if off_end is not None and toks[off_end].lower() == "limit":
                 # find end of the LIMIT operand
-                k = off_end + 1
-                depth = 0
-                while k < len(toks):
-                    t = toks[k]
-                    if t == "(":
-                        depth += 1
-                    elif t == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif depth == 0 and _is_ident(t) and t.lower() in (
-                        "union", "intersect", "except", "order", "offset", "window",
-                    ):
-                        break
-                    k += 1
+                k = next(
+                    (k for k, t in top_level(toks, off_end + 1)
+                     if t == ")" or is_ident(t) and t.lower() in (
+                         "union", "intersect", "except", "order", "offset", "window",
+                     )),
+                    len(toks),
+                )
                 limit_clause = toks[off_end:k]
                 offset_clause = toks[i:off_end]
                 toks = toks[:i] + limit_clause + offset_clause + toks[k:]
@@ -3507,7 +3128,7 @@ def _pass_grouping_plain(toks: list[str]) -> list[str]:
     which is likewise 0 outside duplicate sets — to the literal 0."""
     has_ext = False
     for i, t in enumerate(toks):
-        if not _is_ident(t):
+        if not is_ident(t):
             continue
         low = t.lower()
         if low in ("rollup", "cube") and i + 1 < len(toks) and toks[i + 1] == "(":
@@ -3516,57 +3137,29 @@ def _pass_grouping_plain(toks: list[str]) -> list[str]:
         if (
             low == "grouping"
             and i + 1 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "sets"
         ):
             has_ext = True
             break
     if has_ext:
         return toks
-    i = 0
-    while i + 1 < len(toks):
-        if (
-            _is_ident(toks[i])
-            and toks[i].lower() in ("grouping", "group_id")
-            and toks[i + 1] == "("
-        ):
-            close = _args_span(toks, i + 1)
-            toks = toks[:i] + ["0"] + toks[close + 1 :]
-        i += 1
-    return toks
-
-
-def _join_tokens(toks: list[str]) -> str:
-    """Tokens → SQL text.  ``.`` binds tight in qualified names, but only
-    at the TOKEN level — a naive text replace would corrupt string
-    literals containing ' . ' (e.g. spaced to_char templates)."""
-    out: list[str] = []
-    glue = False  # previous token was a standalone qualified-name dot
-    for t in toks:
-        if t == "." and out:
-            out[-1] = out[-1] + "."
-            glue = True
-        elif glue:
-            out[-1] = out[-1] + t
-            glue = False
-        else:
-            out.append(t)
-    return " ".join(out)
+    return rewrite_calls(toks, {"grouping", "group_id"}, lambda *_: ["0"])
 
 
 def _gb_norm(tl: list[str]) -> str:
     """Normalized key for a grouping expression (token text, idents folded)."""
-    return " ".join(t.lower() if _is_ident(t) else t for t in tl)
+    return " ".join(t.lower() if is_ident(t) else t for t in tl)
 
 
 def _gb_elems(toks: list[str]) -> list[list[list[str]]]:
     """Contents of CUBE(...)/ROLLUP(...) → elements, each a list of exprs
     (a composite ``(a, b)`` element is one multi-expr element)."""
     elems: list[list[list[str]]] = []
-    for part in _split_args(toks):
+    for part in split_top(toks):
         part = [p for p in part]
-        if part and part[0] == "(" and _args_span(part, 0) == len(part) - 1:
-            elems.append([e for e in _split_args(part[1:-1]) if e])
+        if part and part[0] == "(" and match_close(part, 0) == len(part) - 1:
+            elems.append([e for e in split_top(part[1:-1]) if e])
         else:
             elems.append([part] if part else [])
     return elems
@@ -3580,10 +3173,10 @@ def _gb_expand_item(item: list[str]) -> list[list[list[str]]]:
     CUBE/ROLLUP/GS); ``(a,b)`` → one composite set; expr → one set."""
     if (
         len(item) >= 2
-        and _is_ident(item[0])
+        and is_ident(item[0])
         and item[0].lower() in ("cube", "rollup")
         and item[1] == "("
-        and _args_span(item, 1) == len(item) - 1
+        and match_close(item, 1) == len(item) - 1
     ):
         elems = _gb_elems(item[2:-1])
         if item[0].lower() == "cube":
@@ -3600,49 +3193,36 @@ def _gb_expand_item(item: list[str]) -> list[list[list[str]]]:
         ]
     if (
         len(item) >= 3
-        and _is_ident(item[0])
+        and is_ident(item[0])
         and item[0].lower() == "grouping"
-        and _is_ident(item[1])
+        and is_ident(item[1])
         and item[1].lower() == "sets"
         and item[2] == "("
-        and _args_span(item, 2) == len(item) - 1
+        and match_close(item, 2) == len(item) - 1
     ):
         sets = []
-        for sub in _split_args(item[3:-1]):
+        for sub in split_top(item[3:-1]):
             if not sub:
                 continue
-            if sub[0] == "(" and _args_span(sub, 0) == len(sub) - 1:
+            if sub[0] == "(" and match_close(sub, 0) == len(sub) - 1:
                 # composite (a,b) or empty () — a single explicit set
-                sets.append([e for e in _split_args(sub[1:-1]) if e])
+                sets.append([e for e in split_top(sub[1:-1]) if e])
             else:
                 sets.extend(_gb_expand_item(sub))
         return sets
-    if item and item[0] == "(" and _args_span(item, 0) == len(item) - 1:
-        return [[e for e in _split_args(item[1:-1]) if e]]
+    if item and item[0] == "(" and match_close(item, 0) == len(item) - 1:
+        return [[e for e in split_top(item[1:-1]) if e]]
     return [[item]] if item else [[]]
 
 
 def _gb_scope_end(toks: list[str], i: int) -> int:
     """End (exclusive) of the SELECT scope starting at toks[i] == 'select'."""
-    j, depth = i + 1, 0
-    while j < len(toks):
-        t = toks[j]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            if depth == 0:
-                return j
-            depth -= 1
-        elif t == ";":
-            return j
-        elif (
-            depth == 0
-            and _is_ident(t)
-            and t.lower() in ("union", "intersect", "except")
-        ):
-            return j
-        j += 1
-    return j
+    return next(
+        (j for j, t in top_level(toks, i + 1)
+         if t in CLOSE or t == ";"
+         or is_ident(t) and t.lower() in ("union", "intersect", "except")),
+        len(toks),
+    )
 
 
 def _gb_call_sites(toks, start, end, names):
@@ -3654,13 +3234,13 @@ def _gb_call_sites(toks, start, end, names):
         if (
             t == "("
             and j + 1 < end
-            and _is_ident(toks[j + 1])
+            and is_ident(toks[j + 1])
             and toks[j + 1].lower() == "select"
         ):
-            j = _args_span(toks, j) + 1
+            j = match_close(toks, j) + 1
             continue
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in names
             and j + 1 < end
             and toks[j + 1] == "("
@@ -3698,10 +3278,10 @@ def _pass_multiword_types(toks: list[str]) -> list[str]:
     ZONE is unaffected (its ``time`` is preceded by ``at``)."""
     i = 0
     while i < len(toks):
-        low = toks[i].lower() if _is_ident(toks[i]) else None
+        low = toks[i].lower() if is_ident(toks[i]) else None
         for words, repl in _MULTIWORD_TYPES:
             if low == words[0] and [
-                t.lower() if _is_ident(t) else t
+                t.lower() if is_ident(t) else t
                 for t in toks[i : i + len(words)]
             ] == words:
                 toks[i : i + len(words)] = [repl]
@@ -3760,9 +3340,9 @@ def _pass_interval_mixed(toks: list[str]) -> list[str]:
     i = 1
     while i < len(toks) - 1:
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "interval"
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
             and toks[i - 1] in ("+", "-")
         ):
             split = _split_interval_body(toks[i + 1][1:-1])
@@ -3785,10 +3365,10 @@ def _pass_interval_unit_aliases(toks: list[str]) -> list[str]:
     ``interval '<text>'`` literals."""
     for i, t in enumerate(toks):
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() == "interval"
             and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
         ):
             body = toks[i + 1][1:-1]
             words = [
@@ -3808,16 +3388,16 @@ def _pass_interval_add_timestamp(toks: list[str]) -> list[str]:
     i = 2
     while i < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "interval"
             and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
             and toks[i - 1] in ("+", "-")
         ):
             if (
-                _is_string(toks[i - 2])
+                is_string(toks[i - 2])
                 and i >= 3
-                and _is_ident(toks[i - 3])
+                and is_ident(toks[i - 3])
                 and toks[i - 3].lower() == "date"
             ):
                 # date 'lit' ± interval → TIMESTAMP (date.c
@@ -3828,24 +3408,22 @@ def _pass_interval_add_timestamp(toks: list[str]) -> list[str]:
                 i += 4
             elif (
                 i >= 4
-                and _is_ident(toks[i - 2])
+                and is_ident(toks[i - 2])
                 and toks[i - 3] == "::"
             ):
                 # `expr::type ± interval`: wrap the WHOLE cast operand
                 # (leaving the :: dangling would mis-lower later)
-                s = _operand_start(toks, i - 4)
+                s = operand_start(toks, i - 4)
                 toks[s : i - 1] = (
                     ["CAST", "("] + toks[s : i - 1] + ["AS", "TIMESTAMP", ")"]
                 )
                 i += 5
             elif (
-                _is_ident(toks[i - 2])
+                is_ident(toks[i - 2])
                 and toks[i - 2].lower() not in _KEYWORDS_NONOPERAND
             ):
-                # operand: walk back over qualified name  a.b.c
-                s = i - 2
-                while s - 2 >= 0 and toks[s - 1] == "." and _is_ident(toks[s - 2]):
-                    s -= 2
+                # operand: a qualified name  a.b.c
+                s = operand_start(toks, i - 2)
                 toks[s : i - 1] = (
                     ["CAST", "("] + toks[s : i - 1] + ["AS", "TIMESTAMP", ")"]
                 )
@@ -3860,47 +3438,9 @@ _KEYWORDS_NONOPERAND = {
 }
 
 
-def _primary_left(toks: list[str], i: int) -> int:
-    """Start index of the primary expression ending at toks[i-1]:
-    a balanced paren group (with optional function name), a qualified
-    identifier chain, or a single literal."""
-    j = i - 1
-    if j >= 0 and toks[j] == ")":
-        depth = 0
-        while j >= 0:
-            if toks[j] == ")":
-                depth += 1
-            elif toks[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
-        if (
-            j - 1 >= 0
-            and _is_ident(toks[j - 1])
-            and toks[j - 1].lower() not in _KEYWORDS_NONOPERAND
-        ):
-            j -= 1
-        return j
-    while j - 2 >= 0 and toks[j - 1] == "." and _is_ident(toks[j - 2]):
-        j -= 2
-    return j
-
-
-def _primary_right(toks: list[str], i: int) -> int:
-    """End index (exclusive) of the primary expression starting at
-    toks[i+1] (optional unary sign, then call/paren group/literal)."""
-    j = i + 1
-    if j < len(toks) and toks[j] in ("+", "-", "~"):
-        j += 1
-    if j < len(toks) and _is_ident(toks[j]) and j + 1 < len(toks) and toks[j + 1] == "(":
-        return _args_span(toks, j + 1) + 1
-    if j < len(toks) and toks[j] == "(":
-        return _args_span(toks, j) + 1
-    j += 1
-    while j + 1 < len(toks) and toks[j] == "." and _is_ident(toks[j + 1]):
-        j += 2
-    return j
+def _after_sign(toks: list[str], j: int) -> int:
+    """j, moved past one unary sign token."""
+    return j + 1 if j < len(toks) and toks[j] in ("+", "-", "~") else j
 
 
 def _pass_pow_xor(toks: list[str]) -> list[str]:
@@ -3916,8 +3456,8 @@ def _pass_pow_xor(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if toks[i] == "^":
-            ls = _primary_left(toks, i)
-            re_ = _primary_right(toks, i)
+            ls = operand_start(toks, i - 1) if i else -1
+            re_ = operand_end(toks, _after_sign(toks, i + 1)) + 1
             if ls < 0:
                 i += 1
                 continue
@@ -3997,7 +3537,7 @@ def _pass_reject_large_objects(toks: list[str]) -> list[str]:
     name so a ported schema fails with a contract, not a parse error."""
     for i, t in enumerate(toks):
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in _LO_FUNCS
             and i + 1 < len(toks)
             and toks[i + 1] == "("
@@ -4021,7 +3561,7 @@ def _pass_tsearch2_aliases(toks: list[str]) -> list[str]:
     WITHIN GROUP form — those keep their core meanings."""
     out = list(toks)
     for i, t in enumerate(out):
-        if not _is_ident(t) or i + 1 >= len(out) or out[i + 1] != "(":
+        if not is_ident(t) or i + 1 >= len(out) or out[i + 1] != "(":
             continue
         # a qualified name (x.rank) is a column access, never the alias
         if i > 0 and out[i - 1] == ".":
@@ -4038,8 +3578,8 @@ def _pass_tsearch2_aliases(toks: list[str]) -> list[str]:
                 "the configuration per-call instead"
             )
         elif low == "rank":
-            close = _args_span(out, i + 1)
-            nargs = len(_split_args(out[i + 2 : close]))
+            close = match_close(out, i + 1)
+            nargs = len(split_top(out[i + 2 : close]))
             after = out[close + 1].lower() if close + 1 < len(out) else ""
             if nargs >= 2 and after not in ("over", "within"):
                 out[i] = "ts_rank"
@@ -4066,15 +3606,15 @@ def _pass_text_search(toks: list[str]) -> list[str]:
     # than simple/english reject loudly.
     i = 0
     while i < len(toks):
-        low = toks[i].lower() if _is_ident(toks[i]) else None
+        low = toks[i].lower() if is_ident(toks[i]) else None
         if (
             low in ("to_tsvector", "to_tsquery", "plainto_tsquery")
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _args_span(toks, i + 1)
-            args = _split_args(toks[i + 2 : close])
-            if len(args) == 2 and len(args[0]) == 1 and _is_string(args[0][0]):
+            close = match_close(toks, i + 1)
+            args = split_top(toks[i + 2 : close])
+            if len(args) == 2 and len(args[0]) == 1 and is_string(args[0][0]):
                 cfg = args[0][0].strip("'").lower().split(".")[-1]
                 from greengage_spark.functions.snowball import LANGS
 
@@ -4089,7 +3629,7 @@ def _pass_text_search(toks: list[str]) -> list[str]:
                                 ["__gg_tsv_cfg", "(", f"'{cfg}'", ","]
                                 + args[1] + [")"]
                             )
-                    elif len(args[1]) == 1 and _is_string(args[1][0]):
+                    elif len(args[1]) == 1 and is_string(args[1][0]):
                         from greengage_spark.functions.textsearch import (
                             stem_tsquery,
                         )
@@ -4124,14 +3664,14 @@ def _pass_text_search(toks: list[str]) -> list[str]:
         ):
             # ts_lexize(dict, token) (ts_utils.c): the english_stem /
             # simple dictionaries; literal tokens fold at plan time
-            close = _args_span(toks, i + 1)
-            args = _split_args(toks[i + 2 : close])
+            close = match_close(toks, i + 1)
+            args = split_top(toks[i + 2 : close])
             if (
                 len(args) == 2
                 and len(args[0]) == 1
-                and _is_string(args[0][0])
+                and is_string(args[0][0])
                 and len(args[1]) == 1
-                and _is_string(args[1][0])
+                and is_string(args[1][0])
             ):
                 dname = args[0][0].strip("'").lower().split(".")[-1]
                 word = args[1][0][1:-1].replace("''", "'").lower()
@@ -4185,18 +3725,18 @@ def _pass_text_search(toks: list[str]) -> list[str]:
         i += 1
 
     def _drop_cfg(args: list[list[str]]) -> list[list[str]]:
-        if len(args) >= 2 and len(args[0]) == 1 and _is_string(args[0][0]):
+        if len(args) >= 2 and len(args[0]) == 1 and is_string(args[0][0]):
             return args[1:]
         return args
 
     def _unwrap_call(arg: list[str]):
         if (
             len(arg) >= 3
-            and _is_ident(arg[0])
+            and is_ident(arg[0])
             and arg[1] == "("
-            and _args_span(arg, 1) == len(arg) - 1
+            and match_close(arg, 1) == len(arg) - 1
         ):
-            return arg[0].lower(), _split_args(arg[2:-1])
+            return arg[0].lower(), split_top(arg[2:-1])
         return None, None
 
     def _query_literal(arg: list[str]) -> str | None:
@@ -4204,10 +3744,10 @@ def _pass_text_search(toks: list[str]) -> list[str]:
         fn, inner = _unwrap_call(arg)
         if fn in ("to_tsquery", "plainto_tsquery"):
             inner = _drop_cfg(inner)
-            if len(inner) == 1 and len(inner[0]) == 1 and _is_string(inner[0][0]):
+            if len(inner) == 1 and len(inner[0]) == 1 and is_string(inner[0][0]):
                 return inner[0][0]
             return None
-        if len(arg) == 1 and _is_string(arg[0]):
+        if len(arg) == 1 and is_string(arg[0]):
             return arg[0]
         return None
 
@@ -4218,23 +3758,23 @@ def _pass_text_search(toks: list[str]) -> list[str]:
         joined with &)."""
         if (
             len(arg) == 3
-            and _is_string(arg[0])
+            and is_string(arg[0])
             and arg[1] == "::"
-            and _is_ident(arg[2])
+            and is_ident(arg[2])
             and arg[2].lower() == "tsquery"
         ):
             return arg[0].strip("'")
         fn, inner = _unwrap_call(arg)
         if fn in ("to_tsquery", "plainto_tsquery"):
             inner = _drop_cfg(inner)
-            if len(inner) == 1 and len(inner[0]) == 1 and _is_string(inner[0][0]):
+            if len(inner) == 1 and len(inner[0]) == 1 and is_string(inner[0][0]):
                 body = inner[0][0].strip("'")
                 if fn == "plainto_tsquery":
                     lex = [t for t in re.split(r"[^a-z0-9]+", body.lower()) if t]
                     return " & ".join(lex)
                 return body
             return None
-        if len(arg) == 1 and _is_string(arg[0]):
+        if len(arg) == 1 and is_string(arg[0]):
             return arg[0].strip("'")
         return None
 
@@ -4250,13 +3790,13 @@ def _pass_text_search(toks: list[str]) -> list[str]:
         i = 0
         while i < len(toks):
             if (
-                _is_ident(toks[i])
+                is_ident(toks[i])
                 and toks[i].lower() == "ts_rewrite"
                 and i + 1 < len(toks)
                 and toks[i + 1] == "("
             ):
-                close = _args_span(toks, i + 1)
-                args = _split_args(toks[i + 2 : close])
+                close = match_close(toks, i + 1)
+                args = split_top(toks[i + 2 : close])
                 if len(args) == 3:
                     parts = [_tsq_arg_text(a) for a in args]
                     if all(p is not None for p in parts):
@@ -4272,7 +3812,7 @@ def _pass_text_search(toks: list[str]) -> list[str]:
                         # non-literal argument(s): per-row rewrite via the
                         # pandas UDF (pg_sql registers it on sight)
                         q, t, s = (
-                            f"CAST(({_join_tokens(a)}) AS STRING)"
+                            f"CAST(({join_tokens(a)}) AS STRING)"
                             for a in args
                         )
                         toks[i : close + 1] = tokenize(
@@ -4297,10 +3837,10 @@ def _pass_text_search(toks: list[str]) -> list[str]:
     # (tsrank.c calc_rank_cd; wparser_def.c prsd_headline)
     i = 0
     while i < len(toks):
-        low = toks[i].lower() if _is_ident(toks[i]) else None
+        low = toks[i].lower() if is_ident(toks[i]) else None
         if low in ("ts_rank_cd", "ts_rank", "ts_headline") and i + 1 < len(toks) and toks[i + 1] == "(":
-            close = _args_span(toks, i + 1)
-            args = _split_args(toks[i + 2 : close])
+            close = match_close(toks, i + 1)
+            args = split_top(toks[i + 2 : close])
             if low == "ts_headline":
                 # [config,] document, query [, options] — config and
                 # options disambiguate by position (ts_headline has 2-4
@@ -4308,7 +3848,7 @@ def _pass_text_search(toks: list[str]) -> list[str]:
                 # literal and arg2 a tsquery, else (doc, q, opts))
                 opts = "''"
                 hl_cfg = "'simple'"
-                if args and len(args[0]) == 1 and _is_string(args[0][0]):
+                if args and len(args[0]) == 1 and is_string(args[0][0]):
                     _c = args[0][0].strip("'").lower().split(".")[-1]
                     from greengage_spark.functions.snowball import LANGS
 
@@ -4359,14 +3899,14 @@ def _pass_text_search(toks: list[str]) -> list[str]:
                 nums = None
                 if (
                     len(a0) == 1
-                    and _is_string(a0[0])
+                    and is_string(a0[0])
                     and a0[0].strip("'").lstrip().startswith("{")
                 ):
                     nums = [
                         x.strip()
                         for x in a0[0].strip("'").strip().strip("{}").split(",")
                     ]
-                elif a0 and _is_ident(a0[0]) and a0[0].lower() == "array":
+                elif a0 and is_ident(a0[0]) and a0[0].lower() == "array":
                     nums = [
                         t for t in a0
                         if re.match(r"^-?[\d.]+[dD]?$", t)
@@ -4406,7 +3946,7 @@ def _pass_text_search(toks: list[str]) -> list[str]:
             fn, inner = _unwrap_call(args[0])
             weight = "'D'"
             stripped = False
-            if fn == "setweight" and len(inner) == 2 and _is_string(inner[1][0]):
+            if fn == "setweight" and len(inner) == 2 and is_string(inner[1][0]):
                 weight = inner[1][0]
                 fn, inner = _unwrap_call(inner[0])
             if fn == "strip":
@@ -4469,16 +4009,16 @@ def _pass_text_search(toks: list[str]) -> list[str]:
     # the english marker lowers to the Arrow-batched snowball UDF
     i = 0
     while i < len(toks):
-        low = toks[i].lower() if _is_ident(toks[i]) else None
+        low = toks[i].lower() if is_ident(toks[i]) else None
         if (
             low in ("to_tsvector", "__gg_tsv_en", "__gg_tsv_cfg")
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _args_span(toks, i + 1)
-            args = _split_args(toks[i + 2 : close])
+            close = match_close(toks, i + 1)
+            args = split_top(toks[i + 2 : close])
             cfg_arg = None
-            if len(args) == 2 and _is_string(args[0][0]):
+            if len(args) == 2 and is_string(args[0][0]):
                 cfg_arg = args[0][0]
                 args = args[1:]
             if len(args) == 1:
@@ -4504,20 +4044,20 @@ def _pass_text_search(toks: list[str]) -> list[str]:
     i = 0
     while i + 1 < len(toks):
         if toks[i] == "@" and toks[i + 1] == "@":
-            ls = _primary_left(toks, i)
+            ls = operand_start(toks, i - 1) if i else i
             j = i + 2
             if (
                 ls < i
                 and j + 1 < len(toks)
-                and _is_ident(toks[j])
+                and is_ident(toks[j])
                 and toks[j].lower() in ("plainto_tsquery", "to_tsquery")
                 and toks[j + 1] == "("
             ):
-                close = _args_span(toks, j + 1)
-                qargs = _split_args(toks[j + 2 : close])
-                if len(qargs) == 2 and _is_string(qargs[0][0]):
+                close = match_close(toks, j + 1)
+                qargs = split_top(toks[j + 2 : close])
+                if len(qargs) == 2 and is_string(qargs[0][0]):
                     qargs = qargs[1:]
-                if len(qargs) == 1 and len(qargs[0]) == 1 and _is_string(
+                if len(qargs) == 1 and len(qargs[0]) == 1 and is_string(
                     qargs[0][0]
                 ):
                     tsv = " ".join(toks[ls:i])
@@ -4564,14 +4104,14 @@ def _pass_text_search(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() in ("to_tsquery", "plainto_tsquery")
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _args_span(toks, i + 1)
-            args = _drop_cfg(_split_args(toks[i + 2 : close]))
-            if len(args) == 1 and len(args[0]) == 1 and _is_string(args[0][0]):
+            close = match_close(toks, i + 1)
+            args = _drop_cfg(split_top(toks[i + 2 : close]))
+            if len(args) == 1 and len(args[0]) == 1 and is_string(args[0][0]):
                 body = args[0][0].strip("'")
                 if toks[i].lower() == "plainto_tsquery":
                     lex = [
@@ -4582,7 +4122,7 @@ def _pass_text_search(toks: list[str]) -> list[str]:
                 esc = txt.replace("'", "''")
                 toks[i : close + 1] = [f"'{esc}'"]
         elif (
-            _is_string(toks[i])
+            is_string(toks[i])
             and i + 2 < len(toks)
             and toks[i + 1] == "::"
             and toks[i + 2].lower() == "tsquery"
@@ -4622,7 +4162,7 @@ def _pass_earthdistance(toks: list[str]) -> list[str]:
     array-ops pass so this ``<@`` never reads as array containment.
     """
     if not any(
-        _is_ident(t) and (t.lower() in _EARTH_FN_ARITY or t.lower() == "earth")
+        is_ident(t) and (t.lower() in _EARTH_FN_ARITY or t.lower() == "earth")
         for t in toks
     ):
         return toks
@@ -4634,13 +4174,13 @@ def _pass_earthdistance(toks: list[str]) -> list[str]:
         if (
             toks[i] == "<"
             and toks[i + 1] == "@"
-            and _is_ident(toks[i + 2])
+            and is_ident(toks[i + 2])
             and toks[i + 2].lower() == "earth_box"
             and toks[i + 3] == "("
             and i > 0
         ):
-            close = _args_span(toks, i + 3)
-            lstart = _operand_start(toks, i - 1)
+            close = match_close(toks, i + 3)
+            lstart = operand_start(toks, i - 1)
             left = toks[lstart:i]
             box = toks[i + 2 : close + 1]
             toks[lstart : close + 1] = (
@@ -4657,7 +4197,7 @@ def _pass_earthdistance(toks: list[str]) -> list[str]:
     # only opaque tokens.
     def _has_earth_call(span: list[str]) -> bool:
         return any(
-            _is_ident(x)
+            is_ident(x)
             and (
                 x.lower() in _EARTH_FN_ARITY
                 or x.lower() in ("earth", "__gg_earth_contains")
@@ -4670,7 +4210,7 @@ def _pass_earthdistance(toks: list[str]) -> list[str]:
         changed = False
         i = 0
         while i < len(toks):
-            t = toks[i].lower() if _is_ident(toks[i]) else None
+            t = toks[i].lower() if is_ident(toks[i]) else None
             if (
                 t == "earth"
                 and i + 2 < len(toks)
@@ -4684,8 +4224,8 @@ def _pass_earthdistance(toks: list[str]) -> list[str]:
             if (
                 t in _EARTH_FN_ARITY or t == "__gg_earth_contains"
             ) and i + 1 < len(toks) and toks[i + 1] == "(":
-                close = _args_span(toks, i + 1)
-                args = _split_args(toks[i + 2 : close])
+                close = match_close(toks, i + 1)
+                args = split_top(toks[i + 2 : close])
                 arity = 2 if t == "__gg_earth_contains" else _EARTH_FN_ARITY[t]
                 if len(args) == arity and not _has_earth_call(
                     toks[i + 2 : close]
@@ -4696,7 +4236,7 @@ def _pass_earthdistance(toks: list[str]) -> list[str]:
                         else getattr(E, f"{t}_sql")
                     )
                     toks[i : close + 1] = [
-                        "(" + fn(*[_join_tokens(a) for a in args]) + ")"
+                        "(" + fn(*[join_tokens(a) for a in args]) + ")"
                     ]
                     changed = True
                 i += 1
@@ -4715,7 +4255,7 @@ def _pass_trgm_ops(toks: list[str]) -> list[str]:
     (set_limit/show_limit)."""
 
     def _is_plain_string(span: list[str]) -> bool:
-        return len(span) == 1 and _is_string(span[0])
+        return len(span) == 1 and is_string(span[0])
 
     i = 0
     while i < len(toks):
@@ -4731,7 +4271,7 @@ def _pass_trgm_ops(toks: list[str]) -> list[str]:
         if op is None or i == 0 or i + oplen >= len(toks):
             i += 1
             continue
-        lstart = _operand_start(toks, i - 1)
+        lstart = operand_start(toks, i - 1)
         rend = _geo_right_end(toks, i + oplen)
         if rend is None:
             i += 1
@@ -4759,7 +4299,7 @@ def _pass_trgm_ops(toks: list[str]) -> list[str]:
     i = 0
     while i + 2 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "show_limit"
             and toks[i + 1] == "("
             and toks[i + 2] == ")"
@@ -4786,7 +4326,7 @@ def _pass_prefix_math_ops(toks: list[str]) -> list[str]:
                 or (i > 0 and toks[i - 1] in ("@", "<"))
             )
         ):
-            e = _primary_right(toks, i)
+            e = operand_end(toks, _after_sign(toks, i + 1)) + 1
             toks[i:e] = [fn, "("] + toks[i + 1 : e] + [")"]
         i += 1
     return toks
@@ -4801,12 +4341,12 @@ def _pass_factorial(toks: list[str]) -> list[str]:
         if toks[i] == "!":
             if i + 1 < len(toks) and toks[i + 1] == "!":
                 # prefix !!
-                e = _primary_right(toks, i + 1)
+                e = operand_end(toks, _after_sign(toks, i + 2)) + 1
                 toks[i:e] = (
                     ["factorial", "("] + toks[i + 2 : e] + [")"]
                 )
             else:
-                s = _primary_left(toks, i)
+                s = operand_start(toks, i - 1) if i else i
                 if s < i:
                     toks[s : i + 1] = (
                         ["factorial", "("] + toks[s:i] + [")"]
@@ -4825,14 +4365,14 @@ def _pass_float_int_cast_round(toks: list[str]) -> list[str]:
     i = 0
     while i + 1 < len(toks):
         if toks[i].upper() == "CAST" and toks[i + 1] == "(":
-            close = _args_span(toks, i + 1)
+            close = match_close(toks, i + 1)
             if (
                 close - 2 >= 0
                 and toks[close - 1].upper() in ("INT", "SMALLINT", "BIGINT", "TINYINT")
                 and toks[close - 2].upper() == "AS"
                 and toks[i + 2].upper() == "CAST"
             ):
-                inner_close = _args_span(toks, i + 3)
+                inner_close = match_close(toks, i + 3)
                 if (
                     toks[inner_close - 1].upper() in ("FLOAT", "DOUBLE", "REAL")
                     and inner_close == close - 3
@@ -4852,80 +4392,65 @@ def _pass_group_by_aliases(toks: list[str]) -> list[str]:
     each alias with its parenthesized defining expression."""
     i = 0
     while i < len(toks):
-        if not (_is_ident(toks[i]) and toks[i].lower() == "select"):
+        if not (is_ident(toks[i]) and toks[i].lower() == "select"):
             i += 1
             continue
         end = _gb_scope_end(toks, i)
         # tlist span and alias map (depth-0 AS <ident>)
-        j, depth = i + 1, 0
         tl_start = i + 1
-        if j < end and _is_ident(toks[j]) and toks[j].lower() == "distinct":
-            tl_start = j + 1
+        if tl_start < end and is_ident(toks[tl_start]) and toks[tl_start].lower() == "distinct":
+            tl_start += 1
         aliases: dict[str, list[str]] = {}
         item_st = tl_start
-        j = tl_start
         tl_end = end
-        while j < end:
-            t = toks[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0:
-                if t == ",":
-                    item_st = j + 1
-                elif _is_ident(t):
-                    low = t.lower()
-                    if low in _TARGETLIST_END:
-                        tl_end = j
-                        break
-                    if (
-                        low == "as"
-                        and j + 1 < end
-                        and _is_ident(toks[j + 1])
-                        and j > item_st
-                    ):
-                        aliases[toks[j + 1].lower()] = toks[item_st:j]
-            j += 1
+        for j, t in top_level(toks, tl_start):
+            if j >= end:
+                break
+            if t == ",":
+                item_st = j + 1
+            elif is_ident(t):
+                low = t.lower()
+                if low in _TARGETLIST_END:
+                    tl_end = j
+                    break
+                if (
+                    low == "as"
+                    and j + 1 < end
+                    and is_ident(toks[j + 1])
+                    and j > item_st
+                ):
+                    aliases[toks[j + 1].lower()] = toks[item_st:j]
         if not aliases:
             i += 1
             continue
         # locate a GROUP BY clause with a grouping extension
-        j, depth = tl_end, 0
         gb_start = gb_end = None
-        while j < end:
-            t = toks[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_ident(t):
-                low = t.lower()
-                if low == "group" and j + 1 < end and toks[j + 1].lower() == "by":
-                    gb_start = j + 2
-                    j += 2
-                    continue
-                if gb_start is not None and low in (
-                    "having", "order", "limit", "offset", "window",
-                ):
-                    gb_end = j
-                    break
-            j += 1
+        for j, t in top_level(toks, tl_end):
+            if j >= end:
+                break
+            low = t.lower() if is_ident(t) else None
+            if low == "group" and j + 1 < end and toks[j + 1].lower() == "by":
+                gb_start = j + 2
+            elif gb_start is not None and low in (
+                "having", "order", "limit", "offset", "window",
+            ):
+                gb_end = j
+                break
         if gb_start is None:
             i += 1
             continue
         gb_end = gb_end if gb_end is not None else end
         region = toks[gb_start:gb_end]
         has_ext = any(
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in ("cube", "rollup")
             and k + 1 < len(region)
             and region[k + 1] == "("
             or (
-                _is_ident(t)
+                is_ident(t)
                 and t.lower() == "grouping"
                 and k + 1 < len(region)
-                and _is_ident(region[k + 1])
+                and is_ident(region[k + 1])
                 and region[k + 1].lower() == "sets"
             )
             for k, t in enumerate(region)
@@ -4935,7 +4460,7 @@ def _pass_group_by_aliases(toks: list[str]) -> list[str]:
             continue
         new_region: list[str] = []
         for k, t in enumerate(region):
-            low = t.lower() if _is_ident(t) else None
+            low = t.lower() if is_ident(t) else None
             prev = region[k - 1] if k else None
             nxt = region[k + 1] if k + 1 < len(region) else None
             if (
@@ -4978,27 +4503,22 @@ def _pass_group_extensions(toks: list[str], target: str = "spark") -> list[str]:
     """
     i = 0
     while i < len(toks):
-        if not (_is_ident(toks[i]) and toks[i].lower() == "select"):
+        if not (is_ident(toks[i]) and toks[i].lower() == "select"):
             i += 1
             continue
         end = _gb_scope_end(toks, i)
         # ---- locate this scope's depth-0 GROUP BY clause
-        j, depth = i + 1, 0
         gb_start = gb_end = having_at = having_end = from_end = None
         from_kw = tail_at = None
-        while j < end:
-            t = toks[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_ident(t):
+        for j, t in top_level(toks, i + 1):
+            if j >= end:
+                break
+            if is_ident(t):
                 low = t.lower()
                 if low == "group" and j + 1 < end and toks[j + 1].lower() == "by":
                     if from_end is None:
                         from_end = j
                     gb_start = j + 2
-                    j += 2
                     continue
                 if low == "from" and from_kw is None:
                     from_kw = j
@@ -5020,50 +4540,44 @@ def _pass_group_extensions(toks: list[str], target: str = "spark") -> list[str]:
                     and low in ("order", "limit", "offset", "window")
                 ):
                     tail_at = j
-            j += 1
         if gb_start is None:
             i += 1
             continue
         gb_end = gb_end if gb_end is not None else end
         having_end = having_end if having_end is not None else end
-        items = [it for it in _split_args(toks[gb_start:gb_end]) if it]
+        items = [it for it in split_top(toks[gb_start:gb_end]) if it]
         # PG gram.y group_elem: a parenthesized expression list in GROUP BY
         # is a composite grouping element — GROUP BY (a, b) ≡ GROUP BY a, b.
         # Spark parses it as a struct expression, so flatten depth-0
         # composite items (scalar subqueries excepted); applied unless the
         # whole clause is replaced by the GROUP_ID()/dedup machinery below.
         flatten_edits: list[tuple[int, int, list[str]]] = []
-        p, depth, st = gb_start, 0, gb_start
-        spans = []
-        while p < gb_end:
-            t = toks[p]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif t == "," and depth == 0:
+        st, spans = gb_start, []
+        for p, t in top_level(toks, gb_start):
+            if p >= gb_end:
+                break
+            if t == ",":
                 spans.append((st, p))
                 st = p + 1
-            p += 1
         spans.append((st, gb_end))
         for s, e in spans:
             if (
                 e > s + 1
                 and toks[s] == "("
-                and _args_span(toks, s) == e - 1
+                and match_close(toks, s) == e - 1
                 and not (
-                    _is_ident(toks[s + 1]) and toks[s + 1].lower() == "select"
+                    is_ident(toks[s + 1]) and toks[s + 1].lower() == "select"
                 )
             ):
                 flatten_edits.append((s, e, toks[s + 1 : e - 1]))
         has_ext = any(
             len(it) >= 2
-            and _is_ident(it[0])
+            and is_ident(it[0])
             and (
                 (it[0].lower() in ("cube", "rollup") and it[1] == "(")
                 or (
                     it[0].lower() == "grouping"
-                    and _is_ident(it[1])
+                    and is_ident(it[1])
                     and it[1].lower() == "sets"
                 )
             )
@@ -5105,8 +4619,8 @@ def _pass_group_extensions(toks: list[str], target: str = "spark") -> list[str]:
         # keep only multi-arg GROUPING( ) calls (not GROUPING SETS)
         multi_grouping = []
         for s in grouping_sites:
-            close = _args_span(toks, s + 1)
-            args = _split_args(toks[s + 2 : close])
+            close = match_close(toks, s + 1)
+            args = split_top(toks[s + 2 : close])
             if len(args) > 1:
                 multi_grouping.append((s, close, args))
         has_dups = any(m > 1 for m in mult.values())
@@ -5118,7 +4632,7 @@ def _pass_group_extensions(toks: list[str], target: str = "spark") -> list[str]:
         # sets, which OOMs DuckDB and overflows codegen method limits)
         select_distinct = (
             i + 1 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "distinct"
         )
         need_dedup = select_distinct and has_dups and not gid_sites
@@ -5157,25 +4671,25 @@ def _pass_group_extensions(toks: list[str], target: str = "spark") -> list[str]:
         def _rewrite_local(body: list[str], gid_repl: list[str]) -> list[str]:
             body = list(body)
             for s in reversed(_gb_call_sites(body, 0, len(body), ("group_id",))):
-                close = _args_span(body, s + 1)
+                close = match_close(body, s + 1)
                 body[s : close + 1] = list(gid_repl)
             for s in reversed(_gb_call_sites(body, 0, len(body), ("grouping",))):
-                close = _args_span(body, s + 1)
-                args = _split_args(body[s + 2 : close])
+                close = match_close(body, s + 1)
+                args = split_top(body[s + 2 : close])
                 if len(args) > 1:
                     body[s : close + 1] = _grouping_bitmask(args)
             return body
 
         def _gid_edit(s: int, repl1: list[str]) -> tuple[int, int, list[str]]:
-            close = _args_span(toks, s + 1)
+            close = match_close(toks, s + 1)
             bare = (toks[s - 1] in (",",) or (
-                _is_ident(toks[s - 1])
+                is_ident(toks[s - 1])
                 and toks[s - 1].lower() in ("select", "distinct")
             )) and (
                 close + 1 >= end
                 or toks[close + 1] == ","
                 or (
-                    _is_ident(toks[close + 1])
+                    is_ident(toks[close + 1])
                     and toks[close + 1].lower() in _TARGETLIST_END
                 )
             )
@@ -5315,7 +4829,7 @@ def duck_grouping_sql(sql: str) -> str:
     # GROUPING()/GROUP_ID() under a plain (extension-free) GROUP BY fold
     # to 0 (plangroupext.c) — DuckDB rejects them there just like Spark
     toks = _pass_grouping_plain(toks)
-    return _join_tokens(toks)
+    return join_tokens(toks)
 
 
 def _pass_decode(toks: list[str]) -> list[str]:
@@ -5327,12 +4841,12 @@ def _pass_decode(toks: list[str]) -> list[str]:
     i = 0
     while i + 1 < len(toks):
         if not (
-            _is_ident(toks[i]) and toks[i].lower() == "decode" and toks[i + 1] == "("
+            is_ident(toks[i]) and toks[i].lower() == "decode" and toks[i + 1] == "("
         ):
             i += 1
             continue
-        close = _args_span(toks, i + 1)
-        args = _split_args(toks[i + 2 : close])
+        close = match_close(toks, i + 1)
+        args = split_top(toks[i + 2 : close])
         if len(args) < 3:
             i += 1
             continue
@@ -5356,53 +4870,34 @@ def _case_segments(toks: list[str], start: int):
     """Split a CASE body (tokens after ``case`` at ``start``) into
     (testexpr, [(when_toks, then_toks)], else_toks, end_idx), honoring
     nested parens and nested CASE…END."""
-    i = start
-    depth = 0
-    case_depth = 0
     test: list[str] = []
     whens: list[tuple[list[str], list[str]]] = []
     else_toks: list[str] | None = None
-    cur_when: list[str] | None = None
-    cur_then: list[str] | None = None
-    bucket = test
-    while i < len(toks):
-        t = toks[i]
-        low = t.lower() if _is_ident(t) else t
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and low == "case":
-            case_depth += 1
-        elif depth == 0 and case_depth > 0 and low == "end":
-            case_depth -= 1
-        elif depth == 0 and case_depth == 0:
-            if low == "when":
-                if cur_when is not None:
-                    whens.append((cur_when, cur_then or []))
-                cur_when, cur_then = [], None
-                bucket = cur_when
-                i += 1
-                continue
-            if low == "then":
-                cur_then = []
-                bucket = cur_then
-                i += 1
-                continue
-            if low == "else":
-                if cur_when is not None:
-                    whens.append((cur_when, cur_then or []))
-                    cur_when = None
-                else_toks = []
-                bucket = else_toks
-                i += 1
-                continue
+    when: list[str] | None = None
+    kind, seg_start, nested = "test", start, 0
+    for k, t in top_level(toks, start):
+        low = t.lower() if is_ident(t) else t
+        if low == "case":
+            nested += 1
+        elif nested and low == "end":
+            nested -= 1
+        elif not nested and low in ("when", "then", "else", "end"):
+            seg = toks[seg_start:k]
+            if kind == "test":
+                test = seg
+            elif kind == "when":
+                when = seg
+            elif kind == "then":
+                whens.append((when or [], seg))
+                when = None
+            else:
+                else_toks = seg
+            if when is not None and low != "then":
+                whens.append((when, []))
+                when = None
             if low == "end":
-                if cur_when is not None:
-                    whens.append((cur_when, cur_then or []))
-                return test, whens, else_toks, i
-        bucket.append(t)
-        i += 1
+                return test, whens, else_toks, k
+            kind, seg_start = low, k + 1
     raise ValueError("CASE without END")
 
 
@@ -5414,17 +4909,17 @@ def _pass_case_notdistinct(toks: list[str]) -> list[str]:
     CASE semantics).  Only fires when the extension syntax is present."""
     i = 0
     while i < len(toks):
-        if not (_is_ident(toks[i]) and toks[i].lower() == "case"):
+        if not (is_ident(toks[i]) and toks[i].lower() == "case"):
             i += 1
             continue
         nxt = toks[i + 1] if i + 1 < len(toks) else None
-        if nxt is None or (_is_ident(nxt) and nxt.lower() in ("when", "end")):
+        if nxt is None or (is_ident(nxt) and nxt.lower() in ("when", "end")):
             i += 1
             continue
         test, whens, else_toks, end_idx = _case_segments(toks, i + 1)
         has_ext = any(
             len(w) >= 4
-            and all(_is_ident(w[k]) for k in range(4))
+            and all(is_ident(w[k]) for k in range(4))
             and [w[0].lower(), w[1].lower(), w[2].lower(), w[3].lower()]
             == ["is", "not", "distinct", "from"]
             for w, _ in whens
@@ -5455,22 +4950,11 @@ def _pass_array_constructor(toks: list[str]) -> list[str]:
     i = 0
     while i + 1 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "array"
             and toks[i + 1] == "["
         ):
-            depth = 0
-            close = None
-            for j in range(i + 1, len(toks)):
-                if toks[j] == "[":
-                    depth += 1
-                elif toks[j] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-            if close is None:
-                raise ValueError("unbalanced ARRAY[ constructor")
+            close = match_close(toks, i + 1)
             # multi-dim sugar ARRAY[[1,2],[3,4]] (gram.y array_expr_list
             # without the ARRAY keyword on inner rows): a '[' at element
             # position is an implicit nested constructor; a '[' after an
@@ -5480,11 +4964,11 @@ def _pass_array_constructor(toks: list[str]) -> list[str]:
             stack: list[str] = []
             for t in toks[i + 2 : close]:
                 if t == "[":
-                    if prev is not None and _is_ident(prev) and prev.lower() == "array":
+                    if prev is not None and is_ident(prev) and prev.lower() == "array":
                         inner.append("(")
                         stack.append("ctor")
                     elif prev is None or prev in (",", "(") or (
-                        _is_ident(prev) and prev.lower() == "array"
+                        is_ident(prev) and prev.lower() == "array"
                     ):
                         inner += ["array", "("]
                         stack.append("ctor")
@@ -5514,26 +4998,22 @@ def _pass_values_partial_alias(toks: list[str]) -> list[str]:
     while i + 1 < len(toks):
         if (
             toks[i] == "("
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "values"
             and i + 2 < len(toks)
             and toks[i + 2] == "("
         ):
-            vclose = _match_paren(toks, i)
-            row_close = _match_paren(toks, i + 2)
-            arity = 1 + sum(
-                1 for t_idx in range(i + 3, row_close)
-                if toks[t_idx] == "," and _paren_depth(toks, i + 3, t_idx) == 0
-            )
+            vclose = match_close(toks, i)
+            arity = 1 + sum(t == "," for _, t in top_level(toks, i + 3))
             k = vclose + 1
-            if k < len(toks) and _is_ident(toks[k]) and toks[k].lower() == "as":
+            if k < len(toks) and is_ident(toks[k]) and toks[k].lower() == "as":
                 k += 1
             if (
                 k + 1 < len(toks)
-                and _is_ident(toks[k])
+                and is_ident(toks[k])
                 and toks[k + 1] == "("
             ):
-                aclose = _match_paren(toks, k + 1)
+                aclose = match_close(toks, k + 1)
                 cols = [t for t in toks[k + 2 : aclose] if t != ","]
                 if 0 < len(cols) < arity:
                     pad = []
@@ -5542,16 +5022,6 @@ def _pass_values_partial_alias(toks: list[str]) -> list[str]:
                     toks = toks[:aclose] + pad + toks[aclose:]
         i += 1
     return toks
-
-
-def _paren_depth(toks: list[str], start: int, end: int) -> int:
-    depth = 0
-    for t in toks[start:end]:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-    return depth
 
 
 _FROM_END_KEYWORDS = {
@@ -5568,7 +5038,7 @@ def _srf_item_to_array(item: list[str]) -> list[str]:
             "ROWS FROM items must be unnest(...) or generate_series(...)"
         )
     fn = item[0].lower()
-    close = _match_paren(item, 1)
+    close = match_close(item, 1)
     args = item[2:close]
     if fn == "unnest":
         return args  # may itself be multiple arrays (split by caller)
@@ -5599,7 +5069,7 @@ def _pass_unnest_from(toks: list[str]) -> list[str]:
         elif t == ")":
             in_from.pop(depth, None)
             depth -= 1
-        elif _is_ident(t):
+        elif is_ident(t):
             low = t.lower()
             if low == "from" and (i == 0 or out[i - 1].lower() != "rows"):
                 in_from[depth] = True
@@ -5609,8 +5079,8 @@ def _pass_unnest_from(toks: list[str]) -> list[str]:
             i += 1
             continue
         after_comma = i > 0 and out[i - 1] == ","
-        after_from = i > 0 and _is_ident(out[i - 1]) and out[i - 1].lower() == "from"
-        if not (after_comma or after_from) or not _is_ident(t):
+        after_from = i > 0 and is_ident(out[i - 1]) and out[i - 1].lower() == "from"
+        if not (after_comma or after_from) or not is_ident(t):
             i += 1
             continue
         low = t.lower()
@@ -5619,13 +5089,13 @@ def _pass_unnest_from(toks: list[str]) -> list[str]:
             # the table and the column u (parse_relation.c); Spark's
             # explode would call the column `col`, so re-emit the
             # explicit column list u(u)
-            close = _args_span(out, i + 1)
+            close = match_close(out, i + 1)
             j = close + 1
-            if j < len(out) and _is_ident(out[j]) and out[j].lower() == "as":
+            if j < len(out) and is_ident(out[j]) and out[j].lower() == "as":
                 j += 1
             if (
                 j < len(out)
-                and _is_ident(out[j])
+                and is_ident(out[j])
                 and out[j].lower() not in _FROM_END_KEYWORDS
                 and out[j].lower()
                 not in ("join", "left", "right", "full", "inner",
@@ -5636,15 +5106,15 @@ def _pass_unnest_from(toks: list[str]) -> list[str]:
         if (
             low == "rows"
             and i + 2 < len(out)
-            and _is_ident(out[i + 1])
+            and is_ident(out[i + 1])
             and out[i + 1].lower() == "from"
             and out[i + 2] == "("
         ):
-            close = _match_paren(out, i + 2)
+            close = match_close(out, i + 2)
             arrays: list[list[str]] = []
-            for item in _split_top_commas(out[i + 3 : close]):
-                if item and _is_ident(item[0]) and item[0].lower() == "unnest":
-                    arrays.extend(_split_top_commas(_srf_item_to_array(item)))
+            for item in split_top(out[i + 3 : close]):
+                if item and is_ident(item[0]) and item[0].lower() == "unnest":
+                    arrays.extend(split_top(_srf_item_to_array(item)))
                 else:
                     arrays.append(_srf_item_to_array(item))
             repl = ["inline", "(", "arrays_zip", "("]
@@ -5657,8 +5127,8 @@ def _pass_unnest_from(toks: list[str]) -> list[str]:
             i += len(repl)
             continue
         if low == "unnest" and i + 1 < len(out) and out[i + 1] == "(":
-            close = _match_paren(out, i + 1)
-            args = _split_top_commas(out[i + 2 : close])
+            close = match_close(out, i + 1)
+            args = split_top(out[i + 2 : close])
             if len(args) > 1:
                 repl = ["inline", "(", "arrays_zip", "("]
                 for k, a in enumerate(args):
@@ -5701,7 +5171,7 @@ def _pass_from_srf_items(toks: list[str]) -> list[str]:
         elif t == ")":
             in_from.pop(depth, None)
             depth -= 1
-        elif _is_ident(t):
+        elif is_ident(t):
             low = t.lower()
             if low == "from":
                 in_from[depth] = True
@@ -5711,17 +5181,17 @@ def _pass_from_srf_items(toks: list[str]) -> list[str]:
             t == ","
             and in_from.get(depth)
             and i + 2 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "generate_series"
             and toks[i + 2] == "("
         ):
-            close = _match_paren(toks, i + 2)
+            close = match_close(toks, i + 2)
             args = toks[i + 3 : close]
             alias = None
             k = close + 1
-            if k < len(toks) and _is_ident(toks[k]):
+            if k < len(toks) and is_ident(toks[k]):
                 low = toks[k].lower()
-                if low == "as" and k + 1 < len(toks) and _is_ident(toks[k + 1]):
+                if low == "as" and k + 1 < len(toks) and is_ident(toks[k + 1]):
                     alias, k = toks[k + 1], k + 2
                 elif low not in _FROM_END_KEYWORDS and low not in (
                     "join", "left", "right", "full", "inner", "cross",
@@ -5751,7 +5221,7 @@ def _pass_with_ordinality(toks: list[str]) -> list[str]:
             (
                 i
                 for i, t in enumerate(toks)
-                if _is_ident(t)
+                if is_ident(t)
                 and t.lower() == "unnest"
                 and i + 1 < len(toks)
                 and toks[i + 1] == "("
@@ -5760,12 +5230,12 @@ def _pass_with_ordinality(toks: list[str]) -> list[str]:
         )
         if idx is None:
             return toks
-        close = _match_paren(toks, idx + 1)
+        close = match_close(toks, idx + 1)
         if not (
             close + 2 < len(toks)
-            and _is_ident(toks[close + 1])
+            and is_ident(toks[close + 1])
             and toks[close + 1].lower() == "with"
-            and _is_ident(toks[close + 2])
+            and is_ident(toks[close + 2])
             and toks[close + 2].lower() == "ordinality"
         ):
             # plain unnest: the function rename pass handles it
@@ -5773,14 +5243,14 @@ def _pass_with_ordinality(toks: list[str]) -> list[str]:
         args = toks[idx + 2 : close]
         k = close + 3
         alias, cols = "unnest_t", None
-        if k < len(toks) and _is_ident(toks[k]) and toks[k].lower() == "as":
+        if k < len(toks) and is_ident(toks[k]) and toks[k].lower() == "as":
             k += 1
-        if k < len(toks) and _is_ident(toks[k]) and toks[k].lower() not in _FROM_END_KEYWORDS:
+        if k < len(toks) and is_ident(toks[k]) and toks[k].lower() not in _FROM_END_KEYWORDS:
             alias = toks[k]
             k += 1
             if k < len(toks) and toks[k] == "(":
-                aclose = _match_paren(toks, k)
-                cols = [c[0] for c in _split_top_commas(toks[k + 1 : aclose])]
+                aclose = match_close(toks, k)
+                cols = [c[0] for c in split_top(toks[k + 1 : aclose])]
                 k = aclose + 1
         vcol, ocol = (cols + ["ordinality"])[:2] if cols else ("unnest", "ordinality")
         repl = (
@@ -5810,7 +5280,7 @@ def _pass_single_grouping_set(toks: list[str]) -> list[str]:
     only legal under an Expand, which the collapse would remove."""
     for j, t in enumerate(toks):
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in ("grouping", "grouping_id")
             and j + 1 < len(toks)
             and toks[j + 1] == "("
@@ -5819,17 +5289,17 @@ def _pass_single_grouping_set(toks: list[str]) -> list[str]:
     i = 0
     while i + 2 < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "grouping"
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "sets"
             and toks[i + 2] == "("
         ):
-            close = _args_span(toks, i + 2)
-            sets = _split_args(toks[i + 3 : close])
+            close = match_close(toks, i + 2)
+            sets = split_top(toks[i + 3 : close])
             if len(sets) == 1 and sets[0] and sets[0] != ["(", ")"]:
                 inner = sets[0]
-                if inner[0] == "(" and _args_span(inner, 0) == len(inner) - 1:
+                if inner[0] == "(" and match_close(inner, 0) == len(inner) - 1:
                     inner = inner[1:-1]
                 if inner:
                     toks = toks[:i] + inner + toks[close + 1 :]
@@ -5858,35 +5328,17 @@ def _pass_targetlist_srf(toks: list[str]) -> list[str]:
     i = 0
     gen = 0
     while i < len(out):
-        if not (_is_ident(out[i]) and out[i].lower() == "select"):
+        if not (is_ident(out[i]) and out[i].lower() == "select"):
             i += 1
             continue
         # targetlist span: depth-0 tokens until FROM / clause end
-        j = i + 1
-        depth = 0
         occs: list[tuple[int, int]] = []  # (start, close) of each SRF call
-        while j < len(out):
-            t = out[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and _is_ident(t):
-                low = t.lower()
-                if low in _TARGETLIST_END:
-                    break
-                if (
-                    low == "generate_series"
-                    and j + 1 < len(out)
-                    and out[j + 1] == "("
-                ):
-                    close = _args_span(out, j + 1)
-                    occs.append((j, close))
-                    j = close + 1  # skip the balanced call tokens
-                    continue
-            j += 1
+        for j, t in top_level(out, i + 1):
+            low = t.lower() if is_ident(t) else None
+            if low in _TARGETLIST_END:
+                break
+            if low == "generate_series" and out[j + 1 : j + 2] == ["("]:
+                occs.append((j, match_close(out, j + 1)))
         if not occs:
             i += 1
             continue
@@ -5902,7 +5354,7 @@ def _pass_targetlist_srf(toks: list[str]) -> list[str]:
         for s, c in reversed(occs):
             bare = (s == i + 1 or out[s - 1] == ",") and (
                 c + 1 >= len(out) or out[c + 1] == ","
-                or (_is_ident(out[c + 1]) and out[c + 1].lower() in _TARGETLIST_END)
+                or (is_ident(out[c + 1]) and out[c + 1].lower() in _TARGETLIST_END)
                 or out[c + 1] == ")"
             )
             repl = [col, "AS", "generate_series"] if bare else [col]
@@ -5911,30 +5363,16 @@ def _pass_targetlist_srf(toks: list[str]) -> list[str]:
             ")", ")", "AS", col, ")", f"__gs_t{gen}",
         ]
         # locate this scope's FROM (depth-0); insert or synthesize it
-        j = i + 1
-        depth = 0
-        from_idx = None
-        while j < len(out):
-            t = out[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and _is_ident(t):
-                low = t.lower()
-                if low == "from":
-                    from_idx = j
-                    break
-                if low in (
-                    "where", "group", "having", "order", "limit", "offset",
-                    "union", "intersect", "except", "window", ";",
-                ):
-                    break
-            j += 1
-        if from_idx is not None:
-            out[from_idx + 1 : from_idx + 1] = item + [","]
+        j = next(
+            (j for j, t in top_level(out, i + 1)
+             if t in CLOSE or is_ident(t) and t.lower() in (
+                 "from", "where", "group", "having", "order", "limit",
+                 "offset", "union", "intersect", "except", "window",
+             )),
+            len(out),
+        )
+        if j < len(out) and out[j].lower() == "from":
+            out[j + 1 : j + 1] = item + [","]
         else:
             out[j:j] = ["FROM"] + item
         i += 1
@@ -5949,37 +5387,26 @@ def _pass_group_by_empty(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks) - 1:
         if toks[i].lower() == "group" and toks[i + 1].lower() == "by":
-            j, depth = i + 2, 0
-            while j < len(toks):
-                t = toks[j]
-                if t == "(":
-                    if depth == 0 and j + 1 < len(toks) and toks[j + 1] == ")":
-                        if j + 2 < len(toks) and toks[j + 2] == ",":
-                            del toks[j : j + 3]
-                        elif toks[j - 1] == ",":
-                            del toks[j - 1 : j + 2]
-                            j -= 1
-                        else:  # lone () → scalar aggregate, drop GROUP BY
-                            del toks[i : j + 2]
-                            break
-                        continue
-                    depth += 1
-                elif t == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif depth == 0 and t.lower() in (
-                    "order", "having", "limit", "window",
-                    "union", "intersect", "except", ";",
-                ):
-                    break
-                j += 1
+            end = next(
+                (j for j, t in top_level(toks, i + 2)
+                 if t in CLOSE or t.lower() in (
+                     "order", "having", "limit", "window",
+                     "union", "intersect", "except", ";",
+                 )),
+                len(toks),
+            )
+            items = split_top(toks[i + 2 : end])
+            kept = [it for it in items if it != ["(", ")"]]
+            if not kept:  # lone () → scalar aggregate, drop GROUP BY
+                del toks[i:end]
+            elif len(kept) < len(items):
+                toks[i + 2 : end] = [t for it in kept for t in [","] + it][1:]
         i += 1
     return toks
 
 
 def _json_path_elem(tok: str) -> str:
-    if _is_string(tok):
+    if is_string(tok):
         return tok.strip("'")
     return f"[{tok}]"
 
@@ -5990,10 +5417,10 @@ def _pass_json_ops(toks: list[str]) -> list[str]:
     i = 1
     while i < len(toks) - 1:
         if toks[i] == "?":
-            start = _operand_start(toks, i - 1)
+            start = operand_start(toks, i - 1)
             left = toks[start:i]
-            if any(_is_ident(t) and t.lower() == "hstore" for t in left):
-                rend = _operand_end(toks, i + 1)
+            if any(is_ident(t) and t.lower() == "hstore" for t in left):
+                rend = operand_end(toks, i + 1)
                 toks[start : rend + 1] = (
                     ["map_contains_key", "("] + left + [","]
                     + toks[i + 1 : rend + 1] + [")"]
@@ -6006,12 +5433,12 @@ def _pass_json_ops(toks: list[str]) -> list[str]:
         if idx is None:
             return toks
         op = toks[idx]
-        start = _operand_start(toks, idx - 1)
+        start = operand_start(toks, idx - 1)
         left = toks[start:idx]
         rhs = toks[idx + 1]
         if (
             op == "->"
-            and any(_is_ident(t) and t.lower() == "hstore" for t in left)
+            and any(is_ident(t) and t.lower() == "hstore" for t in left)
         ):
             # hstore -> key (hstore_op.c hstore_fetchval): the left
             # operand is MapType (the ::hstore cast already lowered to an
@@ -6023,12 +5450,12 @@ def _pass_json_ops(toks: list[str]) -> list[str]:
             )
             continue
         if op in ("#>", "#>>"):
-            if not _is_string(rhs):
+            if not is_string(rhs):
                 raise ValueError("#> requires a '{a,b}' path literal")
             parts = rhs.strip("'").strip("{}").split(",")
             path = "$." + ".".join(p.strip() for p in parts)
         else:
-            if _is_string(rhs):
+            if is_string(rhs):
                 path = "$." + rhs.strip("'")
             elif re.match(r"^\d+$", rhs):
                 path = f"$[{rhs}]"
@@ -6039,7 +5466,7 @@ def _pass_json_ops(toks: list[str]) -> list[str]:
             len(left) >= 4
             and left[0] == "get_json_object"
             and left[-1] == ")"
-            and _is_string(left[-2])
+            and is_string(left[-2])
         ):
             base = left[:-2]
             prev_path = left[-2].strip("'")
@@ -6060,11 +5487,11 @@ def _pass_regex_ops(toks: list[str]) -> list[str]:
             return False
         p = toks[i - 1]
         if p in (",", "(", "[") or not (
-            _is_ident(p) or _is_string(p) or p in (")", "]")
+            is_ident(p) or is_string(p) or p in (")", "]")
             or p[:1].isdigit()
         ):
             return False
-        return not (_is_ident(p) and p.lower() in _KEYWORDS_NONOPERAND)
+        return not (is_ident(p) and p.lower() in _KEYWORDS_NONOPERAND)
 
     while True:
         idx = next(
@@ -6078,13 +5505,13 @@ def _pass_regex_ops(toks: list[str]) -> list[str]:
         if idx is None:
             return toks
         op = toks[idx]
-        start = _operand_start(toks, idx - 1)
+        start = operand_start(toks, idx - 1)
         left = toks[start:idx]
         rhs = toks[idx + 1]
         ci = op.endswith("*")
         neg = op.startswith("!")
         if ci:
-            if _is_string(rhs):
+            if is_string(rhs):
                 body = rhs[2:-1] if rhs[0] in "eE" else rhs[1:-1]
                 pat = ["'(?i)" + body + "'"]
             else:
@@ -6125,39 +5552,6 @@ _FUNC_RENAME = {
     # PG format() is printf-style (varlena format(); '%s'/'%I'/'%L')
     "format": "format_string",
 }
-
-
-def _args_span(toks: list[str], open_paren: int) -> int:
-    depth = 0
-    j = open_paren
-    while j < len(toks):
-        if toks[j] == "(":
-            depth += 1
-        elif toks[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    raise ValueError("unbalanced parens")
-
-
-def _split_args(toks: list[str]) -> list[list[str]]:
-    args: list[list[str]] = []
-    cur: list[str] = []
-    depth = 0
-    for t in toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if t == "," and depth == 0:
-            args.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        args.append(cur)
-    return args
 
 
 # hstore (contrib/hstore/ → MapType) and IPv4 inet/cidr (network.c →
@@ -6615,28 +6009,6 @@ def _lower_pg_format(args: list[list[str]]) -> list[str]:
     return new + [")"]
 
 
-def _count_capture_groups(pattern: str) -> int:
-    """Capturing groups in a regex literal: '(' not escaped, not a
-    character-class member, and not opening a (?...) non-capturing /
-    lookaround construct."""
-    n, i, in_class = 0, 0, False
-    while i < len(pattern):
-        ch = pattern[i]
-        if ch == "\\":
-            i += 2
-            continue
-        if in_class:
-            if ch == "]":
-                in_class = False
-        elif ch == "[":
-            in_class = True
-        elif ch == "(":
-            if not pattern.startswith("(?", i):
-                n += 1
-        i += 1
-    return n
-
-
 def _lower_regexp_matches(args: list[list[str]]) -> list[str]:
     """Lower regexp_matches(s, pat [, flags]) — adt/regexp.c, SETOF
     text[] — to ``explode(<array of per-match group arrays>)``: zero
@@ -6650,7 +6022,7 @@ def _lower_regexp_matches(args: list[list[str]]) -> list[str]:
     pat = pat_tok[1:-1].replace("''", "'")
     flags = ""
     if len(args) == 3:
-        if len(args[2]) != 1 or not _is_string(args[2][0]):
+        if len(args[2]) != 1 or not is_string(args[2][0]):
             raise NotImplementedError("regexp_matches flags must be a literal")
         flags = args[2][0][1:-1]
         for f in flags:
@@ -6691,10 +6063,10 @@ def _pass_collate_strip(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "collate"
             and i + 1 < len(toks)
-            and (_is_ident(toks[i + 1]) or toks[i + 1].startswith('"'))
+            and (is_ident(toks[i + 1]) or toks[i + 1].startswith('"'))
         ):
             i += 2
             continue
@@ -6711,11 +6083,11 @@ def _pass_like_escape_backslash(toks: list[str]) -> list[str]:
     i = 0
     while i + 2 < len(toks):
         if (
-            _is_ident(toks[i + 1])
+            is_ident(toks[i + 1])
             and toks[i + 1].lower() == "escape"
             and toks[i + 2] == "'\\'"
         ):
-            if not _is_string(toks[i]):
+            if not is_string(toks[i]):
                 raise NotImplementedError(
                     "LIKE ... ESCAPE '\\' needs a literal pattern here"
                 )
@@ -6748,7 +6120,7 @@ def _pass_like_op_spellings(toks: list[str]) -> list[str]:
         if (
             a in ("~", "!~")
             and b in ("~", "~*")
-            and (_is_string(c) or _is_ident(c) or c == "(")
+            and (is_string(c) or is_ident(c) or c == "(")
         ):
             repl = (["NOT"] if a == "!~" else []) + (
                 ["ILIKE"] if b == "~*" else ["LIKE"]
@@ -6765,27 +6137,22 @@ def _pass_between_symmetric(toks: list[str]) -> list[str]:
     i = 1
     while i < len(toks) - 3:
         if not (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "between"
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() == "symmetric"
         ):
             i += 1
             continue
-        neg = _is_ident(toks[i - 1]) and toks[i - 1].lower() == "not"
+        neg = is_ident(toks[i - 1]) and toks[i - 1].lower() == "not"
         a_end = i - 2 if neg else i - 1
-        lstart = _operand_start(toks, a_end)
-        depth, j = 0, i + 2
-        while j < len(toks):
-            t = toks[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_ident(t) and t.lower() == "and":
-                break
-            j += 1
-        cend = _operand_end(toks, j + 1)
+        lstart = operand_start(toks, a_end)
+        j = next(
+            (j for j, t in top_level(toks, i + 2)
+             if is_ident(t) and t.lower() == "and"),
+            len(toks),
+        )
+        cend = operand_end(toks, j + 1)
         a = " ".join(toks[lstart : a_end + 1])
         b = " ".join(toks[i + 2 : j])
         c = " ".join(toks[j + 1 : cend + 1])
@@ -6806,10 +6173,10 @@ def _pass_lock_clauses(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if not (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "for"
             and i + 1 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in ("update", "share", "no", "key")
         ):
             i += 1
@@ -6821,18 +6188,18 @@ def _pass_lock_clauses(toks: list[str]) -> list[str]:
             k = i + 3
         else:  # FOR UPDATE / FOR SHARE
             k = i + 2
-        if k < len(toks) and _is_ident(toks[k]) and toks[k].lower() == "of":
+        if k < len(toks) and is_ident(toks[k]) and toks[k].lower() == "of":
             k += 1
             while k < len(toks) and (
-                (_is_ident(toks[k]) and toks[k].lower() not in ("nowait", "skip"))
+                (is_ident(toks[k]) and toks[k].lower() not in ("nowait", "skip"))
                 or toks[k] in (",", ".")
             ):
                 k += 1
-        if k < len(toks) and _is_ident(toks[k]) and toks[k].lower() == "nowait":
+        if k < len(toks) and is_ident(toks[k]) and toks[k].lower() == "nowait":
             k += 1
         elif (
             k + 1 < len(toks)
-            and _is_ident(toks[k])
+            and is_ident(toks[k])
             and toks[k].lower() == "skip"
             and toks[k + 1].lower() == "locked"
         ):
@@ -6848,10 +6215,10 @@ def _pass_fetch_first(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "fetch"
             and i + 1 < len(toks)
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in ("first", "next")
         ):
             j = i + 2
@@ -6861,7 +6228,7 @@ def _pass_fetch_first(toks: list[str]) -> list[str]:
                 j += 1
             if (
                 j + 1 < len(toks)
-                and _is_ident(toks[j])
+                and is_ident(toks[j])
                 and toks[j].lower() in ("row", "rows")
                 and toks[j + 1].lower() == "only"
             ):
@@ -6869,18 +6236,18 @@ def _pass_fetch_first(toks: list[str]) -> list[str]:
                 ins = i
                 if (
                     i >= 2
-                    and _is_ident(toks[i - 2])
+                    and is_ident(toks[i - 2])
                     and toks[i - 2].lower() == "offset"
                 ):
                     ins = i - 2  # Spark wants LIMIT before OFFSET
                 toks[ins:ins] = ["LIMIT", n]
                 continue
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "offset"
             and i + 2 < len(toks)
             and re.match(r"^\d+$", toks[i + 1])
-            and _is_ident(toks[i + 2])
+            and is_ident(toks[i + 2])
             and toks[i + 2].lower() in ("row", "rows")
         ):
             del toks[i + 2]
@@ -6897,13 +6264,13 @@ def _pass_tablesample(toks: list[str]) -> list[str]:
     i = 0
     while i < len(toks) - 3:
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "tablesample"
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in ("system", "bernoulli")
             and toks[i + 2] == "("
         ):
-            close = _match_paren(toks, i + 2)
+            close = match_close(toks, i + 2)
             new = (
                 ["TABLESAMPLE", "("]
                 + toks[i + 3 : close]
@@ -6913,14 +6280,14 @@ def _pass_tablesample(toks: list[str]) -> list[str]:
             # `FROM t [AS] a TABLESAMPLE ...` → `FROM t TABLESAMPLE ... a`
             ins = i
             clause_kw = {"from", "join", "lateral", "only", "using", "on"}
-            if i >= 2 and _is_ident(toks[i - 1]):
+            if i >= 2 and is_ident(toks[i - 1]):
                 p2 = toks[i - 2]
-                if _is_ident(p2) and p2.lower() == "as" and i >= 3:
+                if is_ident(p2) and p2.lower() == "as" and i >= 3:
                     ins = i - 2  # name AS alias TABLESAMPLE
                 elif (
-                    _is_ident(p2)
+                    is_ident(p2)
                     and p2.lower() not in clause_kw
-                    and p2.lower() not in _NON_FUNC_KEYWORDS
+                    and p2.lower() not in NON_FUNC_KEYWORDS
                 ):
                     ins = i - 1  # name alias TABLESAMPLE
             toks[i : close + 1] = []
@@ -6931,43 +6298,6 @@ def _pass_tablesample(toks: list[str]) -> list[str]:
     return toks
 
 
-def _operand_end(toks: list[str], start: int) -> int:
-    """Index of the last token of the operand that starts at toks[start]:
-    a (qualified, possibly called or subscripted) identifier, a
-    parenthesized expression, or a single literal token."""
-    i = start
-    if i >= len(toks):
-        return start
-    if _is_ident(toks[i]):
-        # typed literal: DATE '2024-01-01' / TIMESTAMP '...' / INTERVAL
-        # '...' is ONE operand (gram.y AexprConst)
-        if (
-            toks[i].lower() in ("date", "timestamp", "time", "interval")
-            and i + 1 < len(toks)
-            and _is_string(toks[i + 1])
-        ):
-            return i + 1
-        while i + 2 < len(toks) and toks[i + 1] == "." and _is_ident(toks[i + 2]):
-            i += 2
-        if i + 1 < len(toks) and toks[i + 1] == "(":
-            return _match_paren(toks, i + 1)
-        while i + 1 < len(toks) and toks[i + 1] == "[":
-            depth, j = 0, i + 1
-            while j < len(toks):
-                if toks[j] == "[":
-                    depth += 1
-                elif toks[j] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            i = j
-        return i
-    if toks[i] == "(":
-        return _match_paren(toks, i)
-    return i
-
-
 def _pass_inet_ops(toks: list[str]) -> list[str]:
     """inet/cidr casts and subnet operators (network.c network_sub /
     network_subeq / network_overlap).  An inet value IS its text form;
@@ -6976,19 +6306,19 @@ def _pass_inet_ops(toks: list[str]) -> list[str]:
     equality kernels (the function templates expand later in
     _pass_functions)."""
     if not any(
-        _is_ident(t) and t.lower() in ("inet", "cidr") for t in toks
+        is_ident(t) and t.lower() in ("inet", "cidr") for t in toks
     ):
         return toks
     # typed-literal prefix form: inet '1.2.3.4' (gram.y AexprConst)
     i = 0
     while i < len(toks) - 1:
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() in ("inet", "cidr")
-            and _is_string(toks[i + 1])
+            and is_string(toks[i + 1])
             and (i == 0 or toks[i - 1] != ".")
             and not (
-                i > 0 and _is_ident(toks[i - 1])
+                i > 0 and is_ident(toks[i - 1])
                 and toks[i - 1].lower() == "as"
             )
         ):
@@ -6998,10 +6328,10 @@ def _pass_inet_ops(toks: list[str]) -> list[str]:
     while i < len(toks) - 1:
         if (
             toks[i] == "::"
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in ("inet", "cidr")
         ):
-            lstart = _operand_start(toks, i - 1)
+            lstart = operand_start(toks, i - 1)
             toks[lstart : i + 2] = (
                 ["__gginet__", "("] + toks[lstart:i] + [")"]
             )
@@ -7022,8 +6352,8 @@ def _pass_inet_ops(toks: list[str]) -> list[str]:
         else:
             i += 1
             continue
-        lstart = _operand_start(toks, i - 1)
-        rend = _operand_end(toks, i + op_len)
+        lstart = operand_start(toks, i - 1)
+        rend = operand_end(toks, i + op_len)
         left, right = toks[lstart:i], toks[i + op_len : rend + 1]
         if "__gginet__" not in left and "__gginet__" not in right:
             i += 1
@@ -7060,11 +6390,11 @@ def _pass_range_casts(toks: list[str]) -> list[str]:
     while i < len(toks) - 1:
         if (
             toks[i] == "::"
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in R.RANGE_ELEM_TYPES
         ):
             tname = toks[i + 1].lower()
-            if not _is_string(toks[i - 1]):
+            if not is_string(toks[i - 1]):
                 raise NotImplementedError(
                     f"::{tname} casts apply to range literals here — "
                     "column-typed ranges use the DataFrame API "
@@ -7109,7 +6439,7 @@ def _pass_ranges(toks: list[str]) -> list[str]:
     from greengage_spark.functions import ranges as R
 
     if not any(
-        _is_ident(t) and t.lower() in R.RANGE_ELEM_TYPES for t in toks
+        is_ident(t) and t.lower() in R.RANGE_ELEM_TYPES for t in toks
     ):
         return toks
 
@@ -7118,15 +6448,15 @@ def _pass_ranges(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in R.RANGE_ELEM_TYPES
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _match_paren(toks, i + 1)
-            args = _split_args(toks[i + 2 : close])
+            close = match_close(toks, i + 1)
+            args = split_top(toks[i + 2 : close])
             elem, disc = R.RANGE_ELEM_TYPES[t.lower()]
-            if len(args) == 3 and len(args[2]) == 1 and _is_string(args[2][0]):
+            if len(args) == 3 and len(args[2]) == 1 and is_string(args[2][0]):
                 bounds = args[2][0][1:-1]
             elif len(args) == 2:
                 bounds = "[)"
@@ -7166,8 +6496,8 @@ def _pass_ranges(toks: list[str]) -> list[str]:
         else:
             i += 1
             continue
-        lstart = _operand_start(toks, i - 1)
-        rend = _operand_end(toks, i + op_len)
+        lstart = operand_start(toks, i - 1)
+        rend = operand_end(toks, i + op_len)
         left, right = toks[lstart:i], toks[i + op_len : rend + 1]
         lmark = "__ggrng__" in left
         rmark = "__ggrng__" in right
@@ -7213,12 +6543,12 @@ def _pass_ranges(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in _RANGE_ACCESSORS
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _match_paren(toks, i + 1)
+            close = match_close(toks, i + 1)
             inner = toks[i + 2 : close]
             if "__ggrng__" in inner:
                 sql = R.accessor_sql(
@@ -7239,7 +6569,7 @@ def _pass_ltree(toks: list[str]) -> list[str]:
     Runs BEFORE the cast/regex/array passes so those never see the
     claimed spans."""
     if not any(
-        _is_ident(t) and t.lower() in ("ltree", "lquery") for t in toks
+        is_ident(t) and t.lower() in ("ltree", "lquery") for t in toks
     ):
         return toks
     from greengage_spark.functions import ltree_ops as L
@@ -7248,10 +6578,10 @@ def _pass_ltree(toks: list[str]) -> list[str]:
     while i < len(toks) - 1:
         if (
             toks[i] == "::"
-            and _is_ident(toks[i + 1])
+            and is_ident(toks[i + 1])
             and toks[i + 1].lower() in ("ltree", "lquery")
         ):
-            lstart = _operand_start(toks, i - 1)
+            lstart = operand_start(toks, i - 1)
             toks[lstart : i + 2] = (
                 ["__ggltr__", "("] + toks[lstart:i] + [")"]
             )
@@ -7273,8 +6603,8 @@ def _pass_ltree(toks: list[str]) -> list[str]:
         else:
             i += 1
             continue
-        lstart = _operand_start(toks, i - 1)
-        rend = _operand_end(toks, i + op_len)
+        lstart = operand_start(toks, i - 1)
+        rend = operand_end(toks, i + op_len)
         left, right = toks[lstart:i], toks[i + op_len : rend + 1]
         if "__ggltr__" not in left and "__ggltr__" not in right:
             i += 1
@@ -7289,7 +6619,7 @@ def _pass_ltree(toks: list[str]) -> list[str]:
             new = L.concat_sql(lh, rh)
         else:
             lit = [t for t in unwrap(right) if t not in ("(", ")")]
-            if len(lit) != 1 or not _is_string(lit[0]):
+            if len(lit) != 1 or not is_string(lit[0]):
                 raise NotImplementedError(
                     "ltree ~ needs a literal lquery pattern "
                     "(compiled to a regex at transpile time)"
@@ -7302,7 +6632,7 @@ def _pass_ltree(toks: list[str]) -> list[str]:
 
 def _intarr_braces_literal(span: list[str]) -> list[str] | None:
     """A single '{1,2,3}' string literal as ARRAY(...) tokens, or None."""
-    if len(span) == 1 and _is_string(span[0]):
+    if len(span) == 1 and is_string(span[0]):
         body = span[0][1:-1].strip()
         if body.startswith("{") and body.endswith("}"):
             inner = body[1:-1].strip()
@@ -7327,14 +6657,14 @@ def _pass_intarray_binops(toks: list[str]) -> list[str]:
     if not any(
         t.upper() in ("ARRAY<INT>", "ARRAY<BIGINT>", "ARRAY<SMALLINT>")
         for t in toks
-    ) and not any(_is_ident(t) and t.lower() == "array" for t in toks):
+    ) and not any(is_ident(t) and t.lower() == "array" for t in toks):
         return toks
     # '#' prefix = icount (element count); only with array evidence and
     # not as the infix bit-ops / geometry uses of '#'
     i = 0
     while i < len(toks) - 1:
         if toks[i] == "#" and (i == 0 or toks[i - 1] in ("(", ",", "select", "SELECT", "where", "WHERE", "and", "or")):
-            rend = _extend_cast_right(toks, _operand_end(toks, i + 1))
+            rend = _extend_cast_right(toks, operand_end(toks, i + 1))
             arg = toks[i + 1 : rend + 1]
             if _intarrayish(arg):
                 toks[i : rend + 1] = tokenize(f"size({' '.join(arg)})")
@@ -7351,8 +6681,8 @@ def _pass_intarray_binops(toks: list[str]) -> list[str]:
             if op == "&" and (toks[i + 1] == "&" or toks[i - 1] == "&"):
                 i += 1
                 continue
-            lstart = _extend_cast_left(toks, _operand_start(toks, i - 1))
-            rend = _extend_cast_right(toks, _operand_end(toks, i + 1))
+            lstart = _extend_cast_left(toks, operand_start(toks, i - 1))
+            rend = _extend_cast_right(toks, operand_end(toks, i + 1))
             left = toks[lstart:i]
             right = toks[i + 1 : rend + 1]
             l_arr, r_arr = _intarrayish(left), _intarrayish(right)
@@ -7411,8 +6741,8 @@ def _pass_array_ops(toks: list[str]) -> list[str]:
     while i < len(toks) - 1:
         pair = (toks[i], toks[i + 1])
         if pair in ((("@", ">")), ("<", "@"), ("&", "&")):
-            lstart = _operand_start(toks, i - 1)
-            rend = _operand_end(toks, i + 2)
+            lstart = operand_start(toks, i - 1)
+            rend = operand_end(toks, i + 2)
             left = toks[lstart:i]
             right = toks[i + 2 : rend + 1]
             if pair == ("&", "&"):
@@ -7431,10 +6761,10 @@ def _pass_array_ops(toks: list[str]) -> list[str]:
     i = 1
     while i < len(toks) - 1:
         if toks[i] == "||":
-            lstart = _operand_start(toks, i - 1)
-            rend = _operand_end(toks, i + 1)
-            l_arr = _is_ident(toks[lstart]) and toks[lstart].lower() == "array"
-            r_arr = _is_ident(toks[i + 1]) and toks[i + 1].lower() == "array"
+            lstart = operand_start(toks, i - 1)
+            rend = operand_end(toks, i + 1)
+            l_arr = is_ident(toks[lstart]) and toks[lstart].lower() == "array"
+            r_arr = is_ident(toks[i + 1]) and toks[i + 1].lower() == "array"
             if l_arr != r_arr:
                 if l_arr:
                     toks[i + 1 : rend + 1] = (
@@ -7516,11 +6846,11 @@ def _pass_functions(toks: list[str]) -> list[str]:
     i = 0
     while i < len(out):
         t = out[i]
-        low = t.lower() if _is_ident(t) else None
+        low = t.lower() if is_ident(t) else None
         nxt = out[i + 1] if i + 1 < len(out) else None
 
         if low == "gp_segment_id" and not any(
-            _is_ident(t2) and t2.lower() in (
+            is_ident(t2) and t2.lower() in (
                 "gp_endpoints", "gp_session_endpoints",
             )
             for t2 in out
@@ -7551,10 +6881,10 @@ def _pass_functions(toks: list[str]) -> list[str]:
             continue
 
         if low and nxt == "(":
-            close = _args_span(out, i + 1)
-            args = _split_args(out[i + 2 : close])
+            close = match_close(out, i + 1)
+            args = split_top(out[i + 2 : close])
 
-            if low in ("to_char", "to_date", "to_timestamp") and len(args) == 2 and len(args[1]) == 1 and _is_string(args[1][0]):
+            if low in ("to_char", "to_date", "to_timestamp") and len(args) == 2 and len(args[1]) == 1 and is_string(args[1][0]):
                 tmpl = args[1][0].strip("'")
                 m_num = re.fullmatch(r"(FM)?([9]+)(?:\.([9]+))?", tmpl)
                 if m_num and m_num.group(1) and m_num.group(3):
@@ -7636,7 +6966,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 )
                 i += 2  # past fname+'(' — to_date maps to itself, don't re-match
                 continue
-            if low == "to_number" and len(args) == 2 and len(args[1]) == 1 and _is_string(args[1][0]):
+            if low == "to_number" and len(args) == 2 and len(args[1]) == 1 and is_string(args[1][0]):
                 # reverse NUM_* engine (formatting.c numeric_to_number) —
                 # Arrow-batched pg_format.num_tonumber
                 esc = args[1][0].strip("'").replace("'", "''")
@@ -7775,14 +7105,14 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 pat, rep = args[1], args[2]
                 flags = ""
                 if len(args) == 4:
-                    if not (len(args[3]) == 1 and _is_string(args[3][0])):
+                    if not (len(args[3]) == 1 and is_string(args[3][0])):
                         raise NotImplementedError(
                             "regexp_replace: non-literal flags argument"
                         )
                     flags = args[3][0].strip("'")
-                lit_pat = len(pat) == 1 and _is_string(pat[0])
+                lit_pat = len(pat) == 1 and is_string(pat[0])
                 if "g" in flags:
-                    if len(rep) == 1 and _is_string(rep[0]) and "\\" in rep[0]:
+                    if len(rep) == 1 and is_string(rep[0]) and "\\" in rep[0]:
                         rep = [re.sub(r"\\(\d)", r"$\1", rep[0])]
                     if "i" in flags:
                         if lit_pat:
@@ -7801,7 +7131,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # exactly once (it cannot re-match ^ past position 0), and
                 # (?s) matches PG's newline-insensitive '.' default.
                 if not (
-                    lit_pat and len(rep) == 1 and _is_string(rep[0])
+                    lit_pat and len(rep) == 1 and is_string(rep[0])
                 ):
                     raise NotImplementedError(
                         "first-occurrence regexp_replace (no 'g' flag) needs "
@@ -7841,9 +7171,9 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # regexp_split_to_table's array sibling → Spark split();
                 # optional 'i' flag folds into the pattern
                 pat = args[1]
-                if len(args) == 3 and len(args[2]) == 1 and _is_string(args[2][0]):
+                if len(args) == 3 and len(args[2]) == 1 and is_string(args[2][0]):
                     if "i" in args[2][0].strip("'"):
-                        if len(pat) == 1 and _is_string(pat[0]):
+                        if len(pat) == 1 and is_string(pat[0]):
                             pat = ["'(?i)" + pat[0][1:]]
                         else:
                             pat = ["concat", "(", "'(?i)'", ","] + pat + [")"]
@@ -7859,15 +7189,14 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # pattern has one, else the whole match; NULL on no match.
                 inner = args[0]
                 from_idx = next(
-                    (k for k, tk in enumerate(inner)
-                     if _is_ident(tk) and tk.lower() == "from"
-                     and _paren_depth(inner, 0, k) == 0),
+                    (k for k, tk in top_level(inner)
+                     if is_ident(tk) and tk.lower() == "from"),
                     None,
                 )
                 if from_idx is not None:
                     xpr = inner[:from_idx]
                     rest = inner[from_idx + 1 :]
-                    if len(rest) == 1 and _is_string(rest[0]):
+                    if len(rest) == 1 and is_string(rest[0]):
                         lit = rest[0]
                         grp = "1" if _count_capture_groups(lit[1:-1]) else "0"
                         out[i : close + 1] = (
@@ -7879,10 +7208,10 @@ def _pass_functions(toks: list[str]) -> list[str]:
                         continue
                     if (
                         len(rest) == 3
-                        and _is_string(rest[0])
-                        and _is_ident(rest[1])
+                        and is_string(rest[0])
+                        and is_ident(rest[1])
                         and rest[1].lower() == "for"
-                        and _is_string(rest[2])
+                        and is_string(rest[2])
                     ):
                         # SUBSTRING(x FROM pat FOR esc) — the SQL-standard
                         # SIMILAR substring (varlena.c textregexsubstr via
@@ -7915,10 +7244,10 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # arguments may be bare column refs; fall back to whether
                 # the statement works with intervals/timestamps at all
                 is_ts = any(
-                    _is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
+                    is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
                     for t in w + v
                 ) or any(
-                    _is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
+                    is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
                     for t in out
                 )
                 if is_ts:
@@ -7981,7 +7310,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                         )
                         continue
                     if field == "epoch":
-                        if expr and _is_ident(expr[0]) and expr[0].lower() == "interval":
+                        if expr and is_ident(expr[0]) and expr[0].lower() == "interval":
                             # epoch of a day-time interval = total seconds
                             # (timestamp.c interval_part); anchor at the
                             # epoch and read the timestamp back
@@ -8008,7 +7337,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                         continue
                 i += 2
                 continue
-            if low == "date_part" and len(args) == 2 and _is_string(args[0][0]):
+            if low == "date_part" and len(args) == 2 and is_string(args[0][0]):
                 field = args[0][0].strip("'").lower()
                 if field == "dow":
                     # PG: Sunday=0 .. Saturday=6; Spark dayofweek: Sunday=1
@@ -8037,7 +7366,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                         f"CAST(round((second({e}) + (unix_micros(CAST(({e}) AS TIMESTAMP)) % 1000000) / 1e6) * {mul}) AS DOUBLE)"
                     )
                     continue
-            if low == "date_trunc" and len(args) == 2 and _is_string(args[0][0]):
+            if low == "date_trunc" and len(args) == 2 and is_string(args[0][0]):
                 field = args[0][0].strip("'").lower()
                 if field in ("century", "millennium", "decade"):
                     # timestamp.c timestamp_trunc: CENTURY xx01-01-01,
@@ -8104,7 +7433,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # encoding.  Spark's encode/decode accept a fixed charset
                 # list with exact names, so the PG encoding name (almost
                 # always a literal) maps here; non-literals reject.
-                if len(args[1]) != 1 or not _is_string(args[1][0]):
+                if len(args[1]) != 1 or not is_string(args[1][0]):
                     raise NotImplementedError(
                         f"{low}: the encoding name must be a literal"
                     )
@@ -8171,7 +7500,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 continue
             if low == "row_to_json" and len(args) == 1:
                 a0 = args[0]
-                if len(a0) == 1 and _is_ident(a0[0]):
+                if len(a0) == 1 and is_ident(a0[0]):
                     # row_to_json(alias) over a FROM-item → whole-row struct
                     out[i : close + 1] = [
                         "to_json", "(", "struct", "(", a0[0], ".", "*", ")", ")",
@@ -8195,9 +7524,9 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 and len(args) == 1
                 and args[0]
                 and close + 3 < len(out)
-                and _is_ident(out[close + 1])
+                and is_ident(out[close + 1])
                 and out[close + 1].lower() == "within"
-                and _is_ident(out[close + 2])
+                and is_ident(out[close + 2])
                 and out[close + 2].lower() == "group"
                 and out[close + 3] == "("
             ):
@@ -8205,22 +7534,22 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # rank(h) = count(v < h) + 1 over the group, etc. —
                 # conditional counts, fully partial-aggregatable (the
                 # DataFrame twins live in operators/aggregate.py)
-                wend = _args_span(out, close + 3)
+                wend = match_close(out, close + 3)
                 spec = out[close + 4 : wend]
                 if (
                     len(spec) >= 3
-                    and _is_ident(spec[0])
+                    and is_ident(spec[0])
                     and spec[0].lower() == "order"
                     and spec[1].lower() == "by"
                 ):
                     body = spec[2:]
                     desc = False
-                    if body and _is_ident(body[-1]) and body[-1].lower() in (
+                    if body and is_ident(body[-1]) and body[-1].lower() in (
                         "asc", "desc"
                     ):
                         desc = body[-1].lower() == "desc"
                         body = body[:-1]
-                    v = "( " + _join_tokens(body) + " )"
+                    v = "( " + join_tokens(body) + " )"
                     h = "( " + " ".join(args[0]) + " )"
                     lt = ">" if desc else "<"
                     le = ">=" if desc else "<="
@@ -8260,13 +7589,13 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 j = close + 1
                 if (
                     j + 2 < len(out)
-                    and _is_ident(out[j])
+                    and is_ident(out[j])
                     and out[j].lower() == "within"
-                    and _is_ident(out[j + 1])
+                    and is_ident(out[j + 1])
                     and out[j + 1].lower() == "group"
                     and out[j + 2] == "("
                 ):
-                    end = _args_span(out, j + 2)
+                    end = match_close(out, j + 2)
                 out[i : end + 1] = [
                     "max", "(", "cast", "(", "null", "as", "double", ")", ")",
                 ]
@@ -8277,7 +7606,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
             if (
                 low == "trunc"
                 and len(args) == 2
-                and not (len(args[1]) == 1 and _is_string(args[1][0]))
+                and not (len(args[1]) == 1 and is_string(args[1][0]))
             ):
                 # numeric.c trunc(v, s): truncate toward zero at scale s
                 # (string second arg is Spark's own trunc(date, fmt) —
@@ -8292,7 +7621,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 low == "format"
                 and len(args) >= 1
                 and len(args[0]) == 1
-                and _is_string(args[0][0])
+                and is_string(args[0][0])
             ):
                 out[i : close + 1] = _lower_pg_format(args)
                 continue
@@ -8300,7 +7629,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 low == "regexp_matches"
                 and len(args) in (2, 3)
                 and len(args[1]) == 1
-                and _is_string(args[1][0])
+                and is_string(args[1][0])
             ):
                 out[i : close + 1] = _lower_regexp_matches(args)
                 continue
@@ -8339,7 +7668,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 low == "digest"
                 and len(args) == 2
                 and len(args[1]) == 1
-                and _is_string(args[1][0])
+                and is_string(args[1][0])
             ):
                 # contrib/pgcrypto digest(data, algo) → bytea (px.c)
                 algo = args[1][0].strip("'").lower()
@@ -8361,7 +7690,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 low == "hmac"
                 and len(args) == 3
                 and len(args[2]) == 1
-                and _is_string(args[2][0])
+                and is_string(args[2][0])
             ):
                 # contrib/pgcrypto hmac(data, key, type) → bytea
                 # (pgcrypto.c:161); Arrow-batched UDF — no JVM builtin
@@ -8397,7 +7726,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 elif low == "index":
                     expr = L.index_sql(*a)
                 elif low == "lca" and 1 <= len(a) <= 8:
-                    if len(a) == 1 and args[0] and _is_string(args[0][0]) \
+                    if len(a) == 1 and args[0] and is_string(args[0][0]) \
                             and args[0][0].lstrip("'").startswith("{"):
                         raise NotImplementedError(
                             "lca('{...}') array form — pass the paths as "
@@ -8468,7 +7797,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 low == "round"
                 and len(args) == 2
                 and len(args[1]) == 1
-                and _is_string(args[1][0])
+                and is_string(args[1][0])
             ):
                 # orafce ROUND(date, 'fmt') — numeric round keeps its
                 # normal lowering (second arg numeric)
@@ -8540,13 +7869,13 @@ def _pass_functions(toks: list[str]) -> list[str]:
                     d = args[0]
                     dname = (
                         d[0].strip("'").lower().split(".")[-1]
-                        if len(d) == 1 and _is_string(d[0])
+                        if len(d) == 1 and is_string(d[0])
                         else None
                     )
                     # tolerate a ::regdictionary cast on the literal
                     if dname is None and (
                         len(d) == 3
-                        and _is_string(d[0])
+                        and is_string(d[0])
                         and d[1] == "::"
                         and d[2].lower() == "regdictionary"
                     ):
@@ -8696,7 +8025,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
                 # terminates the rewrite's own recursion).
                 head0 = (
                     args[0][0].lower()
-                    if args[0] and _is_ident(args[0][0])
+                    if args[0] and is_ident(args[0][0])
                     else None
                 )
                 if head0 == "array":
@@ -8728,7 +8057,7 @@ def _pass_functions(toks: list[str]) -> list[str]:
             if (
                 low in ("substr", "substring")
                 and len(args) in (2, 3)
-                and not (len(args[1]) == 1 and _is_string(args[1][0]))
+                and not (len(args[1]) == 1 and is_string(args[1][0]))
                 and args[1][:1] != ["greatest"]  # already rewritten
             ):
                 # varlena.c text_substr: a start below 1 clips from
@@ -8793,58 +8122,37 @@ def _pass_order_by_nulls(toks: list[str]) -> list[str]:
         if t == "(":
             stack.append(
                 i >= 2
-                and _is_ident(out[i - 1])
+                and is_ident(out[i - 1])
                 and out[i - 1].lower() == "group"
-                and _is_ident(out[i - 2])
+                and is_ident(out[i - 2])
                 and out[i - 2].lower() == "within"
             )
         elif t == ")":
             if stack:
                 stack.pop()
         elif (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() == "order"
             and i + 1 < len(out)
-            and _is_ident(out[i + 1])
+            and is_ident(out[i + 1])
             and out[i + 1].lower() == "by"
             and not (stack and stack[-1])
         ):
-            j = i + 2
-            key_start = j
-            depth = 0
+            key_start = i + 2
             while True:
-                end_of_key = False
-                if j >= len(out):
-                    end_of_key = True
-                else:
-                    tk = out[j]
-                    if tk == "(":
-                        depth += 1
-                    elif tk == ")":
-                        if depth == 0:
-                            end_of_key = True
-                        else:
-                            depth -= 1
-                    elif depth == 0 and (
-                        tk == ","
-                        or (_is_ident(tk) and tk.lower() in _ORDER_KEY_END)
-                    ):
-                        end_of_key = True
-                if end_of_key:
-                    if j > key_start:
-                        key = [x.lower() if _is_ident(x) else x for x in out[key_start:j]]
-                        if "nulls" not in key:
-                            ins = (
-                                ["NULLS", "FIRST"]
-                                if key and key[-1] == "desc"
-                                else ["NULLS", "LAST"]
-                            )
-                            out[j:j] = ins
-                            j += 2
-                    if j >= len(out) or out[j] != ",":
-                        break
-                    key_start = j + 1
-                j += 1
+                j = next(
+                    (k for k, tk in top_level(out, key_start)
+                     if tk in CLOSE or tk == ","
+                     or is_ident(tk) and tk.lower() in _ORDER_KEY_END),
+                    len(out),
+                )
+                key = [x.lower() if is_ident(x) else x for x in out[key_start:j]]
+                if key and "nulls" not in key:
+                    out[j:j] = ["NULLS", "FIRST" if key[-1] == "desc" else "LAST"]
+                    j += 2
+                if j >= len(out) or out[j] != ",":
+                    break
+                key_start = j + 1
             i = j
             continue
         i += 1
@@ -8872,7 +8180,7 @@ def _pass_subscripts(toks: list[str]) -> list[str]:
                 break
         if idx is None:
             return toks
-        start = _operand_start(toks, idx - 1)
+        start = operand_start(toks, idx - 1)
         left = toks[start:idx]
         lo = toks[idx + 1]
         if toks[idx + 2] == "]":
@@ -8925,50 +8233,6 @@ def _rewrite_from_generate_series(sql: str) -> str:
     )
 
 
-def _scan_matching(s: str, open_idx: int) -> int:
-    depth, in_str = 0, False
-    for i in range(open_idx, len(s)):
-        ch = s[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError("unbalanced parens")
-
-
-def _find_top_level(s: str, word: str, start: int = 0) -> int:
-    """Index of keyword `word` at paren-depth 0 (case-insensitive), -1 if absent."""
-    pat = re.compile(rf"\b{word}\b", re.IGNORECASE)
-    depth, in_str, i = 0, False, start
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(s, i)
-            if m:
-                return i
-        i += 1
-    return -1
-
-
 def _rewrite_distinct_on(sql: str) -> str:
     """PG ``SELECT DISTINCT ON (keys) ... ORDER BY keys, tiebreak`` →
     row_number() OVER (PARTITION BY keys ORDER BY ...) = 1 subquery —
@@ -8982,22 +8246,22 @@ def _rewrite_distinct_on(sql: str) -> str:
         if not m2:
             return sql
         open_idx = m2.start()
-        close_idx = _scan_matching(sql, open_idx)
+        close_idx = close_of(sql, open_idx)
         inner = sql[open_idx + 1 : close_idx]
         return _rewrite_distinct_on(
             sql[: open_idx + 1] + _rewrite_distinct_on(inner) + sql[close_idx:]
         )
     open_idx = sql.index("(", m.end() - 1)
-    close_idx = _scan_matching(sql, open_idx)
+    close_idx = close_of(sql, open_idx)
     keys = sql[open_idx + 1 : close_idx].strip()
     rest = sql[close_idx + 1 :]
 
-    from_idx = _find_top_level(rest, "from")
+    from_idx = find_top_level(rest, "from")
     if from_idx < 0:
         raise NotImplementedError("DISTINCT ON without FROM")
     select_list = rest[:from_idx].strip()
     body = rest[from_idx:]
-    order_idx = _find_top_level(body, "order")
+    order_idx = find_top_level(body, "order")
     if order_idx >= 0:
         order_list = re.sub(r"(?is)^order\s+by\s+", "", body[order_idx:]).strip()
         body = body[:order_idx].rstrip()
@@ -9042,7 +8306,7 @@ def transpile(sql: str) -> str:
     toks = _pass_array_constructor(toks)
     # contrib/intagg: int_array_enum(int[]) IS unnest (intagg--1.1.sql)
     toks = [
-        "unnest" if _is_ident(t) and t.lower() == "int_array_enum" else t
+        "unnest" if is_ident(t) and t.lower() == "int_array_enum" else t
         for t in toks
     ]
     toks = _pass_unnest_from(toks)
@@ -9133,14 +8397,14 @@ def transpile(sql: str) -> str:
             fixed.append(t)
     toks = fixed
     # re-join with spaces; '.' binds tight (qualified names)
-    return _join_tokens(toks)
+    return join_tokens(toks)
 
 
 def _tsq_literal_text(arg: list[str]) -> str | None:
     """Literal tsquery argument → its text: ``'lit'``, ``'lit'::tsquery``,
     ``to_tsquery('lit')`` / ``plainto_tsquery('lit')`` (with optional
     config arg).  Non-literal expressions return None."""
-    if arg and _is_string(arg[0]):
+    if arg and is_string(arg[0]):
         rest = arg[1:]
         if not rest or (
             len(rest) == 2 and rest[0] == "::" and rest[1].lower() == "tsquery"
@@ -9149,15 +8413,15 @@ def _tsq_literal_text(arg: list[str]) -> str | None:
         return None
     if (
         len(arg) >= 4
-        and _is_ident(arg[0])
+        and is_ident(arg[0])
         and arg[0].lower() in ("to_tsquery", "plainto_tsquery")
         and arg[1] == "("
         and arg[-1] == ")"
     ):
-        inner = _split_args(arg[2:-1])
+        inner = split_top(arg[2:-1])
         if len(inner) == 2:  # (config, text)
             inner = inner[1:]
-        if len(inner) == 1 and len(inner[0]) == 1 and _is_string(inner[0][0]):
+        if len(inner) == 1 and len(inner[0]) == 1 and is_string(inner[0][0]):
             body = inner[0][0][1:-1].replace("''", "'")
             if arg[0].lower() == "plainto_tsquery":
                 lex = [t for t in re.split(r"[^a-z0-9]+", body.lower()) if t]
@@ -9183,19 +8447,19 @@ def _apply_default_ts_config(sql: str, cfg: str) -> str:
     i = 0
     while i < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower()
             in ("to_tsvector", "to_tsquery", "plainto_tsquery")
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _args_span(toks, i + 1)
-            if len(_split_args(toks[i + 2 : close])) == 1:
+            close = match_close(toks, i + 1)
+            if len(split_top(toks[i + 2 : close])) == 1:
                 toks[i + 2 : i + 2] = [f"'{cfg}'", ","]
                 changed = True
                 i += 2
         i += 1
-    return _join_tokens(toks) if changed else sql
+    return join_tokens(toks) if changed else sql
 
 
 def fold_ts_rewrite_select(spark, sql: str) -> str:
@@ -9221,13 +8485,13 @@ def fold_ts_rewrite_select(spark, sql: str) -> str:
     i = 0
     while i < len(toks):
         if (
-            _is_ident(toks[i])
+            is_ident(toks[i])
             and toks[i].lower() == "ts_rewrite"
             and i + 1 < len(toks)
             and toks[i + 1] == "("
         ):
-            close = _args_span(toks, i + 1)
-            args = _split_args(toks[i + 2 : close])
+            close = match_close(toks, i + 1)
+            args = split_top(toks[i + 2 : close])
             sel = None
             if len(args) == 2:
                 a1 = args[1]
@@ -9238,7 +8502,7 @@ def fold_ts_rewrite_select(spark, sql: str) -> str:
                     and a1[2].lower() in ("text", "varchar")
                 ):
                     a1 = a1[:1]
-                if len(a1) == 1 and _is_string(a1[0]):
+                if len(a1) == 1 and is_string(a1[0]):
                     body = a1[0][1:-1].replace("''", "'")
                     if re.match(r"(?is)^\s*select\b", body):
                         sel = body
@@ -9276,7 +8540,7 @@ def fold_ts_rewrite_select(spark, sql: str) -> str:
 
                     textsearch.register_udfs(spark)
                     pj = _json.dumps(pairs).replace("'", "''")
-                    qexpr = _join_tokens(args[0])
+                    qexpr = join_tokens(args[0])
                     toks[i : close + 1] = tokenize(
                         f"pg_ts_rewrite(CAST(({qexpr}) AS STRING), '{pj}')"
                     )
@@ -9284,7 +8548,7 @@ def fold_ts_rewrite_select(spark, sql: str) -> str:
                 i += 1
                 continue
         i += 1
-    return _join_tokens(toks) if changed else sql
+    return join_tokens(toks) if changed else sql
 
 
 def pg_sql(spark, sql: str):

@@ -41,7 +41,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greengage_spark.dialect.ddl import DDLCatalog, parse_create_table
-from greengage_spark.dialect.transpiler import _find_top_level, pg_sql, transpile
+from greengage_spark.dialect.spans import (
+    close_of,
+    find_top_level,
+    is_ident,
+    join_tokens,
+    lex,
+    split_top_level,
+    tokenize,
+)
+from greengage_spark.dialect.transpiler import pg_sql, transpile
 
 _PG_TEXT_ESCAPES = {
     "t": "\t", "n": "\n", "r": "\r", "b": "\b", "f": "\f", "v": "\v",
@@ -167,20 +176,23 @@ def _strip_leading_comments(stmt: str) -> str:
 
 def _normalize_statement(sql: str) -> str:
     """pg_stat_statements-style query normalization: string and numeric
-    literals become $n placeholders, whitespace collapses."""
-    out = []
-    n = 0
-
-    def sub_str(m):
-        nonlocal n
+    literals become $n placeholders numbered left to right, after any
+    ``$n`` parameter the statement already has, as PG's
+    generate_normalized_query does; whitespace collapses."""
+    s = sql.strip().rstrip(";")
+    lits, n = [], 0
+    for m in lex(s):
+        if m.group(0).isdigit() and s[m.start() - 1 : m.start()] == "$":
+            n = max(n, int(m.group(0)))  # an existing parameter
+        elif m.lastgroup in ("string", "number"):
+            lits.append(m)
+    parts, pos = [], 0
+    for m in lits:
         n += 1
-        return f"${n}"
-
-    s = re.sub(r"'(?:[^']|'')*'", sub_str, sql.strip().rstrip(";"))
-    # don't re-match the digits of an already-placed $n placeholder (or
-    # digits embedded in identifiers)
-    s = re.sub(r"(?<![$\w])\d+(?:\.\d+)?(?:[eE][+-]?\d+)?\b", sub_str, s)
-    return re.sub(r"\s+", " ", s)
+        parts += [s[pos : m.start()], f"${n}"]
+        pos = m.end()
+    parts.append(s[pos:])
+    return re.sub(r"\s+", " ", "".join(parts))
 
 
 def _sub_outside_strings(pattern: str, repl: str, stmt: str) -> str:
@@ -976,7 +988,7 @@ class GreengageEngine:
             name = men.group(1)
             labels = [
                 x.strip()[1:-1].replace("''", "'")
-                for x in self._split_top(men.group(2))
+                for x in split_top_level(men.group(2))
                 if x.strip()
             ]
             if name in self.domains:
@@ -1183,7 +1195,7 @@ class GreengageEngine:
                 stmt,
             )
             if head == "select":
-                iidx = _find_top_level(stmt, "into")
+                iidx = find_top_level(stmt, "into")
                 if iidx >= 0:
                     # SELECT ... INTO [TEMP|UNLOGGED] [TABLE] name
                     # (parse_clause.c transformIntoClause) ≡ CREATE TABLE
@@ -1699,11 +1711,11 @@ class GreengageEngine:
             msel = re.search(r"(?is)\b(select|with)\b", stmt)
             body_start = msel.start() if msel else -1
             has_from = (
-                body_start >= 0 and _find_top_level(stmt[body_start:], "from") >= 0
+                body_start >= 0 and find_top_level(stmt[body_start:], "from") >= 0
             )
         else:
             body_start = 0
-            has_from = head in ("select", "with") and _find_top_level(stmt, "from") >= 0
+            has_from = head in ("select", "with") and find_top_level(stmt, "from") >= 0
         if not has_from:
             return _NEXTVAL.sub(lambda m: str(self.sequences.nextval(m.group(1))), stmt)
         self._register_all()
@@ -1918,11 +1930,6 @@ class GreengageEngine:
         geo_cols = self._geo_column_names()
         if not geo_cols:
             return stmt
-        from greengage_spark.dialect.transpiler import (
-            _is_ident,
-            _join_tokens,
-            tokenize,
-        )
 
         toks = tokenize(stmt)
         out: list[str] = []
@@ -1930,15 +1937,15 @@ class GreengageEngine:
         while i < len(toks):
             t = toks[i]
             if (
-                _is_ident(t)
+                is_ident(t)
                 and t.lower() in geo_cols
                 and (i + 1 >= len(toks) or toks[i + 1] != "(")
                 # not an alias definition (AS f1) or qualifier head (f1.x)
-                and not (out and _is_ident(out[-1]) and out[-1].lower() == "as")
+                and not (out and is_ident(out[-1]) and out[-1].lower() == "as")
                 and not (i + 1 < len(toks) and toks[i + 1] == ".")
             ):
                 marker = geo_cols[t.lower()]
-                if out and out[-1] == "." and len(out) >= 2 and _is_ident(out[-2]):
+                if out and out[-1] == "." and len(out) >= 2 and is_ident(out[-2]):
                     qual = out[-2]
                     out = out[:-2]
                     out += [marker, "(", qual, ".", t, ")"]
@@ -1948,7 +1955,7 @@ class GreengageEngine:
                 continue
             out.append(t)
             i += 1
-        return _join_tokens(out)
+        return join_tokens(out)
 
     def _create_external_table(self, stmt: str):
         from greengage_spark.sources.external import parse_create_external
@@ -2067,17 +2074,8 @@ class GreengageEngine:
         mc = re.search(r"(?is)(?:constraint\s+[\w]+\s+)?check\s*\(", rest)
         if mc:
             # balance parens to the end of the CHECK expression
-            depth, i = 0, rest.index("(", mc.start())
-            start = i
-            while i < len(rest):
-                if rest[i] == "(":
-                    depth += 1
-                elif rest[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            own = rest[start + 1 : i]
+            start = rest.index("(", mc.start())
+            own = rest[start + 1 : close_of(rest, start)]
             spec["check"] = (
                 f"({spec['check']}) AND ({own})" if spec["check"] else own
             )
@@ -2307,7 +2305,7 @@ class GreengageEngine:
     def _split_returning(text: str) -> tuple[str, str | None]:
         """Strip a trailing top-level RETURNING clause (gram.y
         returning_clause); returns (text-without-it, exprs-or-None)."""
-        ridx = _find_top_level(text, "returning")
+        ridx = find_top_level(text, "returning")
         if ridx < 0:
             return text, None
         return text[:ridx].rstrip(), text[ridx + len("returning") :].strip()
@@ -2442,11 +2440,11 @@ class GreengageEngine:
             # peel a trailing RETURNING clause first — it would otherwise
             # corrupt the per-row default append on multi-row VALUES
             vals_text, returning = self._split_returning(mb.group(1))
-            rows = self._split_top(vals_text.strip())
+            rows = split_top_level(vals_text.strip())
             if not rows or not rows[0].strip().startswith("("):
                 return stmt
             if cols is None:
-                n_items = len(self._split_top(rows[0].strip()[1:-1]))
+                n_items = len(split_top_level(rows[0].strip()[1:-1]))
                 cols = [c.name.lower() for c in td.columns[:n_items]]
             missing = [c for c in seq_cols if c.name.lower() not in cols]
             if not missing:
@@ -2643,8 +2641,8 @@ class GreengageEngine:
                 )
             rest = re.sub(rf"(?i)\b{alias}\s*\.\s*", "", rest)
         rest, ret = self._split_returning(rest)
-        fidx = _find_top_level(rest, "from")
-        widx = _find_top_level(rest, "where")
+        fidx = find_top_level(rest, "from")
+        widx = find_top_level(rest, "where")
         if fidx >= 0 and (widx < 0 or fidx < widx):
             if ret is not None:
                 raise NotImplementedError("RETURNING with UPDATE ... FROM")
@@ -2652,7 +2650,7 @@ class GreengageEngine:
         set_raw = rest[:widx] if widx >= 0 else rest
         where_raw = rest[widx + 5 :].strip() if widx >= 0 else None
         st = self._storage(name)
-        parts = self._expand_set_parts(name, self._split_top(set_raw))
+        parts = self._expand_set_parts(name, split_top_level(set_raw))
         texts = parts + ([where_raw] if where_raw else [])
         if any(re.search(r"(?is)\(\s*select\b", t) for t in texts):
             # subqueries in SET/WHERE evaluate through SQL (a scalar
@@ -2736,7 +2734,7 @@ class GreengageEngine:
         PG errors before evaluating anything."""
         m = re.match(r"(?is)^values\b(.*)$", body)
         rows_raw = m.group(1).strip()
-        rows = self._split_top(rows_raw)
+        rows = split_top_level(rows_raw)
         target = cols if cols is not None else [c.name for c in td.columns]
         defaults = {c.name.lower(): c.default for c in td.columns}
         out_rows = []
@@ -2745,7 +2743,7 @@ class GreengageEngine:
             row = row.strip()
             if not (row.startswith("(") and row.endswith(")")):
                 raise NotImplementedError(f"VALUES row {row!r}")
-            items = self._split_top(row[1:-1])
+            items = split_top_level(row[1:-1])
             if n_items is None:
                 n_items = len(items)
                 if len(items) > len(target):
@@ -2809,7 +2807,7 @@ class GreengageEngine:
                 # keyword and exactly ONE balanced outer paren pair, so
                 # (a,b) = ((1+2), 3) keeps the inner parens intact
                 rhs_raw = re.sub(r"(?is)^row\s*\(", "(", rhs_raw)
-                rhs = self._split_top(self._strip_one_paren(rhs_raw))
+                rhs = split_top_level(self._strip_one_paren(rhs_raw))
                 if len(lhs) != len(rhs):
                     raise ValueError(
                         f"number of columns does not match number of values"
@@ -2851,7 +2849,7 @@ class GreengageEngine:
         where_raw = rest[widx + 5 :].strip() if widx >= 0 else "TRUE"
         td = self.ddl.tables[name]
         st = self._storage(name)
-        parts = self._expand_set_parts(name, self._split_top(set_raw))
+        parts = self._expand_set_parts(name, split_top_level(set_raw))
         sets = {}
         for part in parts:
             col, _, expr = part.partition("=")
@@ -2913,8 +2911,8 @@ class GreengageEngine:
         name, rest = m.group(1), (m.group(2) or "").strip()
         using_raw = where_raw = None
         if rest:
-            uidx = _find_top_level(rest, "using")
-            widx = _find_top_level(rest, "where")
+            uidx = find_top_level(rest, "using")
+            widx = find_top_level(rest, "where")
             if widx >= 0:
                 where_raw = rest[widx + 5 :].strip()
             if uidx == 0:
@@ -3103,42 +3101,8 @@ class GreengageEngine:
         s = s.strip()
         if not (s.startswith("(") and s.endswith(")")):
             return s
-        depth, in_str = 0, False
-        for i, ch in enumerate(s):
-            if in_str:
-                if ch == "'":
-                    in_str = False
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    # outer pair is balanced only if it closes at the end
-                    return s[1:-1].strip() if i == len(s) - 1 else s
-        return s
-
-    @staticmethod
-    def _split_top(s: str) -> list[str]:
-        parts, depth, cur, in_str = [], 0, [], False
-        for ch in s:
-            if in_str:
-                cur.append(ch)
-                if ch == "'":
-                    in_str = False
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-        parts.append("".join(cur))
-        return [p.strip() for p in parts if p.strip()]
+        try:
+            # outer pair is balanced only if it closes at the end
+            return s[1:-1].strip() if close_of(s, 0) == len(s) - 1 else s
+        except ValueError:
+            return s

@@ -41,10 +41,9 @@ from pyspark.sql import functions as F
 from greengage_spark.dialect.ddl import (
     ColumnDef,
     _parse_column,
-    _matching_paren,
-    _split_top_level,
     map_pg_type,
 )
+from greengage_spark.dialect.spans import split_top_level
 
 
 def execute_truncate(eng, stmt: str) -> None:
@@ -80,7 +79,7 @@ def execute_alter_table(eng, stmt: str) -> None:
         if if_exists:
             return None
         raise ValueError(f"unknown table {name!r}")
-    for action in _split_top_level(rest):
+    for action in split_top_level(rest):
         _apply_action(eng, name, action.strip())
         # RENAME TO changes the routing key for subsequent actions
         mr = re.match(r"(?is)^rename\s+to\s+([\w.\"]+)$", action.strip())
@@ -465,7 +464,7 @@ def _set_distributed(eng, name: str, td, kind: str | None, keys: str | None):
         else:
             td.distribution = "hash"
             td.dist_keys = tuple(
-                c.strip().strip('"') for c in _split_top_level(keys or "")
+                c.strip().strip('"') for c in split_top_level(keys or "")
             )
     st_new = eng.ddl._storage(td)  # picks up the new dist keys
     st_new.replace(st_new.df())

@@ -30,7 +30,14 @@ applies only to statements that reference a declared citext column.
 
 from __future__ import annotations
 
-from greengage_spark.dialect.transpiler import _is_ident, _is_string, tokenize
+from greengage_spark.dialect.spans import (
+    is_ident,
+    is_string,
+    match_close,
+    match_open,
+    tokenize,
+    top_level,
+)
 
 _CMP_OPS = {"=", "<>", "!=", "<", "<=", ">", ">="}
 # contexts where a following bare column ref must NOT be treated as a
@@ -50,45 +57,26 @@ def _operand_span(toks: list[str], i: int, direction: int) -> tuple[int, int]:
             return (i, i)
         t = toks[i]
         if t == "(":
-            depth, j = 1, i + 1
-            while j < n and depth:
-                if toks[j] == "(":
-                    depth += 1
-                elif toks[j] == ")":
-                    depth -= 1
-                j += 1
-            return (i, j)
-        if _is_string(t) or not _is_ident(t):
+            return (i, match_close(toks, i) + 1)
+        if is_string(t) or not is_ident(t):
             # literal / number
             return (i, i + 1) if t not in (",", ")", ";") else (i, i)
         # identifier [. identifier] [( args )]
         j = i + 1
-        while j + 1 < n and toks[j] == "." and _is_ident(toks[j + 1]):
+        while j + 1 < n and toks[j] == "." and is_ident(toks[j + 1]):
             j += 2
         if j < n and toks[j] == "(":
-            depth, j = 1, j + 1
-            while j < n and depth:
-                if toks[j] == "(":
-                    depth += 1
-                elif toks[j] == ")":
-                    depth -= 1
-                j += 1
+            j = match_close(toks, j) + 1
         return (i, j)
     # backward
     if i < 0:
         return (0, 0)
     t = toks[i]
     if t == ")":
-        depth, j = 1, i - 1
-        while j >= 0 and depth:
-            if toks[j] == ")":
-                depth += 1
-            elif toks[j] == "(":
-                depth -= 1
-            j -= 1
+        j = max(match_open(toks, i), 0) - 1
         # include a function name / qualifier before the parens
         k = j
-        while k >= 0 and _is_ident(toks[k]):
+        while k >= 0 and is_ident(toks[k]):
             if k - 1 >= 0 and toks[k - 1] == ".":
                 k -= 2
             else:
@@ -96,10 +84,10 @@ def _operand_span(toks: list[str], i: int, direction: int) -> tuple[int, int]:
                 break
         start = k + 1 if k + 1 <= j else j + 1
         return (start, i + 1)
-    if _is_string(t) or not _is_ident(t):
+    if is_string(t) or not is_ident(t):
         return (i, i + 1)
     j = i
-    while j - 1 >= 0 and toks[j - 1] == "." and j - 2 >= 0 and _is_ident(toks[j - 2]):
+    while j - 1 >= 0 and toks[j - 1] == "." and j - 2 >= 0 and is_ident(toks[j - 2]):
         j -= 2
     return (j, i + 1)
 
@@ -107,12 +95,12 @@ def _operand_span(toks: list[str], i: int, direction: int) -> tuple[int, int]:
 def _is_citext_ref(toks, a, b, cols: set[str]) -> bool:
     """Span is a bare or qualified reference to a citext column."""
     span = toks[a:b]
-    if len(span) == 1 and _is_ident(span[0]) and span[0].lower() in cols:
+    if len(span) == 1 and is_ident(span[0]) and span[0].lower() in cols:
         return True
     return (
         len(span) == 3
         and span[1] == "."
-        and _is_ident(span[2])
+        and is_ident(span[2])
         and span[2].lower() in cols
     )
 
@@ -126,18 +114,10 @@ def fold_citext_stmt(stmt: str, cols: set[str]) -> str:
         return fold_citext(stmt, cols)
     if head in ("update", "delete"):
         toks = tokenize(stmt)
-        low = [t.lower() if _is_ident(t) else t for t in toks]
+        low = [t.lower() if is_ident(t) else t for t in toks]
         if not any(t in cols for t in low):
             return stmt
-        depth = 0
-        widx = -1
-        for i, t in enumerate(toks):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and low[i] == "where":
-                widx = i
+        widx = max((i for i, _ in top_level(toks) if low[i] == "where"), default=-1)
         if widx < 0:
             return stmt
         end = len(toks)
@@ -204,7 +184,7 @@ def _rewrite_distinct(toks: list[str], low: list[str], cols: set[str]):
         cit_items: dict[int, tuple[int, int]] = {}  # item idx -> ref span
         for k, (ia, ib) in enumerate(items):
             bb = ib
-            if bb - ia >= 3 and low[bb - 2] == "as" and _is_ident(toks[bb - 1]):
+            if bb - ia >= 3 and low[bb - 2] == "as" and is_ident(toks[bb - 1]):
                 bb -= 2
             if _is_citext_ref(toks, ia, bb, cols):
                 cit_items[k] = (ia, bb)
@@ -259,7 +239,7 @@ def _rewrite_distinct(toks: list[str], low: list[str], cols: set[str]):
                 if (
                     ib - ia >= 3
                     and low[ib - 2] == "as"
-                    and _is_ident(toks[ib - 1])
+                    and is_ident(toks[ib - 1])
                 ):
                     expr_end = ib - 2
                 keys.append(" ".join(toks[ia:expr_end]))
@@ -303,7 +283,7 @@ def _rewrite_distinct(toks: list[str], low: list[str], cols: set[str]):
             t for t in new[tail_end:] if t
         ]
         toks = tokenize(" ".join(pieces))
-        low = [t.lower() if _is_ident(t) else t for t in toks]
+        low = [t.lower() if is_ident(t) else t for t in toks]
         depths = []
         d = 0
         for t in toks:
@@ -321,14 +301,14 @@ def fold_citext(stmt: str, cols: set[str]) -> str:
     if head in _SKIP_HEADS:
         return stmt
     toks = tokenize(stmt)
-    low = [t.lower() if _is_ident(t) else t for t in toks]
+    low = [t.lower() if is_ident(t) else t for t in toks]
     if not any(t in cols for t in low):
         return stmt
 
     rewritten = _rewrite_distinct(toks, low, cols)
     if rewritten is not None:
         toks = tokenize(rewritten)
-        low = [t.lower() if _is_ident(t) else t for t in toks]
+        low = [t.lower() if is_ident(t) else t for t in toks]
 
     out = list(toks)
 
@@ -386,19 +366,11 @@ def fold_citext(stmt: str, cols: set[str]) -> str:
             if lb == opi + 1 and _is_citext_ref(toks, la, lb, cols):
                 # lower the column and each top-level list item
                 if i + 1 < len(toks) and toks[i + 1] == "(":
-                    depth, j = 1, i + 2
                     item_start = i + 2
-                    while j < len(toks) and depth:
-                        if toks[j] == "(":
-                            depth += 1
-                        elif toks[j] == ")":
-                            depth -= 1
-                            if depth == 0 and j > item_start:
-                                wrap_item(item_start, j)
-                        elif toks[j] == "," and depth == 1:
+                    for j, tj in top_level(toks, i + 2):
+                        if tj == "," or tj == ")" and j > item_start:
                             wrap_item(item_start, j)
                             item_start = j + 1
-                        j += 1
                     wrap(la, lb)
         i += 1
 

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, functions as F
 
+from greengage_spark.dialect.spans import split_top_level
+
 
 @dataclass
 class PartitionBound:
@@ -98,29 +100,6 @@ def _step(lo, every_raw: str, col_type: str):
     return lambda v: v + step
 
 
-def _split_top(s: str) -> list[str]:
-    parts, depth, cur, in_str = [], 0, [], False
-    for ch in s:
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
-
-
 _ELEM = re.compile(
     r"(?is)^(?:partition\s+(?P<name>\w+)\s+)?"
     r"(?:"
@@ -146,7 +125,7 @@ def parse_partition_spec(raw: str, col_type: str) -> list[PartitionBound]:
         body = body[1:-1]
     bounds: list[PartitionBound] = []
     seq = 0
-    for item in _split_top(body):
+    for item in split_top_level(body):
         item = re.sub(r"(?is)^subpartition\b", "partition", item.strip())
         md = re.match(r"(?is)^default\s+(?:sub)?partition\s+(\w+)$", item)
         if md:
@@ -159,7 +138,7 @@ def parse_partition_spec(raw: str, col_type: str) -> list[PartitionBound]:
         if m.group("values") is not None:
             seq += 1
             vals = tuple(
-                _parse_value(v, col_type) for v in _split_top(m.group("values"))
+                _parse_value(v, col_type) for v in split_top_level(m.group("values"))
             )
             bounds.append(
                 PartitionBound(name=name or f"p{seq}", values=vals)

@@ -25,6 +25,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from greengage_spark.dialect.spans import split_top_level
+
 
 class PreparedStatement:
     def __init__(self, name: str, body: str, n_params: int):
@@ -206,29 +208,6 @@ def _substitute_params(body: str, args: list[str]) -> str:
     return _PARAM.sub(repl, body)
 
 
-def _split_args(raw: str) -> list[str]:
-    parts, depth, cur, in_str = [], 0, [], False
-    for ch in raw:
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    return [p.strip() for p in parts] + ([tail] if tail else [])
-
-
 def execute_prepare_stmt(engine, stmt: str):
     head = stmt.split(None, 1)[0].lower()
     if head == "prepare":
@@ -252,7 +231,7 @@ def execute_prepare_stmt(engine, stmt: str):
         ps = engine.prepared.get(name)
         if ps is None:
             raise ValueError(f'prepared statement "{name}" does not exist')
-        args = _split_args(m.group(2)) if m.group(2) else []
+        args = split_top_level(m.group(2)) if m.group(2) else []
         if len(args) != ps.n_params:
             raise ValueError(
                 f"wrong number of parameters for prepared statement "

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from greengage_spark.dialect.spans import split_top_level
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -282,7 +284,7 @@ def parse_create_external(stmt: str) -> ExternalTableDef:
 
     schema = ", ".join(
         f"{c.split()[0]} {map_pg_type(' '.join(c.split()[1:]))}"
-        for c in _split_cols(cols)
+        for c in split_top_level(cols)
     )
     if fmt == "custom":
         # contrib/formatter_fixedwidth: the only custom formatter the
@@ -481,22 +483,6 @@ def parse_create_external(stmt: str) -> ExternalTableDef:
         reject_percent=(rej_unit or "rows").lower() == "percent",
     )
     return ExternalTableDef(name=name, writable=False, table=tab)
-
-
-def _split_cols(raw: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in raw:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
 
 
 def copy_to(df: DataFrame, location: str, fmt: str = "csv", *, header: bool = True, mode: str = "overwrite") -> None:

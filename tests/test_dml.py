@@ -316,3 +316,31 @@ class TestSerialInsertReturning:
             "SELECT id, name FROM sret ORDER BY id"
         ).collect()
         assert [tuple(x) for x in rows] == [(1, "a"), (2, "b")]
+
+
+class TestStatementLexing:
+    """The engine finds a statement's clauses with the front end's lexer,
+    so comments and quoted identifiers hide their brackets and keywords
+    the way PostgreSQL's scanner (scan.l) does."""
+
+    @pytest.fixture()
+    def eng(self, spark, tmp_path):
+        from greengage_spark.engine import GreengageEngine
+
+        eng = GreengageEngine(spark, str(tmp_path / "wh"))
+        eng.execute(
+            "CREATE TABLE lx AS SELECT * FROM "
+            "(VALUES (1, 10), (2, 20), (3, 30)) v(id, v) DISTRIBUTED BY (id)"
+        )
+        return eng
+
+    def test_update_where_after_comment_with_paren(self, eng):
+        eng.execute("UPDATE lx SET v = 0 -- reset (one row\n WHERE id = 1")
+        got = sorted(tuple(r) for r in eng.execute("SELECT id, v FROM lx").collect())
+        assert got == [(1, 0), (2, 20), (3, 30)]
+
+    def test_delete_where_after_quoted_ident_with_paren(self, eng):
+        eng.execute("CREATE TABLE lk AS SELECT * FROM (VALUES (2)) v(id)")
+        eng.execute('DELETE FROM lx USING lk AS "k(" WHERE lx.id = "k(".id')
+        got = sorted(r.id for r in eng.execute("SELECT id FROM lx").collect())
+        assert got == [1, 3]

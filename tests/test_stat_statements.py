@@ -39,6 +39,16 @@ class TestStatStatements:
         }
         assert rows["SELECT upper($1) AS v"] == 2
 
+    def test_placeholders_numbered_by_position(self, eng):
+        # PG numbers constants left to right, whatever their type
+        eng.execute("CREATE TABLE s4 (x int8, y text)")
+        eng.execute("INSERT INTO s4 VALUES (1,'x')")
+        qs = [
+            r.query
+            for r in eng.execute("SELECT query FROM pg_stat_statements").collect()
+        ]
+        assert "INSERT INTO s4 VALUES ($1,$2)" in qs
+
     def test_timing_columns_populated(self, eng):
         eng.execute("SELECT 1 AS one").collect()
         r = eng.execute(
