@@ -1,7 +1,7 @@
 """Event-time windowed queries (streaming semantics, batch-checkable).
 
 window()/session_window() are grouping expressions that behave
-identically under readStream — tests/test_streaming.py re-runs these
+identically under readStream — tests/test_streaming_live.py re-runs these
 same helpers as actual streams (availableNow trigger) and checks they
 match the batch results.  Oracles express the window algebra in plain
 SQL (tumble = epoch floor; session = gaps-and-islands).
