@@ -25,7 +25,7 @@ import re
 
 from pyspark.sql import DataFrame
 
-from greengage_spark.dialect.spans import split_top_level
+from greengage_spark.dialect.spans import lex, split_top_level
 
 
 class PreparedStatement:
@@ -186,26 +186,23 @@ class Cursor:
         return []
 
 
-_STRING_SPAN = re.compile(r"'(?:[^']|'')*'")
 _PARAM = re.compile(r"\$(\d+)")
 
 
 def _substitute_params(body: str, args: list[str]) -> str:
-    """Replace $n outside string literals with the argument literal text."""
-    spans = [m.span() for m in _STRING_SPAN.finditer(body)]
-
-    def in_string(pos: int) -> bool:
-        return any(a <= pos < b for a, b in spans)
-
-    def repl(m: re.Match) -> str:
-        if in_string(m.start()):
-            return m.group(0)
-        idx = int(m.group(1))
-        if not 1 <= idx <= len(args):
-            raise ValueError(f"there is no parameter ${idx}")
-        return args[idx - 1]
-
-    return _PARAM.sub(repl, body)
+    """Replace each $n parameter — not one inside a string literal, quoted
+    identifier or comment — with the argument literal text."""
+    parts, pos = [], 0
+    for m in lex(body):
+        dollar = m.start() - 1
+        if m.group(0).isdigit() and body[dollar : m.start()] == "$":
+            idx = int(m.group(0))
+            if not 1 <= idx <= len(args):
+                raise ValueError(f"there is no parameter ${idx}")
+            parts += [body[pos:dollar], args[idx - 1]]
+            pos = m.end()
+    parts.append(body[pos:])
+    return "".join(parts)
 
 
 def execute_prepare_stmt(engine, stmt: str):
