@@ -204,9 +204,10 @@ def rewrite_calls(
     fn: Callable[[str, list[list[str]]], list[str] | None],
 ) -> list[str]:
     """Replace each call ``name ( args )`` whose lower-cased name is in
-    ``names`` by ``fn(name, split_top(args))``.  Scanning resumes after a
-    replacement, so nested calls are rewritten only if ``fn`` recurses;
-    when ``fn`` returns None the call stays and its arguments are scanned."""
+    ``names`` by ``fn(name, split_top(args))``, ``name`` as written.
+    Scanning resumes after a replacement, so nested calls are rewritten
+    only if ``fn`` recurses; when ``fn`` returns None the call stays and
+    its arguments are scanned."""
     out: list[str] = []
     i = 0
     while i < len(toks):
@@ -218,7 +219,7 @@ def rewrite_calls(
             and t.lower() in names
         ):
             close = match_close(toks, i + 1)
-            new = fn(t.lower(), split_top(toks[i + 2 : close]))
+            new = fn(t, split_top(toks[i + 2 : close]))
             if new is not None:
                 out += new
                 i = close + 1

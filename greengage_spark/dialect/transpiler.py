@@ -324,7 +324,7 @@ def _pass_seg(toks: list[str]) -> list[str]:
         if name == "__gg_seg":
             return ["(", *args[0], ")"]
         if args[0][:1] == ["__gg_seg"]:
-            return [fns[name], "(", *args[0][2:-1], ")"]
+            return [fns[name.lower()], "(", *args[0][2:-1], ")"]
         return None
 
     return rewrite_calls(toks, {"__gg_seg", *fns}, lower)
@@ -1743,44 +1743,27 @@ def _pass_avg_bigint_exact(toks: list[str]) -> list[str]:
     Spark's avg over BIGINT accumulates in double and loses precision on
     huge values.  Where the operand's type is syntactically known —
     avg(CAST(x AS BIGINT)) from an ::int8 cast — accumulate in decimal."""
-    i = 0
-    while i + 3 < len(toks):
+    def exact(name: str, args: list[list[str]]) -> list[str] | None:
+        a = args[0] if len(args) == 1 else []
         if (
-            is_ident(toks[i])
-            and toks[i].lower() == "avg"
-            and toks[i + 1] == "("
-            and toks[i + 2].upper() == "CAST"
+            len(a) > 3
+            and a[0].upper() == "CAST"
+            and a[1] == "("
+            and match_close(a, 1) == len(a) - 1
+            and [t.upper() for t in a[-3:-1]] == ["AS", "BIGINT"]
         ):
-            close = match_close(toks, i + 1)
-            inner_close = match_close(toks, i + 3)
-            if (
-                inner_close == close - 1
-                and toks[inner_close - 1].upper() == "BIGINT"
-                and toks[inner_close - 2].upper() == "AS"
-            ):
-                toks = (
-                    toks[: inner_close - 1]
-                    + ["DECIMAL(38,0)"]
-                    + toks[inner_close:]
-                )
-        i += 1
-    return toks
+            return [name, "(", *a[:-2], "DECIMAL(38,0)", ")", ")"]
+        return None
+
+    return rewrite_calls(toks, {"avg"}, exact)
 
 
 def _pass_count_noargs(toks: list[str]) -> list[str]:
     """Zero-argument COUNT() (Greenplum grammar extension ≡ COUNT(*)) —
     Spark requires the star."""
-    i = 0
-    while i + 2 < len(toks):
-        if (
-            is_ident(toks[i])
-            and toks[i].lower() == "count"
-            and toks[i + 1] == "("
-            and toks[i + 2] == ")"
-        ):
-            toks = toks[: i + 2] + ["*"] + toks[i + 2 :]
-        i += 1
-    return toks
+    return rewrite_calls(
+        toks, {"count"}, lambda name, args: None if args else [name, "(", "*", ")"]
+    )
 
 
 def _pass_agg_filter(toks: list[str]) -> list[str]:
@@ -2601,31 +2584,15 @@ def _pass_xml(toks: list[str]) -> list[str]:
 
 
 def _pass_xmlagg(toks: list[str]) -> list[str]:
-    out: list[str] = []
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if (
-            is_ident(t)
-            and t.lower() == "xmlagg"
-            and i + 1 < len(toks)
-            and toks[i + 1] == "("
-        ):
-            close = match_close(toks, i + 1)
-            inner = toks[i + 2 : close]
-            k = next(
-                (j for j, x in top_level(inner)
-                 if is_ident(x) and x.lower() == "order"),
-                None,
-            )
-            expr = inner[:k] if k is not None else inner
-            tail = inner[k:] if k is not None else []
-            out += ["string_agg", "("] + expr + [",", "''"] + tail + [")"]
-            i = close + 1
-            continue
-        out.append(t)
-        i += 1
-    return out
+    def lower(_, args: list[list[str]]) -> list[str]:
+        inner = [t for a in args for t in [",", *a]][1:]
+        k = next(
+            (j for j, x in top_level(inner) if is_ident(x) and x.lower() == "order"),
+            len(inner),
+        )
+        return ["string_agg", "(", *inner[:k], ",", "''", *inner[k:], ")"]
+
+    return rewrite_calls(toks, {"xmlagg"}, lower)
 
 
 def _pass_typed_literals(toks: list[str]) -> list[str]:

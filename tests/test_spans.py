@@ -67,11 +67,11 @@ def test_operand_spans():
 def test_rewrite_calls_resumes_after_each_replacement():
     toks = tokenize("f(f(1), 2) + g(3) + F(4)")
 
-    def fn(name, args):
-        return ["h", "(", *args[-1], ")"] if name == "f" else None
+    def fn(name, args):  # name as written; args split at depth-0 commas
+        return [name + "2", "(", *args[-1], ")"] if name.lower() == "f" else None
 
     assert " ".join(rewrite_calls(toks, {"f"}, fn)) == (
-        "h ( 2 ) + g ( 3 ) + h ( 4 )"
+        "f2 ( 2 ) + g ( 3 ) + F2 ( 4 )"
     )
 
 
