@@ -3032,27 +3032,15 @@ def _pass_inline_named_windows(toks: list[str]) -> list[str]:
         i = j
     if not defs:
         return toks
-    out: list[str] = []
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if (
-            is_ident(t)
-            and t.lower() == "over"
-            and i + 2 < len(toks)
-            and toks[i + 1] == "("
-            and is_ident(toks[i + 2])
-            and toks[i + 2].lower() in defs
-        ):
-            close = match_close(toks, i + 1)
-            rest = toks[i + 3 : close]
-            if rest:  # extended reference — splice the definition in
-                out += ["over", "("] + defs[toks[i + 2].lower()] + rest + [")"]
-                i = close + 1
-                continue
-        out.append(t)
-        i += 1
-    return out
+
+    def splice(_, args: list[list[str]]) -> list[str] | None:
+        spec = [t for a in args for t in [",", *a]][1:]
+        if len(spec) > 1 and is_ident(spec[0]) and spec[0].lower() in defs:
+            # extended reference — splice the definition in
+            return ["over", "(", *defs[spec[0].lower()], *spec[1:], ")"]
+        return None
+
+    return rewrite_calls(toks, {"over"}, splice)
 
 
 def _pass_offset_before_limit(toks: list[str]) -> list[str]:
@@ -4263,19 +4251,11 @@ def _pass_trgm_ops(toks: list[str]) -> list[str]:
         toks[lstart : rend + 1] = tokenize(new)
         i = lstart + 1
     # show_limit() → the marker (cast keeps float4 shape)
-    i = 0
-    while i + 2 < len(toks):
-        if (
-            is_ident(toks[i])
-            and toks[i].lower() == "show_limit"
-            and toks[i + 1] == "("
-            and toks[i + 2] == ")"
-        ):
-            toks[i : i + 3] = tokenize(
-                "CAST ( __gg_trgm_limit__ AS FLOAT )"
-            )
-        i += 1
-    return toks
+    return rewrite_calls(
+        toks,
+        {"show_limit"},
+        lambda _, args: None if args else tokenize("CAST ( __gg_trgm_limit__ AS FLOAT )"),
+    )
 
 
 def _pass_prefix_math_ops(toks: list[str]) -> list[str]:
