@@ -323,7 +323,7 @@ def _pass_seg(toks: list[str]) -> list[str]:
     def lower(name: str, args: list[list[str]]) -> list[str] | None:
         if name == "__gg_seg":
             return ["(", *args[0], ")"]
-        if args[0][:1] == ["__gg_seg"]:
+        if args and args[0][:1] == ["__gg_seg"]:
             return [fns[name.lower()], "(", *args[0][2:-1], ")"]
         return None
 
@@ -756,7 +756,7 @@ def _pass_chkpass(toks: list[str]) -> list[str]:
     def lower(name: str, args: list[list[str]]) -> list[str] | None:
         if name == "__gg_chk":
             return ["(", *args[0], ")"]
-        if args[0][:1] == ["__gg_chk"]:
+        if args and args[0][:1] == ["__gg_chk"]:
             return ["pg_chkpass_raw", "(", *args[0][2:-1], ")"]
         return None
 
