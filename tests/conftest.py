@@ -3,7 +3,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Tests run on sf0.001 fixtures where per-stage scheduling overhead, not
 # data volume, dominates: the same suite measured 94s/module at

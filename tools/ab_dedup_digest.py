@@ -17,17 +17,19 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import json
+import os
 import statistics
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def load_old_dedup():
     src = subprocess.run(
-        ["git", "-C", "/root/repo", "show", "HEAD:greengage_spark/pipeline/dedup.py"],
+        ["git", "-C", ROOT, "show", "HEAD:greengage_spark/pipeline/dedup.py"],
         check=True, capture_output=True, text=True,
     ).stdout
     spec = importlib.util.spec_from_loader("old_dedup", loader=None)

@@ -7,10 +7,11 @@ C = localCheckpoint(eager=False) sh + localCheckpoint(eager=False) sigs
 Result equality asserted before timing; median of per-rep ratios vs A.
 """
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark import StorageLevel
 from pyspark.sql import functions as F

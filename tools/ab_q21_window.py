@@ -6,7 +6,7 @@ sort-based fallback).  Asserts result equality before timing.
 
 Usage: [AB_SF_DIR=/tmp/gg_sf1] python tools/ab_q21_window.py"""
 import os, sys, time
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from greengage_spark.session import get_spark

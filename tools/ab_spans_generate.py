@@ -9,10 +9,11 @@ Usage: python tools/ab_spans_generate.py [reps] [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 from pyspark import StorageLevel

@@ -11,12 +11,13 @@ Usage: python tools/dtype_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.selfcheck import TABLES, duck_connect  # noqa: E402
 

@@ -23,7 +23,7 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINE = [
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
@@ -59,7 +59,7 @@ def main() -> None:
         fn = qs[name].fn
         # plan capture (before any warmup so AQE shows the initial plan)
         if args.tag:
-            plan_dir = f"/root/repo/plans/{args.round}"
+            plan_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.round)
             os.makedirs(plan_dir, exist_ok=True)
             df = fn(spark, args.sf)
             buf = io.StringIO()

@@ -24,9 +24,10 @@ from __future__ import annotations
 
 import collections
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REGRESS = "/root/reference/src/test/regress/sql/plpgsql.sql"
 
