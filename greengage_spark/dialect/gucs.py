@@ -147,17 +147,7 @@ class GucManager:
 
     # ---- statement entry points ----
 
-    def execute(self, stmt: str, in_txn: bool) -> DataFrame | None:
-        head = stmt.split(None, 1)[0].lower()
-        if head == "set":
-            return self._set(stmt, in_txn)
-        if head == "reset":
-            return self._reset(stmt)
-        if head == "show":
-            return self._show(stmt)
-        raise NotImplementedError(f"GUC statement {head!r}")
-
-    def _set(self, stmt: str, in_txn: bool) -> None:
+    def set(self, stmt: str, in_txn: bool) -> None:
         body = re.sub(r"(?is)^set\s+", "", stmt).strip()
         is_local = False
         m = re.match(r"(?is)^(local|session)\s+(.*)$", body)
@@ -178,7 +168,7 @@ class GucManager:
         if m:
             val = _unquote(m.group(1))
             if val.lower() in ("local", "default"):
-                return self._reset("reset timezone")
+                return self.reset("reset timezone")
             self._store("timezone", val, is_local and in_txn)
             self._apply_timezone(val)
             return None
@@ -188,7 +178,7 @@ class GucManager:
         name, raw = m.group(1).lower(), m.group(2).strip()
         val = _unquote(raw)
         if val.lower() == "default":
-            return self._reset(f"reset {name}")
+            return self.reset(f"reset {name}")
 
         if name in ("timezone", "time_zone"):
             self._store("timezone", val, is_local and in_txn)
@@ -245,7 +235,7 @@ class GucManager:
     def _apply_timezone(self, tz: str) -> None:
         self.spark.conf.set("spark.sql.session.timeZone", tz)
 
-    def _reset(self, stmt: str) -> None:
+    def reset(self, stmt: str) -> None:
         body = re.sub(r"(?is)^reset\s+", "", stmt).strip()
         if body.lower() == "all":
             if "timezone" in self.values:
@@ -301,7 +291,7 @@ class GucManager:
             return ""
         raise ValueError(f'unrecognized configuration parameter "{name}"')
 
-    def _show(self, stmt: str) -> DataFrame:
+    def show(self, stmt: str) -> DataFrame:
         body = re.sub(r"(?is)^show\s+", "", stmt).strip().rstrip(";")
         if body.lower() == "all":
             rows = sorted(

@@ -12,30 +12,21 @@ the dialect front-end + Catalyst.  A Greenplum user's session maps 1:1:
     eng.execute("DELETE FROM t WHERE a = 2")
     df = eng.execute("SELECT a, b || '!' FROM t")
 
-Statement coverage: CREATE/DROP TABLE, CREATE TABLE .. AS SELECT
-[DISTRIBUTED ...], ALTER TABLE (ADD/DROP/RENAME COLUMN, ALTER COLUMN
-TYPE/DEFAULT/NOT NULL, RENAME TO, SET DISTRIBUTED, metadata-only schema
-evolution — operators/alter.py), TRUNCATE, CREATE [OR REPLACE] VIEW /
-DROP VIEW (late-binding, re-derived per query like PG's rule rewrite),
-INSERT .. VALUES / INSERT .. SELECT, UPDATE .. SET .. WHERE, DELETE
-FROM .. WHERE, COPY name|(query) TO/FROM (TEXT/CSV/BINARY PGCOPY,
-DELIMITER/NULL/HEADER opts), BEGIN/COMMIT/ROLLBACK (manifest snapshot
-transactions), SAVEPOINT / ROLLBACK TO / RELEASE (subtransaction
-stack), SET/SET LOCAL/RESET/SHOW session GUCs, CREATE/DROP INDEX +
-REINDEX (metadata no-ops), VACUUM (no-op) / ANALYZE (catalog stats),
-PREPARE/EXECUTE/DEALLOCATE, DECLARE/FETCH/MOVE/CLOSE cursors,
-CREATE [READABLE|WRITABLE] EXTERNAL TABLE (LOCATION file + EXECUTE
-protocols, SREH reject limits) / DROP EXTERNAL TABLE,
-EXPLAIN [ANALYZE] [VERBOSE], CREATE TABLE (LIKE t), SELECT/WITH incl.
-WITH RECURSIVE (full dialect surface via dialect.transpiler).
-Unsupported statements raise NotImplementedError with the closest
-DataFrame-level API named in the message.
+Statement coverage: ``_ROUTES`` at the end of this module is the one
+list of the statement kinds served, keyed by the command tag
+``_command_tag`` reads from the leading words (tcop/utility.c
+CreateCommandTag + standard_ProcessUtility).  Unrouted statements raise
+NotImplementedError with the closest DataFrame-level API named in the
+message.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,12 +36,16 @@ from greengage_spark.dialect.spans import (
     close_of,
     find_top_level,
     is_ident,
+    is_string,
     join_tokens,
     lex,
+    rewrite_calls,
     split_top_level,
     tokenize,
 )
 from greengage_spark.dialect.transpiler import pg_sql, transpile
+from greengage_spark.operators import maintenance, prepared
+from greengage_spark.operators.alter import execute_alter_table, execute_truncate
 
 _PG_TEXT_ESCAPES = {
     "t": "\t", "n": "\n", "r": "\r", "b": "\b", "f": "\f", "v": "\v",
@@ -164,7 +159,7 @@ def split_statements(sql: str) -> list[str]:
 
 def _strip_leading_comments(stmt: str) -> str:
     """Drop comment-only lines before the first SQL token, so the
-    statement router sees the real head keyword."""
+    handlers' anchored parse patterns see the statement's first word."""
     lines = stmt.strip().splitlines()
     k = 0
     while k < len(lines) and (
@@ -220,6 +215,57 @@ def _strip_public_schema(stmt: str) -> str:
     return _sub_outside_strings(r"(?i)\bpublic\s*\.\s*", "", stmt)
 
 
+# words PG's grammar allows between a statement's verb and its object
+# noun (opt_or_replace, OptTemp, opt_unique, opt_concurrently,
+# opt_trusted, opt_procedural, ...): they do not change the kind
+_NOISE_WORDS = frozenset((
+    "or", "replace", "temp", "temporary", "unlogged", "global", "local",
+    "readable", "writable", "web", "unique", "concurrently", "trusted",
+    "procedural", "ordered", "constraint",
+))
+# other spellings of a verb or object noun → the one _ROUTES keys
+_SPELLINGS = {
+    "analyse": "analyze", "abort": "rollback", "end": "commit",
+    "start": "begin", "user": "role", "group": "role",
+}
+
+
+def _command_tag(stmt: str) -> str:
+    """The statement's kind as a ``_ROUTES`` key (tcop/utility.c
+    CreateCommandTag): the longest key the leading words start with,
+    read through the shared lexer (comments skipped; a quoted name, a
+    literal or a symbol ends them) with noise words dropped and
+    spellings unified; the bare verb when no key matches."""
+    words: list[str] = []
+    for m in lex(stmt):
+        if m.lastgroup == "comment":
+            continue
+        if m.lastgroup != "ident" or len(words) == _LONGEST_TAG:
+            break
+        w = m.group(0).lower()
+        if words and w in _NOISE_WORDS:
+            continue
+        words.append(_SPELLINGS.get(w, w) if len(words) < 2 else w)
+    for n in range(len(words), 0, -1):
+        if " ".join(words[:n]) in _ROUTES:
+            return " ".join(words[:n])
+    return words[0] if words else ""
+
+
+def _not_routed(kind: str) -> NotImplementedError:
+    return NotImplementedError(
+        f"statement kind {kind!r} not routed; use the DataFrame API "
+        f"(greengage_spark.operators / sources) directly"
+    )
+
+
+def _literal(arg: list[str]) -> str | None:
+    """The value of a call argument that is one plain string literal."""
+    if len(arg) == 1 and arg[0][:1] == "'" and is_string(arg[0]):
+        return arg[0][1:-1].replace("''", "'")
+    return None
+
+
 class GreengageEngine:
     def __init__(self, spark: SparkSession, warehouse: str):
         from greengage_spark.operators.sequence import SequenceManager
@@ -263,6 +309,14 @@ class GreengageEngine:
         #         "check": str|None}  (typecmds.c DefineDomain)
         self.domains: dict[str, dict] = {}
         self._pending_domain_checks: dict[str, str] = {}
+        self.servers: dict[str, str] = {}  # name → its foreign data wrapper
+        # name → ParallelRetrieveCursor (operators/prepared.py)
+        self.parallel_cursors: dict = {}
+        # pg_stat_statements entries by normalized text; _in_execute
+        # marks a top-level statement in flight (nested executes are
+        # not counted — track=top)
+        self._stmt_stats: dict[str, dict] = {}
+        self._in_execute = False
 
     # ---------------- statement router ----------------
 
@@ -392,13 +446,14 @@ class GreengageEngine:
         milliseconds.  The view refreshes lazily when queried."""
         import time as _time
 
-        if getattr(self, "_in_execute", False):
+        if self._in_execute:
             return self._execute_stmt(sql)
-        if re.search(r"(?is)\bpg_stat_statements_reset\s*\(", sql):
+        toks = [t.lower() for t in tokenize(sql)] if "pg_stat_statements" in sql.lower() else []
+        if any(toks[i : i + 2] == ["pg_stat_statements_reset", "("] for i in range(len(toks))):
             self._stmt_stats = {}
             self._refresh_stat_statements()
             return None
-        if re.search(r"(?is)\bpg_stat_statements\b", sql):
+        if "pg_stat_statements" in toks:
             self._refresh_stat_statements()
         self._in_execute = True
         t0 = _time.perf_counter()
@@ -413,15 +468,12 @@ class GreengageEngine:
         import hashlib
 
         norm = _normalize_statement(sql)
-        stats = getattr(self, "_stmt_stats", None)
-        if stats is None:
-            stats = self._stmt_stats = {}
-        st = stats.get(norm)
+        st = self._stmt_stats.get(norm)
         if st is None:
             qid = int.from_bytes(
                 hashlib.md5(norm.encode()).digest()[:8], "big", signed=True
             )
-            st = stats[norm] = {
+            st = self._stmt_stats[norm] = {
                 "queryid": qid, "calls": 0, "total": 0.0,
                 "min": float("inf"), "max": 0.0,
             }
@@ -437,21 +489,20 @@ class GreengageEngine:
                 round(st["min"], 3), round(st["max"], 3),
                 round(st["total"] / st["calls"], 3),
             )
-            for q, st in getattr(self, "_stmt_stats", {}).items()
+            for q, st in self._stmt_stats.items()
         ]
         schema = (
             "queryid bigint, query string, calls bigint, "
             "total_exec_time double, min_exec_time double, "
             "max_exec_time double, mean_exec_time double"
         )
-        df = (
-            self.spark.createDataFrame(rows, schema)
-            if rows
-            else self.spark.createDataFrame([], schema)
+        self.spark.createDataFrame(rows, schema).createOrReplaceTempView(
+            "pg_stat_statements"
         )
-        df.createOrReplaceTempView("pg_stat_statements")
 
     def _execute_stmt(self, sql: str) -> DataFrame | None:
+        """Run one statement through the handler ``_ROUTES`` holds for
+        its command tag (tcop/utility.c standard_ProcessUtility)."""
         # compat aliases (tsearch2 et al.) must never hijack a
         # user-defined function of the same name; the ContextVar scope
         # is per-engine per-statement, so concurrent engines can't
@@ -459,368 +510,654 @@ class GreengageEngine:
         from greengage_spark.dialect.transpiler import user_functions_ctx
 
         with user_functions_ctx(self.functions):
-            return self._execute_stmt_inner(sql)
+            stmt = _strip_public_schema(sql.strip().rstrip(";"))
+            stmt = self._flatten_schemas(stmt)
+            tag = _command_tag(stmt)
+            if self.domains and tag not in ("create domain", "drop domain"):
+                stmt = self._resolve_domains(stmt, tag)
+            handler = _ROUTES.get(tag)
+            if handler is None:
+                raise _not_routed(tag)
+            return handler(self, stmt)
 
-    def _execute_stmt_inner(self, sql: str) -> DataFrame | None:
-        stmt = _strip_public_schema(sql.strip().rstrip(";"))
-        stmt = self._flatten_schemas(stmt)
-        head = stmt.split(None, 2)[0].lower() if stmt else ""
-        if self.domains and not re.match(r"(?is)^(create|drop)\s+domain\b", stmt):
-            stmt = self._resolve_domains(stmt, head)
-        mmv = re.match(
-            r"(?is)^create\s+materialized\s+view\s+([\w.]+)\s+as\s+(.*?)"
-            r"(\s+with\s+(no\s+)?data)?$",
-            stmt,
-        )
-        if mmv:
-            return self._create_matview(
-                mmv.group(1), mmv.group(2), with_data=not mmv.group(4)
-            )
-        mrf = re.match(
-            r"(?is)^refresh\s+materialized\s+view\s+(concurrently\s+)?([\w.]+)"
-            r"(\s+with\s+(no\s+)?data)?$",
-            stmt,
-        )
-        if mrf:
-            return self._refresh_matview(mrf.group(2), with_data=not mrf.group(4))
-        if re.match(r"(?is)^drop\s+materialized\s+view\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+materialized\s+view\s+(if\s+exists\s+)?([\w.]+)$",
-                stmt,
-            )
-            if not m:
-                raise NotImplementedError("DROP MATERIALIZED VIEW [IF EXISTS] name")
-            if m.group(2) not in self.matviews:
-                if m.group(1):
-                    return None
-                raise ValueError(f"unknown materialized view {m.group(2)!r}")
-            self.matviews.pop(m.group(2))
-            return self._drop(f"DROP TABLE {m.group(2)}")
-        mv = re.match(
-            r"(?is)^create\s+(or\s+replace\s+)?(temp(orary)?\s+)?view\s+([\w.]+)\s+as\s+(.*)$",
-            stmt,
-        )
-        if mv:
-            return self._create_view(mv.group(4), mv.group(5), bool(mv.group(1)))
+    def _rewrite_for_execution(self, stmt: str, head: str) -> str:
+        """The rewrites a query, DML, COPY, EXPLAIN or DO statement gets
+        before its handler runs: sequence-DEFAULT columns surface into an
+        INSERT first, so the lowering sees every nextval (serial
+        columns, DEFAULT nextval(...) — rewriteTargetListIU before
+        lowering); sequence calls are driver-evaluated / lowered; and
+        comparisons/grouping on declared contrib/citext columns fold
+        through lower() (operators/citext.py)."""
+        if head == "insert":
+            stmt = self._expand_seq_defaults(stmt)
+        if _has_seq_call(stmt):
+            stmt = self._lower_sequences(stmt, head)
+        if head in ("select", "with", "values", "table", "update", "delete"):
+            cit_cols = {
+                c.name.lower()
+                for td in self.ddl.tables.values()
+                for c in td.columns
+                if c.pg_type.strip().lower() == "citext"
+            }
+            if cit_cols:
+                from greengage_spark.operators.citext import fold_citext_stmt
+
+                stmt = fold_citext_stmt(stmt, cit_cols)
+        return stmt
+
+    # ---------------- relations ----------------
+
+    def _create_table(self, stmt: str):
         mc = re.match(
-            r"(?is)^create\s+(temp(orary)?\s+)?table\s+([\w.]+)\s+as\s+"
-            r"((?:select|with|values|table)\b.*)$",
+            r"(?is)^create\s+(?:(?:temp(?:orary)?|unlogged|global|local)\s+)*"
+            r"table\s+([\w.]+)\s+as\s+((?:select|with|values|table)\b.*)$",
             stmt,
         )
         if mc:
-            return self._create_table_as(mc.group(3), mc.group(4))
-        if re.match(
-            r"(?is)^create\s+(readable\s+|writable\s+)?external\s+(web\s+)?table\b",
-            stmt,
-        ):
-            return self._create_external_table(stmt)
-        if re.match(r"(?is)^drop\s+external\s+(web\s+)?table\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+external\s+(?:web\s+)?table\s+(if\s+exists\s+)?([\w.]+)$",
-                stmt,
+            return self._create_table_as(mc.group(1), mc.group(2))
+        # UNLOGGED / GLOBAL / LOCAL are WAL/compat hints with no
+        # analog here (storage is always the versioned parquet COW)
+        stmt = re.sub(
+            r"(?is)^(create\s+)(?:(?:unlogged|global|local)\s+)+", r"\1", stmt
+        )
+        # LIKE source_table (transformTableLikeClause): copy column
+        # names/types/NOT NULL; INCLUDING DEFAULTS copies defaults too
+        def _expand_like(m: "re.Match[str]") -> str:
+            src = self.ddl.tables.get(m.group(1))
+            if src is None:
+                raise ValueError(f"unknown table {m.group(1)!r}")
+            with_defaults = bool(m.group(2)) or bool(
+                re.search(
+                    r"(?i)including\s+(all|defaults)", m.group(3) or ""
+                )
             )
-            if not m:
-                raise NotImplementedError("DROP EXTERNAL TABLE [IF EXISTS] name")
-            if m.group(2) not in self.external and not m.group(1):
-                raise ValueError(f"unknown external table {m.group(2)!r}")
-            self.external.pop(m.group(2), None)
-            try:
-                self.spark.catalog.dropTempView(m.group(2))
-            except Exception:
-                pass
-            return None
-        # contrib/file_fdw: CREATE SERVER ... FOREIGN DATA WRAPPER
-        # file_fdw + CREATE FOREIGN TABLE ... OPTIONS (filename ...) —
-        # lowered onto the (tested) external-table machinery; the
-        # postgres_fdw DDL form points at the JDBC surface
+            return ", ".join(
+                f"{c.name} {c.pg_type}"
+                + (" NOT NULL" if c.not_null else "")
+                + (
+                    f" DEFAULT {c.default}"
+                    if with_defaults and c.default
+                    else ""
+                )
+                for c in src.columns
+            )
+
+        stmt = re.sub(
+            r"(?is)\blike\s+([\w.]+)"
+            r"(\s+including\s+defaults)?"
+            r"((?:\s+(?:including|excluding)\s+\w+)*)",
+            _expand_like,
+            stmt,
+        )
+        stmt = self._expand_serial(stmt)
+        self.ddl.create_table(stmt)
+        tname = parse_create_table(stmt).name
+        if self._pending_domain_checks:
+            # tag columns with their declaring domain + graft CHECKs
+            for c in self.ddl.tables[tname].columns:
+                dom = self._pending_domain_checks.get(c.name)
+                if dom:
+                    c.domain = dom
+                    chk = self.domains[dom]["check"]
+                    if chk:
+                        c.check = re.sub(r"(?i)\bVALUE\b", c.name, chk)
+            self._pending_domain_checks = {}
+        self._register(tname)
+        return None
+
+    # contrib/file_fdw: CREATE SERVER ... FOREIGN DATA WRAPPER file_fdw +
+    # CREATE FOREIGN TABLE ... OPTIONS (filename ...) — lowered onto the
+    # (tested) external-table machinery; the postgres_fdw DDL form points
+    # at the JDBC surface
+    def _create_server(self, stmt: str):
         m_srv = re.match(
             r"(?is)^create\s+server\s+(?:if\s+not\s+exists\s+)?([\w.]+)\s+"
             r"foreign\s+data\s+wrapper\s+([\w.]+)\s*(?:options\s*\(.*\))?\s*$",
             stmt,
         )
-        if m_srv:
-            fdw = m_srv.group(2).lower()
-            if fdw != "file_fdw":
-                raise NotImplementedError(
-                    f"foreign data wrapper {fdw!r}: file_fdw is served "
-                    "via DDL; postgres_fdw-style remote tables use the "
-                    "JDBC surface (greengage_spark.sources.foreign)"
-                )
-            if not hasattr(self, "servers"):
-                self.servers = {}
-            self.servers[m_srv.group(1).lower()] = fdw
-            return None
-        if re.match(r"(?is)^drop\s+server\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+server\s+(?:if\s+exists\s+)?([\w.]+)"
-                r"\s*(?:cascade|restrict)?\s*$",
-                stmt,
+        if not m_srv:
+            raise _not_routed("create")
+        fdw = m_srv.group(2).lower()
+        if fdw != "file_fdw":
+            raise NotImplementedError(
+                f"foreign data wrapper {fdw!r}: file_fdw is served "
+                "via DDL; postgres_fdw-style remote tables use the "
+                "JDBC surface (greengage_spark.sources.foreign)"
             )
-            if m and hasattr(self, "servers"):
-                self.servers.pop(m.group(1).lower(), None)
-            return None
+        self.servers[m_srv.group(1).lower()] = fdw
+        return None
+
+    def _create_foreign_table(self, stmt: str):
         m_ft = re.match(
             r"(?is)^create\s+foreign\s+table\s+(?:if\s+not\s+exists\s+)?"
             r"([\w.]+)\s*\((.*)\)\s*server\s+([\w.]+)\s*"
             r"(?:options\s*\((.*)\))?\s*$",
             stmt,
         )
-        if m_ft:
-            name, cols, srv = (
-                m_ft.group(1).lower(), m_ft.group(2), m_ft.group(3).lower(),
-            )
-            if getattr(self, "servers", {}).get(srv) != "file_fdw":
-                raise ValueError(f'server "{srv}" does not exist')
-            opts = dict(
-                re.findall(
-                    r"(\w+)\s+E?'((?:[^']|'')*)'", m_ft.group(4) or ""
-                )
-            )
-            opts = {k.lower(): v.replace("''", "'") for k, v in opts.items()}
-            filename = opts.get("filename")
-            if not filename:
-                raise ValueError(
-                    "file_fdw foreign tables require a filename option"
-                )
-            fmt = opts.get("format", "text").lower()
-            if fmt == "binary":
-                raise NotImplementedError(
-                    "file_fdw format 'binary': csv and text are served"
-                )
-            if fmt not in ("csv", "text"):
-                raise ValueError(f"file_fdw format {fmt!r}")
-            # option values were unescaped ('' -> ') above; re-escape when
-            # re-embedding into the generated DDL or a quote in a value
-            # (delimiter '''', a filename with ') misparses downstream
-            q = lambda v: v.replace("'", "''")
-            pieces = [f"FORMAT '{fmt.upper()}' ("]
-            delim = opts.get("delimiter")
-            if delim:
-                pieces.append(
-                    "DELIMITER E'\\t'" if delim == "\t"
-                    else f"DELIMITER '{q(delim)}'"
-                )
-            if "null" in opts:
-                pieces.append(f"NULL '{q(opts['null'])}'")
-            if opts.get("header", "").lower() in ("true", "on", "1"):
-                pieces.append("HEADER")
-            fmt_clause = pieces[0] + " ".join(pieces[1:]) + ")"
-            ext = (
-                f"CREATE READABLE EXTERNAL TABLE {name} ({cols}) "
-                f"LOCATION ('file://{q(filename)}') {fmt_clause}"
-            )
-            return self._create_external_table(ext)
-        if re.match(r"(?is)^drop\s+foreign\s+table\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+foreign\s+table\s+(?:if\s+exists\s+)?"
-                r"([\w.]+)\s*$",
-                stmt,
-            )
-            if not m:
-                raise NotImplementedError("DROP FOREIGN TABLE [IF EXISTS] name")
-            self.external.pop(m.group(1).lower(), None)
-            try:
-                self.spark.catalog.dropTempView(m.group(1).lower())
-            except Exception:
-                pass
-            return None
-        m_tsd = re.match(
-            r"(?is)^(create|alter|drop)\s+text\s+search\s+dictionary\s+"
-            r"(?:if\s+exists\s+)?([\w.]+)\s*(?:\((.*)\))?\s*$",
-            stmt,
+        if not m_ft:
+            raise _not_routed("create")
+        name, cols, srv = (
+            m_ft.group(1).lower(), m_ft.group(2), m_ft.group(3).lower(),
         )
-        if m_tsd:
-            from greengage_spark.functions import tsdicts
-
-            action = m_tsd.group(1).lower()
-            name = m_tsd.group(2).split(".")[-1]
-            opts: dict = {}
-            template = None
-            for item in (m_tsd.group(3) or "").split(","):
-                if not item.strip():
-                    continue
-                k, _, v = item.partition("=")
-                k, v = k.strip().lower(), v.strip()
-                if k == "template":
-                    template = v
-                else:
-                    opts[k] = v
-            if action == "create":
-                if template is None:
-                    raise ValueError(
-                        "text search template is required for CREATE "
-                        "TEXT SEARCH DICTIONARY"
-                    )
-                tsdicts.create_dictionary(name, template, opts)
-            elif action == "alter":
-                tsdicts.alter_dictionary(name, opts)
-            else:
-                tsdicts.drop_dictionary(name)
-            return None
-        if head == "create" and re.match(
-            r"(?is)^create\s+(?:(?:temp(?:orary)?|unlogged|global|local)\s+)*table\b",
-            stmt,
-        ):
-            # UNLOGGED / GLOBAL / LOCAL are WAL/compat hints with no
-            # analog here (storage is always the versioned parquet COW)
-            stmt = re.sub(
-                r"(?is)^(create\s+)(?:(?:unlogged|global|local)\s+)+", r"\1", stmt
+        if self.servers.get(srv) != "file_fdw":
+            raise ValueError(f'server "{srv}" does not exist')
+        opts = dict(
+            re.findall(
+                r"(\w+)\s+E?'((?:[^']|'')*)'", m_ft.group(4) or ""
             )
-            # LIKE source_table (transformTableLikeClause): copy column
-            # names/types/NOT NULL; INCLUDING DEFAULTS copies defaults too
-            def _expand_like(m: "re.Match[str]") -> str:
-                src = self.ddl.tables.get(m.group(1))
-                if src is None:
-                    raise ValueError(f"unknown table {m.group(1)!r}")
-                with_defaults = bool(m.group(2)) or bool(
-                    re.search(
-                        r"(?i)including\s+(all|defaults)", m.group(3) or ""
-                    )
-                )
-                return ", ".join(
-                    f"{c.name} {c.pg_type}"
-                    + (" NOT NULL" if c.not_null else "")
-                    + (
-                        f" DEFAULT {c.default}"
-                        if with_defaults and c.default
-                        else ""
-                    )
-                    for c in src.columns
-                )
-
-            stmt = re.sub(
-                r"(?is)\blike\s+([\w.]+)"
-                r"(\s+including\s+defaults)?"
-                r"((?:\s+(?:including|excluding)\s+\w+)*)",
-                _expand_like,
-                stmt,
+        )
+        opts = {k.lower(): v.replace("''", "'") for k, v in opts.items()}
+        filename = opts.get("filename")
+        if not filename:
+            raise ValueError(
+                "file_fdw foreign tables require a filename option"
             )
-            stmt = self._expand_serial(stmt)
-            self.ddl.create_table(stmt)
-            tname = parse_create_table(stmt).name
-            if self._pending_domain_checks:
-                # tag columns with their declaring domain + graft CHECKs
-                for c in self.ddl.tables[tname].columns:
-                    dom = self._pending_domain_checks.get(c.name)
-                    if dom:
-                        c.domain = dom
-                        chk = self.domains[dom]["check"]
-                        if chk:
-                            c.check = re.sub(r"(?i)\bVALUE\b", c.name, chk)
-                self._pending_domain_checks = {}
-            self._register(tname)
-            return None
-        if re.match(r"(?is)^create\s+(or\s+replace\s+)?function\b", stmt):
-            return self._create_function(stmt)
-        if re.match(r"(?is)^create\s+(or\s+replace\s+)?(ordered\s+)?aggregate\b", stmt):
-            return self._create_aggregate(stmt)
-        if re.match(r"(?is)^drop\s+(function|aggregate)\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+(function|aggregate)\s+(if\s+exists\s+)?([\w.]+)\s*(\([^)]*\))?$",
-                stmt,
+        fmt = opts.get("format", "text").lower()
+        if fmt == "binary":
+            raise NotImplementedError(
+                "file_fdw format 'binary': csv and text are served"
             )
-            if not m:
-                raise NotImplementedError("DROP FUNCTION/AGGREGATE [IF EXISTS] name[(args)]")
-            if m.group(3) not in self.functions and not m.group(2):
-                raise ValueError(f"unknown function {m.group(3)!r}")
-            self.functions.pop(m.group(3), None)
-            if self.pl_registry.pop(m.group(3).lower(), None) is not None:
-                # registered UDF closures pickle a SNAPSHOT of the
-                # registry; re-register survivors so their snapshot no
-                # longer resolves the dropped name (PG errors at next
-                # execution too)
-                from greengage_spark.operators.udf_ddl import (
-                    register_function,
-                )
+        if fmt not in ("csv", "text"):
+            raise ValueError(f"file_fdw format {fmt!r}")
+        # option values were unescaped ('' -> ') above; re-escape when
+        # re-embedding into the generated DDL or a quote in a value
+        # (delimiter '''', a filename with ') misparses downstream
+        q = lambda v: v.replace("'", "''")
+        pieces = [f"FORMAT '{fmt.upper()}' ("]
+        delim = opts.get("delimiter")
+        if delim:
+            pieces.append(
+                "DELIMITER E'\\t'" if delim == "\t"
+                else f"DELIMITER '{q(delim)}'"
+            )
+        if "null" in opts:
+            pieces.append(f"NULL '{q(opts['null'])}'")
+        if opts.get("header", "").lower() in ("true", "on", "1"):
+            pieces.append("HEADER")
+        fmt_clause = pieces[0] + " ".join(pieces[1:]) + ")"
+        ext = (
+            f"CREATE READABLE EXTERNAL TABLE {name} ({cols}) "
+            f"LOCATION ('file://{q(filename)}') {fmt_clause}"
+        )
+        return self._create_external_table(ext)
 
-                ctypes = self._composite_types()
-                for fd in self.functions.values():
-                    if getattr(fd, "language", None) in (
-                        "plpgsql", "sql", "plpythonu",
-                    ):
-                        try:
-                            register_function(
-                                self.spark, fd, transpile,
-                                registry=self.pl_registry,
-                                composite_types=ctypes,
-                            )
-                        except Exception as exc:  # noqa: BLE001
-                            # best effort, but never silently: a survivor
-                            # that fails to recompile keeps its previous
-                            # (stale-registry) registration
-                            import logging
-
-                            logging.getLogger(__name__).warning(
-                                "re-register of %s after DROP FUNCTION "
-                                "failed: %s", fd.name, exc,
-                            )
-            return None
-        if re.match(r"(?is)^create\s+(temp(orary)?\s+)?sequence\b", stmt):
-            return self._create_sequence(stmt)
-        if re.match(r"(?is)^drop\s+sequence\b", stmt):
-            m = re.match(r"(?is)^drop\s+sequence\s+(if\s+exists\s+)?([\w.]+)$", stmt)
-            if not m:
-                raise NotImplementedError("DROP SEQUENCE [IF EXISTS] name")
-            self.sequences.drop(m.group(2), if_exists=bool(m.group(1)))
-            return None
-        if re.match(r"(?is)^alter\s+sequence\b", stmt):
-            return self._alter_sequence(stmt)
-        if (
-            re.match(r"(?is)^(create|alter|drop)\s+(role|user|group|schema)\b", stmt)
-            or re.match(r"(?is)^(create|alter|drop)\s+resource\s+(queue|group)\b", stmt)
-            or head in ("grant", "revoke", "comment")
-        ):
-            from greengage_spark.operators.acl import execute_acl_stmt
-
-            return execute_acl_stmt(self, stmt)
+    def _alter_owner(self, stmt: str) -> bool:
+        """ALTER TABLE|VIEW|FUNCTION|AGGREGATE name OWNER TO role:
+        ownership is recorded metadata (see operators/acl.py).  False
+        when the statement is another ALTER."""
         mo = re.match(
-            r"(?is)^alter\s+(table|view|sequence|function|aggregate)\s+"
+            r"(?is)^alter\s+(table|view|function|aggregate)\s+"
             r"(if\s+exists\s+)?([\w.\"]+)\s*(\([^)]*\))?\s+owner\s+to\s+"
             r"(\"?[\w$]+\"?)$",
             stmt,
         )
         if mo:
-            # ownership is recorded metadata (see operators/acl.py)
             self.acl.set_owner(
                 f"{mo.group(1).lower()}:{mo.group(3).strip(chr(34))}",
                 mo.group(5).strip('"'),
             )
+        return bool(mo)
+
+    def _alter_table(self, stmt: str):
+        if not self._alter_owner(stmt):
+            execute_alter_table(self, stmt)
+        return None
+
+    def _alter_function(self, stmt: str):
+        if not self._alter_owner(stmt):
+            raise _not_routed("alter")
+        return None
+
+    def _alter_view(self, stmt: str):
+        if self._alter_owner(stmt):
             return None
         mvr = re.match(
             r"(?is)^alter\s+view\s+(if\s+exists\s+)?([\w.]+)\s+rename\s+to\s+"
             r"([\w.]+)$",
             stmt,
         )
-        if mvr:
-            old, new = mvr.group(2), mvr.group(3)
-            if old not in self.views:
-                if mvr.group(1):
-                    return None
-                raise ValueError(f"unknown view {old!r}")
-            self.views[new] = self.views.pop(old)
-            self._register_all()
-            try:
-                self.spark.catalog.dropTempView(old)
-            except Exception:
-                pass
+        if not mvr:
+            raise _not_routed("alter")
+        old, new = mvr.group(2), mvr.group(3)
+        if old not in self.views:
+            if mvr.group(1):
+                return None
+            raise ValueError(f"unknown view {old!r}")
+        self.views[new] = self.views.pop(old)
+        self._register_all()
+        try:
+            self.spark.catalog.dropTempView(old)
+        except Exception:
+            pass
+        return None
+
+    def _drop(self, stmt: str, kind: str) -> None:
+        """DROP kind [IF EXISTS] name [, ...] [CASCADE | RESTRICT]
+        (dropcmds.c RemoveObjects, tablecmds.c RemoveRelations): every
+        name is looked up before any is dropped.  Dependencies are not
+        tracked, so RESTRICT always holds, and CASCADE is accepted only
+        by the kinds ``_DROP_KINDS`` marks."""
+        spec = _DROP_KINDS[kind]
+        m = re.match(
+            r"(?is)^drop\s+(?:materialized\s+|external\s+(?:web\s+)?|foreign\s+)?"
+            r"\w+\s+(?:concurrently\s+)?(if\s+exists\s+)?(.+?)"
+            r"(?:\s+(cascade|restrict))?\s*$",
+            stmt,
+        )
+        names = [
+            re.fullmatch(r"([\w.]+)\s*(\([^)]*\))?", n.strip())
+            for n in split_top_level(m.group(2))
+        ] if m else [None]
+        if not all(n and (spec.signature or not n.group(2)) for n in names):
+            raise NotImplementedError(
+                f"DROP {kind.upper()} [IF EXISTS] name [, ...] [CASCADE | RESTRICT]"
+            )
+        if (m.group(3) or "").lower() == "cascade" and not spec.cascade:
+            raise NotImplementedError(
+                f"DROP {kind.upper()} ... CASCADE: dependencies are not "
+                "tracked; drop the dependent objects first"
+            )
+        names = [n.group(1) for n in names]
+        held = spec.names(self) if spec.names else None
+        if held is not None and not m.group(1):
+            for name in names:
+                if name not in held:
+                    raise (spec.missing or _unknown(kind))(name)
+        for name in names:
+            if held is None or name in held:
+                spec.remove(self, name)
+        return None
+
+    def _remove_table(self, name: str) -> None:
+        del self.ddl.tables[name]
+        # PG drops the relation's storage; without this a later CREATE
+        # TABLE of the same name finds stale manifests.  Inside a
+        # transaction the removal defers to COMMIT so ROLLBACK can
+        # resurrect the data (xact.c pending deletes).
+        if self._txn is not None:
+            self._txn["deferred_rm"].append(f"{self.ddl.root}/{name}")
+        else:
+            import shutil
+
+            shutil.rmtree(f"{self.ddl.root}/{name}", ignore_errors=True)
+        self.spark.catalog.dropTempView(name)
+
+    def _remove_view(self, name: str) -> None:
+        del self.views[name]
+        self.spark.catalog.dropTempView(name)
+
+    def _remove_matview(self, name: str) -> None:
+        self.matviews.pop(name)
+        self._remove_table(name)
+
+    def _remove_external(self, name: str) -> None:
+        self.external.pop(name, None)
+        try:
+            self.spark.catalog.dropTempView(name)
+        except Exception:
+            pass
+
+    def _remove_function(self, name: str) -> None:
+        self.functions.pop(name, None)
+        if self.pl_registry.pop(name.lower(), None) is None:
+            return
+        # registered UDF closures pickle a SNAPSHOT of the registry;
+        # re-register survivors so their snapshot no longer resolves the
+        # dropped name (PG errors at next execution too)
+        from greengage_spark.operators.udf_ddl import register_function
+
+        ctypes = self._composite_types()
+        for fd in self.functions.values():
+            if getattr(fd, "language", None) in ("plpgsql", "sql", "plpythonu"):
+                try:
+                    register_function(
+                        self.spark, fd, transpile,
+                        registry=self.pl_registry,
+                        composite_types=ctypes,
+                    )
+                except Exception as exc:  # noqa: BLE001
+                    # best effort, but never silently: a survivor that
+                    # fails to recompile keeps its previous
+                    # (stale-registry) registration
+                    import logging
+
+                    logging.getLogger(__name__).warning(
+                        "re-register of %s after DROP FUNCTION "
+                        "failed: %s", fd.name, exc,
+                    )
+
+    # ---------------- recorded DDL ----------------
+
+    def _text_search_dictionary(self, stmt: str):
+        m_tsd = re.match(
+            r"(?is)^(create|alter|drop)\s+text\s+search\s+dictionary\s+"
+            r"(?:if\s+exists\s+)?([\w.]+)\s*(?:\((.*)\))?\s*$",
+            stmt,
+        )
+        if not m_tsd:
+            raise NotImplementedError(
+                "CREATE|ALTER|DROP TEXT SEARCH DICTIONARY name [(options)]"
+            )
+        from greengage_spark.functions import tsdicts
+
+        action = m_tsd.group(1).lower()
+        name = m_tsd.group(2).split(".")[-1]
+        opts: dict = {}
+        template = None
+        for item in (m_tsd.group(3) or "").split(","):
+            if not item.strip():
+                continue
+            k, _, v = item.partition("=")
+            k, v = k.strip().lower(), v.strip()
+            if k == "template":
+                template = v
+            else:
+                opts[k] = v
+        if action == "create":
+            if template is None:
+                raise ValueError(
+                    "text search template is required for CREATE "
+                    "TEXT SEARCH DICTIONARY"
+                )
+            tsdicts.create_dictionary(name, template, opts)
+        elif action == "alter":
+            tsdicts.alter_dictionary(name, opts)
+        else:
+            tsdicts.drop_dictionary(name)
+        return None
+
+    def _record_object(self, stmt: str):
+        """CREATE/DROP EXTENSION | LANGUAGE | DATABASE | TABLESPACE:
+        recorded metadata, like roles/queues (operators/acl.py):
+        extensions gate nothing here (hstore/citext/text-search surfaces
+        are built in), languages are checked at CREATE FUNCTION,
+        databases/tablespaces are deployment topology."""
+        mx = re.match(
+            r"(?is)^(create|drop)\s+(extension|(?:trusted\s+)?(?:procedural\s+)?"
+            r"language|database|tablespace)\s+(if\s+(?:not\s+)?exists\s+)?"
+            r"(\"?[\w$]+\"?)",
+            stmt,
+        )
+        if not mx:
+            raise NotImplementedError(
+                "CREATE|DROP EXTENSION|LANGUAGE|DATABASE|TABLESPACE name"
+            )
+        kind = re.sub(r"\s+", " ", mx.group(2).lower()).split()[-1]
+        store = self.acl.recorded.setdefault(kind, set())
+        name = mx.group(4).strip('"')
+        if mx.group(1).lower() == "create":
+            store.add(name)
+        else:
+            store.discard(name)
+        return None
+
+    def _record_ddl(self, stmt: str):
+        """CREATE CAST (functions/cast.c), CREATE OPERATOR [CLASS]
+        (operatorcmds.c), ALTER DEFAULT PRIVILEGES (aclchk.c): recorded —
+        resolution happens at use sites, which error loudly if the op or
+        cast is actually exercised; privileges are metadata-only here
+        (operators/acl.py)."""
+        key = " ".join(stmt.split(None, 3)[:3]).lower()
+        self.misc_ddl[("stmt", key + f"#{len(self.misc_ddl)}")] = stmt
+        return None
+
+    def _create_type(self, stmt: str):
+        men = re.match(
+            r"(?is)^create\s+type\s+([\w.]+)\s+as\s+enum\s*\((.*)\)\s*$", stmt
+        )
+        if men:
+            # CREATE TYPE AS ENUM (gram.y CreateEnumStmt; pg_enum.c),
+            # realized on the domain machinery: text base + membership
+            # CHECK, so enum-typed columns validate labels on INSERT and
+            # ::enumtype casts resolve.  DIVERGENCE (documented): PG
+            # orders enum values by declaration position; here they
+            # compare as text.  Label list is preserved for
+            # introspection/round-trip.
+            name = men.group(1)
+            labels = [
+                x.strip()[1:-1].replace("''", "'")
+                for x in split_top_level(men.group(2))
+                if x.strip()
+            ]
+            if name in self.domains:
+                raise ValueError(f"type {name!r} already exists")
+            in_list = ", ".join(
+                "'" + lab.replace("'", "''") + "'" for lab in labels
+            )
+            self.domains[name] = {
+                "base": "text",
+                "not_null": False,
+                "default": None,
+                "check": f"VALUE IN ({in_list})",
+                "enum_labels": labels,
+            }
             return None
-        if re.match(r"(?is)^alter\s+default\s+privileges\b", stmt):
-            # ALTER DEFAULT PRIVILEGES (aclchk.c): recorded — privileges
-            # are metadata-only here (operators/acl.py)
-            self.misc_ddl[("stmt", f"default_privileges#{len(self.misc_ddl)}")] = stmt
+        mct = re.match(r"(?is)^create\s+type\s+([\w.]+)\s+as\s*\((.*)\)\s*$", stmt)
+        if not mct:
+            raise _not_routed("create")
+        # composite type (CompositeTypeStmt; typecmds.c
+        # DefineCompositeType): recorded metadata so dumps restore and
+        # introspection can list it; using it as a column type errors
+        # at the use site (no struct-column storage mapping yet)
+        self.misc_ddl[("composite_type", mct.group(1))] = mct.group(2).strip()
+        return None
+
+    # ---------------- session ----------------
+
+    def _discard(self, stmt: str):
+        m = re.match(r"(?is)^discard\s+(all|plans|sequences|temp(orary)?)$", stmt)
+        if not m:
+            raise NotImplementedError("DISCARD ALL|PLANS|SEQUENCES|TEMP")
+        if m.group(1).lower() == "all":
+            # discard.c: RESET ALL + DEALLOCATE ALL + close portals
+            self.gucs.reset("RESET ALL")
+            self.prepared.clear()
+            self.cursors.clear()
+        elif m.group(1).lower() == "plans":
+            self.prepared.clear()
+        return None
+
+    def _load(self, stmt: str):
+        # contrib module loading (commands/extension LOAD): modules
+        # whose behavior this engine models activate; others reject
+        m = re.match(r"(?is)^load\s+'([^']+)'\s*$", stmt)
+        if not m:
+            raise NotImplementedError("LOAD 'module'")
+        mod = m.group(1).rsplit("/", 1)[-1]
+        if mod == "auto_explain":
+            self._loaded_modules.add("auto_explain")
             return None
-        if head in ("set", "reset", "show"):
-            return self.gucs.execute(stmt, in_txn=self._txn is not None)
-        if head in ("prepare", "deallocate") or (
-            head == "execute" and not re.match(r"(?is)^execute\s+(immediate)\b", stmt)
+        raise NotImplementedError(
+            f"LOAD {mod!r}: only auto_explain is modeled (server-side "
+            "C modules have no Spark analog)"
+        )
+
+    # ---------------- queries ----------------
+
+    def _query(self, stmt: str, head: str):
+        """SELECT / WITH / VALUES / TABLE: the full dialect surface via
+        dialect.transpiler, after the engine-side folds below."""
+        if head == "select":
+            df = self._utility_select(stmt)
+            if df is not None:
+                return df
+        stmt = self._rewrite_for_execution(stmt, head)
+        if head == "with" and not re.match(r"(?is)^\s*with\s+recursive\b", stmt):
+            wcte = self._try_wcte(stmt)
+            if wcte is not _NOT_WCTE:
+                return wcte
+        self._register_all()
+        stmt = self._fold_catalog_calls(stmt)
+        if head == "select":
+            iidx = find_top_level(stmt, "into")
+            if iidx >= 0:
+                # SELECT ... INTO [TEMP|UNLOGGED] [TABLE] name
+                # (parse_clause.c transformIntoClause) ≡ CREATE TABLE
+                # name AS <select-without-INTO>
+                tail = stmt[iidx + 4 :]
+                mi = re.match(
+                    r"(?is)^\s*(?:temp(?:orary)?\s+|unlogged\s+)?"
+                    r"(?:table\s+)?([\w.]+)\s*",
+                    tail,
+                )
+                if not mi:
+                    raise NotImplementedError(
+                        "SELECT ... INTO [TEMP] [TABLE] name"
+                    )
+                sel = stmt[:iidx] + " " + tail[mi.end() :]
+                return self.execute(
+                    f"CREATE TABLE {mi.group(1)} AS {sel}"
+                )
+        if re.search(r"(?i)\bcrosstab\s*\(", stmt):
+            from greengage_spark.operators.crosstab import expand_crosstab
+
+            stmt = expand_crosstab(self, stmt)
+        # tsearch2 compat: legacy stat('query') is ts_stat (the
+        # FROM-position SRF expands pre-transpile, so alias here
+        # too) — only outside string literals, and never when the
+        # user defined their own stat() function
+        if "stat" not in self.functions:
+            # the '...' argument is the NEXT split segment, so the
+            # quote shows up as segment end, not a lookahead match
+            stmt = _sub_outside_strings(
+                r"(?i)(?<![\w.])stat\s*\(\s*\Z", "ts_stat(", stmt
+            )
+        if re.search(
+            r"(?i)\b(ts_stat|connectby|normal_rand)\s*\(", stmt
         ):
-            from greengage_spark.operators.prepared import execute_prepare_stmt
+            from greengage_spark.operators.contrib_srf import (
+                expand_contrib_srfs,
+            )
 
-            return execute_prepare_stmt(self, stmt)
-        if head in ("declare", "fetch", "move", "close", "retrieve"):
-            from greengage_spark.operators.prepared import execute_cursor_stmt
+            stmt = expand_contrib_srfs(self, stmt)
+        if re.search(r"(?i)\bdblink", stmt):
+            from greengage_spark.sources import dblink as _dbl
 
-            return execute_cursor_stmt(self, stmt)
+            handled = _dbl.maybe_handle_call(self, stmt)
+            if handled is not None:
+                return handled
+            stmt = _dbl.expand_dblink(self, stmt)
+        if any(getattr(f, "setof", False) for f in self.functions.values()):
+            from greengage_spark.operators.udf_ddl import expand_table_macros
+
+            stmt = expand_table_macros(stmt, self.functions, engine=self)
+        for nm, mvd in self.matviews.items():
+            if not mvd["populated"] and re.search(
+                rf"(?i)\b{re.escape(nm)}\b", stmt
+            ):
+                raise ValueError(
+                    f'materialized view "{nm}" has not been populated'
+                )
+        if re.search(
+            r"(?is)\b(pg_tables|pg_views|pg_indexes|pg_matviews|"
+            r"pg_roles|pg_namespace|pg_class|pg_attribute|"
+            r"pg_catalog|information_schema)\b",
+            stmt,
+        ):
+            from greengage_spark.operators.introspection import (
+                register_introspection_views,
+            )
+
+            register_introspection_views(self)
+            # Spark temp views cannot be schema-qualified: pg_catalog.
+            # drops (its members are plain views), information_schema.X
+            # maps to the __information_schema_X views.
+            stmt = re.sub(r"(?is)\bpg_catalog\s*\.\s*", "", stmt)
+            stmt = re.sub(
+                r"(?is)\binformation_schema\s*\.\s*(\w+)",
+                r"__information_schema_\1",
+                stmt,
+            )
+        df = pg_sql(self.spark, self._mark_geo_columns(stmt))
+        self._auto_explain(df, stmt)
+        return df
+
+    def _fold_catalog_calls(self, stmt: str) -> str:
+        """Fold, at their call sites, the catalog and GUC functions that
+        read engine state: pg_relation_size / pg_table_size /
+        pg_total_relation_size (dbsize.c) to the byte total of the
+        table's current manifest data files (all three coincide: no
+        FSM/VM/toast/index forks); pg_get_viewdef (ruleutils.c) to the
+        recorded defining query; obj_description (commands/comment.c) to
+        the COMMENT ON text, NULL when unset; has_*_privilege to true
+        (one role; ACLs are recorded metadata — aclchk.c);
+        current_setting / set_config (guc.c) through the GUC manager,
+        set_config applying its side effect now; gp_dist_random('t') to
+        t (cdbutil.c: with Spark's execution model the plain table read
+        IS the per-partition scan).  A call whose arguments are not the
+        plain literals these forms take stays as written."""
+
+        def quote(v: str) -> list[str]:
+            return ["'" + v.replace("'", "''") + "'"]
+
+        def relation_size(args):
+            arg = args[0][0] if len(args) == 1 and len(args[0]) == 1 else ""
+            if not re.fullmatch(r"'[\w.]+'|\"[\w.]+\"", arg):
+                return None
+            try:
+                files = self._storage(arg[1:-1]).files()
+            except Exception:
+                return None  # unknown table: let analysis error
+            return [str(sum(os.path.getsize(f) for f in files if os.path.exists(f)))]
+
+        def viewdef(args):
+            name = _literal(args[0])
+            src = self.views.get(name) or self.matviews.get(name, {}).get("query")
+            return None if src is None or len(args) > 2 else quote(src)
+
+        def objdesc(args):
+            regclass = [t.lower() for t in args[0][1:]] in ([], ["::", "regclass"])
+            name = _literal(args[0][:1]) if regclass and len(args) <= 2 else None
+            if name is None:
+                return None
+            for kind in ("table", "view", "materialized view", "schema"):
+                c = self.acl.comments.get((kind, name.split(".")[-1]))
+                if c is not None:
+                    return quote(c)
+            return ["CAST(NULL AS STRING)"]
+
+        def setting(args):
+            name = _literal(args[0]) if len(args) == 1 else None
+            return None if name is None else quote(str(self.gucs.current(name)))
+
+        def set_config(args):
+            name, val = (_literal(a) for a in args[:2]) if len(args) == 3 else (None, None)
+            if name is None or val is None:
+                return None
+            local = "".join(args[2]).lower() in ("true", "'t'", "1")
+            self.gucs.set(
+                f"SET {'LOCAL ' if local else ''}{name} = '{val}'",
+                in_txn=self._txn is not None,
+            )
+            return quote(val)
+
+        def dist_random(args):
+            name = _literal(args[0]) if len(args) == 1 else None
+            return [name] if name and re.fullmatch(r"[\w.]+", name) else None
+
+        folds = {
+            "pg_get_viewdef": viewdef,
+            "obj_description": objdesc,
+            "current_setting": setting,
+            "set_config": set_config,
+            "gp_dist_random": dist_random,
+            **dict.fromkeys(
+                ("pg_relation_size", "pg_table_size", "pg_total_relation_size"),
+                relation_size,
+            ),
+            **dict.fromkeys(
+                (f"has_{kind}_privilege" for kind in
+                 ("table", "schema", "database", "function", "column")),
+                lambda args: ["true"],
+            ),
+        }
+        toks = tokenize(stmt)
+        out = rewrite_calls(toks, folds, lambda n, args: folds[n.lower()](args or [[]]))
+        return stmt if out == toks else join_tokens(out)
+
+    def _utility_select(self, stmt: str) -> DataFrame | None:
+        """The SELECTs of one server-side function call that act on the
+        engine rather than on rows; None for any other SELECT."""
         # generic file-access functions (utils/adt/genfile.c:
         # pg_read_file / pg_ls_dir / pg_stat_file): superuser-only in
         # PG; here gated by an explicit session opt-in, with relative
@@ -912,9 +1249,7 @@ class GreengageEngine:
             stmt,
         )
         if m_wait:
-            cur = getattr(self, "parallel_cursors", {}).get(
-                m_wait.group(1).lower()
-            )
+            cur = self.parallel_cursors.get(m_wait.group(1).lower())
             if cur is None:
                 raise ValueError(
                     f"cursor \"{m_wait.group(1)}\" does not exist"
@@ -922,381 +1257,7 @@ class GreengageEngine:
             return self.spark.createDataFrame(
                 [(cur.finished(),)], "finished boolean"
             )
-        if re.match(r"(?is)^create\s+(unique\s+)?index\b", stmt) or head in (
-            "reindex",
-        ) or re.match(r"(?is)^drop\s+index\b", stmt):
-            from greengage_spark.operators.maintenance import execute_index_stmt
-
-            return execute_index_stmt(self, stmt)
-        if head in ("vacuum", "analyze", "analyse"):
-            from greengage_spark.operators.maintenance import execute_vacuum_analyze
-
-            return execute_vacuum_analyze(self, stmt)
-        if head in ("lock", "checkpoint", "listen", "unlisten", "notify"):
-            # LOCK: snapshot-isolated single-writer manifests — every
-            # reader pins a manifest version, so table locks are no-ops
-            # (lockcmds.c semantics trivially hold).  CHECKPOINT: commits
-            # are already durable at manifest rename.  LISTEN/NOTIFY:
-            # no async message bus; accepted so scripts keep running.
-            return None
-        if head == "discard":
-            m = re.match(r"(?is)^discard\s+(all|plans|sequences|temp(orary)?)$", stmt)
-            if not m:
-                raise NotImplementedError("DISCARD ALL|PLANS|SEQUENCES|TEMP")
-            if m.group(1).lower() == "all":
-                # discard.c: RESET ALL + DEALLOCATE ALL + close portals
-                self.gucs.execute("RESET ALL", in_txn=self._txn is not None)
-                self.prepared.clear()
-                self.cursors.clear()
-            elif m.group(1).lower() == "plans":
-                self.prepared.clear()
-            return None
-        mx = re.match(
-            r"(?is)^(create|drop)\s+(extension|(?:trusted\s+)?(?:procedural\s+)?"
-            r"language|database|tablespace)\s+(if\s+(?:not\s+)?exists\s+)?"
-            r"(\"?[\w$]+\"?)",
-            stmt,
-        )
-        if mx:
-            # recorded metadata, like roles/queues (operators/acl.py):
-            # extensions gate nothing here (hstore/citext/text-search
-            # surfaces are built in), languages are checked at CREATE
-            # FUNCTION, databases/tablespaces are deployment topology
-            kind = re.sub(r"\s+", " ", mx.group(2).lower()).split()[-1]
-            store = self.acl.recorded.setdefault(kind, set())
-            name = mx.group(4).strip('"')
-            if mx.group(1).lower() == "create":
-                store.add(name)
-            else:
-                store.discard(name)
-            return None
-        if head == "cluster":
-            return self._cluster(stmt)
-        if re.match(r"(?is)^create\s+domain\b", stmt):
-            return self._create_domain(stmt)
-        men = re.match(
-            r"(?is)^create\s+type\s+([\w.]+)\s+as\s+enum\s*\((.*)\)\s*$", stmt
-        )
-        if men:
-            # CREATE TYPE AS ENUM (gram.y CreateEnumStmt; pg_enum.c),
-            # realized on the domain machinery: text base + membership
-            # CHECK, so enum-typed columns validate labels on INSERT and
-            # ::enumtype casts resolve.  DIVERGENCE (documented): PG
-            # orders enum values by declaration position; here they
-            # compare as text.  Label list is preserved for
-            # introspection/round-trip.
-            name = men.group(1)
-            labels = [
-                x.strip()[1:-1].replace("''", "'")
-                for x in split_top_level(men.group(2))
-                if x.strip()
-            ]
-            if name in self.domains:
-                raise ValueError(f"type {name!r} already exists")
-            in_list = ", ".join(
-                "'" + lab.replace("'", "''") + "'" for lab in labels
-            )
-            self.domains[name] = {
-                "base": "text",
-                "not_null": False,
-                "default": None,
-                "check": f"VALUE IN ({in_list})",
-                "enum_labels": labels,
-            }
-            return None
-        mct = re.match(r"(?is)^create\s+type\s+([\w.]+)\s+as\s*\((.*)\)\s*$", stmt)
-        if mct:
-            # composite type (CompositeTypeStmt; typecmds.c
-            # DefineCompositeType): recorded metadata so dumps restore and
-            # introspection can list it; using it as a column type errors
-            # at the use site (no struct-column storage mapping yet)
-            self.misc_ddl[("composite_type", mct.group(1))] = mct.group(2).strip()
-            return None
-        if re.match(r"(?is)^create\s+(or\s+replace\s+)?cast\b", stmt) or re.match(
-            r"(?is)^create\s+operator\b", stmt
-        ):
-            # CREATE CAST (functions/cast.c) / CREATE OPERATOR [CLASS]
-            # (operatorcmds.c): recorded — resolution happens at use sites,
-            # which error loudly if the op/cast is actually exercised
-            key = " ".join(stmt.split(None, 3)[:3]).lower()
-            self.misc_ddl[("stmt", key + f"#{len(self.misc_ddl)}")] = stmt
-            return None
-        if re.match(r"(?is)^drop\s+type\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+type\s+(if\s+exists\s+)?([\w.]+)"
-                r"(\s+cascade|\s+restrict)?$",
-                stmt,
-            )
-            if m and (m.group(2) in self.domains or m.group(1)):
-                self.domains.pop(m.group(2), None)
-                return None
-            raise NotImplementedError(
-                "only enum types are droppable (composite/base types are "
-                "not routed)"
-            )
-        if re.match(r"(?is)^alter\s+domain\b", stmt):
-            return self._alter_domain(stmt)
-        if re.match(r"(?is)^drop\s+domain\b", stmt):
-            m = re.match(
-                r"(?is)^drop\s+domain\s+(if\s+exists\s+)?([\w.]+)"
-                r"(\s+cascade|\s+restrict)?$",
-                stmt,
-            )
-            if not m:
-                raise NotImplementedError("DROP DOMAIN [IF EXISTS] name")
-            if m.group(2) not in self.domains and not m.group(1):
-                raise ValueError(f"unknown domain {m.group(2)!r}")
-            self.domains.pop(m.group(2), None)
-            return None
-        if head in ("begin", "start"):
-            return self._begin_txn()
-        if head in ("commit", "end"):
-            return self._commit_txn()
-        if re.match(r"(?is)^rollback\s+to\b", stmt):
-            return self._rollback_to_savepoint(stmt)
-        if head in ("rollback", "abort"):
-            return self._rollback_txn()
-        if head == "savepoint":
-            return self._savepoint(stmt)
-        if re.match(r"(?is)^release\b", stmt):
-            return self._release_savepoint(stmt)
-        if re.match(r"(?is)^alter\s+table\b", stmt):
-            from greengage_spark.operators.alter import execute_alter_table
-
-            return execute_alter_table(self, stmt)
-        if head == "truncate":
-            from greengage_spark.operators.alter import execute_truncate
-
-            return execute_truncate(self, stmt)
-        # sequence-DEFAULT columns surface into the statement text first,
-        # so the lowering below sees every nextval (serial columns,
-        # DEFAULT nextval(...)) — rewriteTargetListIU before lowering
-        if head == "insert":
-            stmt = self._expand_seq_defaults(stmt)
-        # sequence calls are driver-evaluated / lowered before routing
-        if _has_seq_call(stmt):
-            stmt = self._lower_sequences(stmt, head)
-        if head in ("select", "with", "values", "table", "update", "delete"):
-            # contrib/citext: fold comparisons/grouping on declared
-            # citext columns through lower() (operators/citext.py)
-            cit_cols = {
-                c.name.lower()
-                for td in self.ddl.tables.values()
-                for c in td.columns
-                if c.pg_type.strip().lower() == "citext"
-            }
-            if cit_cols:
-                from greengage_spark.operators.citext import fold_citext_stmt
-
-                stmt = fold_citext_stmt(stmt, cit_cols)
-        if head == "drop":
-            return self._drop(stmt)
-        if head == "insert":
-            return self._insert(stmt)
-        if head == "update":
-            return self._update(stmt)
-        if head == "delete":
-            return self._delete(stmt)
-        if head == "copy":
-            return self._copy(stmt)
-        if head == "explain":
-            return self._explain(stmt)
-        if head == "load":
-            # contrib module loading (commands/extension LOAD): modules
-            # whose behavior this engine models activate; others reject
-            m = re.match(r"(?is)^load\s+'([^']+)'\s*$", stmt)
-            if not m:
-                raise NotImplementedError("LOAD 'module'")
-            mod = m.group(1).rsplit("/", 1)[-1]
-            if mod == "auto_explain":
-                self._loaded_modules.add("auto_explain")
-                return None
-            raise NotImplementedError(
-                f"LOAD {mod!r}: only auto_explain is modeled (server-side "
-                "C modules have no Spark analog)"
-            )
-        if head == "with" and not re.match(r"(?is)^\s*with\s+recursive\b", stmt):
-            wcte = self._try_wcte(stmt)
-            if wcte is not _NOT_WCTE:
-                return wcte
-        if head in ("select", "with", "values", "table"):
-            self._register_all()
-            if re.search(r"(?is)\bpg_(relation|table|total_relation)_size\s*\(", stmt):
-                stmt = self._fold_relation_sizes(stmt)
-            def _vdef(m):
-                nm = m.group(1).strip("'")
-                src = self.views.get(nm) or self.matviews.get(nm, {}).get("query")
-                if src is None:
-                    return m.group(0)
-                return "'" + src.replace("'", "''") + "'"
-
-            # pg_get_viewdef (ruleutils.c): fold to the recorded defining
-            # query text
-            stmt = re.sub(
-                r"(?is)\bpg_get_viewdef\s*\(\s*('[\w.]+')\s*(?:,\s*\w+\s*)?\)",
-                _vdef,
-                stmt,
-            )
-            # obj_description / col_description (commands/comment.c) fold
-            # from the recorded COMMENT ON metadata; NULL when unset
-            def _objdesc(m):
-                name = m.group(1).strip("'").split(".")[-1]
-                for kind in ("table", "view", "materialized view", "schema"):
-                    c = self.acl.comments.get((kind, name))
-                    if c is not None:
-                        return "'" + c.replace("'", "''") + "'"
-                return "CAST(NULL AS STRING)"
-
-            stmt = re.sub(
-                r"(?is)\bobj_description\s*\(\s*('[\w.]+')\s*"
-                r"(?:::\s*regclass\s*)?(?:,\s*'[\w ]+'\s*)?\)",
-                _objdesc,
-                stmt,
-            )
-            # has_*_privilege: the single-role engine always grants
-            # (aclchk.c; ACLs are recorded metadata here)
-            stmt = re.sub(
-                r"(?is)\bhas_(table|schema|database|function|column)"
-                r"_privilege\s*\((?:[^()]|\([^()]*\))*\)",
-                "true",
-                stmt,
-            )
-            # current_setting / set_config (guc.c) fold through the GUC
-            # manager; set_config applies its side effect now
-            def _cur(m):
-                v = self.gucs.current(m.group(1).strip("'"))
-                return "'" + str(v).replace("'", "''") + "'"
-
-            stmt = re.sub(
-                r"(?is)\bcurrent_setting\s*\(\s*('[^']+')\s*\)", _cur, stmt
-            )
-
-            def _setcfg(m):
-                name, val = m.group(1).strip("'"), m.group(2).strip("'")
-                local = m.group(3).strip().lower() in ("true", "'t'", "1")
-                self.gucs.execute(
-                    f"SET {'LOCAL ' if local else ''}{name} = '{val}'",
-                    in_txn=self._txn is not None,
-                )
-                return "'" + val.replace("'", "''") + "'"
-
-            stmt = re.sub(
-                r"(?is)\bset_config\s*\(\s*('[^']+')\s*,\s*('[^']*')\s*,\s*"
-                r"(\w+|'[tf]')\s*\)",
-                _setcfg,
-                stmt,
-            )
-            stmt = re.sub(
-                # gp_dist_random('t') scans t without a gather motion
-                # (cdbutil.c); with Spark's execution model the plain
-                # table read IS the per-partition scan
-                r"(?is)\bgp_dist_random\s*\(\s*'([\w.]+)'\s*\)",
-                r"\1",
-                stmt,
-            )
-            if head == "select":
-                iidx = find_top_level(stmt, "into")
-                if iidx >= 0:
-                    # SELECT ... INTO [TEMP|UNLOGGED] [TABLE] name
-                    # (parse_clause.c transformIntoClause) ≡ CREATE TABLE
-                    # name AS <select-without-INTO>
-                    tail = stmt[iidx + 4 :]
-                    mi = re.match(
-                        r"(?is)^\s*(?:temp(?:orary)?\s+|unlogged\s+)?"
-                        r"(?:table\s+)?([\w.]+)\s*",
-                        tail,
-                    )
-                    if not mi:
-                        raise NotImplementedError(
-                            "SELECT ... INTO [TEMP] [TABLE] name"
-                        )
-                    sel = stmt[:iidx] + " " + tail[mi.end() :]
-                    return self.execute(
-                        f"CREATE TABLE {mi.group(1)} AS {sel}"
-                    )
-            if re.search(r"(?i)\bcrosstab\s*\(", stmt):
-                from greengage_spark.operators.crosstab import expand_crosstab
-
-                stmt = expand_crosstab(self, stmt)
-            # tsearch2 compat: legacy stat('query') is ts_stat (the
-            # FROM-position SRF expands pre-transpile, so alias here
-            # too) — only outside string literals, and never when the
-            # user defined their own stat() function
-            if "stat" not in self.functions:
-                # the '...' argument is the NEXT split segment, so the
-                # quote shows up as segment end, not a lookahead match
-                stmt = _sub_outside_strings(
-                    r"(?i)(?<![\w.])stat\s*\(\s*\Z", "ts_stat(", stmt
-                )
-            if re.search(
-                r"(?i)\b(ts_stat|connectby|normal_rand)\s*\(", stmt
-            ):
-                from greengage_spark.operators.contrib_srf import (
-                    expand_contrib_srfs,
-                )
-
-                stmt = expand_contrib_srfs(self, stmt)
-            if re.search(r"(?i)\bdblink", stmt):
-                from greengage_spark.sources import dblink as _dbl
-
-                handled = _dbl.maybe_handle_call(self, stmt)
-                if handled is not None:
-                    return handled
-                stmt = _dbl.expand_dblink(self, stmt)
-            if any(getattr(f, "setof", False) for f in self.functions.values()):
-                from greengage_spark.operators.udf_ddl import expand_table_macros
-
-                stmt = expand_table_macros(stmt, self.functions, engine=self)
-            for nm, mvd in self.matviews.items():
-                if not mvd["populated"] and re.search(
-                    rf"(?i)\b{re.escape(nm)}\b", stmt
-                ):
-                    raise ValueError(
-                        f'materialized view "{nm}" has not been populated'
-                    )
-            if re.search(
-                r"(?is)\b(pg_tables|pg_views|pg_indexes|pg_matviews|"
-                r"pg_roles|pg_namespace|pg_class|pg_attribute|"
-                r"pg_catalog|information_schema)\b",
-                stmt,
-            ):
-                from greengage_spark.operators.introspection import (
-                    register_introspection_views,
-                )
-
-                register_introspection_views(self)
-                # Spark temp views cannot be schema-qualified: pg_catalog.
-                # drops (its members are plain views), information_schema.X
-                # maps to the __information_schema_X views.
-                stmt = re.sub(r"(?is)\bpg_catalog\s*\.\s*", "", stmt)
-                stmt = re.sub(
-                    r"(?is)\binformation_schema\s*\.\s*(\w+)",
-                    r"__information_schema_\1",
-                    stmt,
-                )
-            df = pg_sql(self.spark, self._mark_geo_columns(stmt))
-            self._auto_explain(df, stmt)
-            return df
-        if re.match(r"(?is)^create\s+(constraint\s+)?trigger\b", stmt):
-            # trigger.c: row/statement triggers change DML semantics —
-            # accepting one silently would hide behavior, so reject
-            # specifically (the reference itself restricts triggers on
-            # distributed tables)
-            raise NotImplementedError(
-                "CREATE TRIGGER: triggers are not supported; move the "
-                "logic into the loading pipeline or a wCTE"
-            )
-        if re.match(r"(?is)^create\s+(or\s+replace\s+)?rule\b", stmt):
-            raise NotImplementedError(
-                "CREATE RULE: query rewrite rules are not supported; use "
-                "views or data-modifying CTEs"
-            )
-        if head == "do":
-            return self._do_block(stmt)
-        raise NotImplementedError(
-            f"statement kind {head!r} not routed; use the DataFrame API "
-            f"(greengage_spark.operators / sources) directly"
-        )
+        return None
 
     def _do_block(self, stmt: str):
         """DO $$ ... $$ anonymous blocks (gram.y DoStmt), run driver-side
@@ -1305,6 +1266,7 @@ class GreengageEngine:
         self.notices — PG sends them to the client, not the result), and
         the SQL statements — PERFORM, SELECT INTO, INSERT/UPDATE/DELETE,
         EXECUTE expr, FOR rec IN <query> — executed through this engine."""
+        stmt = self._rewrite_for_execution(stmt, "do")
         m = re.match(
             r"(?is)^do\s+(?:language\s+plpgsql\s+)?\$[\w]*\$(.*)\$[\w]*\$"
             r"(?:\s+language\s+plpgsql)?\s*$",
@@ -1499,33 +1461,6 @@ class GreengageEngine:
                 del self.cursors[cname]
         return None
 
-    def _fold_relation_sizes(self, stmt: str) -> str:
-        """pg_relation_size / pg_table_size / pg_total_relation_size
-        (dbsize.c): fold to the literal byte total of the table's current
-        manifest data files — the on-disk truth for a COW parquet table
-        (all three coincide: no separate FSM/VM/toast/index forks)."""
-
-        def repl(m):
-            name = m.group(2).strip("'\"")
-            try:
-                st = self._storage(name)
-                total = 0
-                for f in st.files():
-                    try:
-                        total += os.path.getsize(f)
-                    except OSError:
-                        pass
-                return str(total)
-            except Exception:
-                return m.group(0)  # unknown table: let analysis error
-
-        return re.sub(
-            r"(?is)\bpg_(relation|table|total_relation)_size\s*\(\s*"
-            r"('[\w.]+'|\"[\w.]+\")\s*\)",
-            repl,
-            stmt,
-        )
-
     def _try_wcte(self, stmt: str):
         """Data-modifying CTEs (gram.y common_table_expr with DML body;
         PG 9.1 wCTE, rewriteHandler.c): each INSERT/UPDATE/DELETE CTE
@@ -1542,18 +1477,14 @@ class GreengageEngine:
             ctes, main = parse_with_clauses(stmt)
         except ValueError:
             return _NOT_WCTE
-        if not any(
-            c[2].lstrip().split(None, 1)[0].lower()
-            in ("insert", "update", "delete")
-            for c in ctes
-        ):
+        dml = ("insert", "update", "delete")
+        if not any(_command_tag(body) in dml for _name, _cols, body in ctes):
             return _NOT_WCTE
         registered: list[str] = []
         plain: list[str] = []
         try:
             for name, cols, body in ctes:
-                bhead = body.lstrip().split(None, 1)[0].lower()
-                if bhead in ("insert", "update", "delete"):
+                if _command_tag(body) in dml:
                     df = self.execute(body)
                     if df is None:
                         continue  # no RETURNING → not referencable (PG)
@@ -1882,6 +1813,7 @@ class GreengageEngine:
         physical plan (ANALYZE executes the query first so AQE's final
         plan is shown; VERBOSE adds the full parsed/analyzed/optimized
         chain)."""
+        stmt = self._rewrite_for_execution(stmt, "explain")
         m = re.match(
             r"(?is)^explain\s+(?:\(([^)]*)\)\s+)?(analyze\s+)?(verbose\s+)?(.*)$",
             stmt,
@@ -1890,7 +1822,7 @@ class GreengageEngine:
         analyze = bool(m.group(2)) or "analyze" in opts
         verbose = bool(m.group(3)) or "verbose" in opts
         inner = m.group(4).strip()
-        if inner.split(None, 1)[0].lower() not in ("select", "with", "values", "table"):
+        if _command_tag(inner) not in ("select", "with", "values", "table"):
             raise NotImplementedError("EXPLAIN supports queries, not DML")
         self._register_all()
         df = pg_sql(self.spark, inner)
@@ -1996,7 +1928,14 @@ class GreengageEngine:
         for name, vsql in self.views.items():
             pg_sql(self.spark, vsql).createOrReplaceTempView(name)
 
-    def _create_view(self, name: str, query: str, replace: bool):
+    def _create_view(self, stmt: str):
+        mv = re.match(
+            r"(?is)^create\s+(or\s+replace\s+)?(temp(orary)?\s+)?view\s+([\w.]+)\s+as\s+(.*)$",
+            stmt,
+        )
+        if not mv:
+            raise _not_routed("create")
+        name, query, replace = mv.group(4), mv.group(5), bool(mv.group(1))
         if name in self.ddl.tables:
             raise ValueError(f"{name!r} is a table")
         if name in self.views and not replace:
@@ -2186,14 +2125,14 @@ class GreengageEngine:
             return None
         raise NotImplementedError(f"ALTER DOMAIN action {action[:40]!r}")
 
-    def _resolve_domains(self, stmt: str, head: str) -> str:
+    def _resolve_domains(self, stmt: str, tag: str) -> str:
         """Substitute recorded domain names with their base types:
         ``::dom`` casts anywhere, standalone words in CREATE TABLE /
         CREATE DOMAIN bodies (type positions).  String literals are
         never touched.  CREATE TABLE substitutions also graft the
         domain's NOT NULL / DEFAULT / CHECK onto the column definition
         so existing constraint machinery enforces them."""
-        is_ct = bool(re.match(r"(?is)^create\s+(temp(orary)?\s+)?table\b", stmt))
+        is_ct = tag == "create table"
         col_checks: dict[str, str] = {}
         parts = re.split(r"('(?:[^']|'')*')", stmt)
         for k in range(0, len(parts), 2):
@@ -2267,11 +2206,19 @@ class GreengageEngine:
         self._register(table)
         return None
 
-    def _create_matview(self, name: str, body: str, *, with_data: bool):
+    def _create_matview(self, stmt: str):
         """CREATE MATERIALIZED VIEW (gram.y CreateMatViewStmt; matview.c):
         the defining query snapshots into a versioned storage table; WITH
         NO DATA leaves it unpopulated — unscannable until REFRESH, exactly
         the ExecRefreshMatView contract."""
+        mmv = re.match(
+            r"(?is)^create\s+materialized\s+view\s+([\w.]+)\s+as\s+(.*?)"
+            r"(\s+with\s+(no\s+)?data)?$",
+            stmt,
+        )
+        if not mmv:
+            raise _not_routed("create")
+        name, body, with_data = mmv.group(1), mmv.group(2), not mmv.group(4)
         if name in self.matviews or name in self.ddl.tables:
             raise ValueError(f"relation {name!r} already exists")
         self._register_all()
@@ -2281,11 +2228,19 @@ class GreengageEngine:
         self.matviews[name] = {"query": body, "populated": bool(with_data)}
         return None
 
-    def _refresh_matview(self, name: str, *, with_data: bool):
+    def _refresh_matview(self, stmt: str):
         """REFRESH MATERIALIZED VIEW: re-run the stored defining query and
         swap the storage in one manifest commit (full-table replace — the
         non-CONCURRENTLY path; readers of the old version keep their
         pinned file lists)."""
+        mrf = re.match(
+            r"(?is)^refresh\s+materialized\s+view\s+(concurrently\s+)?([\w.]+)"
+            r"(\s+with\s+(no\s+)?data)?$",
+            stmt,
+        )
+        if not mrf:
+            raise _not_routed("refresh")
+        name, with_data = mrf.group(2), not mrf.group(4)
         mv = self.matviews.get(name)
         if mv is None:
             raise ValueError(f"unknown materialized view {name!r}")
@@ -2342,31 +2297,6 @@ class GreengageEngine:
         ).collect()
         touched = {_norm_file(r["__cow_f"]) for r in hits}
         return [f for f in st.files() if f in touched]
-
-    def _drop(self, stmt: str) -> None:
-        m = re.match(r"(?is)^drop\s+(table|view)\s+(if\s+exists\s+)?([\w.]+)$", stmt)
-        if not m:
-            raise NotImplementedError("only DROP TABLE/VIEW [IF EXISTS] name")
-        kind, name = m.group(1).lower(), m.group(3)
-        registry = self.views if kind == "view" else self.ddl.tables
-        if name not in registry:
-            if m.group(2):
-                return None
-            raise ValueError(f"unknown {kind} {name!r}")
-        del registry[name]
-        if kind == "table":
-            # PG drops the relation's storage; without this a later
-            # CREATE TABLE of the same name finds stale manifests.
-            # Inside a transaction the removal defers to COMMIT so
-            # ROLLBACK can resurrect the data (xact.c pending deletes).
-            if self._txn is not None:
-                self._txn["deferred_rm"].append(f"{self.ddl.root}/{name}")
-            else:
-                import shutil
-
-                shutil.rmtree(f"{self.ddl.root}/{name}", ignore_errors=True)
-        self.spark.catalog.dropTempView(name)
-        return None
 
     def _expand_serial(self, stmt: str) -> str:
         """serial/bigserial pseudo-types (gram.y SimpleTypename →
@@ -2472,6 +2402,7 @@ class GreengageEngine:
         return stmt
 
     def _insert(self, stmt: str):
+        stmt = self._rewrite_for_execution(stmt, "insert")
         stmt, ret = self._split_returning(stmt)
         mdv = re.match(
             r"(?is)^insert\s+into\s+([\w.]+)\s+default\s+values$", stmt
@@ -2621,6 +2552,7 @@ class GreengageEngine:
         return self._returning_df(name, st._read_files(new_files), ret)
 
     def _update(self, stmt: str):
+        stmt = self._rewrite_for_execution(stmt, "update")
         m = re.match(
             r"(?is)^update\s+([\w.]+)(?:\s+(?:as\s+)?(?!set\b)(\w+))?"
             r"\s+set\s+(.+)$",
@@ -2904,6 +2836,7 @@ class GreengageEngine:
         return None
 
     def _delete(self, stmt: str):
+        stmt = self._rewrite_for_execution(stmt, "delete")
         stmt, ret = self._split_returning(stmt)
         m = re.match(r"(?is)^delete\s+from\s+([\w.]+)(\s+.*)?$", stmt)
         if not m:
@@ -2989,6 +2922,7 @@ class GreengageEngine:
         executor per file on load — the reference's ON SEGMENT
         distribution, cdbcopy.c).  ON SEGMENT on text paths is the
         default Spark behavior already (part-file per partition)."""
+        stmt = self._rewrite_for_execution(stmt, "copy")
         ms = re.match(
             r"(?is)^copy\s+(?:([\w.]+)|\((.+?)\))\s+to\s+stdout(.*)$", stmt
         )
@@ -3106,3 +3040,160 @@ class GreengageEngine:
             return s[1:-1].strip() if close_of(s, 0) == len(s) - 1 else s
         except ValueError:
             return s
+
+
+class _DropKind(NamedTuple):
+    names: Callable | None  # engine → the names it holds; None: unchecked
+    remove: Callable  # (engine, name) → None
+    cascade: bool = False  # CASCADE accepted: no dependent can be stranded
+    signature: bool = False  # a name may carry its (argument types)
+    missing: Callable | None = None  # name → error; default "unknown <kind>"
+
+
+def _unknown(what: str) -> Callable[[str], ValueError]:
+    return lambda name: ValueError(f"unknown {what} {name!r}")
+
+
+_DROP_KINDS = {
+    "table": _DropKind(lambda e: e.ddl.tables, GreengageEngine._remove_table),
+    "view": _DropKind(lambda e: e.views, GreengageEngine._remove_view),
+    "materialized view": _DropKind(
+        lambda e: e.matviews, GreengageEngine._remove_matview),
+    "external table": _DropKind(
+        lambda e: e.external, GreengageEngine._remove_external),
+    "foreign table": _DropKind(
+        None, lambda e, n: e._remove_external(n.lower())),
+    "server": _DropKind(
+        None, lambda e, n: e.servers.pop(n.lower(), None), cascade=True),
+    **dict.fromkeys(("function", "aggregate"), _DropKind(
+        lambda e: e.functions, GreengageEngine._remove_function,
+        signature=True, missing=_unknown("function"))),
+    "sequence": _DropKind(
+        lambda e: e.sequences.seqs, lambda e, n: e.sequences.drop(n)),
+    "type": _DropKind(
+        lambda e: e.domains, lambda e, n: e.domains.pop(n), cascade=True,
+        missing=lambda n: NotImplementedError(
+            "only enum types are droppable (composite/base types are "
+            "not routed)"
+        )),
+    "domain": _DropKind(
+        lambda e: e.domains, lambda e, n: e.domains.pop(n), cascade=True),
+    "index": _DropKind(
+        lambda e: e.indexes, lambda e, n: e.indexes.pop(n), cascade=True,
+        missing=lambda n: ValueError(f'index "{n}" does not exist')),
+}
+
+
+def _unsupported(message: str) -> Callable:
+    def handler(engine, stmt):
+        raise NotImplementedError(message)
+
+    return handler
+
+
+def _no_op(engine, stmt) -> None:
+    return None
+
+
+# Command tag → handler(engine, stmt): the one list of the statement kinds
+# the engine serves.  _command_tag picks the longest tag the statement's
+# leading words start with, so no entry depends on another's position.
+_ROUTES: dict[str, Callable] = {
+    # queries and data changes
+    **{h: partial(GreengageEngine._query, head=h)
+       for h in ("select", "with", "values", "table")},
+    "insert": GreengageEngine._insert,
+    "update": GreengageEngine._update,
+    "delete": GreengageEngine._delete,
+    "truncate": execute_truncate,
+    "copy": GreengageEngine._copy,
+    "explain": GreengageEngine._explain,
+    "do": GreengageEngine._do_block,
+    # relations
+    "create table": GreengageEngine._create_table,
+    "create view": GreengageEngine._create_view,
+    "create materialized view": GreengageEngine._create_matview,
+    "refresh materialized view": GreengageEngine._refresh_matview,
+    "create external table": GreengageEngine._create_external_table,
+    "create server": GreengageEngine._create_server,
+    "create foreign table": GreengageEngine._create_foreign_table,
+    "alter table": GreengageEngine._alter_table,
+    "alter view": GreengageEngine._alter_view,
+    **{f"drop {kind}": partial(GreengageEngine._drop, kind=kind)
+       for kind in _DROP_KINDS},
+    "create index": maintenance.create_index,
+    "reindex": _no_op,  # nothing to rebuild; parquet stats are always fresh
+    "cluster": GreengageEngine._cluster,
+    "vacuum": maintenance.vacuum,
+    "analyze": maintenance.analyze,
+    # functions, sequences, types
+    "create function": GreengageEngine._create_function,
+    "create aggregate": GreengageEngine._create_aggregate,
+    "alter function": GreengageEngine._alter_function,
+    "alter aggregate": GreengageEngine._alter_function,
+    "create sequence": GreengageEngine._create_sequence,
+    "alter sequence": GreengageEngine._alter_sequence,
+    "create domain": GreengageEngine._create_domain,
+    "alter domain": GreengageEngine._alter_domain,
+    "create type": GreengageEngine._create_type,
+    "create cast": GreengageEngine._record_ddl,
+    "create operator": GreengageEngine._record_ddl,
+    **{f"{verb} text search dictionary": GreengageEngine._text_search_dictionary
+       for verb in ("create", "alter", "drop")},
+    # trigger.c: row/statement triggers change DML semantics — accepting
+    # one silently would hide behavior, so reject specifically (the
+    # reference itself restricts triggers on distributed tables)
+    "create trigger": _unsupported(
+        "CREATE TRIGGER: triggers are not supported; move the "
+        "logic into the loading pipeline or a wCTE"
+    ),
+    "create rule": _unsupported(
+        "CREATE RULE: query rewrite rules are not supported; use "
+        "views or data-modifying CTEs"
+    ),
+    # recorded metadata: roles, privileges, comments, schemas, resource
+    # queues (operators/acl.py), extensions, languages, databases
+    "create role": lambda e, s: e.acl.create_role(s),
+    "alter role": lambda e, s: e.acl.alter_role(s),
+    "drop role": lambda e, s: e.acl.drop_role(s),
+    "grant": lambda e, s: e.acl.grant(s),
+    "revoke": lambda e, s: e.acl.revoke(s),
+    "comment": lambda e, s: e.acl.comment(s),
+    "alter default privileges": GreengageEngine._record_ddl,
+    "create schema": lambda e, s: e.acl.create_schema(s),
+    "alter schema": lambda e, s: e.acl.alter_schema(s),
+    "drop schema": lambda e, s: e.acl.drop_schema(s),
+    **{f"{verb} resource": lambda e, s: e.acl.resource_stmt(s)
+       for verb in ("create", "alter", "drop")},
+    **{f"{verb} {kind}": GreengageEngine._record_object
+       for verb in ("create", "drop")
+       for kind in ("extension", "language", "database", "tablespace")},
+    # session: parameters, prepared statements, cursors
+    "set": lambda e, s: e.gucs.set(s, in_txn=e._txn is not None),
+    "reset": lambda e, s: e.gucs.reset(s),
+    "show": lambda e, s: e.gucs.show(s),
+    "discard": GreengageEngine._discard,
+    "load": GreengageEngine._load,
+    "prepare": prepared.prepare,
+    "execute": prepared.execute,
+    "deallocate": prepared.deallocate,
+    "declare": prepared.declare,
+    "fetch": prepared.fetch,
+    "move": prepared.fetch,
+    "close": prepared.close,
+    "retrieve": prepared.retrieve,
+    # transactions
+    "begin": lambda e, s: e._begin_txn(),
+    "commit": lambda e, s: e._commit_txn(),
+    "rollback": lambda e, s: e._rollback_txn(),
+    "rollback to": GreengageEngine._rollback_to_savepoint,
+    "savepoint": GreengageEngine._savepoint,
+    "release": GreengageEngine._release_savepoint,
+    # LOCK: snapshot-isolated single-writer manifests — every reader pins
+    # a manifest version, so table locks are no-ops (lockcmds.c semantics
+    # trivially hold).  CHECKPOINT: commits are already durable at
+    # manifest rename.  LISTEN/NOTIFY: no async message bus; accepted so
+    # scripts keep running.
+    **dict.fromkeys(("lock", "checkpoint", "listen", "unlisten", "notify"), _no_op),
+}
+_LONGEST_TAG = max(len(tag.split()) for tag in _ROUTES)

@@ -238,6 +238,26 @@ class AclCatalog:
             raise ValueError("cannot drop schema public")
         self.schemas.discard(name)
 
+    def alter_schema(self, stmt: str) -> None:
+        m = re.match(
+            r"(?is)^alter\s+schema\s+(\"?[\w$]+\"?)\s+"
+            r"(?:rename\s+to\s+(\"?[\w$]+\"?)|owner\s+to\s+(\"?[\w$]+\"?))\s*$",
+            stmt,
+        )
+        if not m:
+            raise NotImplementedError("ALTER SCHEMA name RENAME TO x | OWNER TO r")
+        name = m.group(1).strip('"')
+        if name not in self.schemas:
+            raise ValueError(f"unknown schema {name!r}")
+        if m.group(2):
+            new = m.group(2).strip('"')
+            self.schemas.discard(name)
+            self.schemas.add(new)
+            if f"schema:{name}" in self.owners:
+                self.owners[f"schema:{new}"] = self.owners.pop(f"schema:{name}")
+        else:
+            self.owners[f"schema:{name}"] = m.group(3).strip('"')
+
     # ---------------- resource queues / groups ----------------
 
     def resource_stmt(self, stmt: str) -> None:
@@ -268,49 +288,3 @@ class AclCatalog:
 
     def set_owner(self, obj: str, role: str) -> None:
         self.owners[obj] = role
-
-
-def execute_acl_stmt(engine, stmt: str):
-    """Route one recorded-metadata statement; returns None."""
-    acl: AclCatalog = engine.acl
-    head2 = " ".join(stmt.split(None, 2)[:2]).lower()
-    if re.match(r"(?is)^create\s+(role|user|group)\b", stmt):
-        acl.create_role(stmt)
-    elif re.match(r"(?is)^alter\s+(role|user|group)\b", stmt):
-        acl.alter_role(stmt)
-    elif re.match(r"(?is)^drop\s+(role|user|group)\b", stmt):
-        acl.drop_role(stmt)
-    elif head2.startswith("grant"):
-        acl.grant(stmt)
-    elif head2.startswith("revoke"):
-        acl.revoke(stmt)
-    elif head2.startswith("comment"):
-        acl.comment(stmt)
-    elif re.match(r"(?is)^create\s+schema\b", stmt):
-        acl.create_schema(stmt)
-    elif re.match(r"(?is)^alter\s+schema\b", stmt):
-        m = re.match(
-            r"(?is)^alter\s+schema\s+(\"?[\w$]+\"?)\s+"
-            r"(?:rename\s+to\s+(\"?[\w$]+\"?)|owner\s+to\s+(\"?[\w$]+\"?))\s*$",
-            stmt,
-        )
-        if not m:
-            raise NotImplementedError("ALTER SCHEMA name RENAME TO x | OWNER TO r")
-        name = m.group(1).strip('"')
-        if name not in acl.schemas:
-            raise ValueError(f"unknown schema {name!r}")
-        if m.group(2):
-            new = m.group(2).strip('"')
-            acl.schemas.discard(name)
-            acl.schemas.add(new)
-            if f"schema:{name}" in acl.owners:
-                acl.owners[f"schema:{new}"] = acl.owners.pop(f"schema:{name}")
-        else:
-            acl.owners[f"schema:{name}"] = m.group(3).strip('"')
-    elif re.match(r"(?is)^drop\s+schema\b", stmt):
-        acl.drop_schema(stmt)
-    elif re.match(r"(?is)^(create|alter|drop)\s+resource\b", stmt):
-        acl.resource_stmt(stmt)
-    else:
-        raise NotImplementedError(f"unrouted metadata statement: {stmt[:60]}")
-    return None

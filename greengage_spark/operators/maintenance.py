@@ -53,43 +53,26 @@ _CREATE_INDEX = re.compile(
     r"(?:if\s+not\s+exists\s+)?([\w.]+)?\s*on\s+([\w.]+)"
     r"(?:\s+using\s+(\w+))?\s*\(([^)]*)\)"
 )
-_DROP_INDEX = re.compile(
-    r"(?is)^drop\s+index\s+(?:concurrently\s+)?(if\s+exists\s+)?([\w.]+)"
-)
-
-
-def execute_index_stmt(engine, stmt: str):
-    head = stmt.split(None, 1)[0].lower()
-    if head == "reindex":
-        return None  # nothing to rebuild; parquet stats are always fresh
-    if head == "create":
-        m = _CREATE_INDEX.match(stmt)
-        if not m:
-            raise NotImplementedError(
-                "CREATE [UNIQUE] INDEX [name] ON table [USING method] (cols)"
-            )
-        unique, name, table, method, cols = m.groups()
-        if table not in engine.ddl.tables and not _is_known_view(engine, table):
-            raise ValueError(f"unknown table {table!r}")
-        # expression indexes: keep the raw expression text as the key
-        keys = [c.strip().split()[0] for c in cols.split(",") if c.strip()]
-        clean_keys = "_".join(re.sub(r"\W+", "", k) for k in keys)
-        name = name or f"{table}_{clean_keys}_idx"
-        engine.indexes[name] = IndexDef(
-            name=name,
-            table=table,
-            unique=bool(unique),
-            method=(method or "btree").lower(),
-            keys=keys,
-        )
-        return None
-    m = _DROP_INDEX.match(stmt)
+def create_index(engine, stmt: str):
+    m = _CREATE_INDEX.match(stmt)
     if not m:
-        raise NotImplementedError("DROP INDEX [IF EXISTS] name")
-    if_exists, name = bool(m.group(1)), m.group(2)
-    if name not in engine.indexes and not if_exists:
-        raise ValueError(f'index "{name}" does not exist')
-    engine.indexes.pop(name, None)
+        raise NotImplementedError(
+            "CREATE [UNIQUE] INDEX [name] ON table [USING method] (cols)"
+        )
+    unique, name, table, method, cols = m.groups()
+    if table not in engine.ddl.tables and not _is_known_view(engine, table):
+        raise ValueError(f"unknown table {table!r}")
+    # expression indexes: keep the raw expression text as the key
+    keys = [c.strip().split()[0] for c in cols.split(",") if c.strip()]
+    clean_keys = "_".join(re.sub(r"\W+", "", k) for k in keys)
+    name = name or f"{table}_{clean_keys}_idx"
+    engine.indexes[name] = IndexDef(
+        name=name,
+        table=table,
+        unique=bool(unique),
+        method=(method or "btree").lower(),
+        keys=keys,
+    )
     return None
 
 
@@ -106,29 +89,30 @@ _ANALYZE = re.compile(
 )
 
 
-def execute_vacuum_analyze(engine, stmt: str):
-    head = stmt.split(None, 1)[0].lower()
-    if head == "vacuum":
-        m = _VACUUM.match(stmt)
-        if not m:
-            raise NotImplementedError("VACUUM [FULL] [ANALYZE] [table]")
-        with_analyze = bool(m.group(5)) or "analyze" in (m.group(1) or "").lower()
-        table, cols = m.group(6), m.group(7)
-        if table is not None and table not in engine.ddl.tables:
-            raise ValueError(f"unknown table {table!r}")
-        if with_analyze:
-            _analyze(engine, table, cols)
-        if m.group(2):  # VACUUM FULL: rewrite + reclaim (vacuum.c)
-            if engine._txn is not None:
-                raise ValueError(
-                    "VACUUM cannot run inside a transaction block"
-                )
-            for name in [table] if table else list(engine.ddl.tables):
-                _vacuum_full(engine, name)
-        # plain VACUUM: dead-tuple reclamation is a no-op under COW
-        # manifests (superseded files stay until VACUUM FULL, which is
-        # the rewrite+reclaim path — pgstattuple reports them as dead)
-        return None
+def vacuum(engine, stmt: str):
+    m = _VACUUM.match(stmt)
+    if not m:
+        raise NotImplementedError("VACUUM [FULL] [ANALYZE] [table]")
+    with_analyze = bool(m.group(5)) or "analyze" in (m.group(1) or "").lower()
+    table, cols = m.group(6), m.group(7)
+    if table is not None and table not in engine.ddl.tables:
+        raise ValueError(f"unknown table {table!r}")
+    if with_analyze:
+        _analyze(engine, table, cols)
+    if m.group(2):  # VACUUM FULL: rewrite + reclaim (vacuum.c)
+        if engine._txn is not None:
+            raise ValueError(
+                "VACUUM cannot run inside a transaction block"
+            )
+        for name in [table] if table else list(engine.ddl.tables):
+            _vacuum_full(engine, name)
+    # plain VACUUM: dead-tuple reclamation is a no-op under COW
+    # manifests (superseded files stay until VACUUM FULL, which is
+    # the rewrite+reclaim path — pgstattuple reports them as dead)
+    return None
+
+
+def analyze(engine, stmt: str):
     m = _ANALYZE.match(stmt)
     if not m:
         raise NotImplementedError("ANALYZE [VERBOSE] [table [(cols)]]")

@@ -205,36 +205,39 @@ def _substitute_params(body: str, args: list[str]) -> str:
     return "".join(parts)
 
 
-def execute_prepare_stmt(engine, stmt: str):
-    head = stmt.split(None, 1)[0].lower()
-    if head == "prepare":
-        m = re.match(
-            r"(?is)^prepare\s+([\w.]+)\s*(?:\(([^)]*)\))?\s+as\s+(.+)$", stmt
+def prepare(engine, stmt: str):
+    m = re.match(
+        r"(?is)^prepare\s+([\w.]+)\s*(?:\(([^)]*)\))?\s+as\s+(.+)$", stmt
+    )
+    if not m:
+        raise NotImplementedError("PREPARE name [(types)] AS statement")
+    name = m.group(1).lower()
+    if name in engine.prepared:
+        raise ValueError(f'prepared statement "{name}" already exists')
+    body = m.group(3).strip()
+    n_params = max((int(p) for p in _PARAM.findall(body)), default=0)
+    engine.prepared[name] = PreparedStatement(name, body, n_params)
+    return None
+
+
+def execute(engine, stmt: str):
+    m = re.match(r"(?is)^execute\s+([\w.]+)\s*(?:\((.*)\))?$", stmt)
+    if not m:
+        raise NotImplementedError("EXECUTE name [(args)]")
+    name = m.group(1).lower()
+    ps = engine.prepared.get(name)
+    if ps is None:
+        raise ValueError(f'prepared statement "{name}" does not exist')
+    args = split_top_level(m.group(2)) if m.group(2) else []
+    if len(args) != ps.n_params:
+        raise ValueError(
+            f"wrong number of parameters for prepared statement "
+            f'"{name}": expected {ps.n_params}, got {len(args)}'
         )
-        if not m:
-            raise NotImplementedError("PREPARE name [(types)] AS statement")
-        name = m.group(1).lower()
-        if name in engine.prepared:
-            raise ValueError(f'prepared statement "{name}" already exists')
-        body = m.group(3).strip()
-        n_params = max((int(p) for p in _PARAM.findall(body)), default=0)
-        engine.prepared[name] = PreparedStatement(name, body, n_params)
-        return None
-    if head == "execute":
-        m = re.match(r"(?is)^execute\s+([\w.]+)\s*(?:\((.*)\))?$", stmt)
-        if not m:
-            raise NotImplementedError("EXECUTE name [(args)]")
-        name = m.group(1).lower()
-        ps = engine.prepared.get(name)
-        if ps is None:
-            raise ValueError(f'prepared statement "{name}" does not exist')
-        args = split_top_level(m.group(2)) if m.group(2) else []
-        if len(args) != ps.n_params:
-            raise ValueError(
-                f"wrong number of parameters for prepared statement "
-                f'"{name}": expected {ps.n_params}, got {len(args)}'
-            )
-        return engine.execute(_substitute_params(ps.body, args))
+    return engine.execute(_substitute_params(ps.body, args))
+
+
+def deallocate(engine, stmt: str):
     m = re.match(r"(?is)^deallocate\s+(?:prepare\s+)?(all|[\w.]+)$", stmt)
     if not m:
         raise NotImplementedError("DEALLOCATE [PREPARE] name|ALL")
@@ -356,7 +359,7 @@ def refresh_endpoint_views(engine) -> None:
     rows = [
         tuple(ep[c] for c in _EP_COLS)
         for eng in peers
-        for cur in getattr(eng, "parallel_cursors", {}).values()
+        for cur in eng.parallel_cursors.values()
         for ep in cur.endpoints.values()
     ]
     df = engine.spark.createDataFrame(rows, _EP_SCHEMA) if rows else (
@@ -365,7 +368,7 @@ def refresh_endpoint_views(engine) -> None:
     df.createOrReplaceTempView("gp_endpoints")
     own = [
         tuple(ep[c] for c in _EP_COLS)
-        for cur in getattr(engine, "parallel_cursors", {}).values()
+        for cur in engine.parallel_cursors.values()
         for ep in cur.endpoints.values()
     ]
     own_df = engine.spark.createDataFrame(own, _EP_SCHEMA) if own else (
@@ -374,109 +377,113 @@ def refresh_endpoint_views(engine) -> None:
     own_df.createOrReplaceTempView("gp_session_endpoints")
 
 
-def execute_cursor_stmt(engine, stmt: str):
-    head = stmt.split(None, 1)[0].lower()
-    if head == "retrieve":
-        m = re.match(
-            r"(?is)^retrieve\s+(all|\d+)\s+from\s+endpoint\s+([\w.]+)$",
-            stmt,
-        )
-        if not m:
-            raise NotImplementedError("RETRIEVE n|ALL FROM ENDPOINT name")
-        cnt, ep = m.group(1).lower(), m.group(2)
-        for cur in getattr(engine, "parallel_cursors", {}).values():
-            if ep in cur.endpoints:
-                rows = cur.retrieve(ep, None if cnt == "all" else int(cnt))
-                refresh_endpoint_views(engine)
-                return engine.spark.createDataFrame(rows, cur.schema)
-        raise ValueError(
-            f"the endpoint {ep} does not exist in the session"
-        )
-    if head == "declare":
-        mp = re.match(
-            r"(?is)^declare\s+([\w.]+)\s+parallel\s+retrieve\s+cursor\s+"
-            r"for\s+(.+)$",
-            stmt,
-        )
-        if mp:
-            name = mp.group(1).lower()
-            if not hasattr(engine, "parallel_cursors"):
-                engine.parallel_cursors = {}
-            if name in engine.parallel_cursors or name in engine.cursors:
-                raise ValueError(f'cursor "{name}" already exists')
-            df = engine.execute(mp.group(2).strip())
-            if df is None:
-                raise ValueError("DECLARE CURSOR requires a query")
-            engine.parallel_cursors[name] = ParallelRetrieveCursor(
-                name, df, session_id=prc_session_id(engine)
-            )
+def retrieve(engine, stmt: str):
+    m = re.match(
+        r"(?is)^retrieve\s+(all|\d+)\s+from\s+endpoint\s+([\w.]+)$",
+        stmt,
+    )
+    if not m:
+        raise NotImplementedError("RETRIEVE n|ALL FROM ENDPOINT name")
+    cnt, ep = m.group(1).lower(), m.group(2)
+    for cur in engine.parallel_cursors.values():
+        if ep in cur.endpoints:
+            rows = cur.retrieve(ep, None if cnt == "all" else int(cnt))
             refresh_endpoint_views(engine)
-            return None
-        m = re.match(
-            r"(?is)^declare\s+([\w.]+)\s+(?:binary\s+)?(?:insensitive\s+)?"
-            r"(no\s+scroll\s+|scroll\s+)?cursor\s+(with\s+hold\s+|"
-            r"without\s+hold\s+)?for\s+(.+)$",
-            stmt,
-        )
-        if not m:
-            raise NotImplementedError("DECLARE name CURSOR FOR query")
-        name = m.group(1).lower()
-        if name in engine.cursors:
+            return engine.spark.createDataFrame(rows, cur.schema)
+    raise ValueError(
+        f"the endpoint {ep} does not exist in the session"
+    )
+
+
+def declare(engine, stmt: str):
+    mp = re.match(
+        r"(?is)^declare\s+([\w.]+)\s+parallel\s+retrieve\s+cursor\s+"
+        r"for\s+(.+)$",
+        stmt,
+    )
+    if mp:
+        name = mp.group(1).lower()
+        if name in engine.parallel_cursors or name in engine.cursors:
             raise ValueError(f'cursor "{name}" already exists')
-        scroll = bool(m.group(2)) and m.group(2).strip().lower() == "scroll"
-        holdable = bool(m.group(3)) and m.group(3).split()[0].lower() == "with"
-        df = engine.execute(m.group(4).strip())
+        df = engine.execute(mp.group(2).strip())
         if df is None:
             raise ValueError("DECLARE CURSOR requires a query")
-        engine.cursors[name] = Cursor(name, df, scroll=scroll, holdable=holdable)
-        return None
-    if head in ("fetch", "move"):
-        m = re.match(
-            r"(?is)^(fetch|move)\s+"
-            r"(?:(forward|backward|absolute|relative|prior|first|last|next)\s+)?"
-            r"(?:((?:[+-]?\d+|all))\s+)?(?:from\s+|in\s+)?([\w.]+)$",
-            stmt,
+        engine.parallel_cursors[name] = ParallelRetrieveCursor(
+            name, df, session_id=prc_session_id(engine)
         )
-        if not m:
-            raise NotImplementedError(
-                "FETCH [FORWARD|BACKWARD|ABSOLUTE|RELATIVE|PRIOR|FIRST|"
-                "LAST|NEXT] [n|ALL] [FROM] cursor"
-            )
-        kw = (m.group(2) or "").lower()
-        cnt = (m.group(3) or "").lower()
-        name = m.group(4).lower()
-        cur = engine.cursors.get(name)
-        if cur is None:
-            raise ValueError(f'cursor "{name}" does not exist')
-        if kw in ("absolute", "relative"):
-            if not cnt or cnt == "all":
-                raise NotImplementedError(f"FETCH {kw.upper()} needs a count")
-            rows = (
-                cur.fetch_absolute(int(cnt))
-                if kw == "absolute"
-                else cur.fetch_relative(int(cnt))
-            )
-        elif kw == "prior":
-            rows = cur.fetch_backward(1)
-        elif kw == "first":
-            rows = cur.fetch_absolute(1)
-        elif kw == "last":
-            rows = cur.fetch_absolute(-1)
-        elif kw == "backward":
-            rows = cur.fetch_backward(None if cnt == "all" else int(cnt or 1))
-        else:  # forward / next / bare count — negative counts scan backward
-            n = None if cnt == "all" else 1 if not cnt else int(cnt)
-            if kw == "next":
-                n = 1
-            rows = cur.fetch_backward(-n) if n is not None and n < 0 else cur.fetch(n)
-        if m.group(1).lower() == "move":
-            return None
-        return engine.spark.createDataFrame(rows, cur.schema)
+        refresh_endpoint_views(engine)
+        return None
+    m = re.match(
+        r"(?is)^declare\s+([\w.]+)\s+(?:binary\s+)?(?:insensitive\s+)?"
+        r"(no\s+scroll\s+|scroll\s+)?cursor\s+(with\s+hold\s+|"
+        r"without\s+hold\s+)?for\s+(.+)$",
+        stmt,
+    )
+    if not m:
+        raise NotImplementedError("DECLARE name CURSOR FOR query")
+    name = m.group(1).lower()
+    if name in engine.cursors:
+        raise ValueError(f'cursor "{name}" already exists')
+    scroll = bool(m.group(2)) and m.group(2).strip().lower() == "scroll"
+    holdable = bool(m.group(3)) and m.group(3).split()[0].lower() == "with"
+    df = engine.execute(m.group(4).strip())
+    if df is None:
+        raise ValueError("DECLARE CURSOR requires a query")
+    engine.cursors[name] = Cursor(name, df, scroll=scroll, holdable=holdable)
+    return None
+
+
+def fetch(engine, stmt: str):
+    """FETCH, or MOVE: the same positioning without the rows."""
+    m = re.match(
+        r"(?is)^(fetch|move)\s+"
+        r"(?:(forward|backward|absolute|relative|prior|first|last|next)\s+)?"
+        r"(?:((?:[+-]?\d+|all))\s+)?(?:from\s+|in\s+)?([\w.]+)$",
+        stmt,
+    )
+    if not m:
+        raise NotImplementedError(
+            "FETCH [FORWARD|BACKWARD|ABSOLUTE|RELATIVE|PRIOR|FIRST|"
+            "LAST|NEXT] [n|ALL] [FROM] cursor"
+        )
+    kw = (m.group(2) or "").lower()
+    cnt = (m.group(3) or "").lower()
+    name = m.group(4).lower()
+    cur = engine.cursors.get(name)
+    if cur is None:
+        raise ValueError(f'cursor "{name}" does not exist')
+    if kw in ("absolute", "relative"):
+        if not cnt or cnt == "all":
+            raise NotImplementedError(f"FETCH {kw.upper()} needs a count")
+        rows = (
+            cur.fetch_absolute(int(cnt))
+            if kw == "absolute"
+            else cur.fetch_relative(int(cnt))
+        )
+    elif kw == "prior":
+        rows = cur.fetch_backward(1)
+    elif kw == "first":
+        rows = cur.fetch_absolute(1)
+    elif kw == "last":
+        rows = cur.fetch_absolute(-1)
+    elif kw == "backward":
+        rows = cur.fetch_backward(None if cnt == "all" else int(cnt or 1))
+    else:  # forward / next / bare count — negative counts scan backward
+        n = None if cnt == "all" else 1 if not cnt else int(cnt)
+        if kw == "next":
+            n = 1
+        rows = cur.fetch_backward(-n) if n is not None and n < 0 else cur.fetch(n)
+    if m.group(1).lower() == "move":
+        return None
+    return engine.spark.createDataFrame(rows, cur.schema)
+
+
+def close(engine, stmt: str):
     m = re.match(r"(?is)^close\s+(all|[\w.]+)$", stmt)
     if not m:
         raise NotImplementedError("CLOSE name|ALL")
     target = m.group(1).lower()
-    pcs = getattr(engine, "parallel_cursors", {})
+    pcs = engine.parallel_cursors
     if target == "all":
         engine.cursors.clear()
         if pcs:

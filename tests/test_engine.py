@@ -83,6 +83,52 @@ class TestEngine:
         assert df.collect()[0].n == 1000
 
 
+class TestStatementRouting:
+    """A statement reaches its handler whatever optional words (UNLOGGED,
+    TEMP, OR REPLACE, ...) it carries; DROP takes PG's name-list grammar;
+    function names inside string literals are only text."""
+
+    @pytest.mark.parametrize(
+        "stmts, holds",
+        [
+            (
+                ["CREATE UNLOGGED TABLE u AS SELECT 1 AS a"],
+                lambda eng: rows(eng.execute("SELECT a FROM u")) == [(1,)],
+            ),
+            (
+                ["CREATE TABLE a (x int8)", "CREATE TABLE b (x int8)",
+                 "DROP TABLE a, b"],
+                lambda eng: not {"a", "b"} & set(eng.ddl.tables),
+            ),
+            (
+                ["CREATE SEQUENCE s", "DROP SEQUENCE s RESTRICT"],
+                lambda eng: "s" not in eng.sequences.seqs,
+            ),
+        ],
+        ids=["unlogged_ctas", "drop_name_list", "drop_restrict"],
+    )
+    def test_statement_reaches_its_handler(self, eng, stmts, holds):
+        for stmt in stmts:
+            eng.execute(stmt)
+        assert holds(eng)
+
+    def test_drop_looks_up_every_name_first(self, eng):
+        eng.execute("CREATE TABLE a (x int8)")
+        eng.execute("INSERT INTO a VALUES (1)")
+        with pytest.raises(ValueError, match="unknown table 'missing'"):
+            eng.execute("DROP TABLE missing, a")
+        with pytest.raises(NotImplementedError, match="CASCADE"):
+            eng.execute("DROP TABLE a CASCADE")
+        assert rows(eng.execute("SELECT x FROM a")) == [(1,)]
+
+    @pytest.mark.parametrize(
+        "text", ["has_table_privilege(x)", "pg_stat_statements_reset()"]
+    )
+    def test_call_inside_string_literal_stays_text(self, eng, text):
+        out = eng.execute(f"SELECT '{text}' AS s")
+        assert out is not None and rows(out) == [(text,)]
+
+
 class TestViewsAndCTAS:
     def test_ctas_with_distribution(self, eng):
         eng.execute("CREATE TABLE base (a int8, b text) DISTRIBUTED BY (a)")
