@@ -1,10 +1,15 @@
 """The PG front end's one lexing rule and its span primitives.
 
-Greengage's coordinator lexes every statement with one scanner (scan.l)
-before its grammar sees it.  Here every front-end module that looks
-inside SQL text — the transpiler's passes, the DDL parser, the engine's
-statement router — lexes with ``_TOKEN_RE``, so string literals, quoted
-identifiers and comments are opaque the same way everywhere.
+Greengage lexes every piece of SQL with one scanner (scan.l): statements,
+psql scripts (psqlscan.l) and PL/pgSQL bodies (pl_scanner.c calls the core
+lexer).  Here every module that looks inside PG text — the transpiler's
+passes, the DDL parser, the engine's statement router and script
+splitter, the PL/pgSQL interpreter and the function-body lowerings —
+lexes with ``_TOKEN_RE``, so string literals, quoted identifiers and
+comments are opaque the same way everywhere.
+
+Lexeme kinds: string (``'…'``, ``E'…'``, ``$tag$…$tag$``), param (``$n``),
+qident, comment, number, ident (ASCII or non-ASCII letters), op, other.
 
 Token level (over ``tokenize`` output):
 
@@ -13,13 +18,17 @@ Token level (over ``tokenize`` output):
   top_level                  depth-0 tokens up to an unmatched close
   operand_start/operand_end  span of one operand around an operator
   rewrite_calls              replace ``name ( args )`` call sites
+  plain_literal              E-string or dollar string → ``'…'`` literal
 
 Text level (character offsets into the original SQL):
 
   lex                        lexemes with their kind and offsets
   find_top_level             offset of a depth-0 keyword
   close_of                   offset of a bracket's partner
-  split_top_level            depth-0 comma split
+  split_top_level            depth-0 split at ``,`` or ``;``
+  sub_code                   rewrite only the text between literals
+  substitute_params          ``$n`` → argument text
+  substitute_names           identifier → replacement text
 """
 
 from __future__ import annotations
@@ -27,14 +36,22 @@ from __future__ import annotations
 import re
 from collections.abc import Callable, Iterator
 
+# identifier characters (scan.l ident_start, ident_cont, dolq_cont): every
+# non-ASCII character counts as a letter, as the bytes \200-\377 do there
+_LETTER = r"A-Za-z_\x80-\U0010ffff"
+_IDENT = rf"[{_LETTER}][{_LETTER}0-9$]*"
+_DOLLAR_TAG = rf"\$(?:[{_LETTER}][{_LETTER}0-9]*)?\$"
+
 _TOKEN_RE = re.compile(
-    r"""
-      (?P<string>   [Ee]'(?:[^'\\]|\\.|'')*' | '(?:[^']|'')*' )
+    rf"""
+      (?P<string>   [Ee]'(?:[^'\\]|\\.|'')*' | '(?:[^']|'')*'
+                  | (?P<tag> {_DOLLAR_TAG} ) .*? (?P=tag) )
+    | (?P<param>    \$\d+ )
     | (?P<qident>   "[^"]*" )
     | (?P<comment>  --[^\n]* | /\*.*?\*/ )
-    | (?P<number>   \d+\.\d*([Ee][+-]?\d+)? | \.\d+([Ee][+-]?\d+)? | \d+([Ee][+-]?\d+)? )
-    | (?P<ident>    [A-Za-z_][A-Za-z0-9_$]* )
-    | (?P<op>       ::|->>|->|\#>>|\#>|!~\*|!~|~\*|\|\|/|\|/|\|\||<=|>=|<>|!=|=>|<<|>> )
+    | (?P<number>   \d+\.(?!\.)\d*([Ee][+-]?\d+)? | \.\d+([Ee][+-]?\d+)? | \d+([Ee][+-]?\d+)? )
+    | (?P<ident>    {_IDENT} )
+    | (?P<op>       ::|:=|\.\.|->>|->|\#>>|\#>|!~\*|!~|~\*|\|\|/|\|/|\|\||<=|>=|<>|!=|=>|<<|>> )
     | (?P<ws>       \s+ )
     | (?P<other>    . )
     """,
@@ -54,11 +71,47 @@ def tokenize(sql: str) -> list[str]:
 
 
 def is_string(t: str) -> bool:
+    if t[:1] == "$":
+        return len(t) > 1 and t[-1] == "$"
     return t.endswith("'") and (t.startswith("'") or t[:1] in "eE" and t[1:2] == "'")
 
 
+_IDENT_START = re.compile(rf'[{_LETTER}"]')
+
+
 def is_ident(t: str) -> bool:
-    return bool(re.match(r'^[A-Za-z_"]', t)) and not is_string(t)
+    return bool(_IDENT_START.match(t)) and not is_string(t)
+
+
+_ESCAPES = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t", "''": "'"}
+_ESCAPE_RE = re.compile(
+    r"''|\\(?:([0-7]{1,3})|x([0-9A-Fa-f]{1,2})|u([0-9A-Fa-f]{4})|U([0-9A-Fa-f]{8})|(.))",
+    re.DOTALL,
+)
+
+
+def _unescape(m: re.Match) -> str:
+    octal, hexa, u4, u8, char = m.groups()
+    if octal or hexa or u4 or u8:
+        return chr(int(octal, 8) if octal else int(hexa or u4 or u8, 16))
+    return _ESCAPES.get(char or m.group(0), char)  # any other \c is c
+
+
+def plain_literal(t: str) -> str:
+    """An E'' escape string (scan.l xe rules: \\b \\f \\n \\r \\t, octal
+    \\o[oo], hex \\xh[h], unicode \\uXXXX / \\UXXXXXXXX, any other \\c is
+    c) or a ``$tag$…$tag$`` dollar string → the plain ``'…'`` literal
+    of the same value, quotes doubled; other tokens are returned as they
+    are.  The session runs with escapedStringLiterals=true, so Spark
+    takes the plain literal's backslashes verbatim."""
+    if t[:1] == "$" and is_string(t):
+        tag = t.index("$", 1) + 1
+        value = t[tag:-tag]
+    elif t[:1] in "eE" and t[1:2] == "'":
+        value = _ESCAPE_RE.sub(_unescape, t[2:-1])
+    else:
+        return t
+    return "'" + value.replace("'", "''") + "'"
 
 
 def join_tokens(toks: list[str]) -> str:
@@ -234,7 +287,7 @@ def rewrite_calls(
 
 def lex(s: str, start: int = 0) -> Iterator[re.Match]:
     """Lexemes of s from ``start``, whitespace skipped; ``m.lastgroup`` is
-    the kind (string, qident, comment, number, ident, op, other)."""
+    the kind (string, param, qident, comment, number, ident, op, other)."""
     for m in _TOKEN_RE.finditer(s, start):
         if m.lastgroup != "ws":
             yield m
@@ -270,12 +323,66 @@ def close_of(s: str, i: int) -> int:
     raise ValueError("unbalanced parentheses")
 
 
-def split_top_level(s: str) -> list[str]:
-    """Split s at depth-0 commas; parts are stripped, empty ones dropped."""
+def split_top_level(s: str, sep: str = ",") -> list[str]:
+    """Split s at depth-0 ``sep`` lexemes (``,`` or ``;``); parts are
+    stripped, empty ones dropped."""
     parts, start = [], 0
     for depth, m in _top_matches(s):
-        if depth == 0 and m.group(0) == ",":
+        if depth == 0 and m.group(0) == sep:
             parts.append(s[start : m.start()])
             start = m.end()
     parts.append(s[start:])
     return [p.strip() for p in parts if p.strip()]
+
+
+def sub_code(s: str, fn: Callable[[str], str]) -> str:
+    """s with ``fn`` applied to each stretch of text between string
+    literals, quoted identifiers and comments; those stay as written."""
+    out, pos = [], 0
+    for m in lex(s):
+        if m.lastgroup in ("string", "qident", "comment"):
+            out += [fn(s[pos : m.start()]), m.group(0)]
+            pos = m.end()
+    out.append(fn(s[pos:]))
+    return "".join(out)
+
+
+def substitute_params(s: str, args: list[str]) -> str:
+    """Replace each ``$n`` parameter lexeme with the text ``args[n - 1]``;
+    a ``$n`` inside a literal, quoted identifier or comment is text."""
+    out, pos = [], 0
+    for m in lex(s):
+        if m.lastgroup == "param":
+            n = int(m.group(0)[1:])
+            if not 1 <= n <= len(args):
+                raise ValueError(f"there is no parameter ${n}")
+            out += [s[pos : m.start()], args[n - 1]]
+            pos = m.end()
+    out.append(s[pos:])
+    return "".join(out)
+
+
+def substitute_names(s: str, mapping: dict) -> str:
+    """Replace each identifier whose name is a key of ``mapping`` (both
+    compared lower-cased) with its value, in one pass: replacement text
+    is not re-read, and an identifier right after ``.`` (a field or
+    qualified name's tail) is left alone, as are literals, quoted
+    identifiers and comments.  A callable value stands for a record:
+    ``name . field`` becomes ``value(field)`` and a bare ``name`` stays."""
+    mapping = {k.lower(): v for k, v in mapping.items()}
+    lexemes = list(lex(s))
+    out, pos = [], 0
+    for k, m in enumerate(lexemes):
+        if m.lastgroup != "ident" or k and lexemes[k - 1].group(0) == ".":
+            continue
+        repl = mapping.get(m.group(0).lower())
+        if callable(repl):
+            tail = lexemes[k + 1 : k + 3]
+            if len(tail) == 2 and tail[0].group(0) == "." and tail[1].lastgroup == "ident":
+                out += [s[pos : m.start()], repl(tail[1].group(0).lower())]
+                pos = tail[1].end()
+        elif repl is not None:
+            out += [s[pos : m.start()], repl]
+            pos = m.end()
+    out.append(s[pos:])
+    return "".join(out)

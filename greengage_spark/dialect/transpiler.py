@@ -50,82 +50,17 @@ from greengage_spark.dialect.spans import (
     match_open,
     operand_end,
     operand_start,
+    plain_literal,
     rewrite_calls,
     split_top,
     tokenize,
     top_level,
 )
 
-_ESTRING_ESCAPES = {
-    "b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t",
-    "\\": "\\", "'": "'",
-}
-
-
-def _decode_estring(tok: str) -> str:
-    """Decode a PG E'' escape-string literal (scan.l xe rules) into a plain
-    quoted literal: \\n \\t \\b \\f \\r, octal \\o[oo], hex \\xh[h], unicode
-    \\uXXXX / \\UXXXXXXXX; any other \\c is c.  '' stays an escaped quote.
-    The session runs with escapedStringLiterals=true, so the emitted plain
-    literal is taken verbatim by Spark (backslashes inert)."""
-    body = tok[2:-1]  # strip E' ... '
-    out: list[str] = []
-    i = 0
-    while i < len(body):
-        c = body[i]
-        if c == "'":  # doubled quote in source → one literal quote
-            out.append("'")
-            i += 2
-            continue
-        if c != "\\":
-            out.append(c)
-            i += 1
-            continue
-        i += 1
-        if i >= len(body):
-            out.append("\\")
-            break
-        e = body[i]
-        if e in _ESTRING_ESCAPES:
-            out.append(_ESTRING_ESCAPES[e])
-            i += 1
-        elif e in "01234567":
-            j = i
-            while j < len(body) and j < i + 3 and body[j] in "01234567":
-                j += 1
-            out.append(chr(int(body[i:j], 8)))
-            i = j
-        elif e in "xX":
-            j = i + 1
-            while j < len(body) and j < i + 3 and body[j] in "0123456789abcdefABCDEF":
-                j += 1
-            if j > i + 1:
-                out.append(chr(int(body[i + 1 : j], 16)))
-            else:
-                out.append(e)
-            i = j
-        elif e in "uU":
-            width = 4 if e == "u" else 8
-            h = body[i + 1 : i + 1 + width]
-            if len(h) == width and all(ch in "0123456789abcdefABCDEF" for ch in h):
-                out.append(chr(int(h, 16)))
-                i += 1 + width
-            else:
-                out.append(e)
-                i += 1
-        else:
-            out.append(e)
-            i += 1
-    return "'" + "".join(out).replace("'", "''") + "'"
-
-
 def _pass_estrings(toks: list[str]) -> list[str]:
-    """PG E'' escape strings → decoded plain literals, so every later pass
-    (and Spark itself) sees ordinary quoted strings."""
-    return [
-        _decode_estring(t) if len(t) >= 3 and t[0] in "eE" and t[1] == "'" else t
-        for t in toks
-    ]
+    """PG E'' escape strings and dollar strings → plain literals, so every
+    later pass (and Spark itself) sees ordinary quoted strings."""
+    return [plain_literal(t) for t in toks]
 
 
 def _count_capture_groups(pat: str) -> int:
@@ -8314,10 +8249,14 @@ def transpile(sql: str) -> str:
     toks = _pass_order_by_nulls(toks)
     toks = _pass_subscripts(toks)
     # PG double-quoted identifiers (ALWAYS identifiers in PG — strings are
-    # single-quoted) → Spark backtick identifiers; '""' unescapes to '"'
+    # single-quoted) → Spark backtick identifiers; '""' unescapes to '"'.
+    # Unquoted identifiers with non-ASCII letters (scan.l ident_start
+    # \200-\377) are backticked too: Spark rejects them bare.
     toks = [
         "`" + t[1:-1].replace('""', '"').replace("`", "``") + "`"
         if len(t) >= 2 and t[0] == '"' and t[-1] == '"'
+        else "`" + t + "`"
+        if not t.isascii() and is_ident(t)
         else t
         for t in toks
     ]

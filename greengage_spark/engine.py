@@ -41,6 +41,7 @@ from greengage_spark.dialect.spans import (
     lex,
     rewrite_calls,
     split_top_level,
+    sub_code,
     tokenize,
 )
 from greengage_spark.dialect.transpiler import pg_sql, transpile
@@ -98,75 +99,17 @@ def _has_seq_call(stmt: str) -> bool:
 
 
 def split_statements(sql: str) -> list[str]:
-    """Split a SQL script into statements at top-level semicolons.
-
-    Respects single-quoted strings (with '' doubling), double-quoted
-    identifiers, dollar-quoted bodies ($$…$$ and $tag$…$tag$ — psql's
-    function-body quoting), and ``--`` line comments.  Empty statements
-    (stray semicolons, comment-only lines) are dropped."""
-    out: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            buf.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == '"':
-            j = sql.find('"', i + 1)
-            j = n - 1 if j < 0 else j
-            buf.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == "$":
-            m = re.match(r"\$([A-Za-z_]\w*)?\$", sql[i:])
-            if m:
-                tag = m.group(0)
-                end = sql.find(tag, i + len(tag))
-                end = n if end < 0 else end + len(tag)
-                buf.append(sql[i:end])
-                i = end
-                continue
-        if c == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            buf.append(sql[i:j])
-            i = j
-            continue
-        if c == ";":
-            stmt = _strip_leading_comments("".join(buf))
-            if re.sub(r"(?m)--[^\n]*", "", stmt).strip():
-                out.append(stmt)
-            buf = []
-            i += 1
-            continue
-        buf.append(c)
-        i += 1
-    stmt = _strip_leading_comments("".join(buf))
-    if re.sub(r"(?m)--[^\n]*", "", stmt).strip():
-        out.append(stmt)
+    """Split a SQL script into statements at depth-0 ``;`` lexemes, as
+    psqlscan.l does: a ``;`` inside a literal (``'…'``, ``E'…'``,
+    ``$tag$…$tag$``), a quoted identifier, a comment or parentheses does
+    not end a statement.  Each statement starts at its first SQL token
+    (leading comments drop); comment-only statements are dropped."""
+    out = []
+    for part in split_top_level(sql, ";"):
+        first = next((m for m in lex(part) if m.lastgroup != "comment"), None)
+        if first is not None:
+            out.append(part[first.start() :])
     return out
-
-
-def _strip_leading_comments(stmt: str) -> str:
-    """Drop comment-only lines before the first SQL token, so the
-    handlers' anchored parse patterns see the statement's first word."""
-    lines = stmt.strip().splitlines()
-    k = 0
-    while k < len(lines) and (
-        not lines[k].strip() or lines[k].lstrip().startswith("--")
-    ):
-        k += 1
-    return "\n".join(lines[k:]).strip()
 
 
 def _normalize_statement(sql: str) -> str:
@@ -177,8 +120,8 @@ def _normalize_statement(sql: str) -> str:
     s = sql.strip().rstrip(";")
     lits, n = [], 0
     for m in lex(s):
-        if m.group(0).isdigit() and s[m.start() - 1 : m.start()] == "$":
-            n = max(n, int(m.group(0)))  # an existing parameter
+        if m.lastgroup == "param":
+            n = max(n, int(m.group(0)[1:]))
         elif m.lastgroup in ("string", "number"):
             lits.append(m)
     parts, pos = [], 0
@@ -190,29 +133,30 @@ def _normalize_statement(sql: str) -> str:
     return re.sub(r"\s+", " ", "".join(parts))
 
 
-def _sub_outside_strings(pattern: str, repl: str, stmt: str) -> str:
-    """``re.sub`` applied only OUTSIDE single-/dollar-quoted literals —
-    a raw regex over the whole statement corrupts string payloads
-    (e.g. SELECT 'nested stat(...) call')."""
-    # the dollar-tag group matches empty (not optional) so the \2
-    # backreference participates for plain $$...$$ quoting too
-    parts = re.split(
-        r"('(?:[^']|'')*'|\$([A-Za-z_]\w*|)\$.*?\$\2\$)",
-        stmt,
-        flags=re.DOTALL,
-    )
-    # re.split with 2 groups yields triples (text, literal, dollar-tag);
-    # the tag is a sub-capture of the literal — emit it once only
-    return "".join(
-        re.sub(pattern, repl, p) if i % 3 == 0 else (p or "" if i % 3 == 1 else "")
-        for i, p in enumerate(parts)
-    )
+def _requalify(stmt: str, schemas: dict[str, str]) -> str:
+    """Each schema qualifier — an identifier lexeme that ``schemas`` holds
+    (lower-cased), followed by ``.`` and a name — becomes its value
+    (the qualifier, dot and space dropped); literals, quoted
+    identifiers and comments stay."""
+    lexemes = list(lex(stmt))
+    out, pos = [], 0
+    for m, dot, name in zip(lexemes, lexemes[1:], lexemes[2:]):
+        if (
+            m.lastgroup == "ident"
+            and dot.group(0) == "."
+            and name.lastgroup in ("ident", "qident")
+            and m.group(0).lower() in schemas
+        ):
+            out += [stmt[pos : m.start()], schemas[m.group(0).lower()]]
+            pos = name.start()
+    out.append(stmt[pos:])
+    return "".join(out)
 
 
 def _strip_public_schema(stmt: str) -> str:
     """pg_dump qualifies every object as ``public.x``; the engine's
-    namespace is flat, so the prefix drops — outside string literals."""
-    return _sub_outside_strings(r"(?i)\bpublic\s*\.\s*", "", stmt)
+    namespace is flat, so the prefix drops."""
+    return _requalify(stmt, {"public": ""})
 
 
 # words PG's grammar allows between a statement's verb and its object
@@ -423,20 +367,12 @@ class GreengageEngine:
         registered via CREATE SCHEMA (namespace.c semantics are
         emulated by name mangling; an alias that shadows a schema name
         is the documented edge)."""
-        customs = [
-            n for n in getattr(self.acl, "schemas", ()) if n.lower() != "public"
-        ]
-        if not customs:
-            return stmt
-        pat = re.compile(
-            r"(?i)\b(" + "|".join(re.escape(n) for n in customs)
-            + r")\s*\.\s*(?=[\w\"])"
-        )
-        parts = re.split(r"('(?:[^']|'')*')", stmt)
-        return "".join(
-            p if i % 2 else pat.sub(lambda m: m.group(1).lower() + "__", p)
-            for i, p in enumerate(parts)
-        )
+        customs = {
+            n.lower(): n.lower() + "__"
+            for n in getattr(self.acl, "schemas", ())
+            if n.lower() != "public"
+        }
+        return _requalify(stmt, customs) if customs else stmt
 
     def execute(self, sql: str) -> DataFrame | None:
         """Statement entry point; wraps _execute_stmt with the
@@ -1017,10 +953,10 @@ class GreengageEngine:
         # too) — only outside string literals, and never when the
         # user defined their own stat() function
         if "stat" not in self.functions:
-            # the '...' argument is the NEXT split segment, so the
-            # quote shows up as segment end, not a lookahead match
-            stmt = _sub_outside_strings(
-                r"(?i)(?<![\w.])stat\s*\(\s*\Z", "ts_stat(", stmt
+            # the '...' argument is the literal after the code stretch,
+            # so the call's open paren shows up as the stretch's end
+            stmt = sub_code(
+                stmt, lambda seg: re.sub(r"(?i)(?<![\w.])stat\s*\(\s*\Z", "ts_stat(", seg)
             )
         if re.search(
             r"(?i)\b(ts_stat|connectby|normal_rand)\s*\(", stmt
@@ -2128,15 +2064,15 @@ class GreengageEngine:
     def _resolve_domains(self, stmt: str, tag: str) -> str:
         """Substitute recorded domain names with their base types:
         ``::dom`` casts anywhere, standalone words in CREATE TABLE /
-        CREATE DOMAIN bodies (type positions).  String literals are
-        never touched.  CREATE TABLE substitutions also graft the
-        domain's NOT NULL / DEFAULT / CHECK onto the column definition
-        so existing constraint machinery enforces them."""
+        CREATE DOMAIN bodies (type positions).  Literals, quoted
+        identifiers and comments are never touched.  CREATE TABLE
+        substitutions also graft the domain's NOT NULL / DEFAULT / CHECK
+        onto the column definition so existing constraint machinery
+        enforces them."""
         is_ct = tag == "create table"
         col_checks: dict[str, str] = {}
-        parts = re.split(r"('(?:[^']|'')*')", stmt)
-        for k in range(0, len(parts), 2):
-            seg = parts[k]
+
+        def resolve(seg: str) -> str:
             for dom, spec in self.domains.items():
                 seg = re.sub(
                     rf"(?is)::\s*{re.escape(dom)}\b", f"::{spec['base']}", seg
@@ -2156,9 +2092,11 @@ class GreengageEngine:
                     seg = re.sub(
                         rf"(?is)\b(\w+)\s+{re.escape(dom)}\b", _sub, seg
                     )
-            parts[k] = seg
+            return seg
+
+        stmt = sub_code(stmt, resolve)
         self._pending_domain_checks = col_checks
-        return "".join(parts)
+        return stmt
 
     def _cluster(self, stmt: str):
         """CLUSTER table [USING index] (cluster.c): physically reorder the
@@ -2323,19 +2261,18 @@ class GreengageEngine:
                 f"DEFAULT nextval('{seq}')"
             )
 
-        parts = re.split(r"('(?:[^']|'')*')", stmt)
-        for k in range(0, len(parts), 2):
-            parts[k] = re.sub(
-                r"(?is)\b(\w+)\s+(smallserial|bigserial|serial[248]?)\b",
-                _repl,
-                parts[k],
-            )
+        stmt = sub_code(
+            stmt,
+            lambda seg: re.sub(
+                r"(?is)\b(\w+)\s+(smallserial|bigserial|serial[248]?)\b", _repl, seg
+            ),
+        )
         if created:
             from greengage_spark.operators.sequence import Sequence
 
             for seq in created:
                 self.sequences.create(Sequence(seq), if_not_exists=True)
-        return "".join(parts)
+        return stmt
 
     def _expand_seq_defaults(self, stmt: str) -> str:
         """Surface sequence-backed column DEFAULTs (serial columns,

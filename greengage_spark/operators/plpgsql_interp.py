@@ -46,6 +46,16 @@ from __future__ import annotations
 import math
 import re
 
+from greengage_spark.dialect.spans import (
+    is_ident,
+    lex,
+    match_close,
+    plain_literal,
+    substitute_names,
+    substitute_params,
+    top_level,
+)
+
 _ITERATION_CAP = 10_000_000  # runaway-loop guard per loop statement
 
 
@@ -150,116 +160,25 @@ class _ListPortal:
 
 
 # ---------------------------------------------------------------------------
-# tokenizer
+# tokenizer: the front end's lexer, dialect/spans.py (pl_scanner.c likewise
+# calls the core scan.l lexer instead of defining its own)
 # ---------------------------------------------------------------------------
-
-_TOKEN_RE = re.compile(
-    r"""
-      (?P<ws>\s+|--[^\n]*)
-    | (?P<str>'(?:[^']|'')*')
-    | (?P<num>\d+\.\d+(?:[eE][+-]?\d+)?|\d+(?:[eE][+-]?\d+)?)
-    | (?P<dots>\.\.)
-    | (?P<param>\$\d+)
-    | (?P<qident>"[^"]*")
-    | (?P<ident>[a-zA-Z_][\w$]*)
-    | (?P<op>:=|<>|!=|<=|>=|\|\||::|[-+*/%<>=(),;\[\].])
-    """,
-    re.X,
-)
-
-
-_DOLLAR_TAG_RE = re.compile(r"\$([A-Za-z_][\w]*)?\$")
-
-
-_ESTRING_ESC = {
-    "b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t",
-    "\\": "\\", "'": "'",
-}
-
-
-def _scan_estring(src: str, pos: int) -> tuple[str, int]:
-    """Scan an E'...' literal starting at the quote (scan.l xe rules):
-    backslash escapes incl. octal \\nnn and hex \\xHH; returns the
-    decoded value and the position after the closing quote."""
-    j, buf = pos + 1, []
-    n = len(src)
-    while j < n:
-        c = src[j]
-        if c == "'":
-            if src[j + 1 : j + 2] == "'":
-                buf.append("'")
-                j += 2
-                continue
-            return "".join(buf), j + 1
-        if c == "\\" and j + 1 < n:
-            nxt = src[j + 1]
-            if nxt in _ESTRING_ESC:
-                buf.append(_ESTRING_ESC[nxt])
-                j += 2
-                continue
-            mo = re.match(r"[0-7]{1,3}", src[j + 1 :])
-            if mo:
-                buf.append(chr(int(mo.group(0), 8)))
-                j += 1 + len(mo.group(0))
-                continue
-            mx = re.match(r"x([0-9A-Fa-f]{1,2})", src[j + 1 :])
-            if mx:
-                buf.append(chr(int(mx.group(1), 16)))
-                j += 1 + len(mx.group(0))
-                continue
-            mu = re.match(r"u([0-9A-Fa-f]{4})|U([0-9A-Fa-f]{8})", src[j + 1 :])
-            if mu:
-                buf.append(chr(int(mu.group(1) or mu.group(2), 16)))
-                j += 1 + len(mu.group(0))
-                continue
-            buf.append(nxt)  # unknown escape: the char itself (scan.l)
-            j += 2
-            continue
-        buf.append(c)
-        j += 1
-    raise NotImplementedError("plpgsql: unterminated E'' string")
 
 
 def _tokenize(src: str) -> list[str]:
-    src = re.sub(r"/\*.*?\*/", " ", src, flags=re.DOTALL)
+    """Tokens of a PL/pgSQL body, comments dropped; E'' and dollar strings
+    become plain ''-doubled literals, so every consumer sees one string
+    form."""
     toks: list[str] = []
-    pos = 0
-    while pos < len(src):
-        if src[pos] in "eE" and src[pos + 1 : pos + 2] == "'":
-            # E'...' escape string: decode now, emit a plain ''-doubled
-            # literal so every downstream consumer sees one string token
-            val, pos = _scan_estring(src, pos + 1)
-            toks.append("'" + val.replace("'", "''") + "'")
-            continue
-        dm = _DOLLAR_TAG_RE.match(src, pos)
-        if dm and not re.match(r"\$\d", src[pos:]):
-            # $tag$ ... $tag$ dollar quoting (scan.l xdolq): normalize
-            # to a plain ''-doubled literal token so every downstream
-            # consumer sees one string
-            tag = dm.group(0)
-            end = src.find(tag, dm.end())
-            if end < 0:
-                raise NotImplementedError(
-                    f"plpgsql: unterminated dollar quote {tag}"
-                )
-            body = src[dm.end() : end]
-            toks.append("'" + body.replace("'", "''") + "'")
-            pos = end + len(tag)
-            continue
-        m = _TOKEN_RE.match(src, pos)
-        if not m:
+    for m in lex(src):
+        t = m.group(0)
+        if m.lastgroup == "other" and t in "'\"$":
             raise NotImplementedError(
-                f"plpgsql: cannot tokenize at {src[pos:pos + 20]!r}"
+                f"plpgsql: unterminated quote at {src[m.start():m.start() + 20]!r}"
             )
-        pos = m.end()
-        if m.lastgroup == "ws":
-            continue
-        toks.append(m.group(0))
+        if m.lastgroup != "comment":
+            toks.append(plain_literal(t))
     return toks
-
-
-def _is_ident(t: str) -> bool:
-    return bool(re.match(r"^[a-zA-Z_]", t))
 
 
 # ---------------------------------------------------------------------------
@@ -693,7 +612,7 @@ class _ExprParser:
 
     def peek_low(self) -> str | None:
         t = self.peek()
-        return t.lower() if t is not None and _is_ident(t) else t
+        return t.lower() if t is not None and is_ident(t) else t
 
     def take(self) -> str:
         t = self.toks[self.pos]
@@ -707,7 +626,7 @@ class _ExprParser:
 
     def expect(self, tok: str) -> None:
         t = self.take()
-        if (t.lower() if _is_ident(t) else t) != tok:
+        if (t.lower() if is_ident(t) else t) != tok:
             raise NotImplementedError(
                 f"plpgsql expression: expected {tok!r}, got {t!r}"
             )
@@ -776,7 +695,7 @@ class _ExprParser:
         neg_in = False
         if self.peek_low() == "not" and (
             self.pos + 1 < len(self.toks)
-            and _is_ident(self.toks[self.pos + 1])
+            and is_ident(self.toks[self.pos + 1])
             and self.toks[self.pos + 1].lower() == "in"
         ):
             self.take()
@@ -862,12 +781,7 @@ class _ExprParser:
             tname = "varchar"
         # swallow precision/length parens and [] array suffix
         if self.peek() == "(":
-            depth = 0
-            while True:
-                tk = self.take()
-                depth += tk == "(" and 1 or (tk == ")" and -1 or 0)
-                if depth == 0:
-                    break
+            self.pos = match_close(self.toks, self.pos) + 1
         if tname in ("timestamp", "time") and self.peek_low() in (
             "with", "without"
         ):
@@ -927,7 +841,7 @@ class _ExprParser:
             elif (
                 t == "."
                 and self.pos + 1 < len(self.toks)
-                and _is_ident(self.toks[self.pos + 1])
+                and is_ident(self.toks[self.pos + 1])
             ):
                 self.take()
                 name = self.take().lower()
@@ -941,23 +855,15 @@ class _ExprParser:
             raise NotImplementedError("plpgsql: unexpected end of expression")
         if t == "(":
             self.take()
-            if self.peek() is not None and _is_ident(self.peek()) \
+            if self.peek() is not None and is_ident(self.peek()) \
                     and self.peek().lower() in ("select", "with"):
                 # scalar subquery (pl_exec.c evaluates every expression
                 # through SPI, so (SELECT ...) just works in PG) — via
                 # the SQL hook driver-side; in the row tier _run_sql
                 # falls back to the FROM-less simple-expression
                 # evaluator and anything else raises loudly at run time
-                depth, j = 1, self.pos
-                while j < len(self.toks):
-                    if self.toks[j] == "(":
-                        depth += 1
-                    elif self.toks[j] == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
-                if depth:
+                j = next((k for k, t in top_level(self.toks, self.pos) if t == ")"), None)
+                if j is None:
                     raise NotImplementedError(
                         "plpgsql: unterminated scalar subquery"
                     )
@@ -1039,7 +945,7 @@ class _ExprParser:
             self.expect("]")
             return lambda env, _it=items: [f(env) for f in _it]
         if (
-            _is_ident(t)
+            is_ident(t)
             and self.peek_at_next_is_paren()
             and t.lower() in (
                 "substring", "trim", "position", "overlay", "extract"
@@ -1056,7 +962,7 @@ class _ExprParser:
                 return sp
             self.pos = save
         if (
-            _is_ident(t)
+            is_ident(t)
             and t.lower() in ("date", "timestamp", "timestamptz")
             and self.pos + 1 < len(self.toks)
             and self.toks[self.pos + 1].startswith(chr(39))
@@ -1067,7 +973,7 @@ class _ExprParser:
             lit = self.take()
             val = cast(lit[1:-1].replace(chr(39) * 2, chr(39)))
             return lambda env, _v=val: _v
-        if _is_ident(t) and t.lower() == "cast" and self.peek_at_next_is_paren():
+        if is_ident(t) and t.lower() == "cast" and self.peek_at_next_is_paren():
             # CAST(x AS type) — same machinery as ::type (gram.y Typecast)
             self.take()
             self.take()  # (
@@ -1076,7 +982,7 @@ class _ExprParser:
             e = self._finish_cast(e)
             self.expect(")")
             return e
-        if _is_ident(t):
+        if is_ident(t):
             self.take()
             if self.peek() == "(":
                 self.take()
@@ -1368,7 +1274,7 @@ class _StmtParser:
         if i >= len(self.toks):
             return None
         t = self.toks[i]
-        return t.lower() if _is_ident(t) else t
+        return t.lower() if is_ident(t) else t
 
     def take(self) -> str:
         t = self.toks[self.pos]
@@ -1378,7 +1284,7 @@ class _StmtParser:
     def expect(self, *words: str) -> None:
         for w in words:
             t = self.take()
-            if (t.lower() if _is_ident(t) else t) != w:
+            if (t.lower() if is_ident(t) else t) != w:
                 raise NotImplementedError(
                     f"plpgsql: expected {w!r}, got {t!r}"
                 )
@@ -1396,18 +1302,12 @@ class _StmtParser:
     # ---- block & statements ----
 
     def _peek_label(self) -> bool:
-        return (
-            self.peek() == "<"
-            and self.peek(1) == "<"
-            and self.peek(3) == ">"
-            and self.peek(4) == ">"
-        )
+        return self.peek() == "<<" and self.peek(2) == ">>"
 
     def _take_label(self) -> str:
         self.take()
-        self.take()
         label = self.take().lower()
-        self.expect(">", ">")
+        self.expect(">>")
         return label
 
     def _end_label(self, label, what: str) -> None:
@@ -1418,7 +1318,7 @@ class _StmtParser:
         t = self.peek()
         if (
             t is not None
-            and _is_ident(t)
+            and is_ident(t)
             and (self.peek(1) is None or self.peek(1) == ";")
         ):
             got = self.take().lower()
@@ -1514,20 +1414,16 @@ class _StmtParser:
                 self.take()
                 while True:
                     params.append(self.take().lower())
-                    depth = 0
-                    while True:  # skip the declared type tokens
-                        t = self.peek()
-                        if t is None:
-                            raise NotImplementedError(
-                                "plpgsql: unterminated cursor argument list"
-                            )
-                        if depth == 0 and t in (",", ")"):
-                            break
-                        if t == "(":
-                            depth += 1
-                        elif t == ")":
-                            depth -= 1
-                        self.take()
+                    # skip the declared type to the next depth-0 , or )
+                    end = next(
+                        (k for k, t in top_level(self.toks, self.pos) if t in (",", ")")),
+                        None,
+                    )
+                    if end is None:
+                        raise NotImplementedError(
+                            "plpgsql: unterminated cursor argument list"
+                        )
+                    self.pos = end
                     if self.take() == ")":
                         break
             if self.peek_low() not in ("for", "is"):
@@ -1772,7 +1668,7 @@ class _StmtParser:
             label = None
             if (
                 self.peek() is not None
-                and _is_ident(self.peek())
+                and is_ident(self.peek())
                 and self.peek_low() != "when"
             ):
                 label = self.take().lower()
@@ -1859,20 +1755,9 @@ class _StmtParser:
     def _rhs_has_from(self) -> bool:
         """Lookahead: a TOP-LEVEL FROM before the ';' (extract/substring/
         trim keep their FROM inside parens, so depth-0 only)."""
-        depth, i = 0, self.pos
-        while i < len(self.toks):
-            t = self.toks[i]
-            low = t.lower() if _is_ident(t) else t
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0:
-                if low == ";":
-                    return False
-                if low == "from":
-                    return True
-            i += 1
+        for _, t in top_level(self.toks, self.pos):
+            if t == ";" or t.lower() == "from":
+                return t != ";"
         return False
 
     def _case_stmt(self):
@@ -1926,20 +1811,13 @@ class _StmtParser:
         """Collect raw statement text up to a top-level stop token (the
         token itself is NOT consumed).  Strings are single tokens, so
         space-rejoin round-trips the SQL."""
-        out: list[str] = []
-        depth = 0
-        while self.pos < len(self.toks):
-            t = self.toks[self.pos]
-            low = t.lower() if _is_ident(t) else t
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            if depth == 0 and low in stops:
-                return " ".join(out), low
-            out.append(t)
-            self.pos += 1
-        return " ".join(out), None
+        start = self.pos
+        for k, t in top_level(self.toks, start):
+            if t.lower() in stops:
+                self.pos = k
+                return " ".join(self.toks[start:k]), t.lower()
+        self.pos = len(self.toks)
+        return " ".join(self.toks[start:]), None
 
     def _into_vars(self) -> tuple[list[tuple], bool]:
         """Parse [STRICT] var[, var...] after INTO; each target carries
@@ -2043,7 +1921,7 @@ class _StmtParser:
                     argname = None
                     if (
                         self.peek() is not None
-                        and _is_ident(self.peek())
+                        and is_ident(self.peek())
                         and self.peek_low(1) == ":="
                     ):
                         argname = self.take().lower()
@@ -2078,18 +1956,12 @@ class _StmtParser:
         FROM/IN keyword (pl_gram.y read_sql_expression2 analog) — a
         plain self.expr() would swallow IN as the membership operator
         in ``move relative 2 in c``."""
-        out, depth = [], 0
-        while self.pos < len(self.toks):
-            t = self.toks[self.pos]
-            low = t.lower() if _is_ident(t) else t
-            if depth == 0 and low in ("from", "in", ";"):
-                break
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            out.append(t)
-            self.pos += 1
+        start = self.pos
+        self.pos = next(
+            (k for k, t in top_level(self.toks, start) if t.lower() in ("from", "in", ";")),
+            len(self.toks),
+        )
+        out = self.toks[start : self.pos]
         p = _ExprParser(out, 0)
         e = p.parse()
         if p.pos != len(out):
@@ -2213,7 +2085,7 @@ class _StmtParser:
                     argname = None
                     if (
                         self.peek() is not None
-                        and _is_ident(self.peek())
+                        and is_ident(self.peek())
                         and self.peek_low(1) == ":="
                     ):
                         argname = self.take().lower()
@@ -2341,7 +2213,7 @@ class _StmtParser:
                 pass  # bare RAISE ... USING opts
             else:
                 ft = self.take()
-                if _is_ident(ft) and ft.lower() == "sqlstate" \
+                if is_ident(ft) and ft.lower() == "sqlstate" \
                         and self.peek() is not None \
                         and self.peek().startswith("'"):
                     # RAISE SQLSTATE 'xxxxx' [USING ...] (pl_gram.y)
@@ -2529,8 +2401,7 @@ def _exec_stmt(s, env, label=None):  # noqa: C901 - pl_exec.c dispatch
             raise PlPgSQLError(
                 "null_value_not_allowed", "EXECUTE of a null query string"
             )
-        for i, ue in enumerate(s[2], 1):
-            sql = _substitute_dollar_param(sql, i, _sql_literal(ue(env)))
+        sql = _bind_using(sql, [ue(env) for ue in s[2]])
         rows, _rc = _run_sql(env, sql)
         env.setdefault("__setof__", []).extend(rows)
         env["found"] = len(rows) > 0
@@ -2618,8 +2489,7 @@ def _exec_stmt(s, env, label=None):  # noqa: C901 - pl_exec.c dispatch
             raise PlPgSQLError(
                 "null_value_not_allowed", "EXECUTE of a null query string"
             )
-        for i, ue in enumerate(using, 1):
-            sql = _substitute_dollar_param(sql, i, _sql_literal(ue(env)))
+        sql = _bind_using(sql, [ue(env) for ue in using])
         # EXECUTE updates GET DIAGNOSTICS row_count but NOT FOUND
         # (pl_exec.c exec_stmt_dynexecute)
         rows, _rc = _run_sql(env, sql)
@@ -2640,8 +2510,7 @@ def _exec_stmt(s, env, label=None):  # noqa: C901 - pl_exec.c dispatch
             raise PlPgSQLError(
                 "null_value_not_allowed", "EXECUTE of a null query string"
             )
-        for i, ue in enumerate(using, 1):
-            sql = _substitute_dollar_param(sql, i, _sql_literal(ue(env)))
+        sql = _bind_using(sql, [ue(env) for ue in using])
         rows, _rc = _run_sql(env, sql)
         if len(s) > 5 and s[5]:
             rows = [_scalar_row(r, var) for r in rows]
@@ -2923,7 +2792,7 @@ def _eval_simple_select(sql: str, env) -> list:
                 alias = p.take().lower()
             elif (
                 p.peek() is not None
-                and _is_ident(p.peek())
+                and is_ident(p.peek())
                 and p.peek_low() != "from"
             ):
                 alias = p.take().lower()
@@ -3008,26 +2877,14 @@ def _exec_open(s, env):
             raise PlPgSQLError(
                 "null_value_not_allowed", "EXECUTE of a null query string"
             )
-        using = [e(env) for e in s[3]]
-        for i, v in enumerate(using, 1):
-            # USING params substitute as literals ($n → value), outside
-            # string spans — PG binds them as executor params
-            sql = _substitute_dollar_param(sql, i, _sql_literal(v))
+        sql = _bind_using(sql, [e(env) for e in s[3]])
     cur.portal = _make_portal(env, sql)
 
 
-_STR_SPAN_RE = re.compile(r"'(?:[^']|'')*'")
-
-
-def _substitute_dollar_param(sql: str, n: int, lit: str) -> str:
-    spans = [m.span() for m in _STR_SPAN_RE.finditer(sql)]
-
-    def repl(m: re.Match) -> str:
-        if any(a <= m.start() < b for a, b in spans):
-            return m.group(0)
-        return lit
-
-    return re.sub(rf"\${n}\b", repl, sql)
+def _bind_using(sql: str, values: list) -> str:
+    """EXECUTE ... USING values substitute as literals for $n — PG binds
+    them as executor params; same values."""
+    return substitute_params(sql, [_sql_literal(v) for v in values]) if values else sql
 
 
 def _assign_into(rows, vars_, strict, env):
@@ -3060,7 +2917,7 @@ def _assign_into(rows, vars_, strict, env):
 def _interpolate(sql: str, env) -> str:
     """Substitute plpgsql variables referenced in a SQL statement with
     literals (PG binds them as executor params — same values).  Scalar
-    env entries only; quote-aware, one pass."""
+    env entries and record fields only; one pass over the lexemes."""
     # quoted block-label qualification ("outer".rec.field,
     # pl_qual_names): PG resolves it against the LABELED block's
     # variable, which a flat per-call env cannot represent when an
@@ -3082,61 +2939,15 @@ def _interpolate(sql: str, env) -> str:
                     'flat per-call env'
                 )
     mapping = {}
-    rec_map = {}
     for k, v in env.items():
         if k.startswith("__") or k.startswith("$"):
             continue
         if v is None or isinstance(v, (bool, int, float, str)):
             mapping[k] = _sql_literal(v)
         elif hasattr(v, "__fields__") or hasattr(v, "keys"):
-            rec_map[k] = v  # RECORD vars: rec.field references inline
-    if not mapping and not rec_map:
-        return sql
-    ident_re = re.compile(r"[A-Za-z_]\w*")
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        m = ident_re.match(sql, i)
-        if m:
-            word = m.group(0)
-            prev = sql[i - 1] if i > 0 else ""
-            low = word.lower()
-            if prev != "." and low in rec_map:
-                # rec.field → the field's literal value
-                j = m.end()
-                while j < n and sql[j] in " \t":
-                    j += 1
-                if j < n and sql[j] == ".":
-                    j += 1
-                    while j < n and sql[j] in " \t":
-                        j += 1
-                    fm = ident_re.match(sql, j)
-                    if fm:
-                        out.append(
-                            _sql_literal(_field(rec_map[low], fm.group(0).lower()))
-                        )
-                        i = fm.end()
-                        continue
-            repl = mapping.get(low)
-            out.append(repl if repl is not None and prev != "." else word)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+            # RECORD vars: rec.field references inline the field's value
+            mapping[k] = lambda f, _r=v: _sql_literal(_field(_r, f))
+    return substitute_names(sql, mapping)
 
 
 def _sql_literal(v) -> str:
@@ -3409,7 +3220,7 @@ def compile_simple_sql_function(body: str, arg_names: list[str]):
         )
     toks = _tokenize(m.group(1))
     if any(
-        _is_ident(t) and t.lower() in ("from", "where", "union", "group")
+        is_ident(t) and t.lower() in ("from", "where", "union", "group")
         for t in toks
     ):
         raise NotImplementedError(

@@ -25,7 +25,7 @@ import re
 
 from pyspark.sql import DataFrame
 
-from greengage_spark.dialect.spans import lex, split_top_level
+from greengage_spark.dialect.spans import lex, split_top_level, substitute_params
 
 
 class PreparedStatement:
@@ -186,25 +186,6 @@ class Cursor:
         return []
 
 
-_PARAM = re.compile(r"\$(\d+)")
-
-
-def _substitute_params(body: str, args: list[str]) -> str:
-    """Replace each $n parameter — not one inside a string literal, quoted
-    identifier or comment — with the argument literal text."""
-    parts, pos = [], 0
-    for m in lex(body):
-        dollar = m.start() - 1
-        if m.group(0).isdigit() and body[dollar : m.start()] == "$":
-            idx = int(m.group(0))
-            if not 1 <= idx <= len(args):
-                raise ValueError(f"there is no parameter ${idx}")
-            parts += [body[pos:dollar], args[idx - 1]]
-            pos = m.end()
-    parts.append(body[pos:])
-    return "".join(parts)
-
-
 def prepare(engine, stmt: str):
     m = re.match(
         r"(?is)^prepare\s+([\w.]+)\s*(?:\(([^)]*)\))?\s+as\s+(.+)$", stmt
@@ -215,7 +196,9 @@ def prepare(engine, stmt: str):
     if name in engine.prepared:
         raise ValueError(f'prepared statement "{name}" already exists')
     body = m.group(3).strip()
-    n_params = max((int(p) for p in _PARAM.findall(body)), default=0)
+    n_params = max(
+        (int(m.group(0)[1:]) for m in lex(body) if m.lastgroup == "param"), default=0
+    )
     engine.prepared[name] = PreparedStatement(name, body, n_params)
     return None
 
@@ -234,7 +217,7 @@ def execute(engine, stmt: str):
             f"wrong number of parameters for prepared statement "
             f'"{name}": expected {ps.n_params}, got {len(args)}'
         )
-    return engine.execute(_substitute_params(ps.body, args))
+    return engine.execute(substitute_params(ps.body, args))
 
 
 def deallocate(engine, stmt: str):

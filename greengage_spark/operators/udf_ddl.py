@@ -33,6 +33,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from greengage_spark.dialect.spans import (
+    close_of,
+    find_top_level,
+    lex,
+    split_top_level,
+    substitute_names,
+    substitute_params,
+)
+
 # PG typename → Spark SQL type string (subset of transpiler._TYPE_MAP;
 # kept here so this module has no import cycle with the transpiler)
 _TYPES = {
@@ -270,7 +279,7 @@ def _lower_setof_plpgsql_inline(body: str, fname: str):
     queries = []
     dyn = None
     colname = fname.rsplit(".", 1)[-1]
-    sts = _split_stmts(mb.group(1))
+    sts = split_top_level(mb.group(1), ";")
     j = 0
     while j < len(sts):
         st = sts[j]
@@ -369,79 +378,6 @@ def _lower_setof_plpgsql_inline(body: str, fname: str):
     return body, None
 
 
-def _substitute_positional(expr: str, arg_names: list[str]) -> str:
-    for i, n in enumerate(arg_names, 1):
-        expr = re.sub(rf"\${i}\b", n, expr)
-    return expr
-
-
-def _replace_vars(e: str, mapping: dict[str, str]) -> str:
-    """Replace identifier occurrences of mapping keys (case-insensitive)
-    in ONE pass: replacement text is never re-scanned, string literals
-    are skipped, and ``.field`` references are left alone.  Sequential
-    re.sub per variable corrupts emitted expressions whose text contains
-    other variables' names (struct keys, field refs)."""
-    if not mapping:
-        return e
-    lmap = {k.lower(): v for k, v in mapping.items()}
-    ident_re = re.compile(r"[A-Za-z_]\w*")
-    out: list[str] = []
-    i, n = 0, len(e)
-    while i < n:
-        ch = e[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if e[j] == "'":
-                    if j + 1 < n and e[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(e[i : j + 1])
-            i = j + 1
-            continue
-        m = ident_re.match(e, i)
-        if m:
-            word = m.group(0)
-            prev = e[i - 1] if i > 0 else ""
-            repl = lmap.get(word.lower())
-            out.append(repl if repl is not None and prev != "." else word)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _split_stmts(s: str) -> list[str]:
-    """Split a statement list on top-level ';' (quote- and paren-aware)."""
-    out: list[str] = []
-    buf: list[str] = []
-    depth, q = 0, None
-    for ch in s:
-        if q:
-            buf.append(ch)
-            if ch == q:
-                q = None
-            continue
-        if ch in ("'", '"'):
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == ";" and depth == 0:
-            if "".join(buf).strip():
-                out.append("".join(buf).strip())
-            buf = []
-            continue
-        buf.append(ch)
-    if "".join(buf).strip():
-        out.append("".join(buf).strip())
-    return out
-
-
 def plpgsql_to_expr(body: str) -> str:
     """Lower a restricted PL/pgSQL body (src/pl/plpgsql/ exec_stmt_return
     / exec_stmt_if / exec_stmt_assign) to ONE SQL expression so the
@@ -485,10 +421,10 @@ def plpgsql_to_expr(body: str) -> str:
         )
 
     def subst(e: str) -> str:
-        return _replace_vars(e, env)
+        return substitute_names(e, env)
 
     if md:
-        for d in _split_stmts(md.group(1)):
+        for d in split_top_level(md.group(1), ";"):
             ma = re.match(r"(?is)^(\w+)\s+alias\s+for\s+(\$\d+)$", d)
             if ma:
                 aliases[ma.group(1)] = ma.group(2)
@@ -597,7 +533,7 @@ def plpgsql_to_expr(body: str) -> str:
                 if k.lower() not in carried and k.lower() != loopvar
             }
             mapping.update({v: f"({val})" for v, val in local.items()})
-            return _replace_vars(e, mapping)
+            return substitute_names(e, mapping)
 
         for v, e in assigns:
             local[v] = f"CAST(({subst_body(e)}) AS {decls[v]})"
@@ -635,7 +571,7 @@ def plpgsql_to_expr(body: str) -> str:
             _set_var(v, fold if len(carried) == 1 else f"({fold}).{v}")
         return k
 
-    stmts = _split_stmts(inner)
+    stmts = split_top_level(inner, ";")
     k = 0
     while k < len(stmts):
         st = stmts[k]
@@ -697,34 +633,6 @@ def plpgsql_to_expr(body: str) -> str:
     )
 
 
-def _split_call_args(s: str) -> list[str]:
-    """Split a call's argument text on top-level commas."""
-    parts: list[str] = []
-    buf: list[str] = []
-    depth, q = 0, None
-    for ch in s:
-        if q:
-            buf.append(ch)
-            if ch == q:
-                q = None
-            continue
-        if ch in ("'", '"'):
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-            continue
-        buf.append(ch)
-    tail = "".join(buf).strip()
-    if tail:
-        parts.append(tail)
-    return parts
-
-
 _FROM_KEYWORDS = frozenset(
     "on using where group order limit offset inner left right full cross "
     "join union intersect except having window natural lateral".split()
@@ -732,35 +640,11 @@ _FROM_KEYWORDS = frozenset(
 
 
 def _split_using(rest: str) -> tuple[str, list[str]]:
-    """Split 'expr [USING a, b, ...]' at the top-level USING keyword
-    (quote- and paren-aware)."""
-    depth, i, n, q = 0, 0, len(rest), None
-    while i < n:
-        ch = rest[i]
-        if q:
-            if ch == q:
-                if q == "'" and i + 1 < n and rest[i + 1] == "'":
-                    i += 2
-                    continue
-                q = None
-        elif ch in ("'", '"'):
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and rest[i : i + 5].lower() == "using":
-            before = rest[i - 1] if i > 0 else " "
-            after = rest[i + 5] if i + 5 < n else " "
-            if not (before.isalnum() or before == "_") and not (
-                after.isalnum() or after == "_"
-            ):
-                return (
-                    rest[:i].strip(),
-                    [a.strip() for a in _split_call_args(rest[i + 5 :])],
-                )
-        i += 1
-    return rest.strip(), []
+    """Split 'expr [USING a, b, ...]' at the top-level USING keyword."""
+    k = find_top_level(rest, "using")
+    if k < 0:
+        return rest.strip(), []
+    return rest[:k].strip(), split_top_level(rest[k + 5 :])
 
 
 def _eval_const_expr(text: str):
@@ -790,26 +674,18 @@ def _resolve_dyn_query(fd, args: list[str]) -> str:
     from greengage_spark.operators import plpgsql_interp as P
 
     expr_text, using_texts = fd.dyn_query
+    bound = [f"({a})" for a in args]
 
     def subst(t: str) -> str:
-        # quote-aware: $n / names inside the quoted query text are DATA
-        # ($n there belongs to USING, substituted after evaluation)
-        for j, a in enumerate(args, 1):
-            t = P._substitute_dollar_param(t, j, f"({a})")
-        mapping = {
-            an: f"({args[j]})"
-            for j, an in enumerate(fd.arg_names)
-            if j < len(args)
-        }
-        return _replace_vars(t, mapping)
+        # $n / names inside the quoted query text are DATA ($n there
+        # belongs to USING, substituted after evaluation)
+        return substitute_names(substitute_params(t, bound), dict(zip(fd.arg_names, bound)))
 
     try:
         sql = _eval_const_expr(subst(expr_text))
         if sql is None:
             raise ValueError("EXECUTE of a null query string")
-        for i, ut in enumerate(using_texts, 1):
-            v = _eval_const_expr(subst(ut))
-            sql = P._substitute_dollar_param(sql, i, P._sql_literal(v))
+        sql = P._bind_using(sql, [_eval_const_expr(subst(ut)) for ut in using_texts])
     except NotImplementedError:
         raise
     except Exception as e:
@@ -843,20 +719,8 @@ def expand_table_macros(sql: str, functions: dict, engine=None) -> str:
             )
             if not m:
                 continue
-            i, depth, q = m.end(), 1, None
-            while i < len(sql) and depth:
-                ch = sql[i]
-                if q:
-                    if ch == q:
-                        q = None
-                elif ch in ("'", '"'):
-                    q = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
-            args = _split_call_args(sql[m.end() : i - 1])
+            i = close_of(sql, m.end() - 1) + 1
+            args = split_top_level(sql[m.end() : i - 1])
             rest = sql[i:]
             alias, collist = None, ""
             mal = re.match(r"(?is)^\s+(?:as\s+)?(\w+)(\s*\(\s*\w+(?:\s*,\s*\w+)*\s*\))?", rest)
@@ -890,14 +754,10 @@ def expand_table_macros(sql: str, functions: dict, engine=None) -> str:
             elif getattr(fd, "dyn_query", None):
                 body = _resolve_dyn_query(fd, args)
             else:
-                body = fd.body
-                for j, a in enumerate(args, 1):
-                    body = re.sub(rf"\${j}\b", f"({a})", body)
-                for j, an in enumerate(fd.arg_names):
-                    if j < len(args):
-                        body = re.sub(
-                            rf"(?i)\b{re.escape(an)}\b", f"({args[j]})", body
-                        )
+                bound = [f"({a})" for a in args]
+                body = substitute_names(
+                    substitute_params(fd.body, bound), dict(zip(fd.arg_names, bound))
+                )
             # PG function-in-FROM calls are implicitly LATERAL
             # (ParseFuncOrColumn/transformRangeFunction); Spark needs
             # the keyword for correlated references to prior FROM items
@@ -1114,7 +974,7 @@ def register_function(
                     "LANGUAGE sql body must be a single SELECT expr"
                 )
             expr = msel.group(1).strip()
-        expr = _substitute_positional(expr, fd.arg_names)
+        expr = substitute_params(expr, fd.arg_names)
         args = ", ".join(
             f"{n} {t}" for n, t in zip(fd.arg_names, fd.arg_types)
         )
@@ -1167,17 +1027,12 @@ _CREATE_AGG = re.compile(
 
 
 def _paren_groups(s: str) -> list[str]:
-    """Split trailing text into its top-level (...) groups."""
-    groups, depth, start = [], 0, -1
-    for i, ch in enumerate(s):
-        if ch == "(":
-            if depth == 0:
-                start = i
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                groups.append(s[start + 1 : i])
+    """The contents of each top-level (...) group of s."""
+    groups, end = [], -1
+    for m in lex(s):
+        if m.start() > end and m.group(0) == "(":
+            end = close_of(s, m.start())
+            groups.append(s[m.end() : end])
     return groups
 
 

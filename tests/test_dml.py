@@ -344,3 +344,40 @@ class TestStatementLexing:
         eng.execute('DELETE FROM lx USING lk AS "k(" WHERE lx.id = "k(".id')
         got = sorted(r.id for r in eng.execute("SELECT id FROM lx").collect())
         assert got == [1, 3]
+
+    @pytest.mark.parametrize(
+        "stmts, query, want",
+        [
+            (
+                ["CREATE TABLE tt (v text)",
+                 "DO $$ BEGIN INSERT INTO tt VALUES ('a /* b */ c'); END $$"],
+                "SELECT v FROM tt",
+                (["v"], [("a /* b */ c",)]),
+            ),
+            (
+                ["CREATE TABLE tt (v text)", "INSERT INTO tt VALUES ('a'), ('b')",
+                 "DO $$ BEGIN DELETE FROM tt WHERE v ~ 'a'; END $$"],
+                "SELECT v FROM tt",
+                (["v"], [("b",)]),
+            ),
+            (
+                ["CREATE FUNCTION cost(a int) RETURNS text AS "
+                 "$$ SELECT 'cost $1: ' || $1::text $$ LANGUAGE sql"],
+                "SELECT cost(5) AS c",
+                (["c"], [("cost $1: 5",)]),
+            ),
+            ([], 'SELECT 1 AS "public.x"', (["public.x"], [(1,)])),
+            ([], "SELECT $$it's$$ AS s", (["s"], [("it's",)])),
+            ([], "SELECT café FROM (SELECT 1 AS café) s", (["café"], [(1,)])),
+        ],
+        ids=[
+            "do_comment_inside_literal", "do_regex_operator",
+            "sql_function_param_inside_literal", "public_inside_quoted_ident",
+            "dollar_string", "non_ascii_identifier",
+        ],
+    )
+    def test_literals_and_identifiers_lex_as_scan_l(self, eng, stmts, query, want):
+        for stmt in stmts:
+            eng.execute(stmt)
+        df = eng.execute(query)
+        assert (df.columns, [tuple(r) for r in df.collect()]) == want

@@ -298,6 +298,12 @@ class TestRunScript:
         assert split_statements("SELECT $tag$ a; b $tag$") == [
             "SELECT $tag$ a; b $tag$"
         ]
+        assert split_statements("SELECT 1 /* a; b */ + 1; SELECT 2") == [
+            "SELECT 1 /* a; b */ + 1", "SELECT 2"
+        ]
+        assert split_statements("SELECT E'it\\'s;x'; SELECT 2") == [
+            "SELECT E'it\\'s;x'", "SELECT 2"
+        ]
 
 
 class TestDoBlocksAndRejections:

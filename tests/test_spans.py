@@ -10,9 +10,12 @@ from greengage_spark.dialect.spans import (
     match_open,
     operand_end,
     operand_start,
+    plain_literal,
     rewrite_calls,
     split_top,
     split_top_level,
+    substitute_names,
+    substitute_params,
     tokenize,
     top_level,
 )
@@ -87,6 +90,32 @@ def test_text_level_skips_strings_comments_and_quoted_identifiers():
     assert [m.lastgroup for m in lex("x1 -- c\n 'a' 2")] == [
         "ident", "comment", "string", "number",
     ]
+    s = "f($q$ ) ', $q$, E'\\'', b) tail"
+    assert s[close_of(s, 1) :] == ") tail"
+    assert split_top_level(s[2 : close_of(s, 1)]) == ["$q$ ) ', $q$", "E'\\''", "b"]
+
+
+def test_lexeme_kinds():
+    kinds = [(m.lastgroup, m.group(0)) for m in lex("$1 $$a$b$$ café:=1..10")]
+    assert kinds == [
+        ("param", "$1"), ("string", "$$a$b$$"), ("ident", "café"), ("op", ":="),
+        ("number", "1"), ("op", ".."), ("number", "10"),
+    ]
+    assert tokenize("SELECT naïve_ß, x1é") == ["SELECT", "naïve_ß", ",", "x1é"]
+    assert plain_literal("$t$it's$t$") == plain_literal("E'it\\'s'") == "'it''s'"
+    assert plain_literal(r"E'\x41\X41\101\u0041\q'") == "'AX41AAq'"
+
+
+def test_substitution_skips_literals_and_field_names():
+    s = "SELECT $1, '$1', \"$2\" -- $2\n FROM t WHERE a.x = x AND 'x' <> y"
+    assert substitute_params(s, ["7", "8"]) == s.replace("$1,", "7,", 1)
+    assert substitute_names(s, {"X": "(5)", "y": "(6)"}) == (
+        s.replace("= x", "= (5)").replace("<> y", "<> (6)")
+    )
+    rec = substitute_names("SELECT r.f, r, r . g", {"r": lambda f: f"<{f}>"})
+    assert rec == "SELECT <f>, r, <g>"
+    with pytest.raises(ValueError, match="no parameter"):
+        substitute_params("SELECT $3", ["1"])
 
 
 @pytest.mark.parametrize(

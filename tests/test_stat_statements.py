@@ -43,11 +43,13 @@ class TestStatStatements:
         # PG numbers constants left to right, whatever their type
         eng.execute("CREATE TABLE s4 (x int8, y text)")
         eng.execute("INSERT INTO s4 VALUES (1,'x')")
+        eng.execute("SELECT $$it's$$ AS s, 2 AS n")  # a dollar string is one constant
         qs = [
             r.query
             for r in eng.execute("SELECT query FROM pg_stat_statements").collect()
         ]
         assert "INSERT INTO s4 VALUES ($1,$2)" in qs
+        assert "SELECT $1 AS s, $2 AS n" in qs
 
     def test_timing_columns_populated(self, eng):
         eng.execute("SELECT 1 AS one").collect()

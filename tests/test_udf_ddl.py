@@ -635,3 +635,175 @@ class TestSetofPerRow:
             seng.execute(
                 "SELECT k, v FROM srf_t, qset(k) AS q(v)"
             ).collect()
+
+
+class TestScalarForTargetReuse:
+    """A declared scalar FOR target binds one column on every loop and
+    SELECT ... INTO, not only the first (pl_exec.c exec_stmt_fors →
+    exec_assign_value)."""
+
+    def test_two_for_loops_same_scalar(self, eng):
+        eng.execute("CREATE TABLE src14 (a int8)")
+        eng.execute("INSERT INTO src14 VALUES (1),(2),(3)")
+        eng.execute("CREATE TABLE out14 (total int8)")
+        eng.execute(
+            "DO $$\n"
+            "DECLARE x int8; total int8 := 0;\n"
+            "BEGIN\n"
+            "  FOR x IN SELECT a FROM src14 LOOP total := total + x; "
+            "END LOOP;\n"
+            "  FOR x IN SELECT a FROM src14 LOOP total := total + x; "
+            "END LOOP;\n"
+            "  INSERT INTO out14 VALUES (total);\n"
+            "END $$"
+        )
+        assert eng.execute("SELECT total FROM out14").collect()[0][0] == 12
+
+    def test_select_into_scalar_after_for(self, eng):
+        eng.execute("CREATE TABLE src15 (a int8)")
+        eng.execute("INSERT INTO src15 VALUES (7),(9),(4)")
+        eng.execute("CREATE TABLE out15 (v int8)")
+        eng.execute(
+            "DO $$\n"
+            "DECLARE x int8; n int8 := 0;\n"
+            "BEGIN\n"
+            "  FOR x IN SELECT a FROM src15 LOOP n := n + 1; END LOOP;\n"
+            "  SELECT max(a) INTO x FROM src15;\n"
+            "  INSERT INTO out15 VALUES (x + n);\n"
+            "END $$"
+        )
+        assert eng.execute("SELECT v FROM out15").collect()[0][0] == 12
+
+    def test_record_target_still_binds_rows(self, eng):
+        # undeclared/record targets keep whole-row binding
+        eng.execute("CREATE TABLE src16 (a int8, b int8)")
+        eng.execute("INSERT INTO src16 VALUES (1, 10), (2, 20)")
+        eng.execute("CREATE TABLE out16 (v int8)")
+        eng.execute(
+            "DO $$\n"
+            "DECLARE r record; acc int8 := 0;\n"
+            "BEGIN\n"
+            "  FOR r IN SELECT a, b FROM src16 LOOP "
+            "acc := acc + r.a + r.b; END LOOP;\n"
+            "  FOR r IN SELECT a, b FROM src16 LOOP "
+            "acc := acc + r.b; END LOOP;\n"
+            "  INSERT INTO out16 VALUES (acc);\n"
+            "END $$"
+        )
+        assert eng.execute("SELECT v FROM out16").collect()[0][0] == 63
+
+
+class TestDropFunctionCompositeReregister:
+    """DROP FUNCTION re-registers the surviving plpgsql functions with
+    their composite-type relabeling."""
+
+    def test_composite_cast_survives_drop_of_other_function(self, eng):
+        eng.execute("CREATE TYPE pair14 AS (lo int8, hi int8)")
+        eng.execute(
+            "CREATE FUNCTION spread14(a int8, b int8) RETURNS int8 "
+            "LANGUAGE plpgsql AS $$\n"
+            "DECLARE r record;\n"
+            "BEGIN\n"
+            "  r := ROW(a, b)::pair14;\n"
+            "  RETURN r.hi - r.lo;\n"
+            "END $$"
+        )
+        eng.execute(
+            "CREATE FUNCTION scrap14() RETURNS int8 LANGUAGE plpgsql "
+            "AS $$ BEGIN RETURN 1; END $$"
+        )
+        assert eng.execute("SELECT spread14(3, 10) AS d").collect()[0].d == 7
+        eng.execute("DROP FUNCTION scrap14")
+        # after the DROP, spread14 was re-registered; composite-type
+        # relabeling must survive the recompile
+        assert eng.execute("SELECT spread14(3, 10) AS d").collect()[0].d == 7
+
+
+class TestPublicSchemaInFunctionBodies:
+    """pg_dump's public. qualifiers inside $$-quoted function bodies are
+    stripped; inside string literals they stay."""
+
+    def test_setof_macro_body_public_ref(self, eng):
+        # pg_dump-shaped table macro: the SETOF body references
+        # public.<table>; it expands via expand_table_macros which never
+        # re-passes through _strip_public_schema
+        eng.execute("CREATE TABLE pubt14 (a int8)")
+        eng.execute("INSERT INTO pubt14 VALUES (41), (2)")
+        eng.execute(
+            "CREATE FUNCTION getpub14() RETURNS SETOF pubt14 "
+            "LANGUAGE sql AS $$ SELECT a FROM public.pubt14 $$"
+        )
+        rows = eng.execute(
+            "SELECT a FROM getpub14() ORDER BY a"
+        ).collect()
+        assert [r.a for r in rows] == [2, 41]
+
+    def test_scalar_sql_body_public_function_call(self, eng):
+        eng.execute(
+            "CREATE FUNCTION base14(x int8) RETURNS int8 LANGUAGE sql "
+            "AS $$ SELECT x * 2 $$"
+        )
+        eng.execute(
+            "CREATE FUNCTION inc14(x int8) RETURNS int8 LANGUAGE sql "
+            "AS $$ SELECT public.base14(x) + 1 $$"
+        )
+        assert eng.execute("SELECT inc14(20) AS v").collect()[0].v == 41
+
+    def test_plpgsql_body_public_ref(self, eng):
+        eng.execute("CREATE TABLE pubt15 (a int8)")
+        eng.execute("INSERT INTO pubt15 VALUES (5)")
+        eng.execute("CREATE TABLE pubout15 (v int8)")
+        eng.execute(
+            "DO $$\n"
+            "DECLARE v int8;\n"
+            "BEGIN\n"
+            "  SELECT max(a) INTO v FROM public.pubt15;\n"
+            "  INSERT INTO public.pubout15 VALUES (v);\n"
+            "END $$"
+        )
+        assert eng.execute("SELECT v FROM pubout15").collect()[0].v == 5
+
+    def test_string_literal_public_untouched(self, eng):
+        eng.execute(
+            "CREATE FUNCTION lit14() RETURNS text LANGUAGE sql AS "
+            "$$ SELECT 'public.kept' $$"
+        )
+        assert (
+            eng.execute("SELECT lit14() AS s").collect()[0].s == "public.kept"
+        )
+
+
+class TestUserFunctionNamesScoping:
+    """The user-function name set is scoped per engine statement (a
+    ContextVar), so two engines in one process do not clobber it."""
+
+    def test_two_engines_do_not_clobber(self, spark, tmp_path):
+        a = GreengageEngine(spark, str(tmp_path / "a"))
+        b = GreengageEngine(spark, str(tmp_path / "b"))
+        a.execute(
+            "CREATE FUNCTION stat(x text) RETURNS int AS "
+            "$$ SELECT length(x) $$ LANGUAGE sql"
+        )
+        # engine A resolves its own stat(); engine B's statements must
+        # not see A's user-function set
+        assert a.execute("SELECT stat('abcd') AS n").collect()[0].n == 4
+        with pytest.raises(Exception):
+            # B has no user stat(): the tsearch2 alias path engages and
+            # ts_stat over a non-query argument fails — proving B did
+            # not inherit A's set
+            b.execute("SELECT stat('abcd') AS n").collect()
+        # and A still resolves its own afterwards
+        assert a.execute("SELECT stat('xy') AS n").collect()[0].n == 2
+
+    def test_ctx_is_reentrant(self):
+        from greengage_spark.dialect.transpiler import (
+            _USER_FUNCTION_NAMES,
+            user_functions_ctx,
+        )
+
+        with user_functions_ctx({"Outer"}):
+            assert _USER_FUNCTION_NAMES.get() == frozenset({"outer"})
+            with user_functions_ctx({"inner"}):
+                assert _USER_FUNCTION_NAMES.get() == frozenset({"inner"})
+            assert _USER_FUNCTION_NAMES.get() == frozenset({"outer"})
+        assert _USER_FUNCTION_NAMES.get() == frozenset()
