@@ -31,10 +31,6 @@ _NAME_RE = re.compile(r"\s*([A-Za-z_]\w*)")
 _AS_RE = re.compile(r"(?is)\s*as\s*")
 
 
-def is_recursive(sql: str) -> bool:
-    return bool(_RECURSIVE_RE.match(sql))
-
-
 _WITH_RE = re.compile(r"(?is)^\s*with\s+(?:recursive\s+)?")
 
 

@@ -8,8 +8,9 @@ splitter, the PL/pgSQL interpreter and the function-body lowerings —
 lexes with ``_TOKEN_RE``, so string literals, quoted identifiers and
 comments are opaque the same way everywhere.
 
-Lexeme kinds: string (``'…'``, ``E'…'``, ``$tag$…$tag$``), param (``$n``),
-qident, comment, number, ident (ASCII or non-ASCII letters), op, other.
+Lexeme kinds: string (``'…'``, ``E'…'``, ``$tag$…$tag$``, and the
+bit strings ``B'…'`` and ``X'…'``, scan.l xb/xh), param (``$n``), qident,
+comment, number, ident (ASCII or non-ASCII letters), op, other.
 
 Token level (over ``tokenize`` output):
 
@@ -44,7 +45,7 @@ _DOLLAR_TAG = rf"\$(?:[{_LETTER}][{_LETTER}0-9]*)?\$"
 
 _TOKEN_RE = re.compile(
     rf"""
-      (?P<string>   [Ee]'(?:[^'\\]|\\.|'')*' | '(?:[^']|'')*'
+      (?P<string>   [Ee]'(?:[^'\\]|\\.|'')*' | [BbXx]'[^']*' | '(?:[^']|'')*'
                   | (?P<tag> {_DOLLAR_TAG} ) .*? (?P=tag) )
     | (?P<param>    \$\d+ )
     | (?P<qident>   "[^"]*" )
@@ -73,7 +74,7 @@ def tokenize(sql: str) -> list[str]:
 def is_string(t: str) -> bool:
     if t[:1] == "$":
         return len(t) > 1 and t[-1] == "$"
-    return t.endswith("'") and (t.startswith("'") or t[:1] in "eE" and t[1:2] == "'")
+    return t.endswith("'") and (t.startswith("'") or t[:1] in "eEbBxX" and t[1:2] == "'")
 
 
 _IDENT_START = re.compile(rf'[{_LETTER}"]')

@@ -10,7 +10,10 @@ accepts (src/backend/parser/gram.y) into Spark SQL:
   to_char(ts,'YYYY-MM') → date_format(ts,'yyyy-MM')   (formatting.c)
   to_date/to_timestamp  → pattern-translated builtins
   date_part('dow',x)    → PG day numbering (Sunday=0)
-  generate_series(a,b) in FROM → explode(sequence())  (nodeFunctionscan.c)
+  SRFs in FROM (unnest, generate_series, ROWS FROM, WITH ORDINALITY)
+                        → explode / inline / posexplode (nodeFunctionscan.c)
+  DISTINCT ON (keys)    → row_number() = 1 subquery
+  B'1010' / X'1F'       → 0/1 text                    (varbit.c)
   gp_segment_id         → spark_partition_id()
   PG function aliases   → Spark names (strpos→instr, log→log10, …)
 
@@ -18,19 +21,23 @@ ILIKE, ||, BETWEEN SYMMETRIC-less forms, EXTRACT, INTERVAL literals and
 LATERAL pass through — Spark SQL parses them natively.
 
 Lexing and span helpers live in ``dialect/spans.py``: its tokenizer
-understands PG string literals (''-escaped, E''), quoted identifiers,
-comments and numbers, so rewrites never fire inside strings, and its
-bracket matchers, depth-0 splitter and iterator, operand spans and
-call-site rewriter are the only copies the passes use.
+understands PG string literals (''-escaped, E'', dollar-quoted, B''/X''
+bit strings), quoted identifiers, comments and numbers, so rewrites never
+fire inside strings or comments, and its bracket matchers, depth-0
+splitter and iterator, operand spans and call-site rewriter are the only
+copies the passes use.
 
-Pass-order contract: ``transpile()`` runs three string-level rewrites
-(DISTINCT ON, FROM generate_series, bit literals), then the token passes
-in the fixed order written there.  Each pass takes and returns the full
-token list and may rely on the passes before it — e.g. CAST typenames
-map before ``::`` casts emit Spark type tokens, geometry runs before the
-json arrows, and quoted identifiers and ''-literals are re-spelled for
-Spark last.  A new pass goes where its input forms still exist and its
-output cannot be re-read by a later pass.
+Pass-order contract: ``transpile()`` lexes the statement once and runs
+the token passes of ``_PASSES`` in their fixed order; no pass rewrites
+text.  Each pass takes and returns the full token list and may rely on
+the passes before it — e.g. bit strings become text literals first,
+DISTINCT ON and FROM-clause set-returning functions are lowered before
+any pass reads the SELECT they build, CAST typenames map before ``::``
+casts emit Spark type tokens, geometry runs before the json arrows, and
+quoted identifiers and ''-literals are re-spelled for Spark last.  A new
+pass goes where its input forms still exist and its output cannot be
+re-read by a later pass, and it must change at least one entry of the
+golden corpus (tests/test_transpile_golden.py).
 """
 
 from __future__ import annotations
@@ -41,8 +48,6 @@ from greengage_spark.dialect.datetime_patterns import pg_pattern_to_java
 from greengage_spark.dialect.spans import (
     CLOSE,
     NON_FUNC_KEYWORDS,
-    close_of,
-    find_top_level,
     is_ident,
     is_string,
     join_tokens,
@@ -998,14 +1003,6 @@ def _pass_casts(toks: list[str]) -> list[str]:
 
 
 _NUMERIC_ITEM_RE = re.compile(r"^-?(\d+\.?\d*|\.\d+)([Ee][+-]?\d+)?$")
-
-
-def _pg_array_literal_items(str_tok: str, elem_type: str) -> list[str]:
-    """Back-compat flat wrapper over _pg_array_literal (1-D only)."""
-    toks, depth = _pg_array_literal(str_tok, elem_type)
-    if depth != 1:
-        raise ValueError(f"expected a 1-D array literal: {str_tok!r}")
-    return toks[2:-1]  # strip the outer ARRAY ( ... )
 
 
 def _pg_array_literal(str_tok: str, elem_type: str) -> tuple[list[str], int]:
@@ -2106,12 +2103,6 @@ _GEO_TYPED_OP = {
 }
 
 
-def _geo_span_is_geo(toks: list[str], lo: int, hi: int) -> bool:
-    """Does toks[lo:hi+1] carry a geometric marker? (typed literal
-    ``point '...'``, constructor/function call, or ``::point`` cast)"""
-    return _geo_span_type(toks, lo, hi) is not None
-
-
 def _geo_span_type(toks: list[str], lo: int, hi: int) -> str | None:
     """Static geo type of a span: 'rect' for the arity-dispatched
     point/box/circle family, 'lseg'/'path'/'polygon' for the statically
@@ -2781,33 +2772,23 @@ def _pass_at_time_zone(toks: list[str]) -> list[str]:
         toks = toks[:start] + new + toks[zend + 1 :]
 
 
-def _rewrite_bit_literals(sql: str) -> str:
-    """``B'1010'`` / ``X'1F'`` bit-string literals (gram.y xb/xh states;
-    varbit.c) → plain 0/1 text, the engine's bit representation (the
-    same PG-literal-text approach as geometry).  Operates on the raw SQL
-    so literal adjacency survives; string segments are split out first
-    (with ``''`` doubling) so nothing inside a string is touched."""
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    out: list[str] = []
-    i = 0
-    while i < len(parts):
-        seg = parts[i]
-        m = re.search(r"(?:^|[^\w])([bBxX])$", seg) if i + 1 < len(parts) else None
-        if m and re.fullmatch(r"'[0-9A-Fa-f]*'", parts[i + 1]):
-            body = parts[i + 1][1:-1]
-            if m.group(1) in "bB":
-                if not re.fullmatch(r"[01]*", body):
-                    raise ValueError(f"invalid binary digit in B'{body}'")
-                bits = body
-            else:
-                bits = "".join(f"{int(c, 16):04b}" for c in body)
-            out.append(seg[: m.start(1)])
-            out.append("'" + bits + "'")
-            i += 2
-            continue
-        out.append(seg)
-        i += 1
-    return "".join(out)
+def _pass_bit_literals(toks: list[str]) -> list[str]:
+    """``B'1010'`` / ``X'1F'`` bit-string lexemes (scan.l xb/xh; varbit.c)
+    → plain 0/1 text, the engine's bit representation (the same
+    PG-literal-text approach as geometry)."""
+    out = []
+    for t in toks:
+        if t[:1] in "bBxX" and is_string(t):
+            body = t[2:-1]
+            if t[0] in "xX":
+                if body.strip("0123456789abcdefABCDEF"):
+                    raise ValueError(f"invalid hexadecimal digit in X'{body}'")
+                body = "".join(f"{int(c, 16):04b}" for c in body)
+            elif body.strip("01"):
+                raise ValueError(f"invalid binary digit in B'{body}'")
+            t = f"'{body}'"
+        out.append(t)
+    return out
 
 
 def _pass_bit_casts(toks: list[str]) -> list[str]:
@@ -4906,9 +4887,14 @@ def _pass_values_partial_alias(toks: list[str]) -> list[str]:
     return toks
 
 
+# keywords that end a FROM clause, and the ones that cannot be an SRF alias
 _FROM_END_KEYWORDS = {
     "where", "group", "order", "having", "limit", "offset", "union",
-    "intersect", "except", "returning", "window", "on", "using",
+    "intersect", "except", "returning", "window",
+}
+_SRF_ALIAS_STOP = _FROM_END_KEYWORDS | {
+    "on", "using", "join", "left", "right", "full", "inner", "cross",
+    "natural", "lateral", "with", "as",
 }
 
 
@@ -4929,227 +4915,101 @@ def _srf_item_to_array(item: list[str]) -> list[str]:
     raise NotImplementedError(f"ROWS FROM item {fn}() not supported")
 
 
-def _pass_unnest_from(toks: list[str]) -> list[str]:
-    """FROM-position SRF forms beyond the single-array unnest rename:
+def _pass_from_srfs(toks: list[str]) -> list[str]:
+    """Set-returning functions as FROM items (gram.y func_table; one
+    FunctionScan runs them all, nodeFunctionscan.c) → Spark relations.
 
-    * multi-argument ``unnest(a, b, ...)`` and ``ROWS FROM (unnest(a),
-      unnest(b), generate_series(...))`` (gram.y rows_from_item;
-      nodeFunctionscan.c zips the functions' outputs, NULL-padding to
-      the longest) → ``inline(arrays_zip(...))`` — identical semantics;
-    * non-initial comma FROM items get LATERAL: PG set-returning FROM
-      items are implicitly lateral (parse_clause.c), Spark requires the
-      keyword for correlated table-function arguments.
-    """
-    out = list(toks)
-    i = 0
+    A FROM item starts after a clause ``FROM``, after a depth-0 ``,`` of
+    that clause, after ``JOIN`` and after ``LATERAL``.  Its ``unnest(…)``,
+    ``generate_series(…)`` or ``ROWS FROM (…)`` becomes array expressions
+    (``_srf_item_to_array``), and the item's form picks the output:
+
+    * ``WITH ORDINALITY`` → a posexplode subquery; the ordinality column
+      is the 1-based element position;
+    * ROWS FROM or multi-argument unnest → ``inline(arrays_zip(…))``: PG
+      zips the functions' outputs, NULL-padding to the longest;
+    * generate_series → an explode(sequence(…)) subquery;
+    * one-argument unnest stays a call: the function pass renames it to
+      explode and flattens a multi-dimensional array.
+
+    A bare alias names the column too (gram.y func_alias_clause).  PG's
+    SRF items are implicitly lateral (parse_clause.c); Spark needs the
+    keyword for correlated arguments, so every non-initial item gets it.
+    Items are lowered last first, so an item's arguments are lowered
+    before the item is."""
+    # inside[d]: None outside a SELECT at bracket depth d, else whether
+    # the scan is inside that SELECT's FROM clause
+    inside: dict[int, bool | None] = {0: False}
     depth = 0
-    in_from: dict[int, bool] = {}
-    while i < len(out):
-        t = out[i]
-        if t == "(":
+    starts: list[tuple[int, bool]] = []  # (item start, initial item)
+    for i, t in enumerate(toks):
+        low = t.lower() if is_ident(t) else t
+        if t in ("(", "["):
             depth += 1
-        elif t == ")":
-            in_from.pop(depth, None)
+            inside[depth] = None
+        elif t in CLOSE:
             depth -= 1
-        elif is_ident(t):
-            low = t.lower()
-            if low == "from" and (i == 0 or out[i - 1].lower() != "rows"):
-                in_from[depth] = True
-            elif low == "select" or low in _FROM_END_KEYWORDS:
-                in_from[depth] = False
-        if not in_from.get(depth):
-            i += 1
+        elif low == "select":
+            inside[depth] = False
+        elif low == "from":
+            if inside.get(depth) is not None and toks[i - 1].lower() not in ("distinct", "rows"):
+                inside[depth] = True
+                starts.append((i + 1, True))
+        elif low in ("join", "lateral") or low == "," and inside.get(depth):
+            inside[depth] = True
+            starts.append((i + 1, False))
+        elif low in _FROM_END_KEYWORDS and inside.get(depth):
+            inside[depth] = False
+    for s, initial in reversed(starts):
+        head = [t.lower() for t in toks[s : s + 3]]
+        if head == ["rows", "from", "("]:
+            fn, close = "rows", match_close(toks, s + 2)
+            items = split_top(toks[s + 3 : close])
+        elif head[:2] in (["unnest", "("], ["generate_series", "("]):
+            fn, close = head[0], match_close(toks, s + 1)
+            items = [toks[s : close + 1]]
+        else:
             continue
-        after_comma = i > 0 and out[i - 1] == ","
-        after_from = i > 0 and is_ident(out[i - 1]) and out[i - 1].lower() == "from"
-        if not (after_comma or after_from) or not is_ident(t):
-            i += 1
-            continue
-        low = t.lower()
-        if low == "unnest" and i + 1 < len(out) and out[i + 1] == "(":
-            # bare-alias SRF item: PG's `FROM unnest(x) AS u` names BOTH
-            # the table and the column u (parse_relation.c); Spark's
-            # explode would call the column `col`, so re-emit the
-            # explicit column list u(u)
-            close = match_close(out, i + 1)
-            j = close + 1
-            if j < len(out) and is_ident(out[j]) and out[j].lower() == "as":
-                j += 1
-            if (
-                j < len(out)
-                and is_ident(out[j])
-                and out[j].lower() not in _FROM_END_KEYWORDS
-                and out[j].lower()
-                not in ("join", "left", "right", "full", "inner",
-                        "cross", "lateral", "as", "with")
-                and (j + 1 >= len(out) or out[j + 1] != "(")
-            ):
-                out[j + 1 : j + 1] = ["(", out[j], ")"]
-        if (
-            low == "rows"
-            and i + 2 < len(out)
-            and is_ident(out[i + 1])
-            and out[i + 1].lower() == "from"
-            and out[i + 2] == "("
-        ):
-            close = match_close(out, i + 2)
-            arrays: list[list[str]] = []
-            for item in split_top(out[i + 3 : close]):
-                if item and is_ident(item[0]) and item[0].lower() == "unnest":
-                    arrays.extend(split_top(_srf_item_to_array(item)))
-                else:
-                    arrays.append(_srf_item_to_array(item))
-            repl = ["inline", "(", "arrays_zip", "("]
-            for k, a in enumerate(arrays):
-                repl += ([","] if k else []) + a
-            repl += [")", ")"]
-            if after_comma:
-                repl = ["LATERAL"] + repl
-            out[i : close + 1] = repl
-            i += len(repl)
-            continue
-        if low == "unnest" and i + 1 < len(out) and out[i + 1] == "(":
-            close = match_close(out, i + 1)
-            args = split_top(out[i + 2 : close])
-            if len(args) > 1:
-                repl = ["inline", "(", "arrays_zip", "("]
-                for k, a in enumerate(args):
-                    repl += ([","] if k else []) + a
-                repl += [")", ")"]
-                out[i : close + 1] = repl
-            elif (md := _md_array_depth(args[0])) >= 2:
-                # multi-dim arrays unnest to SCALARS in storage order
-                # (arrayfuncs.c array_unnest walks the flat data array)
-                inner = list(args[0])
-                for _ in range(md - 1):
-                    inner = ["flatten", "("] + inner + [")"]
-                repl = ["unnest", "("] + inner + [")"]
-                out[i : close + 1] = repl
-            else:
-                repl = out[i : close + 1]
-            if after_comma:
-                out[i:i] = ["LATERAL"]
-                i += 1
-            i += len(repl)
-            continue
-        i += 1
-    return out
-
-
-def _pass_from_srf_items(toks: list[str]) -> list[str]:
-    """generate_series as a non-initial comma-separated FROM item
-    (nodeFunctionscan.c) → LATERAL subquery; the FROM-initial position is
-    handled by the regex rewrites before tokenization.  LATERAL keeps
-    correlated arguments legal in Spark (3.2+ lateral subqueries); a bare
-    SRF alias names both the relation and the column (gram.y
-    func_alias_clause)."""
-    i = 0
-    depth = 0
-    in_from: dict[int, bool] = {}
-    while i < len(toks):
-        t = toks[i]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            in_from.pop(depth, None)
-            depth -= 1
-        elif is_ident(t):
-            low = t.lower()
-            if low == "from":
-                in_from[depth] = True
-            elif low == "select" or low in _FROM_END_KEYWORDS:
-                in_from[depth] = False
-        if (
-            t == ","
-            and in_from.get(depth)
-            and i + 2 < len(toks)
-            and is_ident(toks[i + 1])
-            and toks[i + 1].lower() == "generate_series"
-            and toks[i + 2] == "("
-        ):
-            close = match_close(toks, i + 2)
-            args = toks[i + 3 : close]
-            alias = None
-            k = close + 1
-            if k < len(toks) and is_ident(toks[k]):
-                low = toks[k].lower()
-                if low == "as" and k + 1 < len(toks) and is_ident(toks[k + 1]):
-                    alias, k = toks[k + 1], k + 2
-                elif low not in _FROM_END_KEYWORDS and low not in (
-                    "join", "left", "right", "full", "inner", "cross",
-                    "natural", "lateral",
-                ):
-                    alias, k = toks[k], k + 1
-            name = alias or "generate_series"
+        arrays = [a for item in items for a in split_top(_srf_item_to_array(item))]
+        k = close + 1
+        ordinality = [t.lower() for t in toks[k : k + 2]] == ["with", "ordinality"]
+        k += 2 * ordinality
+        a = k + ([t.lower() for t in toks[k : k + 1]] == ["as"])
+        alias, cols, end = None, None, k
+        if a < len(toks) and is_ident(toks[a]) and toks[a].lower() not in _SRF_ALIAS_STOP:
+            alias, end = toks[a], a + 1
+            if toks[end : end + 1] == ["("]:
+                cclose = match_close(toks, end)
+                cols = [c[0] for c in split_top(toks[end + 1 : cclose])]
+                end = cclose + 1
+        lateral = not initial and toks[s - 1].lower() != "lateral"
+        if ordinality:
+            if fn == "rows" or len(arrays) != 1:
+                raise NotImplementedError("WITH ORDINALITY over several arrays")
+            vcol, ocol = ((cols or [alias or fn]) + ["ordinality"])[:2]
             repl = (
-                [",", "LATERAL", "(", "SELECT", "explode", "(", "sequence", "("]
-                + args
-                + [")", ")", "AS", name, ")", "AS", name]
+                ["(", "SELECT", "__po_v", "AS", vcol, ",",
+                 "CAST", "(", "__po_p", "+", "1", "AS", "BIGINT", ")", "AS", ocol,
+                 "FROM", "(", "SELECT", "posexplode", "("] + arrays[0]
+                + [")", "AS", "(", "__po_p", ",", "__po_v", ")", ")", "__po", ")",
+                   "AS", alias or fn + "_t"]
             )
-            toks = toks[:i] + repl + toks[k:]
-            i += len(repl)
-            continue
-        i += 1
+        elif fn == "rows" or len(arrays) > 1:
+            zipped = [t for arr in arrays for t in [","] + arr][1:]
+            repl = ["inline", "(", "arrays_zip", "("] + zipped + [")", ")"]
+            end = close + 1
+        elif fn == "generate_series":
+            name = alias or fn
+            repl = ["(", "SELECT", "explode", "("] + arrays[0] + [
+                ")", "AS", cols[0] if cols else name, ")"
+            ] + ["AS"] * (not initial) + [name]
+            if initial:  # re-spelled upper-case, as the recorded outputs pin
+                repl = ["FROM"] + repl
+                s -= 1
+        else:
+            repl = toks[s:end] + (["(", alias, ")"] if alias and cols is None else [])
+        toks = toks[:s] + ["LATERAL"] * lateral + repl + toks[end:]
     return toks
-
-
-def _pass_with_ordinality(toks: list[str]) -> list[str]:
-    """``unnest(X) WITH ORDINALITY [AS t(v, ord)]`` (gram.y
-    func_table WITH_LA ORDINALITY, PG 9.4) → a posexplode subquery:
-    ordinality is the 1-based element position.  Default column names
-    are PG's (``unnest``, ``ordinality``)."""
-    while True:
-        idx = next(
-            (
-                i
-                for i, t in enumerate(toks)
-                if is_ident(t)
-                and t.lower() == "unnest"
-                and i + 1 < len(toks)
-                and toks[i + 1] == "("
-            ),
-            None,
-        )
-        if idx is None:
-            return toks
-        close = match_close(toks, idx + 1)
-        if not (
-            close + 2 < len(toks)
-            and is_ident(toks[close + 1])
-            and toks[close + 1].lower() == "with"
-            and is_ident(toks[close + 2])
-            and toks[close + 2].lower() == "ordinality"
-        ):
-            # plain unnest: the function rename pass handles it
-            return _pass_with_ordinality_rest(toks, idx)
-        args = toks[idx + 2 : close]
-        k = close + 3
-        alias, cols = "unnest_t", None
-        if k < len(toks) and is_ident(toks[k]) and toks[k].lower() == "as":
-            k += 1
-        if k < len(toks) and is_ident(toks[k]) and toks[k].lower() not in _FROM_END_KEYWORDS:
-            alias = toks[k]
-            k += 1
-            if k < len(toks) and toks[k] == "(":
-                aclose = match_close(toks, k)
-                cols = [c[0] for c in split_top(toks[k + 1 : aclose])]
-                k = aclose + 1
-        vcol, ocol = (cols + ["ordinality"])[:2] if cols else ("unnest", "ordinality")
-        repl = (
-            ["(", "SELECT", "__po_v", "AS", vcol, ",",
-             "CAST", "(", "__po_p", "+", "1", "AS", "BIGINT", ")", "AS", ocol,
-             "FROM", "(", "SELECT", "posexplode", "("] + args
-            + [")", "AS", "(", "__po_p", ",", "__po_v", ")", ")", "__po", ")",
-               "AS", alias]
-        )
-        toks = toks[:idx] + repl + toks[k:]
-
-
-def _pass_with_ordinality_rest(toks: list[str], after: int) -> list[str]:
-    """Continue scanning past a plain (no-ORDINALITY) unnest call."""
-    head = toks[: after + 1]
-    tail = _pass_with_ordinality(toks[after + 1 :])
-    return head + tail
 
 
 def _pass_single_grouping_set(toks: list[str]) -> list[str]:
@@ -5285,12 +5145,6 @@ def _pass_group_by_empty(toks: list[str]) -> list[str]:
                 toks[i + 2 : end] = [t for it in kept for t in [","] + it][1:]
         i += 1
     return toks
-
-
-def _json_path_elem(tok: str) -> str:
-    if is_string(tok):
-        return tok.strip("'")
-    return f"[{tok}]"
 
 
 def _pass_json_ops(toks: list[str]) -> list[str]:
@@ -8076,183 +7930,58 @@ def _pass_subscripts(toks: list[str]) -> list[str]:
         toks = toks[:start] + new + toks[end + 1 :]
 
 
-# argument text may nest parens two levels deep (parenthesized macro
-# args, function calls) — e.g. generate_series(($1), ($2)) from an
-# expanded SETOF plpgsql FOR loop
-_PARENS2 = r"(?:[^()]|\((?:[^()]|\([^()]*\))*\))*"
-
-_GENSERIES_FROM_RE = re.compile(
-    r"\bFROM\s+generate_series\s*\((" + _PARENS2 + r")\)\s*"
-    r"(?:AS\s+)?(\w+)\s*\(\s*(\w+)\s*\)",
-    re.IGNORECASE,
-)
-
-# bare forms: `FROM generate_series(a,b)` (PG column name = generate_series)
-# and `FROM generate_series(a,b) i` (PG: a bare SRF alias names the column
-# too, gram.y func_alias_clause).  A trailing keyword is not an alias.
-_GENSERIES_FROM_BARE_RE = re.compile(
-    # gram.y accepts the alias glued to the close paren: generate_series(1,2)a
-    r"\bFROM\s+generate_series\s*\((" + _PARENS2 + r")\)"
-    r"(?:\s*(?:AS\s+)?"
-    r"(?!WHERE\b|GROUP\b|ORDER\b|HAVING\b|LIMIT\b|OFFSET\b|UNION\b|INTERSECT\b"
-    r"|EXCEPT\b|JOIN\b|ON\b|USING\b|LEFT\b|RIGHT\b|FULL\b|INNER\b|CROSS\b|AS\b)"
-    r"(\w+))?",
-    re.IGNORECASE,
-)
-
-
-def _rewrite_from_generate_series(sql: str) -> str:
-    """FROM generate_series(a,b) [AS] t(x) → FROM (SELECT explode(sequence(a,b)) AS x) t"""
-    sql = _GENSERIES_FROM_RE.sub(
-        lambda m: f"FROM (SELECT explode(sequence({m.group(1)})) AS {m.group(3)}) {m.group(2)}",
-        sql,
-    )
-    return _GENSERIES_FROM_BARE_RE.sub(
-        lambda m: "FROM (SELECT explode(sequence({0})) AS {1}) {1}".format(
-            m.group(1), m.group(2) or "generate_series"
-        ),
-        sql,
-    )
-
-
-def _rewrite_distinct_on(sql: str) -> str:
+def _pass_distinct_on(toks: list[str]) -> list[str]:
     """PG ``SELECT DISTINCT ON (keys) ... ORDER BY keys, tiebreak`` →
     row_number() OVER (PARTITION BY keys ORDER BY ...) = 1 subquery —
     the rewrite the planner applies conceptually (PG keeps the first row
-    of each key group in ORDER BY order)."""
-    m = re.match(r"(?is)^(\s*)select\s+distinct\s+on\s*\(", sql)
-    if not m:
-        # nested occurrence: a DISTINCT ON subquery is always
-        # parenthesized — rewrite the inner text and splice it back
-        m2 = re.search(r"(?is)\(\s*(select\s+distinct\s+on\s*\()", sql)
-        if not m2:
-            return sql
-        open_idx = m2.start()
-        close_idx = close_of(sql, open_idx)
-        inner = sql[open_idx + 1 : close_idx]
-        return _rewrite_distinct_on(
-            sql[: open_idx + 1] + _rewrite_distinct_on(inner) + sql[close_idx:]
+    of each key group in ORDER BY order).  The SELECT opens the statement
+    or a parenthesized subquery; the last one is rewritten first, so an
+    inner one is already rewritten when its enclosing one is."""
+    low = [t.lower() for t in toks]
+    for i in reversed(range(len(toks) - 3)):
+        if low[i : i + 4] != ["select", "distinct", "on", "("] or i and toks[i - 1] != "(":
+            continue
+        close = match_close(toks, i + 3)
+        keys = toks[i + 4 : close]
+        frm = order = None
+        end = len(toks)
+        for k, t in top_level(toks, close + 1):
+            if t in CLOSE:
+                end = k
+            elif t.lower() == "from" and frm is None:
+                frm = k
+            elif t.lower() == "order" and frm is not None and order is None:
+                order = k
+        if frm is None:
+            raise NotImplementedError("DISTINCT ON without FROM")
+        order_list = keys if order is None else toks[order + 2 : end]
+        toks = (
+            toks[:i]
+            + ["SELECT", "*", "EXCEPT", "(", "__rn", ")", "FROM", "(", "SELECT"]
+            + toks[close + 1 : frm]
+            + [",", "row_number", "(", ")", "OVER", "(", "PARTITION", "BY"] + keys
+            + ["ORDER", "BY"] + order_list + [")", "AS", "__rn"]
+            + toks[frm : end if order is None else order]
+            + [")", "WHERE", "__rn", "=", "1"]
+            + toks[end:]
         )
-    open_idx = sql.index("(", m.end() - 1)
-    close_idx = close_of(sql, open_idx)
-    keys = sql[open_idx + 1 : close_idx].strip()
-    rest = sql[close_idx + 1 :]
-
-    from_idx = find_top_level(rest, "from")
-    if from_idx < 0:
-        raise NotImplementedError("DISTINCT ON without FROM")
-    select_list = rest[:from_idx].strip()
-    body = rest[from_idx:]
-    order_idx = find_top_level(body, "order")
-    if order_idx >= 0:
-        order_list = re.sub(r"(?is)^order\s+by\s+", "", body[order_idx:]).strip()
-        body = body[:order_idx].rstrip()
-    else:
-        order_list = keys
-    return (
-        f"SELECT * EXCEPT (__rn) FROM (SELECT {select_list}, "
-        f"row_number() OVER (PARTITION BY {keys} ORDER BY {order_list}) AS __rn "
-        f"{body}) WHERE __rn = 1"
-    )
+    return toks
 
 
-def transpile(sql: str) -> str:
-    """PG/Greenplum SQL → Spark SQL."""
-    sql = _rewrite_distinct_on(sql)
-    sql = _rewrite_from_generate_series(sql)
-    sql = _rewrite_bit_literals(sql)
-    toks = tokenize(sql)
-    toks = _pass_estrings(toks)
-    toks = _pass_group_by_empty(toks)
-    toks = _pass_single_grouping_set(toks)
-    toks = _pass_multiword_types(toks)
-    toks = _pass_interval_unit_aliases(toks)
-    toks = _pass_interval_mixed(toks)
-    toks = _pass_interval_add_timestamp(toks)
-    toks = _pass_group_by_aliases(toks)
-    toks = _pass_group_extensions(toks)
-    toks = _pass_with_ordinality(toks)
-    toks = _pass_targetlist_srf(toks)
-    toks = _pass_count_noargs(toks)
-    toks = _pass_agg_filter(toks)
-    toks = _pass_offset_before_limit(toks)
-    toks = _pass_only_tables(toks)
-    toks = _pass_typed_literals(toks)
-    toks = _pass_like_escape(toks)
-    toks = _pass_inline_named_windows(toks)
-    toks = _pass_grouping_plain(toks)
-    toks = _pass_decode(toks)
-    toks = _pass_similar_to(toks)
-    toks = _pass_overlaps(toks)
-    toks = _pass_case_notdistinct(toks)
-    toks = _pass_array_constructor(toks)
-    # contrib/intagg: int_array_enum(int[]) IS unnest (intagg--1.1.sql)
-    toks = [
+def _pass_int_array_enum(toks: list[str]) -> list[str]:
+    """contrib/intagg: int_array_enum(int[]) IS unnest (intagg--1.1.sql)."""
+    return [
         "unnest" if is_ident(t) and t.lower() == "int_array_enum" else t
         for t in toks
     ]
-    toks = _pass_unnest_from(toks)
-    toks = _pass_from_srf_items(toks)
-    # user-written CAST(x AS pgtype) typenames map BEFORE ::casts emit
-    # Spark type tokens, so emissions are never re-read as PG names
-    # (PG `float` = float8, but our emitted FLOAT means float4)
-    toks = _pass_ltree(toks)
-    toks = _pass_inet_ops(toks)
-    toks = _pass_range_casts(toks)
-    toks = _pass_bit_casts(toks)
-    toks = _pass_cast_typenames(toks)
-    toks = _pass_isn(toks)
-    toks = _pass_seg(toks)
-    toks = _pass_cube(toks)
-    toks = _pass_intarray_ops(toks)
-    toks = _pass_chkpass(toks)
-    toks = _pass_casts(toks)
-    toks = _pass_float_int_cast_round(toks)
-    toks = _pass_date_minus(toks)
-    toks = _pass_date_input_literals(toks)
-    toks = _pass_at_time_zone(toks)
-    # geometry before json-ops (both route `->`-containing operators);
-    # xml after the cast passes so embedded ::text casts are already Spark
-    toks = _pass_earthdistance(toks)
-    toks = _pass_geometry(toks)
-    # trgm % / <-> after geometry (geo-typed operands won), before the
-    # json pass (whose -> would eat the <-> arrow)
-    toks = _pass_trgm_ops(toks)
-    toks = _pass_xml(toks)
-    toks = _pass_xmlagg(toks)
-    toks = _pass_json_ops(toks)
-    toks = _pass_intarray_binops(toks)
-    toks = _pass_ranges(toks)
-    toks = _pass_collate_strip(toks)
-    toks = _pass_like_escape_backslash(toks)
-    toks = _pass_like_op_spellings(toks)
-    toks = _pass_between_symmetric(toks)
-    toks = _pass_tablesample(toks)
-    toks = _pass_lock_clauses(toks)
-    toks = _pass_fetch_first(toks)
-    toks = _pass_regex_ops(toks)
-    toks = _pass_pow_xor(toks)
-    toks = _pass_reject_large_objects(toks)
-    toks = _pass_tsearch2_aliases(toks)
-    toks = _pass_text_search(toks)
-    toks = _pass_prefix_math_ops(toks)
-    toks = _pass_factorial(toks)
-    toks = _pass_array_subquery(toks)
-    toks = _pass_agg_order_by(toks)
-    toks = _pass_avg_bigint_exact(toks)
-    toks = _pass_rank_needs_order(toks)
-    toks = _pass_values_partial_alias(toks)
-    toks = _pass_rowvalue_scalar(toks)
-    toks = _pass_quantified(toks)
-    toks = _pass_array_ops(toks)
-    toks = _pass_functions(toks)
-    toks = _pass_order_by_nulls(toks)
-    toks = _pass_subscripts(toks)
-    # PG double-quoted identifiers (ALWAYS identifiers in PG — strings are
-    # single-quoted) → Spark backtick identifiers; '""' unescapes to '"'.
-    # Unquoted identifiers with non-ASCII letters (scan.l ident_start
-    # \200-\377) are backticked too: Spark rejects them bare.
-    toks = [
+
+
+def _pass_quoted_idents(toks: list[str]) -> list[str]:
+    """PG double-quoted identifiers (ALWAYS identifiers in PG — strings are
+    single-quoted) → Spark backtick identifiers; '""' unescapes to '"'.
+    Unquoted identifiers with non-ASCII letters (scan.l ident_start
+    bytes 0x80-0xff) are backticked too: Spark rejects them bare."""
+    return [
         "`" + t[1:-1].replace('""', '"').replace("`", "``") + "`"
         if len(t) >= 2 and t[0] == '"' and t[-1] == '"'
         else "`" + t + "`"
@@ -8260,11 +7989,14 @@ def transpile(sql: str) -> str:
         else t
         for t in toks
     ]
-    # PG ''-doubling inside plain literals (scan.l xq rules; E-strings also
-    # decode to this form): under escapedStringLiterals Spark reads 'a''b'
-    # as the four chars a''b, so re-emit such literals as double-quoted
-    # Spark strings — or, when the value also holds a '"' or a backslash
-    # (both live inside double quotes), a chr(39)-concat expression.
+
+
+def _pass_doubled_quotes(toks: list[str]) -> list[str]:
+    """PG ''-doubling inside plain literals (scan.l xq rules; E-strings also
+    decode to this form): under escapedStringLiterals Spark reads 'a''b'
+    as the four chars a''b, so re-emit such literals as double-quoted
+    Spark strings — or, when the value also holds a '"' or a backslash
+    (both live inside double quotes), a chr(39)-concat expression."""
     fixed: list[str] = []
     for t in toks:
         if len(t) >= 2 and t[0] == "'" and t[-1] == "'" and "''" in t[1:-1]:
@@ -8275,14 +8007,110 @@ def transpile(sql: str) -> str:
                 parts: list[str] = []
                 for k, piece in enumerate(val.split("'")):
                     if k:
-                        parts.append("chr(39)")
+                        parts += [",", "chr", "(", "39", ")"]
                     if piece:
-                        parts.append("'" + piece + "'")
-                fixed.extend(tokenize("concat(" + " , ".join(parts) + ")"))
+                        parts += [",", "'" + piece + "'"]
+                fixed += ["concat", "("] + parts[1:] + [")"]
         else:
             fixed.append(t)
-    toks = fixed
-    # re-join with spaces; '.' binds tight (qualified names)
+    return fixed
+
+
+# The token passes ``transpile()`` runs, in order (see the module docstring).
+_PASSES = (
+    _pass_bit_literals,
+    _pass_distinct_on,
+    _pass_int_array_enum,
+    _pass_from_srfs,
+    _pass_estrings,
+    _pass_group_by_empty,
+    _pass_single_grouping_set,
+    _pass_multiword_types,
+    _pass_interval_unit_aliases,
+    _pass_interval_mixed,
+    _pass_interval_add_timestamp,
+    _pass_group_by_aliases,
+    _pass_group_extensions,
+    _pass_targetlist_srf,
+    _pass_count_noargs,
+    _pass_agg_filter,
+    _pass_offset_before_limit,
+    _pass_only_tables,
+    _pass_typed_literals,
+    _pass_like_escape,
+    _pass_inline_named_windows,
+    _pass_grouping_plain,
+    _pass_decode,
+    _pass_similar_to,
+    _pass_overlaps,
+    _pass_case_notdistinct,
+    _pass_array_constructor,
+    # user-written CAST(x AS pgtype) typenames map BEFORE ::casts emit
+    # Spark type tokens, so emissions are never re-read as PG names
+    # (PG `float` = float8, but our emitted FLOAT means float4)
+    _pass_ltree,
+    _pass_inet_ops,
+    _pass_range_casts,
+    _pass_bit_casts,
+    _pass_cast_typenames,
+    _pass_isn,
+    _pass_seg,
+    _pass_cube,
+    _pass_intarray_ops,
+    _pass_chkpass,
+    _pass_casts,
+    _pass_float_int_cast_round,
+    _pass_date_minus,
+    _pass_date_input_literals,
+    _pass_at_time_zone,
+    # geometry before json-ops (both route `->`-containing operators);
+    # xml after the cast passes so embedded ::text casts are already Spark
+    _pass_earthdistance,
+    _pass_geometry,
+    # trgm % / <-> after geometry (geo-typed operands won), before the
+    # json pass (whose -> would eat the <-> arrow)
+    _pass_trgm_ops,
+    _pass_xml,
+    _pass_xmlagg,
+    _pass_json_ops,
+    _pass_intarray_binops,
+    _pass_ranges,
+    _pass_collate_strip,
+    _pass_like_escape_backslash,
+    _pass_like_op_spellings,
+    _pass_between_symmetric,
+    _pass_tablesample,
+    _pass_lock_clauses,
+    _pass_fetch_first,
+    _pass_regex_ops,
+    _pass_pow_xor,
+    _pass_reject_large_objects,
+    _pass_tsearch2_aliases,
+    _pass_text_search,
+    _pass_prefix_math_ops,
+    _pass_factorial,
+    _pass_array_subquery,
+    _pass_agg_order_by,
+    _pass_avg_bigint_exact,
+    _pass_rank_needs_order,
+    _pass_values_partial_alias,
+    _pass_rowvalue_scalar,
+    _pass_quantified,
+    _pass_array_ops,
+    _pass_functions,
+    _pass_order_by_nulls,
+    _pass_subscripts,
+    _pass_quoted_idents,
+    _pass_doubled_quotes,
+)
+
+
+def transpile(sql: str) -> str:
+    """PG/Greenplum SQL → Spark SQL: lex once, run the token passes, and
+    re-join with spaces ('.' binds tight in qualified names)."""
+    toks = tokenize(sql)
+    for rewrite in _PASSES:
+        toks = rewrite(toks)
     return join_tokens(toks)
 
 

@@ -391,14 +391,6 @@ def lseg_cmp(a_sql: str, b_sql: str, op: str) -> str:
     return _bind2(a_sql, b_sql, lambda a, b: f"({_seg_len(a)} {op} {_seg_len(b)})")
 
 
-def lseg_horizontal(g_sql: str) -> str:
-    return _bind1(g_sql, lambda g: f"({g}[1] = {g}[3])")
-
-
-def lseg_vertical(g_sql: str) -> str:
-    return _bind1(g_sql, lambda g: f"({g}[0] = {g}[2])")
-
-
 # ---- path ----
 
 

@@ -77,14 +77,6 @@ def r_upper_inc(r: Column) -> Column:
     return r["hi_inc"]
 
 
-def r_lower_inf(r: Column) -> Column:
-    return ~r["empty"] & r["lo"].isNull()
-
-
-def r_upper_inf(r: Column) -> Column:
-    return ~r["empty"] & r["hi"].isNull()
-
-
 def _above_lower(r: Column, x) -> Column:
     """x is above r's lower bound."""
     return r["lo"].isNull() | (r["lo"] < x) | ((r["lo"] == x) & r["lo_inc"])
@@ -160,11 +152,6 @@ def r_before(a: Column, b: Column) -> Column:
             | ((a["hi"] == b["lo"]) & ~(a["hi_inc"] & b["lo_inc"]))
         )
     )
-
-
-def r_after(a: Column, b: Column) -> Column:
-    """``a >> b`` strictly right of."""
-    return r_before(b, a)
 
 
 def r_adjacent(a: Column, b: Column) -> Column:

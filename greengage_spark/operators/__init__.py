@@ -10,6 +10,6 @@ need no code (SURVEY.md §2); this package holds the ones that don't:
                 linear_interpolate (interpolate.c)
   tablefunc   — TableFunction over ANYTABLE with SCATTER BY
                 (nodeTableFunction.c) via repartition + mapInPandas
-  motion      — Motion-node parity API (nodeMotion.c): gather / broadcast /
-                redistribute / explicit, as partitioning operations
+  motion      — Motion-node parity API (nodeMotion.c): gather /
+                redistribute, as partitioning operations
 """

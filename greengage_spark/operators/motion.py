@@ -4,8 +4,9 @@ The reference's MPP-defining operator is Motion
 (src/include/nodes/plannodes.h:1277-1311, executor nodeMotion.c): Gather
 (N→1), Broadcast (N→all), Redistribute (hash N→N), Explicit (to a stored
 segment id), optionally order-preserving.  Spark's shuffle service plays
-the interconnect role; these helpers express each Motion kind as the
-partitioning operation Catalyst turns into the same exchange.
+the interconnect role; these helpers express Gather and Redistribute as
+the partitioning operation Catalyst turns into the same exchange
+(Broadcast is ``F.broadcast``).
 
 They exist for API parity and for forcing a distribution when AQE's
 choice must be overridden — in normal plans, let Catalyst place exchanges.
@@ -27,29 +28,7 @@ def gather(df: DataFrame, *, sort_by: list[Column] | None = None) -> DataFrame:
     return df.coalesce(1)
 
 
-def broadcast_motion(df: DataFrame) -> DataFrame:
-    """Broadcast Motion (N→all): replicate to every join site."""
-    return F.broadcast(df)
-
-
 def redistribute(df: DataFrame, cols: list[str | Column], num_partitions: int | None = None) -> DataFrame:
     """Redistribute Motion (MOTIONTYPE_HASH): hash-partition on cols."""
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     return df.repartition(num_partitions, *cs) if num_partitions else df.repartition(*cs)
-
-
-def redistribute_randomly(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Round-robin redistribution (DISTRIBUTED RANDOMLY semantics)."""
-    return df.repartition(num_partitions or df.sparkSession.sparkContext.defaultParallelism)
-
-
-def explicit_redistribute(df: DataFrame, segid_col: str, num_partitions: int) -> DataFrame:
-    """Explicit Motion (MOTIONTYPE_EXPLICIT): route each row to the
-    partition named by a column (the reference uses it to send UPDATE
-    deletes back to the segment that owns the row)."""
-    return df.repartition(num_partitions, F.col(segid_col))
-
-
-def segment_id() -> Column:
-    """gp_segment_id pseudo-column → spark_partition_id()."""
-    return F.spark_partition_id()

@@ -174,10 +174,6 @@ def _read_residual(r: BitReader, blocksize: int, order: int) -> list[int]:
     return out
 
 
-def _rice_cost(resid: list[int], param: int) -> int:
-    return sum((_zigzag(v) >> param) + 1 + param for v in resid)
-
-
 def _best_rice_param(zig: np.ndarray) -> tuple[int, int]:
     """(param, bits) minimizing Rice cost over one partition —
     vectorized; params 0..14 (15 is the 4-bit escape)."""

@@ -212,27 +212,6 @@ class FixedWidthExternalTable:
         return df.select(cols)
 
 
-def read_with_errors(spark: SparkSession, table: ExternalTable) -> tuple[DataFrame, DataFrame]:
-    """(good_rows, error_log) in one pass — SREH's LOG ERRORS mode."""
-    schema = table.schema
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    full = StructType(schema.fields + [StructField(CORRUPT_COL, StringType(), True)])
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("sep", table.delimiter)
-        .option("header", str(table.header).lower())
-        .csv(table.location)
-        .cache()
-    )
-    return (
-        df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL),
-        df.filter(F.col(CORRUPT_COL).isNotNull()).select(F.col(CORRUPT_COL).alias("errdata")),
-    )
-
-
 @dataclass
 class ExternalTableDef:
     """Parsed CREATE EXTERNAL TABLE statement (gram.y:5432-5501)."""

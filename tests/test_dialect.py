@@ -572,6 +572,15 @@ class TestBitStrings:
         with pytest.raises(ValueError, match="invalid binary digit"):
             transpile("SELECT B'102'")
 
+    def test_quote_in_comment_before_literal(self, spark):
+        row = pg_sql(spark, "SELECT 1 -- it's\n, B'101' AS b").collect()[0]
+        assert tuple(row) == (1, "101")
+
+    def test_hex_literal_after_escape_string(self, spark):
+        # X'1F' is the bit string 00011111 (varbit.c), not binary
+        row = pg_sql(spark, "SELECT E'it\\'s' AS s, X'1F' AS b").collect()[0]
+        assert tuple(row) == ("it's", "00011111")
+
     def test_ops(self, spark):
         # expected values verified against PG varbit.c semantics
         assert self._one(spark, "bitand(B'1010', B'0110')") == "0010"
@@ -635,6 +644,105 @@ class TestWithOrdinality:
     def test_plain_unnest_unchanged(self, spark):
         out = self._rows(spark, "SELECT unnest(ARRAY[1,2]) AS u")
         assert out == [(1,), (2,)]
+
+    def test_generate_series_with_ordinality(self, spark):
+        out = self._rows(
+            spark, "SELECT * FROM generate_series(1,3) WITH ORDINALITY AS g(x, n)"
+        )
+        assert out == [(1, 1), (2, 2), (3, 3)]
+
+    def test_non_initial_item_is_lateral(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT t.k, u.v, u.o FROM (SELECT 1 AS k, ARRAY[7,8] AS a) t, "
+            "unnest(t.a) WITH ORDINALITY AS u(v, o)",
+        )
+        assert out == [(1, 7, 1), (1, 8, 2)]
+
+
+class TestFromSrfItems:
+    """Set-returning functions as FROM items (nodeFunctionscan.c)."""
+
+    def _rows(self, spark, sql):
+        return [tuple(r) for r in pg_sql(spark, sql).collect()]
+
+    def test_cross_join_lateral_generate_series(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT t.n, x FROM (SELECT 2 AS n) t "
+            "CROSS JOIN LATERAL generate_series(1, t.n) AS g(x) ORDER BY x",
+        )
+        assert out == [(2, 1), (2, 2)]
+
+    def test_multidimensional_unnest_yields_scalars(self, spark):
+        # arrayfuncs.c array_unnest walks the flat data array
+        out = self._rows(spark, "SELECT * FROM unnest(ARRAY[[1,2],[3,4]]) u")
+        assert out == [(1,), (2,), (3,), (4,)]
+
+
+class TestOperatorAndClauseSpellings:
+    """PG spellings Spark lacks, each checked against PG's answer."""
+
+    def _rows(self, spark, sql):
+        return [tuple(r) for r in pg_sql(spark, sql).collect()]
+
+    def test_factorial_operators(self, spark):
+        assert self._rows(spark, "SELECT 5 ! AS f") == [(120,)]
+        assert self._rows(spark, "SELECT !! 5 AS f") == [(120,)]
+
+    def test_prefix_math_operators(self, spark):
+        assert self._rows(spark, "SELECT |/ 25.0 AS r") == [(5.0,)]
+        assert self._rows(spark, "SELECT ||/ 27.0 AS r") == [(3.0,)]
+        assert self._rows(spark, "SELECT @ -5 AS a") == [(5,)]
+
+    def test_offset_before_limit(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT x FROM (VALUES (1), (2), (3)) v(x) ORDER BY x OFFSET 1 LIMIT 1",
+        )
+        assert out == [(2,)]
+
+    def test_interval_unit_alias(self, spark):
+        (i,), = self._rows(spark, "SELECT interval '2 mins' AS i")
+        assert i.total_seconds() == 120
+
+    def test_float_to_int_cast_rounds_half_even(self, spark):
+        # float8 → int4 uses rint (float.c dtoi4)
+        out = self._rows(
+            spark,
+            "SELECT CAST(CAST(2.5 AS FLOAT) AS INT) AS a, "
+            "CAST(CAST(3.5 AS FLOAT) AS INT) AS b",
+        )
+        assert out == [(2, 4)]
+
+    def test_large_objects_rejected(self):
+        with pytest.raises(NotImplementedError, match="lo_import"):
+            transpile("SELECT lo_import('/tmp/x')")
+
+    def test_named_window_with_frame(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT sum(x) OVER (w ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS s "
+            "FROM (VALUES (1), (2), (3)) v(x) WINDOW w AS (ORDER BY x) ORDER BY x",
+        )
+        assert out == [(1,), (3,), (5,)]
+
+    def test_rollup_on_output_alias(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT x % 2 AS u, count(*) AS n FROM (VALUES (1), (2), (3)) v(x) "
+            "GROUP BY ROLLUP (u) ORDER BY u",
+        )
+        assert out == [(0, 1), (1, 2), (None, 3)]
+
+    def test_json_extract_path_text(self, spark):
+        out = self._rows(
+            spark, """SELECT json_extract_path_text('{"a":{"b":1}}', 'a', 'b') AS j"""
+        )
+        assert out == [("1",)]
+
+    def test_div_truncates_toward_zero(self, spark):
+        assert self._rows(spark, "SELECT div(-7, 2) AS d") == [(-3,)]
 
 
 class TestQuoteAndJsonComposition:

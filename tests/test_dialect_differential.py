@@ -90,6 +90,13 @@ CASES = [
     "SELECT n FROM vals ORDER BY n DESC LIMIT 2",
     "SELECT i, n, row_number() OVER (ORDER BY n) AS rn FROM vals ORDER BY i",
     "SELECT i, x, rank() OVER (ORDER BY x DESC) AS r FROM vals ORDER BY i",
+    # the dialect rewrites only tokens: literal text is never rewritten
+    "SELECT 'FROM generate_series(1,3) AS g(x)' AS s",
+    "SELECT 'see (select distinct on (a) a from t)' AS s",
+    "SELECT $$a B'1' b$$ AS s",
+    # SRF items (nodeFunctionscan.c): any argument nesting, any JOIN
+    "SELECT x FROM generate_series(1, abs(abs(abs(3)))) g(x) ORDER BY x",
+    "SELECT t.a, x FROM (SELECT 1 AS a) t JOIN generate_series(1,3) g(x) ON true ORDER BY x",
 ]
 
 

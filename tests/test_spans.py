@@ -102,6 +102,8 @@ def test_lexeme_kinds():
         ("number", "1"), ("op", ".."), ("number", "10"),
     ]
     assert tokenize("SELECT naïve_ß, x1é") == ["SELECT", "naïve_ß", ",", "x1é"]
+    # bit strings are one lexeme (scan.l xb/xh); a longer identifier is not
+    assert tokenize("B'10' x'1F' ab'1'") == ["B'10'", "x'1F'", "ab", "'1'"]
     assert plain_literal("$t$it's$t$") == plain_literal("E'it\\'s'") == "'it''s'"
     assert plain_literal(r"E'\x41\X41\101\u0041\q'") == "'AX41AAq'"
 

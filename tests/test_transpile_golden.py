@@ -61,8 +61,12 @@ def replay_state():
         m._uid = itertools.count(max(saved[n], next(m._uid)))
 
 
+def _entries() -> list[dict]:
+    return [json.loads(line) for line in _CORPUS.read_text().splitlines()]
+
+
 def test_corpus_replays_byte_identically(replay_state):
-    entries = [json.loads(line) for line in _CORPUS.read_text().splitlines()]
+    entries = _entries()
     assert len(entries) > 1000
     bad = []
     for e in entries:
@@ -71,3 +75,30 @@ def test_corpus_replays_byte_identically(replay_state):
         if got != want:
             bad.append(f"{e['sql'][:200]!r}\n  want {want}\n  got  {got}")
     assert not bad, f"{len(bad)} of {len(entries)} differ:\n" + "\n".join(bad[:10])
+
+
+def test_every_pass_changes_an_entry(replay_state, monkeypatch):
+    """Each pass ``transpile()`` runs changes at least one corpus entry;
+    raising counts as a change.  A pass no recorded input needs is
+    either dead or untested: give it a case or delete it."""
+    fired: set[str] = set()
+
+    def watch(rewrite):
+        def run(toks):
+            before = list(toks)
+            try:
+                after = rewrite(toks)
+            except Exception:
+                fired.add(rewrite.__name__)
+                raise
+            if after != before:
+                fired.add(rewrite.__name__)
+            return after
+
+        return run
+
+    names = [p.__name__ for p in transpiler._PASSES]
+    monkeypatch.setattr(transpiler, "_PASSES", tuple(map(watch, transpiler._PASSES)))
+    for e in _entries():
+        _replay(e, replay_state)
+    assert [n for n in names if n not in fired] == []
