@@ -745,6 +745,57 @@ class TestOperatorAndClauseSpellings:
         assert self._rows(spark, "SELECT div(-7, 2) AS d") == [(-3,)]
 
 
+class TestCallLoweringForms:
+    """Call forms of the function lowerings that only these cases take,
+    each checked against PG's answer."""
+
+    def _rows(self, spark, sql):
+        return [tuple(r) for r in pg_sql(spark, sql).collect()]
+
+    def test_one_argument_trunc_keeps_the_sign(self, spark):
+        assert self._rows(spark, "SELECT trunc(2.7) AS a, trunc(-2.7) AS b") == [(2, -2)]
+
+    def test_date_part_epoch_and_eras(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT date_part('epoch', TIMESTAMP '1970-01-02 00:00:00') AS e, "
+            "date_part('century', DATE '2000-12-31') AS c, "
+            "date_part('millennium', DATE '2001-01-01') AS m, "
+            "date_part('decade', DATE '1999-06-01') AS d",
+        )
+        assert out == [(86400, 20, 3, 199)]
+
+    def test_fm_numeric_template_with_decimals(self, spark):
+        assert self._rows(spark, "SELECT to_char(12.5, 'FM99.99') AS s") == [("12.5",)]
+
+    def test_regexp_replace_global_insensitive_column_pattern(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT regexp_replace('aBab', p, 'X', 'gi') AS r FROM (SELECT 'b' AS p) t",
+        )
+        assert out == [("aXaX",)]
+
+    def test_regexp_replace_first_match_replacement_escapes(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT regexp_replace('abc', 'b', '[\\&]') AS a, "
+            "regexp_replace('abc', 'b', '$') AS b, "
+            "regexp_replace('abc', 'b', '\\\\') AS c",
+        )
+        assert out == [("a[b]c", "a$c", "a\\c")]
+
+    def test_regexp_split_to_array_insensitive_column_pattern(self, spark):
+        out = self._rows(
+            spark,
+            "SELECT regexp_split_to_array('aXbxc', p, 'i') AS a FROM (SELECT 'x' AS p) t",
+        )
+        assert out == [(["a", "b", "c"],)]
+
+    def test_sha1_digest(self, spark):
+        out = self._rows(spark, "SELECT encode(digest('abc', 'sha1'), 'hex') AS h")
+        assert out == [("a9993e364706816aba3e25717850c26c9cd0d89d",)]
+
+
 class TestQuoteAndJsonComposition:
     """quote_ident/quote_literal (quote.c), array_remove/array_replace
     (arrayfuncs.c), json_build_object/json_agg/row_to_json (json.c), and
