@@ -38,11 +38,23 @@ quoted identifiers and ''-literals are re-spelled for Spark last.  A new
 pass goes where its input forms still exist and its output cannot be
 re-read by a later pass, and it must change at least one entry of the
 golden corpus (tests/test_transpile_golden.py).
+
+Function calls: ``_pass_functions`` looks each identifier up once in
+``_CALL_LOWERINGS``, one table keyed by the lower-cased name.  A call's
+entry tries that name's forms in order — its own lowerings, then an
+inline template (``_INLINE_FN_TEMPLATES``) or a type-name cast
+(``int4(x)``), and last a plain rename (``_FUNC_RENAME``); the first form
+that matches replaces the call, and none matching leaves it.  Scanning
+resumes at the token after the replacement's head: the head is never
+re-read, and the arguments and the rest of the emission are lowered in
+turn.  A lowering whose output needs another name's lowering calls it
+directly.  Each entry must change at least one corpus entry too.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Callable, NamedTuple
 
 from greengage_spark.dialect.datetime_patterns import pg_pattern_to_java
 from greengage_spark.dialect.spans import (
@@ -5260,11 +5272,13 @@ def _pass_regex_ops(toks: list[str]) -> list[str]:
         toks = toks[:start] + new + toks[idx + 2 :]
 
 
+# Plain renames: each is the last call form of its name in
+# _CALL_LOWERINGS, taken when no other form of the name matches.
 _FUNC_RENAME = {
+    "row": "struct",  # ROW(...) constructor (gram.y row:)
     "strpos": "instr",
     "char_length": "length",
     "character_length": "length",
-    "octet_length": "octet_length",
     "btrim": "trim",
     "random": "rand",
     "gen_random_uuid": "uuid",  # pgcrypto gen_random_uuid → Spark uuid()
@@ -5280,11 +5294,7 @@ _FUNC_RENAME = {
     "clock_timestamp": "current_timestamp",
     "statement_timestamp": "current_timestamp",
     "transaction_timestamp": "current_timestamp",
-    "json_array_length": "json_array_length",
-    "array_append": "array_append",
     "array_cat": "concat",
-    "array_position": "array_position",
-    "ceiling": "ceil",
     # PG format() is printf-style (varlena format(); '%s'/'%I'/'%L')
     "format": "format_string",
 }
@@ -5294,7 +5304,8 @@ _FUNC_RENAME = {
 # the string representation map_pg_type assigns) function surfaces as
 # inline Spark expression templates — pure codegen, keyed by (name,
 # arity) so e.g. 2-arg hstore slice() never shadows Spark's 3-arg array
-# slice().  {0}/{1} substitute the argument token text.
+# slice().  {0}/{1} substitute the argument token text.  Each name is
+# one call form in _CALL_LOWERINGS.
 _IP2INT = (
     "aggregate(transform(split(split({0}, '/')[1], '[.]'), "
     "__p -> CAST(__p AS BIGINT)), CAST(0 AS BIGINT), "
@@ -5400,9 +5411,9 @@ _INLINE_FN_TEMPLATES: dict[tuple[str, int], str] = {
     ("uuid_generate_v1mc", 0): "pg_uuid_v1(true)",
     # ---- identifier/literal quoting (quote.c; ruleutils.c quote_identifier:
     # quote only when not already a safe lowercase identifier) ----
-    # || (strict in PG and Spark) instead of concat so the user-concat
-    # NULL-skip rewrite in _pass_functions never touches the template's
-    # own emission: quote_ident(NULL) must stay NULL, not become '""'
+    # || (strict in PG and Spark) instead of concat: the emission's body
+    # is rescanned, and the concat NULL-skip lowering must not touch it —
+    # quote_ident(NULL) must stay NULL, not become '""'
     ("quote_ident", 1): (
         "(CASE WHEN {0} RLIKE '^[a-z_][a-z0-9_]*$' THEN {0} "
         "ELSE ('\"' || replace({0}, '\"', '\"\"') || '\"') END)"
@@ -5425,8 +5436,8 @@ _INLINE_FN_TEMPLATES: dict[tuple[str, int], str] = {
         "transform({0}, __e -> CASE WHEN equal_null(__e, ({1})) "
         "THEN ({2}) ELSE __e END)"
     ),
-    # array_lower/array_ndims are handled in _pass_functions directly —
-    # they are dimension-aware (_md_array_fn) and must see the arg shape
+    # array_lower/array_ndims have call forms of their own
+    # (_lower_md_array, _lower_array_dim): they must see the arg shape
     # PG arg order is (elem, arr); Spark's builtin is (arr, elem)
     ("array_prepend", 2): "array_prepend({1}, {0})",
     # ---- contrib/intarray (_int.sql surface; _int_op.c) ----
@@ -5470,8 +5481,9 @@ _INLINE_FN_TEMPLATES: dict[tuple[str, int], str] = {
         "ELSE substring({0}, 1, greatest(length({0}) + ({1}), 0)) END)"
     ),
     ("right", 2): (
-        # positive start only — the substr PG-clip guard in
-        # _pass_functions re-rewrites any emitted negative start
+        # positive start only: when the emission's body is rescanned,
+        # the substr clip form guards the negative start and leaves the
+        # greatest(…, 1) start alone
         "(CASE WHEN ({1}) > 0 "
         "THEN substring({0}, greatest(length({0}) - ({1}) + 1, 1)) "
         "WHEN ({1}) = 0 THEN '' "
@@ -5485,9 +5497,6 @@ _INLINE_FN_TEMPLATES: dict[tuple[str, int], str] = {
         "unhex(concat(substring(hex({0}), 1, 2 * ({1})), "
         "lpad(hex({2}), 2, '0'), substring(hex({0}), 2 * ({1}) + 3)))"
     ),
-    # ---- contrib/pgcrypto digest (px.c): bytea out → binary ----
-    ("digest_md5", 1): "unhex(md5({0}))",
-    ("digest_sha1", 1): "unhex(sha1({0}))",
     # 1-D array_fill(value, ARRAY[n])
     ("array_fill", 2): (
         "transform(sequence(1, element_at(({1}), 1)), __x -> ({0}))"
@@ -6039,8 +6048,8 @@ def _pass_inet_ops(toks: list[str]) -> list[str]:
     network_subeq / network_overlap).  An inet value IS its text form;
     ``::inet`` / ``::cidr`` casts mark their operand, and <<, <<=, >>,
     >>=, && with a marked operand lower onto the inet_contained_by /
-    equality kernels (the function templates expand later in
-    _pass_functions)."""
+    equality kernels (the function templates expand later, as
+    _pass_functions entries)."""
     if not any(
         is_ident(t) and t.lower() in ("inet", "cidr") for t in toks
     ):
@@ -6577,1260 +6586,1237 @@ def _md_array_fn(fn: str, a: str, depth: int, args: list[list[str]]) -> str:
     return f"(CASE WHEN size({a}) > 0 THEN {dim_size(n)} END)"
 
 
+class _Call(NamedTuple):
+    """A call ``name ( arg, … )`` in ``toks``: ``toks[start]`` is the
+    name, ``name`` its lower-case form, and ``toks[close]`` the ``)``."""
+
+    name: str
+    args: list[list[str]]
+    toks: list[str]
+    start: int
+    close: int
+
+    def renamed(self, to: str) -> list[str]:
+        return [to] + self.toks[self.start + 1 : self.close + 1]
+
+
+# name → its call forms, tried in registration order; each returns the
+# tokens that replace the whole call, or None when its form does not match
+_CALL_FORMS: dict[str, list[Callable[[_Call], list[str] | None]]] = {}
+
+
+def _lowers(*names: str):
+    def register(form):
+        for n in names:
+            _CALL_FORMS.setdefault(n, []).append(form)
+        return form
+
+    return register
+
+
+@_lowers("to_char", "to_date", "to_timestamp")
+def _lower_template_format(c: _Call) -> list[str] | None:
+    args = c.args
+    if not (len(args) == 2 and len(args[1]) == 1 and is_string(args[1][0])):
+        return None
+    tmpl = args[1][0].strip("'")
+    m_num = re.fullmatch(r"(FM)?([9]+)(?:\.([9]+))?", tmpl)
+    if m_num and m_num.group(1) and m_num.group(3):
+        # FM with decimal positions strips trailing 9-zeros —
+        # only the full engine renders that; skip fast path
+        m_num = None
+    if m_num and len(m_num.group(2)) + len(m_num.group(3) or "") > 15:
+        # wider than double precision — the DOUBLE pre-cast
+        # below would corrupt digits past ~15 significant
+        # places; the pg_tochar_num engine stays exact
+        m_num = None
+    if c.name == "to_char" and m_num:
+        # numeric template (formatting.c NUM_9): right-align in
+        # the template width with one sign column; FM strips
+        # padding.  Decimal-cast renders the fixed scale.  A 9
+        # in the ones place drops a leading zero digit entirely
+        # (NUM_processor: blank-padded 9s), so 0.5 → '.5' and
+        # 0 with a decimal template → '.0000000'.
+        fm, ipart, dpart = m_num.groups()
+        d = len(dpart) if dpart else 0
+        p = len(ipart) + d
+        # the argument is computed in DOUBLE first: Spark's
+        # decimal aggregates stop at scale+4 (avg(decimal(5,0))
+        # → decimal(9,4)), far below PG's unbounded numeric —
+        # double carries the template's 7 digits exactly
+        cast = (
+            ["CAST", "(", "round", "(", "CAST", "("]
+            + args[0]
+            + ["AS", "DOUBLE", ")", ",", str(d), ")",
+               "AS", f"DECIMAL({p},{d})", ")"]
+        )
+        if dpart:
+            # PG-spelled call (the rescan of this lowering's body
+            # converts flags + \1 backref to the Spark form)
+            cast = (
+                ["regexp_replace", "(", "CAST", "("] + cast
+                + ["AS", "STRING", ")", ",",
+                   "'^(-?)0\\.'", ",", "'\\1.'", ",", "'g'", ")"]
+            )
+        if fm:
+            return ["CAST", "("] + cast + ["AS", "STRING", ")"]
+        width = 1 + len(ipart) + (1 + d if dpart else 0)
+        return ["lpad", "("] + cast + [",", str(width), ",", "' '", ")"]
+    if c.name == "to_char":
+        from greengage_spark.functions.pg_format import dch_needs_engine
+
+        esc = tmpl.replace("'", "''")
+        if any(ch in "90" for ch in tmpl) or tmpl.upper().lstrip("FM") in ("RN",):
+            # advanced NUM template (0 S MI SG PR TH L G EEEE
+            # RN …) → the full formatting.c engine, Arrow-
+            # batched (pg_format.num_tochar)
+            return ["pg_tochar_num", "("] + args[0] + [",", f"'{esc}'", ")"]
+        if dch_needs_engine(tmpl):
+            # DCH fields the Java-pattern path cannot render
+            # faithfully (ISO week dates, J, RM, TH, FM, …)
+            return ["pg_tochar_dch", "("] + args[0] + [",", f"'{esc}'", ")"]
+    java = pg_pattern_to_java(tmpl)
+    fname = {"to_char": "date_format", "to_date": "to_date", "to_timestamp": "to_timestamp"}[c.name]
+    return [fname, "("] + args[0] + [",", f"'{java}'", ")"]
+
+
+@_lowers("to_number")
+def _lower_to_number(c: _Call) -> list[str] | None:
+    if not (len(c.args) == 2 and len(c.args[1]) == 1 and is_string(c.args[1][0])):
+        return None
+    # reverse NUM_* engine (formatting.c numeric_to_number) —
+    # Arrow-batched pg_format.num_tonumber
+    esc = c.args[1][0].strip("'").replace("'", "''")
+    return (
+        ["pg_tonumber", "(", "CAST", "("] + c.args[0]
+        + ["AS", "STRING", ")", ",", f"'{esc}'", ")"]
+    )
+
+
+@_lowers("ceil", "ceiling", "floor", "trunc")
+def _lower_ceil_floor_trunc(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    # PG keeps the argument's type (float.c dceil/dfloor,
+    # numeric.c); Spark's ceil/floor return BIGINT, which
+    # clamps 1e200-scale doubles.  The mod-1 formula is
+    # type-generic and codegen-friendly; % follows the
+    # dividend's sign in both engines.
+    a = ["("] + c.args[0] + [")"]
+    frac = a + ["%", "1"]
+    if c.name == "trunc":
+        return ["("] + a + ["-", "("] + frac + [")", ")"]
+    cmp_, adj = (">", "1") if c.name != "floor" else ("<", "-1")
+    return (
+        ["("] + a + ["-", "("] + frac + [")", "+",
+         "CASE", "WHEN", "("] + frac + [")", cmp_, "0",
+         "THEN", adj, "ELSE", "0", "END", ")"]
+    )
+
+
+@_lowers("bitand", "bitor", "bitxor")
+def _lower_bit_binop(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # varbit.c bit_and/bit_or/bitxor over 0/1-text bit strings:
+    # value algebra through a 64-bit word (conv base-2), length
+    # preserved from the left operand (PG requires equal
+    # lengths; ≤63 significant bits — the practical range).
+    # orafce overloads bitand(bigint, bigint): plainly
+    # numeric arguments take the integer form.
+    args = c.args
+    op = {"bitand": "&", "bitor": "|", "bitxor": "^"}[c.name]
+    if c.name == "bitand" and all(
+        all(re.match(r"^(-?\d+|\(|\)|[-+*/%])$", t) for t in a) for a in args
+    ):
+        x, y = (" ".join(a) for a in args)
+        return (
+            ["("]
+            + ["CAST", "(", "(", x, ")", "AS", "BIGINT", ")"]
+            + ["&"]
+            + ["CAST", "(", "(", y, ")", "AS", "BIGINT", ")"]
+            + [")"]
+        )
+
+    def _c(a):
+        return (
+            ["CAST", "(", "conv", "(", "("] + a
+            + [")", ",", "2", ",", "10", ")", "AS", "BIGINT", ")"]
+        )
+
+    return (
+        ["substring", "(", "lpad", "(", "bin", "("]
+        + _c(args[0]) + [op] + _c(args[1])
+        + [")", ",", "64", ",", "'0'", ")", ",",
+           "65", "-", "length", "("] + args[0] + [")", ")"]
+    )
+
+
+@_lowers("bitnot")
+def _lower_bitnot(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    # ~b flips every bit: pure char translate, any length
+    return ["translate", "(", "("] + c.args[0] + [")", ",", "'01'", ",", "'10'", ")"]
+
+
+@_lowers("bitshiftleft", "bitshiftright")
+def _lower_bitshift(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # varbit.c bitshiftleft/right: zero-fill, length-preserving
+    a, nn = c.args
+    if c.name == "bitshiftleft":
+        return (
+            ["rpad", "(", "substring", "(", "("] + a
+            + [")", ",", "("] + nn + [")", "+", "1", ")", ",",
+               "length", "("] + a + [")", ",", "'0'", ")"]
+        )
+    return (
+        ["lpad", "(", "substring", "(", "("] + a
+        + [")", ",", "1", ",", "greatest", "(", "length", "("]
+        + a + [")", "-", "("] + nn + [")", ",", "0", ")",
+           ")", ",", "length", "("] + a + [")", ",", "'0'", ")"]
+    )
+
+
+@_lowers("bitcat")
+def _lower_bitcat(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    return ["concat", "(", "("] + c.args[0] + [")", ",", "("] + c.args[1] + [")", ")"]
+
+
+@_lowers("timezone")
+def _lower_timezone(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # PG timezone(zone, ts) ≡ ts AT TIME ZONE zone
+    # (timestamp.c timestamp_zone; same naive→instant contract
+    # as _pass_at_time_zone — argument order swaps for Spark)
+    return ["to_utc_timestamp", "("] + c.args[1] + [","] + c.args[0] + [")"]
+
+
+@_lowers("ltrim", "rtrim", "btrim")
+def _lower_trim_chars(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # PG argument order is (string, characters) (varlena.c);
+    # Spark's two-argument trims take (trimStr, srcStr)
+    fname = "trim" if c.name == "btrim" else c.name
+    return [fname, "("] + c.args[1] + [","] + c.args[0] + [")"]
+
+
+@_lowers("regexp_replace")
+def _lower_regexp_replace(c: _Call) -> list[str] | None:
+    if len(c.args) not in (3, 4):
+        return None
+    # PG regexp_replace (regexp.c RE_replace): the DEFAULT is
+    # first-occurrence-only; flag 'g' = all occurrences (Spark's
+    # only native mode), 'i' = case-insensitive.  Replacement
+    # backrefs are \N (\& = whole match) where Java wants $N.
+    args = c.args
+    pat, rep = args[1], args[2]
+    flags = ""
+    if len(args) == 4:
+        if not (len(args[3]) == 1 and is_string(args[3][0])):
+            raise NotImplementedError(
+                "regexp_replace: non-literal flags argument"
+            )
+        flags = args[3][0].strip("'")
+    lit_pat = len(pat) == 1 and is_string(pat[0])
+    if "g" in flags:
+        if len(rep) == 1 and is_string(rep[0]) and "\\" in rep[0]:
+            rep = [re.sub(r"\\(\d)", r"$\1", rep[0])]
+        if "i" in flags:
+            if lit_pat:
+                pat = ["'(?i)" + pat[0][1:]]
+            else:
+                pat = ["concat", "(", "'(?i)'", ","] + pat + [")"]
+        return ["regexp_replace", "("] + args[0] + [","] + pat + [","] + rep + [")"]
+    # First-occurrence-only (PG default).  Lowering:
+    #   pat → (?s)[(?i)]^(.*?)(pat)     rep → $1<rep, \N→$(N+2)>
+    # The ^-anchored lazy prefix makes Java's replace-all fire
+    # exactly once (it cannot re-match ^ past position 0), and
+    # (?s) matches PG's newline-insensitive '.' default.
+    if not (lit_pat and len(rep) == 1 and is_string(rep[0])):
+        raise NotImplementedError(
+            "first-occurrence regexp_replace (no 'g' flag) needs "
+            "a literal pattern and replacement; pass the 'g' "
+            "flag for replace-all"
+        )
+    mods = "(?s)" + ("(?i)" if "i" in flags else "")
+    # the ^(.*?)( wrapper adds two capture groups, so
+    # backreferences INSIDE the pattern shift by 2 as well
+    inner_pat = re.sub(
+        r"(?<!\\)\\(\d)",
+        lambda m: "\\" + str(int(m.group(1)) + 2),
+        pat[0][1:-1],
+    )
+    new_pat = "'" + mods + "^(.*?)(" + inner_pat + ")'"
+
+    def _conv_backref(m: "re.Match[str]") -> str:
+        t = m.group(0)
+        if t == "$":
+            return "\\$"
+        if t == "\\\\":
+            return "\\\\"
+        if t == "\\&":
+            return "$2"
+        return "$" + str(int(t[1]) + 2)
+
+    new_rep = "'$1" + re.sub(r"\\[0-9&\\]|\$", _conv_backref, rep[0][1:-1]) + "'"
+    return ["regexp_replace", "("] + args[0] + [",", new_pat, ",", new_rep, ")"]
+
+
+@_lowers("regexp_split_to_array")
+def _lower_regexp_split_to_array(c: _Call) -> list[str] | None:
+    if len(c.args) not in (2, 3):
+        return None
+    # regexp_split_to_table's array sibling → Spark split();
+    # optional 'i' flag folds into the pattern
+    pat = c.args[1]
+    if len(c.args) == 3 and len(c.args[2]) == 1 and is_string(c.args[2][0]):
+        if "i" in c.args[2][0].strip("'"):
+            if len(pat) == 1 and is_string(pat[0]):
+                pat = ["'(?i)" + pat[0][1:]]
+            else:
+                pat = ["concat", "(", "'(?i)'", ","] + pat + [")"]
+    return ["split", "("] + c.args[0] + [","] + pat + [",", "-1", ")"]
+
+
+@_lowers("substring", "substr")
+def _lower_substring_from(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    # keyword form: SUBSTRING(x FROM y [FOR z]).  A string-
+    # literal y is PG's POSIX-regex substring (varlena.c
+    # textregexsubstr): result = first capture group if the
+    # pattern has one, else the whole match; NULL on no match.
+    inner = c.args[0]
+    from_idx = next(
+        (k for k, tk in top_level(inner) if is_ident(tk) and tk.lower() == "from"),
+        None,
+    )
+    if from_idx is None:
+        return None
+    xpr = inner[:from_idx]
+    rest = inner[from_idx + 1 :]
+    if len(rest) == 1 and is_string(rest[0]):
+        lit = rest[0]
+        grp = "1" if _count_capture_groups(lit[1:-1]) else "0"
+        return (
+            ["case", "when", "("] + xpr + [")", "rlike", lit,
+             "then", "regexp_extract", "(", "("] + xpr
+            + [")", ",", lit, ",", grp, ")", "end"]
+        )
+    if (
+        len(rest) == 3
+        and is_string(rest[0])
+        and is_ident(rest[1])
+        and rest[1].lower() == "for"
+        and is_string(rest[2])
+    ):
+        # SUBSTRING(x FROM pat FOR esc) — the SQL-standard
+        # SIMILAR substring (varlena.c textregexsubstr via
+        # similar_escape): esc+" pairs delimit the
+        # returned portion; the pattern must cover the
+        # whole string
+        pat = rest[0][1:-1].replace("''", "'")
+        esc = rest[2][1:-1].replace("''", "'")
+        rx, has_group = _similar_substring_regex(pat, esc)
+        rx_lit = "'" + rx.replace("'", "''") + "'"
+        grp = "1" if has_group else "0"
+        return (
+            ["case", "when", "("] + xpr + [")", "rlike",
+             rx_lit, "then", "regexp_extract", "(", "("]
+            + xpr + [")", ",", rx_lit, ",", grp, ")", "end"]
+        )
+    return None
+
+
+@_lowers("interval_bound")
+def _lower_interval_bound(c: _Call) -> list[str] | None:
+    if not 2 <= len(c.args) <= 4:
+        return None
+    # GP time-series bucketing (numeric.c
+    # numeric_interval_bound_common / timestamp.c):
+    #   bound = floor((v - r)/w)*w + s*w + r
+    # where s (3rd arg) counts WIDTHS and r (4th) registers the
+    # bucket grid.  Timestamp form (day-time widths; calendar
+    # month widths are out of scope) works in epoch
+    # microseconds.  NaN numerics are a PG-only value.
+    v, w = c.args[0], c.args[1]
+    s = c.args[2] if len(c.args) >= 3 else ["0"]
+    r = c.args[3] if len(c.args) == 4 else None
+    # arguments may be bare column refs; fall back to whether
+    # the statement works with intervals/timestamps at all
+    if any(
+        is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
+        for t in w + v + c.toks
+    ):
+        # unix_micros needs TIMESTAMP (not NTZ); session TZ is
+        # UTC so the round-trip casts are value-preserving
+        def _us(e: list[str]) -> list[str]:
+            return (
+                ["unix_micros", "(", "CAST", "(", "("] + e
+                + [")", "AS", "TIMESTAMP", ")", ")"]
+            )
+
+        r_us = _us(r) if r is not None else ["CAST", "(", "0", "AS", "BIGINT", ")"]
+        w_us = _us(["TIMESTAMP", "'1970-01-01 00:00:00'", "+", "("] + w + [")"])
+        return (
+            ["CAST", "(", "timestamp_micros", "(", "CAST", "(", "floor", "(", "("]
+            + _us(v) + ["-", "("] + r_us
+            + [")", ")", "/", "("] + w_us + [")", ")", "*", "("] + w_us
+            + [")", "+", "("] + s + [")", "*", "("] + w_us
+            + [")", "+", "("] + r_us + [")", "AS", "BIGINT", ")", ")",
+               "AS", "TIMESTAMP_NTZ", ")"]
+        )
+    rr = r if r is not None else ["0"]
+    return (
+        ["(", "floor", "(", "(", "("] + v + [")", "-", "("] + rr
+        + [")", ")", "/", "("] + w + [")", ")", "*", "("] + w
+        + [")", "+", "("] + s + [")", "*", "("] + w
+        + [")", "+", "("] + rr + [")", ")"]
+    )
+
+
+def _date_field(field: str, expr: list[str]) -> list[str] | None:
+    """EXTRACT(field FROM expr) and date_part('field', expr) for the
+    fields whose PG meaning differs from Spark's (timestamp.c
+    timestamp_part); None for the Spark-native fields."""
+    e = " ".join(expr)
+    if field == "dow":
+        # PG: Sunday=0 .. Saturday=6; Spark dayofweek: Sunday=1
+        return ["(", "dayofweek", "("] + expr + [")", "-", "1", ")"]
+    if field == "isodow":
+        # ISO numbering: Monday=1 .. Sunday=7 (date.c)
+        return ["(", "weekday", "("] + expr + [")", "+", "1", ")"]
+    if field == "isoyear":
+        # year of the ISO week = year of that week's Thursday
+        # (timestamp.c ISOYEAR via date2isoyear)
+        return tokenize(f"year(date_add(CAST(({e}) AS DATE), 3 - weekday({e})))")
+    if field == "epoch":
+        if expr and is_ident(expr[0]) and expr[0].lower() == "interval":
+            # epoch of a day-time interval = total seconds
+            # (timestamp.c interval_part); anchor at the
+            # epoch and read the timestamp back
+            return (
+                ["unix_timestamp", "(", "TIMESTAMP", "'1970-01-01 00:00:00'", "+"]
+                + expr + [")"]
+            )
+        return ["unix_timestamp", "("] + expr + [")"]
+    if field in ("century", "millennium", "decade"):
+        return _pg_era_field(field, expr)
+    if field in ("microseconds", "milliseconds"):
+        # timestamp.c: seconds INCLUDING fraction scaled
+        mul = "1e6" if field == "microseconds" else "1e3"
+        return tokenize(
+            f"CAST(round((second({e}) + (unix_micros(CAST(({e}) AS TIMESTAMP)) % 1000000) / 1e6) * {mul}) AS DOUBLE)"
+        )
+    return None
+
+
+@_lowers("extract")
+def _lower_extract(c: _Call) -> list[str] | None:
+    # EXTRACT(field FROM expr) keyword form
+    inner = c.toks[c.start + 2 : c.close]
+    from_idx = next((j for j, tk in enumerate(inner) if tk.lower() == "from"), None)
+    if from_idx is None:
+        return None
+    return _date_field(inner[0].lower(), inner[from_idx + 1 :])
+
+
+@_lowers("date_part")
+def _lower_date_part(c: _Call) -> list[str] | None:
+    if not (len(c.args) == 2 and is_string(c.args[0][0])):
+        return None
+    return _date_field(c.args[0][0].strip("'").lower(), c.args[1])
+
+
+@_lowers("date_trunc")
+def _lower_date_trunc(c: _Call) -> list[str] | None:
+    if not (len(c.args) == 2 and is_string(c.args[0][0])):
+        return None
+    field = c.args[0][0].strip("'").lower()
+    if field not in ("century", "millennium", "decade"):
+        return None
+    # timestamp.c timestamp_trunc: CENTURY xx01-01-01,
+    # MILLENNIUM x001-01-01, DECADE xxx0-01-01 (AD branch)
+    y = ["year", "(", "("] + c.args[1] + [")", ")"]
+    if field == "decade":
+        yr = (
+            ["CAST", "(", "floor", "(", "("] + y
+            + [")", "/", "10", ")", "*", "10", "AS", "INT", ")"]
+        )
+    else:
+        d = "100" if field == "century" else "1000"
+        yr = (
+            ["CAST", "(", "floor", "(", "(", "("] + y
+            + [")", "-", "1", ")", "/", d, ")", "*", d,
+               "+", "1", "AS", "INT", ")"]
+        )
+    return (
+        ["CAST", "(", "make_date", "("] + yr
+        + [",", "1", ",", "1", ")", "AS", "TIMESTAMP", ")"]
+    )
+
+
+@_lowers("array_length", "array_upper", "array_lower", "array_ndims", "array_dims", "cardinality")
+def _lower_md_array(c: _Call) -> list[str] | None:
+    if not c.args or (md := _md_array_depth(c.args[0])) < 2:
+        return None
+    # multi-dimensional argument (arrayfuncs.c; arrays.sql
+    # md rows): nested array<array<T>> representation, depth
+    # known statically from the cast type / constructor shape
+    return tokenize(_md_array_fn(c.name, " ".join(c.args[0]), md, c.args))
+
+
+@_lowers("array_length", "array_upper", "array_lower", "array_ndims", "array_dims")
+def _lower_array_dim(c: _Call) -> list[str] | None:
+    a = " ".join(c.args[0]) if c.args else ""
+    if c.name in ("array_length", "array_upper") and len(c.args) == 2:
+        # PG returns NULL (not 0) for an empty array
+        # (arrayfuncs.c array_length: no dimension → NULL)
+        return tokenize(f"(CASE WHEN size({a}) > 0 THEN size({a}) END)")
+    if c.name == "array_dims" and len(c.args) == 1:
+        return tokenize(
+            f"(CASE WHEN size({a}) > 0 THEN concat('[1:', size({a}), ']') END)"
+        )
+    if (c.name, len(c.args)) in (("array_ndims", 1), ("array_lower", 2)):
+        return tokenize(f"(CASE WHEN size({a}) > 0 THEN 1 END)")
+    return None
+
+
+@_lowers("convert_from", "convert_to")
+def _lower_convert(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # mbutils.c pg_convert_from/to: bytea ↔ text in a named
+    # encoding.  Spark's encode/decode accept a fixed charset
+    # list with exact names, so the PG encoding name (almost
+    # always a literal) maps here; non-literals reject.
+    if len(c.args[1]) != 1 or not is_string(c.args[1][0]):
+        raise NotImplementedError(f"{c.name}: the encoding name must be a literal")
+    enc = c.args[1][0].strip("'").lower().replace("-", "").replace("_", "")
+    # SQL_ASCII in PG performs NO conversion — bytes pass
+    # through verbatim (mbutils.c pg_do_encoding_conversion
+    # short-circuits).  Java's us-ascii would replace >=0x80
+    # bytes with U+FFFD, so pick the byte-transparent charset
+    # per direction: bytea→text reads each byte as one char
+    # (iso-8859-1); text→bytea emits the internal utf-8 bytes
+    # unchanged, exactly what PG's UTF8 server encoding holds.
+    cmap = {
+        "utf8": "utf-8", "unicode": "utf-8",
+        "latin1": "iso-8859-1", "iso88591": "iso-8859-1",
+        "sqlascii": "iso-8859-1", "ascii": "iso-8859-1",
+        "utf16": "utf-16",
+    }
+    if enc not in cmap:
+        raise NotImplementedError(
+            f"{c.name} encoding {c.args[1][0]}: UTF8/LATIN1/"
+            "SQL_ASCII/UTF16 are the supported names"
+        )
+    a = " ".join(c.args[0])
+    if c.name == "convert_from":
+        return tokenize(f"decode(({a}), '{cmap[enc]}')")
+    to_cs = "utf-8" if enc in ("sqlascii", "ascii") else cmap[enc]
+    return tokenize(f"encode(CAST(({a}) AS STRING), '{to_cs}')")
+
+
+@_lowers("encode")
+def _lower_encode_hex(c: _Call) -> list[str] | None:
+    if len(c.args) == 2 and c.args[1] == ["'hex'"]:
+        return ["lower", "(", "hex", "("] + c.args[0] + [")", ")"]
+    return None
+
+
+@_lowers("decode")
+def _lower_decode_hex(c: _Call) -> list[str] | None:
+    if len(c.args) == 2 and c.args[1] == ["'hex'"]:
+        return ["unhex", "("] + c.args[0] + [")"]
+    return None
+
+
+def _comma_joined(args: list[list[str]]) -> list[str]:
+    return [t for a in args for t in [","] + a][1:]
+
+
+@_lowers("json_build_object", "jsonb_build_object")
+def _lower_json_build_object(c: _Call) -> list[str] | None:
+    if not c.args or len(c.args) % 2:
+        return None
+    # json.c json_build_object: alternating key/value arguments
+    # → to_json(named_struct(...)).  Keys must be foldable
+    # strings (the overwhelmingly common literal-key form);
+    # named_struct rejects non-literal keys loudly.
+    return _to_json(["named_struct", "("] + _comma_joined(c.args) + [")"])
+
+
+@_lowers("json_build_array", "jsonb_build_array")
+def _lower_json_build_array(c: _Call) -> list[str] | None:
+    if not c.args:
+        return None
+    # homogeneous element types only (Spark arrays are typed)
+    return _to_json(["array", "("] + _comma_joined(c.args) + [")"])
+
+
+@_lowers("row_to_json")
+def _lower_row_to_json(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    a0 = c.args[0]
+    if len(a0) == 1 and is_ident(a0[0]):
+        # row_to_json(alias) over a FROM-item → whole-row struct
+        return _to_json(["struct", "(", a0[0], ".", "*", ")"])
+    return _to_json(a0)
+
+
+@_lowers("json_extract_path_text")
+def _lower_json_extract_path_text(c: _Call) -> list[str] | None:
+    path = "$." + ".".join(a[0].strip("'") for a in c.args[1:])
+    return ["get_json_object", "("] + c.args[0] + [",", f"'{path}'", ")"]
+
+
+@_lowers("log")
+def _lower_log(c: _Call) -> list[str] | None:
+    return c.renamed("log10") if len(c.args) == 1 else None
+
+
+@_lowers("median")
+def _lower_median(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    return ["percentile", "("] + c.args[0] + [",", "0.5", ")"]
+
+
+@_lowers("div")
+def _lower_div(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    return ["("] + c.args[0] + ["DIV"] + c.args[1] + [")"]
+
+
+@_lowers("trunc")
+def _lower_trunc_scale(c: _Call) -> list[str] | None:
+    if len(c.args) != 2 or (len(c.args[1]) == 1 and is_string(c.args[1][0])):
+        return None
+    # numeric.c trunc(v, s): truncate toward zero at scale s
+    # (string second arg is Spark's own trunc(date, fmt) —
+    # untouched)
+    v, s = " ".join(c.args[0]), " ".join(c.args[1])
+    return tokenize(
+        f"(CASE WHEN ({v}) >= 0 THEN floor(({v}) * power(10, ({s}))) "
+        f"ELSE ceil(({v}) * power(10, ({s}))) END / power(10, ({s})))"
+    )
+
+
+@_lowers("format")
+def _lower_format(c: _Call) -> list[str] | None:
+    if c.args and len(c.args[0]) == 1 and is_string(c.args[0][0]):
+        return _lower_pg_format(c.args)
+    return None
+
+
+@_lowers("regexp_matches")
+def _lower_regexp_matches_call(c: _Call) -> list[str] | None:
+    if len(c.args) in (2, 3) and len(c.args[1]) == 1 and is_string(c.args[1][0]):
+        return _lower_regexp_matches(c.args)
+    return None
+
+
+@_lowers("unnest")
+def _lower_md_unnest(c: _Call) -> list[str] | None:
+    if len(c.args) != 1 or (md := _md_array_depth(c.args[0])) < 2:
+        return None
+    # multi-dim arrays unnest to SCALARS in storage order
+    # (arrayfuncs.c array_unnest walks the flat data array)
+    inner = " ".join(c.args[0])
+    for _ in range(md - 1):
+        inner = f"flatten({inner})"
+    return tokenize(f"explode({inner})")
+
+
+@_lowers("similarity", "show_trgm", "difference")
+def _lower_trgm(c: _Call) -> list[str] | None:
+    # contrib/pg_trgm trgm_op.c; fuzzystrmatch difference
+    from greengage_spark.functions import trgm
+
+    a = [" ".join(x) for x in c.args]
+    if c.name == "similarity" and len(a) == 2:
+        expansion = trgm.similarity_sql(*a)
+    elif c.name == "show_trgm" and len(a) == 1:
+        expansion = trgm.trigrams_sql(*a)
+    elif c.name == "difference" and len(a) == 2:
+        expansion = trgm.difference_sql(*a)
+    else:
+        return None
+    return ["(" + expansion + ")"]
+
+
+@_lowers("digest")
+def _lower_digest(c: _Call) -> list[str] | None:
+    if not (len(c.args) == 2 and len(c.args[1]) == 1 and is_string(c.args[1][0])):
+        return None
+    # contrib/pgcrypto digest(data, algo) → bytea (px.c)
+    algo = c.args[1][0].strip("'").lower()
+    x = " ".join(c.args[0])
+    if algo in ("md5", "sha1"):
+        return tokenize(f"unhex({algo}(({x})))")
+    if algo in ("sha224", "sha256", "sha384", "sha512"):
+        return tokenize(f"unhex(sha2(({x}), {algo[3:]}))")
+    raise NotImplementedError(
+        f"digest algorithm {algo!r} (md5, sha1, sha224, sha256, sha384, sha512)"
+    )
+
+
+@_lowers("hmac")
+def _lower_hmac(c: _Call) -> list[str] | None:
+    if not (len(c.args) == 3 and len(c.args[2]) == 1 and is_string(c.args[2][0])):
+        return None
+    # contrib/pgcrypto hmac(data, key, type) → bytea
+    # (pgcrypto.c:161); Arrow-batched UDF — no JVM builtin
+    algo = c.args[2][0].strip("'").lower()
+    if algo not in ("md5", "sha1", "sha224", "sha256", "sha384", "sha512"):
+        raise NotImplementedError(
+            f"hmac algorithm {algo!r} (md5, sha1, sha224, sha256, sha384, sha512)"
+        )
+    a, k = (" ".join(x) for x in c.args[:2])
+    return tokenize(f"pg_hmac(CAST(({a}) AS STRING), CAST(({k}) AS STRING), '{algo}')")
+
+
+@_lowers("nlevel", "subltree", "subpath", "lca", "text2ltree", "ltree2text", "index")
+def _lower_ltree(c: _Call) -> list[str] | None:
+    # contrib/ltree function surface (ltree_op.c; emitters in
+    # functions/ltree_ops.py — all JVM array expressions)
+    from greengage_spark.functions import ltree_ops as L
+
+    a = ["(" + " ".join(x) + ")" for x in c.args]
+    if c.name == "nlevel" and len(a) == 1:
+        expr = L.nlevel_sql(a[0])
+    elif c.name == "subltree" and len(a) == 3:
+        expr = L.subltree_sql(*a)
+    elif c.name == "subpath" and len(a) in (2, 3):
+        expr = L.subpath_sql(*a)
+    elif c.name == "index" and len(a) in (2, 3):
+        expr = L.index_sql(*a)
+    elif c.name == "lca" and 1 <= len(a) <= 8:
+        if len(a) == 1 and c.args[0] and is_string(c.args[0][0]) \
+                and c.args[0][0].lstrip("'").startswith("{"):
+            raise NotImplementedError(
+                "lca('{...}') array form — pass the paths as "
+                "separate arguments (up to 8, as in PG)"
+            )
+        expr = L.lca_sql(*a)
+    elif c.name in ("text2ltree", "ltree2text") and len(a) == 1:
+        expr = a[0]  # identity: ltree IS its text form
+    else:
+        return None
+    return tokenize(expr)
+
+
+@_lowers("xpath", "xpath_exists")
+def _lower_xpath(c: _Call) -> list[str] | None:
+    # xml.c:4082,4132 — child/attribute/text() subset over an
+    # Arrow-batched ElementTree UDF (functions/xmlquery.py);
+    # the 3-arg namespace array resolves prefixed steps and
+    # results serialize with the document's own prefixes
+    fn = "pg_xpath" if c.name == "xpath" else "pg_xpath_exists"
+    if len(c.args) == 3:
+        p, x, n = (" ".join(a) for a in c.args)
+        return tokenize(
+            f"{fn}_ns(CAST(({p}) AS STRING), "
+            f"CAST(({x}) AS STRING), "
+            f"CAST(({n}) AS ARRAY<ARRAY<STRING>>))"
+        )
+    if len(c.args) == 2:
+        p, x = (" ".join(a) for a in c.args)
+        return tokenize(f"{fn}(CAST(({p}) AS STRING), CAST(({x}) AS STRING))")
+    return None
+
+
+@_lowers("instr")
+def _lower_instr(c: _Call) -> list[str] | None:
+    if len(c.args) not in (3, 4):
+        return None
+    # orafce plvstr.c instr(str, sub, pos [, nth]) — Spark's
+    # 2-arg instr passes through untouched
+    from greengage_spark.functions.orafce import instr_sql
+
+    a = [" ".join(x) for x in c.args]
+    nth = a[3] if len(a) == 4 else "1"
+    return ["(" + instr_sql(a[0], a[1], a[2], nth) + ")"]
+
+
+@_lowers("lnnvl")
+def _lower_lnnvl(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    # orafce lnnvl: TRUE when the condition is FALSE or NULL
+    return tokenize(f"(({' '.join(c.args[0])}) IS NOT TRUE)")
+
+
+@_lowers("nanvl")
+def _lower_nanvl(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    a, b = (" ".join(x) for x in c.args)
+    return tokenize(
+        f"(CASE WHEN isnan(CAST(({a}) AS DOUBLE)) THEN ({b}) ELSE ({a}) END)"
+    )
+
+
+@_lowers("wm_concat")
+def _lower_wm_concat(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    a = " ".join(c.args[0])
+    return tokenize(f"{_FUNC_RENAME['string_agg']}(CAST(({a}) AS STRING), ',')")
+
+
+@_lowers("round")
+def _lower_round_date(c: _Call) -> list[str] | None:
+    if not (len(c.args) == 2 and len(c.args[1]) == 1 and is_string(c.args[1][0])):
+        return None
+    # orafce ROUND(date, 'fmt') — numeric round keeps its
+    # normal lowering (second arg numeric)
+    from greengage_spark.functions.orafce import round_date_sql
+
+    return ["(" + round_date_sql(" ".join(c.args[0]), c.args[1][0]) + ")"]
+
+
+@_lowers("xpath_string", "xpath_number", "xpath_bool")
+def _lower_xml2_xpath(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # contrib/xml2 (xpath.c): (document, query) — argument
+    # order REVERSED vs xpath(query, document)
+    d, p = (" ".join(x) for x in c.args)
+    return tokenize(f"pg_{c.name}(CAST(({d}) AS STRING), CAST(({p}) AS STRING))")
+
+
+@_lowers("xpath_list")
+def _lower_xpath_list(c: _Call) -> list[str] | None:
+    if len(c.args) not in (2, 3):
+        return None
+    d, p = (" ".join(x) for x in c.args[:2])
+    sep = " ".join(c.args[2]) if len(c.args) == 3 else "','"
+    return tokenize(
+        f"pg_xpath_list(CAST(({d}) AS STRING), "
+        f"CAST(({p}) AS STRING), CAST(({sep}) AS STRING))"
+    )
+
+
+@_lowers("xpath_nodeset")
+def _lower_xpath_nodeset(c: _Call) -> list[str] | None:
+    if len(c.args) not in (2, 3, 4):
+        return None
+    a = [" ".join(x) for x in c.args]
+    top = a[2] if len(a) >= 3 else "''"
+    item = a[3] if len(a) == 4 else "''"
+    return tokenize(
+        f"pg_xpath_nodeset(CAST(({a[0]}) AS STRING), "
+        f"CAST(({a[1]}) AS STRING), CAST(({top}) AS STRING), "
+        f"CAST(({item}) AS STRING))"
+    )
+
+
+@_lowers("xml_valid", "xml_is_well_formed")
+def _lower_xml_valid(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    return tokenize(f"pg_xml_valid(CAST(({' '.join(c.args[0])}) AS STRING))")
+
+
+@_lowers("timeofday")
+def _lower_timeofday(c: _Call) -> list[str] | None:
+    if c.args:
+        return None
+    # misc.c timeofday(): wall clock as PG's asctime-style
+    # text ('Wed Aug 15 17:00:00.000000 2026 UTC')
+    return tokenize("date_format(now(), 'EEE MMM dd HH:mm:ss.SSSSSS yyyy zz')")
+
+
+@_lowers("to_ascii", "unaccent")
+def _lower_unaccent(c: _Call) -> list[str] | None:
+    if len(c.args) not in (1, 2):
+        return None
+    # ascii.c to_ascii: LATIN-block accent fold to ASCII — the
+    # unaccent translate table covers the same block.
+    # contrib/unaccent unaccent.c:262 unaccent_dict — the 2-arg
+    # form names a dictionary; only the stock one exists.
+    # Lowered to one JVM translate() (every stock rule is
+    # single-char → single-char).
+    from greengage_spark.functions.unaccent import unaccent_sql
+
+    if c.name == "unaccent" and len(c.args) == 2:
+        d = c.args[0]
+        if not (
+            len(d) == 1
+            and is_string(d[0])
+            and d[0].strip("'").lower().split(".")[-1] == "unaccent"
+        ):
+            raise NotImplementedError(
+                "unaccent: only the stock 'unaccent' dictionary is available"
+            )
+        return tokenize(unaccent_sql(" ".join(c.args[1])))
+    return tokenize(unaccent_sql(" ".join(c.args[0])))
+
+
+@_lowers("crypt")
+def _lower_crypt(c: _Call) -> list[str] | None:
+    if len(c.args) != 2:
+        return None
+    # pgcrypto.c:204 crypt(password, salt) — md5-crypt scheme
+    a, b = (" ".join(x) for x in c.args)
+    return tokenize(f"pg_crypt(({a}), ({b}))")
+
+
+@_lowers("encrypt", "decrypt", "encrypt_iv", "decrypt_iv")
+def _lower_cipher(c: _Call) -> list[str] | None:
+    # pgcrypto.h:43-45 encrypt/decrypt(data, key, type) and the
+    # explicit-IV variants — zero-IV block cipher (functions/
+    # pgcipher.py AES core)
+    if len(c.args) != (4 if c.name.endswith("_iv") else 3):
+        return None
+    *bins, t = ("(" + " ".join(x) + ")" for x in c.args)
+    cast = "".join(f"CAST({b} AS BINARY), " for b in bins)
+    return tokenize(f"pg_{c.name}({cast}CAST({t} AS STRING))")
+
+
+@_lowers("pgp_sym_encrypt", "pgp_sym_decrypt", "pgp_sym_decrypt_bytea", "pgp_sym_encrypt_bytea")
+def _lower_pgp_sym(c: _Call) -> list[str] | None:
+    if len(c.args) not in (2, 3):
+        return None
+    # pgp-pgsql.c:538 — RFC 4880 SymKey-ESK + SEIPD subset; the
+    # _bytea encrypt writes literal-format 'b' (pgp-encrypt.c:387)
+    # where the text variant writes 't'
+    a = ["(" + " ".join(x) + ")" for x in c.args]
+    opts = f"CAST({a[2]} AS STRING)" if len(a) == 3 else "NULL"
+    data = "BINARY" if c.name != "pgp_sym_encrypt" else "STRING"
+    return tokenize(
+        f"pg_{c.name}(CAST({a[0]} AS {data}), CAST({a[1]} AS STRING), {opts})"
+    )
+
+
+@_lowers("armor")
+def _lower_armor(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    # pgp-armor.c — base64 + CRC-24 framing
+    return tokenize(f"pg_armor(CAST(({' '.join(c.args[0])}) AS BINARY))")
+
+
+@_lowers("dearmor")
+def _lower_dearmor(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    return tokenize(f"pg_dearmor(CAST(({' '.join(c.args[0])}) AS STRING))")
+
+
+@_lowers("gen_salt")
+def _lower_gen_salt(c: _Call) -> list[str] | None:
+    # pgcrypto.c:232 gen_salt(type [, iter]) — md5 takes no
+    # iteration count; bf's is the log2 cost (px-crypt.c)
+    a = [" ".join(x) for x in c.args]
+    if len(a) == 2:
+        return tokenize(f"pg_gen_salt2(({a[0]}), CAST(({a[1]}) AS INT))")
+    if len(a) == 1:
+        return tokenize(f"pg_gen_salt(({a[0]}))")
+    return None
+
+
+@_lowers("levenshtein_less_equal")
+def _lower_levenshtein_less_equal(c: _Call) -> list[str] | None:
+    if len(c.args) != 3:
+        return None
+    # fuzzystrmatch: exact only up to k, anything larger may
+    # report k+1 (the documented contract)
+    a, b, k = (" ".join(x) for x in c.args)
+    return tokenize(
+        f"(CASE WHEN levenshtein(({a}), ({b})) <= ({k}) "
+        f"THEN levenshtein(({a}), ({b})) ELSE ({k}) + 1 END)"
+    )
+
+
+@_lowers("concat")
+def _lower_concat(c: _Call) -> list[str] | None:
+    if not c.args:
+        return None
+    # varlena.c text_concat is variadic and SKIPS NULLs
+    # (Spark's concat returns NULL on any NULL input);
+    # concat_ws('') has PG's skip semantics
+    return ["concat_ws", "(", "''", ","] + _comma_joined(c.args) + [")"]
+
+
+@_lowers("make_interval")
+def _lower_make_interval(c: _Call) -> list[str] | None:
+    if len(c.args) > 7:
+        return None
+    # timestamp.c make_interval: (years, months, weeks, days,
+    # hours, mins, secs).  Spark splits interval types, so
+    # the literal-argument form routes to make_ym_interval /
+    # make_dt_interval; a genuinely mixed call has no
+    # representable result type
+    vals = [" ".join(a) for a in c.args] + ["0"] * (7 - len(c.args))
+    if all(v.strip() == "0" for v in vals[:2]):
+        d = f"({vals[3]}) + 7 * ({vals[2]})"
+        return tokenize(f"make_dt_interval({d}, {vals[4]}, {vals[5]}, {vals[6]})")
+    if all(v.strip() == "0" for v in vals[2:]):
+        return tokenize(f"make_ym_interval({vals[0]}, {vals[1]})")
+    raise NotImplementedError(
+        "make_interval mixing year-month and day-time parts "
+        "has no Spark interval type"
+    )
+
+
+def _to_json(arg: list[str]) -> list[str]:
+    """json.c to_json renders ANY value; Spark's only takes complex
+    types.  Wrap in a one-element array and strip the brackets —
+    scalars render as JSON scalars (strings keep their quotes, unlike
+    get_json_object), complex values pass through unchanged.  An array
+    constructor argument is already complex and stays a plain call,
+    which is also how the wrapper's own ``to_json(array(…))`` reads
+    back when its body is rescanned."""
+    if arg and is_ident(arg[0]) and arg[0].lower() == "array":
+        return ["to_json", "("] + arg + [")"]
+    a0 = " ".join(arg)
+    wrapped = f"to_json(array(({a0})))"
+    return tokenize(
+        f"(CASE WHEN ({a0}) IS NULL THEN NULL ELSE "
+        f"substr({wrapped}, 2, length({wrapped}) - 2) END)"
+    )
+
+
+@_lowers("to_json", "to_jsonb")
+def _lower_to_json(c: _Call) -> list[str] | None:
+    return _to_json(c.args[0]) if len(c.args) == 1 else None
+
+
+@_lowers("age")
+def _lower_age(c: _Call) -> list[str] | None:
+    if len(c.args) not in (1, 2):
+        return None
+    # timestamp.c timestamp_age — symbolic interval, rendered
+    # as PG text (functions/horology.py documents the
+    # mixed-interval type divergence).  The 1-arg form ages
+    # against today's midnight (timestamptz_age vs
+    # CURRENT_DATE, gram.y func_expr)
+    if len(c.args) == 2:
+        a0, a1 = " ".join(c.args[0]), " ".join(c.args[1])
+    else:
+        a0, a1 = "CAST(current_date() AS STRING)", " ".join(c.args[0])
+    return tokenize(
+        f"pg_age(CAST(({a0}) AS TIMESTAMP_NTZ), CAST(({a1}) AS TIMESTAMP_NTZ))"
+    )
+
+
+@_lowers("substr", "substring")
+def _lower_substr_clip(c: _Call) -> list[str] | None:
+    if len(c.args) not in (2, 3) or (len(c.args[1]) == 1 and is_string(c.args[1][0])):
+        return None
+    # varlena.c text_substr: a start below 1 clips from
+    # position 1 with the window shortened (substr('hello',
+    # -1, 3) = 'h'); Spark's negative start counts from the
+    # END — silently different rows, so always guard.  A start
+    # greatest(…, 1) is already at least 1 and stays: the right()
+    # template emits one, and its body is rescanned.
+    start = c.args[1]
+    if start[:2] == ["greatest", "("] and match_close(start, 1) == len(start) - 1:
+        if split_top(start[2:-1])[-1:] == [["1"]]:
+            return None
+    s0, s1 = " ".join(c.args[0]), " ".join(c.args[1])
+    if len(c.args) == 3:
+        s2 = " ".join(c.args[2])
+        return tokenize(
+            f"substring(({s0}), greatest(({s1}), 1), "
+            f"greatest(({s1}) + ({s2}) - greatest(({s1}), 1), 0))"
+        )
+    return tokenize(f"substring(({s0}), greatest(({s1}), 1))")
+
+
+@_lowers("justify_days", "justify_hours", "justify_interval")
+def _lower_justify(c: _Call) -> list[str] | None:
+    if len(c.args) != 1:
+        return None
+    return tokenize(f"pg_{c.name}(({' '.join(c.args[0])}))")
+
+
+@_lowers("num_nonnulls", "num_nulls")
+def _lower_num_nulls(c: _Call) -> list[str] | None:
+    if not c.args:
+        return None
+    # variadic NULL counters (misc.c, PG 9.6)
+    neg = "NOT " if c.name == "num_nonnulls" else ""
+    body = " + ".join(
+        f"(CASE WHEN ({' '.join(a)}) IS {neg}NULL THEN 1 ELSE 0 END)"
+        for a in c.args
+    )
+    return tokenize(f"CAST(({body}) AS INT)")
+
+
+def _lower_inline_template(c: _Call) -> list[str] | None:
+    tmpl = _INLINE_FN_TEMPLATES.get((c.name, len(c.args)))
+    if tmpl is None:
+        return None
+    return tokenize(tmpl.format(*[" ".join(a) for a in c.args]))
+
+
+for _name in dict.fromkeys(n for n, _ in _INLINE_FN_TEMPLATES):
+    _lowers(_name)(_lower_inline_template)
+for _name, _mapped in _TYPE_MAP.items():
+    # PG type-name function-call casts: float8(x), int4(x), text(x) …
+    # (parse_func.c treats them as casts); char(n) is Spark's chr, and
+    # _pass_geometry owns the point/box/circle calls
+    if _name not in ("char", "point", "box", "circle"):
+        _lowers(_name)(
+            lambda c, t=_mapped: (
+                ["CAST", "("] + c.args[0] + ["AS", t, ")"] if len(c.args) == 1 else None
+            )
+        )
+# a rename is each name's last form: it applies when no other matched
+for _name, _to in _FUNC_RENAME.items():
+    _lowers(_name)(lambda c, to=_to: c.renamed(to))
+
+
+def _call_lowering(forms: list[Callable[[_Call], list[str] | None]]):
+    def lower(toks: list[str], i: int) -> tuple[list[str], int] | None:
+        if toks[i + 1 : i + 2] != ["("]:
+            return None
+        close = match_close(toks, i + 1)
+        c = _Call(toks[i].lower(), split_top(toks[i + 2 : close]), toks, i, close)
+        for form in forms:
+            if (new := form(c)) is not None:
+                return new, close + 1
+        return None
+
+    return lower
+
+
+def _lower_gp_segment_id(toks: list[str], i: int) -> tuple[list[str], int] | None:
+    # the pseudo-column on user tables; the endpoint views
+    # (gp_parallel_retrieve_cursor) carry a REAL column of
+    # this name
+    if any(is_ident(t) and t.lower() in ("gp_endpoints", "gp_session_endpoints") for t in toks):
+        return None
+    return ["spark_partition_id", "(", ")"], i + 1
+
+
+def _lower_localtimestamp(toks: list[str], i: int) -> tuple[list[str], int] | None:
+    # bare LOCALTIMESTAMP keyword (gram.y func_expr_common_subexpr)
+    if toks[i + 1 : i + 2] == ["("] or (i > 0 and toks[i - 1] == "."):
+        return None
+    return ["localtimestamp", "(", ")"], i + 1
+
+
+def _lower_order_using(toks: list[str], i: int) -> tuple[list[str], int] | None:
+    # ORDER BY expr USING op (gram.y sortby_using): the btree
+    # '<' ordering is ASC, '>' is DESC
+    op = toks[i + 1 : i + 2]
+    if op not in (["<"], [">"]):
+        return None
+    return ["ASC" if op == ["<"] else "DESC"], i + 2
+
+
+def _within_group_at(toks: list[str], j: int) -> int | None:
+    """Index of the ``(`` of a ``WITHIN GROUP (`` starting at toks[j]."""
+    if (
+        j + 2 < len(toks)
+        and is_ident(toks[j])
+        and toks[j].lower() == "within"
+        and is_ident(toks[j + 1])
+        and toks[j + 1].lower() == "group"
+        and toks[j + 2] == "("
+    ):
+        return j + 2
+    return None
+
+
+def _lower_hypothetical_rank(toks: list[str], i: int) -> tuple[list[str], int] | None:
+    # hypothetical-set aggregates (orderedsetaggs.c:155):
+    # rank(h) = count(v < h) + 1 over the group, etc. —
+    # conditional counts, fully partial-aggregatable (the
+    # DataFrame twins live in operators/aggregate.py)
+    if toks[i + 1 : i + 2] != ["("]:
+        return None
+    close = match_close(toks, i + 1)
+    args = split_top(toks[i + 2 : close])
+    if not (len(args) == 1 and args[0] and close + 3 < len(toks)):
+        return None
+    if (wopen := _within_group_at(toks, close + 1)) is None:
+        return None
+    wend = match_close(toks, wopen)
+    spec = toks[wopen + 1 : wend]
+    if not (len(spec) >= 3 and is_ident(spec[0]) and spec[0].lower() == "order"
+            and spec[1].lower() == "by"):
+        return None
+    body = spec[2:]
+    desc = False
+    if body and is_ident(body[-1]) and body[-1].lower() in ("asc", "desc"):
+        desc = body[-1].lower() == "desc"
+        body = body[:-1]
+    v = "( " + join_tokens(body) + " )"
+    h = "( " + " ".join(args[0]) + " )"
+    lt = ">" if desc else "<"
+    le = ">=" if desc else "<="
+    new = {
+        "rank": f"(count(CASE WHEN {v} {lt} {h} THEN 1 END) + 1)",
+        "dense_rank": f"(count(DISTINCT CASE WHEN {v} {lt} {h} THEN {v} END) + 1)",
+        "percent_rank": (
+            f"(CAST(count(CASE WHEN {v} {lt} {h} THEN 1 "
+            f"END) AS DOUBLE) / greatest(count(1), 1))"
+        ),
+        "cume_dist": (
+            f"(CAST(count(CASE WHEN {v} {le} {h} THEN 1 "
+            f"END) + 1 AS DOUBLE) / (count(1) + 1))"
+        ),
+    }[toks[i].lower()]
+    return tokenize(new), wend + 1
+
+
+def _lower_null_percentile(toks: list[str], i: int) -> tuple[list[str], int] | None:
+    # PG ordered-set aggs return NULL for a NULL fraction
+    # (orderedsetaggs.c); Spark and DuckDB both reject a NULL
+    # percentage, so fold the whole aggregate — including a
+    # trailing WITHIN GROUP (ORDER BY ...) — to a NULL-valued
+    # aggregate (max keeps scalar/grouped cardinality intact).
+    if toks[i + 1 : i + 2] != ["("]:
+        return None
+    close = match_close(toks, i + 1)
+    args = split_top(toks[i + 2 : close])
+    if not (len(args) == 1 and len(args[0]) == 1 and args[0][0].lower() == "null"):
+        return None
+    wopen = _within_group_at(toks, close + 1)
+    end = close if wopen is None else match_close(toks, wopen)
+    return ["max", "(", "cast", "(", "null", "as", "double", ")", ")"], end + 1
+
+
+# lower-cased name → lowering(toks, i): None leaves toks[i] alone, else
+# (replacement, end) replaces toks[i:end].  Calls go through their
+# name's forms; the other entries read the tokens around the name.
+_CALL_LOWERINGS: dict[str, Callable[[list[str], int], tuple[list[str], int] | None]] = {
+    **{n: _call_lowering(forms) for n, forms in _CALL_FORMS.items()},
+    "gp_segment_id": _lower_gp_segment_id,
+    "localtimestamp": _lower_localtimestamp,
+    "using": _lower_order_using,
+    **dict.fromkeys(("rank", "dense_rank", "percent_rank", "cume_dist"), _lower_hypothetical_rank),
+    **dict.fromkeys(("percentile_cont", "percentile_disc"), _lower_null_percentile),
+}
+
+
 def _pass_functions(toks: list[str]) -> list[str]:
+    """PG function calls and call-like keywords → Spark, one name-keyed
+    lookup in ``_CALL_LOWERINGS`` per identifier.  After a replacement,
+    scanning resumes at the token after its head: the head is never
+    re-read, but the arguments and the rest of the emission are lowered
+    in turn."""
     out = list(toks)
     i = 0
     while i < len(out):
-        t = out[i]
-        low = t.lower() if is_ident(t) else None
-        nxt = out[i + 1] if i + 1 < len(out) else None
-
-        if low == "gp_segment_id" and not any(
-            is_ident(t2) and t2.lower() in (
-                "gp_endpoints", "gp_session_endpoints",
-            )
-            for t2 in out
-        ):
-            # the pseudo-column on user tables; the endpoint views
-            # (gp_parallel_retrieve_cursor) carry a REAL column of
-            # this name
-            out[i : i + 1] = ["spark_partition_id", "(", ")"]
-            i += 3
-            continue
-
-        if low == "localtimestamp" and nxt != "(" and (i == 0 or out[i - 1] != "."):
-            # bare LOCALTIMESTAMP keyword (gram.y func_expr_common_subexpr)
-            out[i : i + 1] = ["localtimestamp", "(", ")"]
-            i += 3
-            continue
-
-        if low == "using" and nxt in ("<", ">"):
-            # ORDER BY expr USING op (gram.y sortby_using): the btree
-            # '<' ordering is ASC, '>' is DESC
-            out[i : i + 2] = ["ASC" if nxt == "<" else "DESC"]
-            continue
-
-        if low == "row" and nxt == "(":
-            # ROW(...) constructor (gram.y row:) → struct
-            out[i] = "struct"
-            i += 1
-            continue
-
-        if low and nxt == "(":
-            close = match_close(out, i + 1)
-            args = split_top(out[i + 2 : close])
-
-            if low in ("to_char", "to_date", "to_timestamp") and len(args) == 2 and len(args[1]) == 1 and is_string(args[1][0]):
-                tmpl = args[1][0].strip("'")
-                m_num = re.fullmatch(r"(FM)?([9]+)(?:\.([9]+))?", tmpl)
-                if m_num and m_num.group(1) and m_num.group(3):
-                    # FM with decimal positions strips trailing 9-zeros —
-                    # only the full engine renders that; skip fast path
-                    m_num = None
-                if m_num and len(m_num.group(2)) + len(m_num.group(3) or "") > 15:
-                    # wider than double precision — the DOUBLE pre-cast
-                    # below would corrupt digits past ~15 significant
-                    # places; the pg_tochar_num engine stays exact
-                    m_num = None
-                if low == "to_char" and m_num:
-                    # numeric template (formatting.c NUM_9): right-align in
-                    # the template width with one sign column; FM strips
-                    # padding.  Decimal-cast renders the fixed scale.  A 9
-                    # in the ones place drops a leading zero digit entirely
-                    # (NUM_processor: blank-padded 9s), so 0.5 → '.5' and
-                    # 0 with a decimal template → '.0000000'.
-                    fm, ipart, dpart = m_num.groups()
-                    d = len(dpart) if dpart else 0
-                    p = len(ipart) + d
-                    # the argument is computed in DOUBLE first: Spark's
-                    # decimal aggregates stop at scale+4 (avg(decimal(5,0))
-                    # → decimal(9,4)), far below PG's unbounded numeric —
-                    # double carries the template's 7 digits exactly
-                    cast = (
-                        ["CAST", "(", "round", "(", "CAST", "("]
-                        + args[0]
-                        + ["AS", "DOUBLE", ")", ",", str(d), ")",
-                           "AS", f"DECIMAL({p},{d})", ")"]
-                    )
-                    if dpart:
-                        # PG-spelled call (later _pass_functions rewrite
-                        # converts flags + \1 backref to the Spark form)
-                        cast = (
-                            ["regexp_replace", "(", "CAST", "("] + cast
-                            + ["AS", "STRING", ")", ",",
-                               "'^(-?)0\\.'", ",", "'\\1.'", ",", "'g'", ")"]
-                        )
-                    if fm:
-                        new = ["CAST", "("] + cast + ["AS", "STRING", ")"]
-                    else:
-                        width = 1 + len(ipart) + (1 + d if dpart else 0)
-                        new = ["lpad", "("] + cast + [",", str(width), ",", "' '", ")"]
-                    out[i : close + 1] = new
-                    i += 1
-                    continue
-                if low == "to_char":
-                    from greengage_spark.functions.pg_format import (
-                        dch_needs_engine,
-                    )
-
-                    esc = tmpl.replace("'", "''")
-                    if any(c in "90" for c in tmpl) or tmpl.upper().lstrip(
-                        "FM"
-                    ) in ("RN",):
-                        # advanced NUM template (0 S MI SG PR TH L G EEEE
-                        # RN …) → the full formatting.c engine, Arrow-
-                        # batched (pg_format.num_tochar)
-                        out[i : close + 1] = (
-                            ["pg_tochar_num", "("] + args[0]
-                            + [",", f"'{esc}'", ")"]
-                        )
-                        i += 2
-                        continue
-                    if dch_needs_engine(tmpl):
-                        # DCH fields the Java-pattern path cannot render
-                        # faithfully (ISO week dates, J, RM, TH, FM, …)
-                        out[i : close + 1] = (
-                            ["pg_tochar_dch", "("] + args[0]
-                            + [",", f"'{esc}'", ")"]
-                        )
-                        i += 2
-                        continue
-                java = pg_pattern_to_java(tmpl)
-                fname = {"to_char": "date_format", "to_date": "to_date", "to_timestamp": "to_timestamp"}[low]
-                out[i : close + 1] = (
-                    [fname, "("] + args[0] + [",", f"'{java}'", ")"]
-                )
-                i += 2  # past fname+'(' — to_date maps to itself, don't re-match
-                continue
-            if low == "to_number" and len(args) == 2 and len(args[1]) == 1 and is_string(args[1][0]):
-                # reverse NUM_* engine (formatting.c numeric_to_number) —
-                # Arrow-batched pg_format.num_tonumber
-                esc = args[1][0].strip("'").replace("'", "''")
-                out[i : close + 1] = (
-                    ["pg_tonumber", "(", "CAST", "("] + args[0]
-                    + ["AS", "STRING", ")", ",", f"'{esc}'", ")"]
-                )
-                i += 2
-                continue
-            if (low, len(args)) in _INLINE_FN_TEMPLATES:
-                tmpl = _INLINE_FN_TEMPLATES[(low, len(args))]
-                new_sql = tmpl.format(*[" ".join(a) for a in args])
-                out[i : close + 1] = tokenize(new_sql)
-                i += 1
-                continue
-            if low in _TYPE_MAP and len(args) == 1 and low not in ("char",):
-                # PG type-name function-call casts: float8(x), int4(x),
-                # text(x) … (parse_func.c treats them as casts)
-                mapped_t = _TYPE_MAP[low]
-                out[i : close + 1] = (
-                    ["CAST", "("] + args[0] + ["AS", mapped_t, ")"]
-                )
-                i += 1
-                continue
-            if low in ("ceil", "ceiling", "floor", "trunc") and len(args) == 1:
-                # PG keeps the argument's type (float.c dceil/dfloor,
-                # numeric.c); Spark's ceil/floor return BIGINT, which
-                # clamps 1e200-scale doubles.  The mod-1 formula is
-                # type-generic and codegen-friendly; % follows the
-                # dividend's sign in both engines.
-                a = ["("] + args[0] + [")"]
-                frac = a + ["%", "1"]
-                if low == "trunc":
-                    new = ["("] + a + ["-", "("] + frac + [")", ")"]
-                else:
-                    cmp_, adj = (">", "1") if low != "floor" else ("<", "-1")
-                    new = (
-                        ["("] + a + ["-", "("] + frac + [")", "+",
-                         "CASE", "WHEN", "("] + frac + [")", cmp_, "0",
-                         "THEN", adj, "ELSE", "0", "END", ")"]
-                    )
-                out[i : close + 1] = new
-                i += 1
-                continue
-            if low in ("bitand", "bitor", "bitxor") and len(args) == 2:
-                # varbit.c bit_and/bit_or/bitxor over 0/1-text bit strings:
-                # value algebra through a 64-bit word (conv base-2), length
-                # preserved from the left operand (PG requires equal
-                # lengths; ≤63 significant bits — the practical range).
-                # orafce overloads bitand(bigint, bigint): plainly
-                # numeric arguments take the integer form.
-                op = {"bitand": "&", "bitor": "|", "bitxor": "^"}[low]
-                if low == "bitand" and all(
-                    all(re.match(r"^(-?\d+|\(|\)|[-+*/%])$", t) for t in a)
-                    for a in args
-                ):
-                    x, y = (" ".join(a) for a in args)
-                    out[i : close + 1] = (
-                        ["("]
-                        + ["CAST", "(", "(", x, ")", "AS", "BIGINT", ")"]
-                        + ["&"]
-                        + ["CAST", "(", "(", y, ")", "AS", "BIGINT", ")"]
-                        + [")"]
-                    )
-                    i += 1
-                    continue
-                def _c(a):
-                    return (
-                        ["CAST", "(", "conv", "(", "("] + a
-                        + [")", ",", "2", ",", "10", ")", "AS", "BIGINT", ")"]
-                    )
-                out[i : close + 1] = (
-                    ["substring", "(", "lpad", "(", "bin", "("]
-                    + _c(args[0]) + [op] + _c(args[1])
-                    + [")", ",", "64", ",", "'0'", ")", ",",
-                       "65", "-", "length", "("] + args[0] + [")", ")"]
-                )
-                i += 1
-                continue
-            if low == "bitnot" and len(args) == 1:
-                # ~b flips every bit: pure char translate, any length
-                out[i : close + 1] = (
-                    ["translate", "(", "("] + args[0]
-                    + [")", ",", "'01'", ",", "'10'", ")"]
-                )
-                i += 1
-                continue
-            if low in ("bitshiftleft", "bitshiftright") and len(args) == 2:
-                # varbit.c bitshiftleft/right: zero-fill, length-preserving
-                a, nn = args[0], args[1]
-                if low == "bitshiftleft":
-                    out[i : close + 1] = (
-                        ["rpad", "(", "substring", "(", "("] + a
-                        + [")", ",", "("] + nn + [")", "+", "1", ")", ",",
-                           "length", "("] + a + [")", ",", "'0'", ")"]
-                    )
-                else:
-                    out[i : close + 1] = (
-                        ["lpad", "(", "substring", "(", "("] + a
-                        + [")", ",", "1", ",", "greatest", "(", "length", "("]
-                        + a + [")", "-", "("] + nn + [")", ",", "0", ")",
-                           ")", ",", "length", "("] + a + [")", ",", "'0'", ")"]
-                    )
-                i += 1
-                continue
-            if low == "bitcat" and len(args) == 2:
-                out[i : close + 1] = (
-                    ["concat", "(", "("] + args[0] + [")", ",", "("]
-                    + args[1] + [")", ")"]
-                )
-                i += 1
-                continue
-            if low == "timezone" and len(args) == 2:
-                # PG timezone(zone, ts) ≡ ts AT TIME ZONE zone
-                # (timestamp.c timestamp_zone; same naive→instant contract
-                # as _pass_at_time_zone — argument order swaps for Spark)
-                out[i : close + 1] = (
-                    ["to_utc_timestamp", "("] + args[1] + [","] + args[0] + [")"]
-                )
-                i += 1
-                continue
-            if low in ("ltrim", "rtrim", "btrim") and len(args) == 2:
-                # PG argument order is (string, characters) (varlena.c);
-                # Spark's two-argument trims take (trimStr, srcStr)
-                fname = "trim" if low == "btrim" else low
-                out[i : close + 1] = (
-                    [fname, "("] + args[1] + [","] + args[0] + [")"]
-                )
-                i += 1
-                continue
-            if low == "regexp_replace" and len(args) in (3, 4):
-                # PG regexp_replace (regexp.c RE_replace): the DEFAULT is
-                # first-occurrence-only; flag 'g' = all occurrences (Spark's
-                # only native mode), 'i' = case-insensitive.  Replacement
-                # backrefs are \N (\& = whole match) where Java wants $N.
-                pat, rep = args[1], args[2]
-                flags = ""
-                if len(args) == 4:
-                    if not (len(args[3]) == 1 and is_string(args[3][0])):
-                        raise NotImplementedError(
-                            "regexp_replace: non-literal flags argument"
-                        )
-                    flags = args[3][0].strip("'")
-                lit_pat = len(pat) == 1 and is_string(pat[0])
-                if "g" in flags:
-                    if len(rep) == 1 and is_string(rep[0]) and "\\" in rep[0]:
-                        rep = [re.sub(r"\\(\d)", r"$\1", rep[0])]
-                    if "i" in flags:
-                        if lit_pat:
-                            pat = ["'(?i)" + pat[0][1:]]
-                        else:
-                            pat = ["concat", "(", "'(?i)'", ","] + pat + [")"]
-                    out[i : close + 1] = (
-                        ["regexp_replace", "("] + args[0] + [","] + pat
-                        + [","] + rep + [")"]
-                    )
-                    i += 1
-                    continue
-                # First-occurrence-only (PG default).  Lowering:
-                #   pat → (?s)[(?i)]^(.*?)(pat)     rep → $1<rep, \N→$(N+2)>
-                # The ^-anchored lazy prefix makes Java's replace-all fire
-                # exactly once (it cannot re-match ^ past position 0), and
-                # (?s) matches PG's newline-insensitive '.' default.
-                if not (
-                    lit_pat and len(rep) == 1 and is_string(rep[0])
-                ):
-                    raise NotImplementedError(
-                        "first-occurrence regexp_replace (no 'g' flag) needs "
-                        "a literal pattern and replacement; pass the 'g' "
-                        "flag for replace-all"
-                    )
-                mods = "(?s)" + ("(?i)" if "i" in flags else "")
-                # the ^(.*?)( wrapper adds two capture groups, so
-                # backreferences INSIDE the pattern shift by 2 as well
-                inner_pat = re.sub(
-                    r"(?<!\\)\\(\d)",
-                    lambda m: "\\" + str(int(m.group(1)) + 2),
-                    pat[0][1:-1],
-                )
-                new_pat = "'" + mods + "^(.*?)(" + inner_pat + ")'"
-
-                def _conv_backref(m: "re.Match[str]") -> str:
-                    t = m.group(0)
-                    if t == "$":
-                        return "\\$"
-                    if t == "\\\\":
-                        return "\\\\"
-                    if t == "\\&":
-                        return "$2"
-                    return "$" + str(int(t[1]) + 2)
-
-                new_rep = "'$1" + re.sub(
-                    r"\\[0-9&\\]|\$", _conv_backref, rep[0][1:-1]
-                ) + "'"
-                out[i : close + 1] = (
-                    ["regexp_replace", "("] + args[0] + [",", new_pat, ",",
-                     new_rep, ")"]
-                )
-                i += 1
-                continue
-            if low == "regexp_split_to_array" and len(args) in (2, 3):
-                # regexp_split_to_table's array sibling → Spark split();
-                # optional 'i' flag folds into the pattern
-                pat = args[1]
-                if len(args) == 3 and len(args[2]) == 1 and is_string(args[2][0]):
-                    if "i" in args[2][0].strip("'"):
-                        if len(pat) == 1 and is_string(pat[0]):
-                            pat = ["'(?i)" + pat[0][1:]]
-                        else:
-                            pat = ["concat", "(", "'(?i)'", ","] + pat + [")"]
-                out[i : close + 1] = (
-                    ["split", "("] + args[0] + [","] + pat + [",", "-1", ")"]
-                )
-                i += 1
-                continue
-            if low in ("substring", "substr") and len(args) == 1:
-                # keyword form: SUBSTRING(x FROM y [FOR z]).  A string-
-                # literal y is PG's POSIX-regex substring (varlena.c
-                # textregexsubstr): result = first capture group if the
-                # pattern has one, else the whole match; NULL on no match.
-                inner = args[0]
-                from_idx = next(
-                    (k for k, tk in top_level(inner)
-                     if is_ident(tk) and tk.lower() == "from"),
-                    None,
-                )
-                if from_idx is not None:
-                    xpr = inner[:from_idx]
-                    rest = inner[from_idx + 1 :]
-                    if len(rest) == 1 and is_string(rest[0]):
-                        lit = rest[0]
-                        grp = "1" if _count_capture_groups(lit[1:-1]) else "0"
-                        out[i : close + 1] = (
-                            ["case", "when", "("] + xpr + [")", "rlike", lit,
-                             "then", "regexp_extract", "(", "("] + xpr
-                            + [")", ",", lit, ",", grp, ")", "end"]
-                        )
-                        i += 1
-                        continue
-                    if (
-                        len(rest) == 3
-                        and is_string(rest[0])
-                        and is_ident(rest[1])
-                        and rest[1].lower() == "for"
-                        and is_string(rest[2])
-                    ):
-                        # SUBSTRING(x FROM pat FOR esc) — the SQL-standard
-                        # SIMILAR substring (varlena.c textregexsubstr via
-                        # similar_escape): esc+" pairs delimit the
-                        # returned portion; the pattern must cover the
-                        # whole string
-                        pat = rest[0][1:-1].replace("''", "'")
-                        esc = rest[2][1:-1].replace("''", "'")
-                        rx, has_group = _similar_substring_regex(pat, esc)
-                        rx_lit = "'" + rx.replace("'", "''") + "'"
-                        grp = "1" if has_group else "0"
-                        out[i : close + 1] = (
-                            ["case", "when", "("] + xpr + [")", "rlike",
-                             rx_lit, "then", "regexp_extract", "(", "("]
-                            + xpr + [")", ",", rx_lit, ",", grp, ")", "end"]
-                        )
-                        i += 1
-                        continue
-            if low == "interval_bound" and 2 <= len(args) <= 4:
-                # GP time-series bucketing (numeric.c
-                # numeric_interval_bound_common / timestamp.c):
-                #   bound = floor((v - r)/w)*w + s*w + r
-                # where s (3rd arg) counts WIDTHS and r (4th) registers the
-                # bucket grid.  Timestamp form (day-time widths; calendar
-                # month widths are out of scope) works in epoch
-                # microseconds.  NaN numerics are a PG-only value.
-                v, w = args[0], args[1]
-                s = args[2] if len(args) >= 3 else ["0"]
-                r = args[3] if len(args) == 4 else None
-                # arguments may be bare column refs; fall back to whether
-                # the statement works with intervals/timestamps at all
-                is_ts = any(
-                    is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
-                    for t in w + v
-                ) or any(
-                    is_ident(t) and t.lower() in ("interval", "timestamp", "timestamptz")
-                    for t in out
-                )
-                if is_ts:
-                    # unix_micros needs TIMESTAMP (not NTZ); session TZ is
-                    # UTC so the round-trip casts are value-preserving
-                    def _us(e: list[str]) -> list[str]:
-                        return (
-                            ["unix_micros", "(", "CAST", "(", "("] + e
-                            + [")", "AS", "TIMESTAMP", ")", ")"]
-                        )
-
-                    r_us = (
-                        _us(r) if r is not None else ["CAST", "(", "0", "AS", "BIGINT", ")"]
-                    )
-                    w_us = _us(["TIMESTAMP", "'1970-01-01 00:00:00'", "+", "("] + w + [")"])
-                    new = (
-                        ["CAST", "(", "timestamp_micros", "(", "CAST", "(", "floor", "(", "("]
-                        + _us(v) + ["-", "("] + r_us
-                        + [")", ")", "/", "("] + w_us + [")", ")", "*", "("] + w_us
-                        + [")", "+", "("] + s + [")", "*", "("] + w_us
-                        + [")", "+", "("] + r_us + [")", "AS", "BIGINT", ")", ")",
-                           "AS", "TIMESTAMP_NTZ", ")"]
-                    )
-                else:
-                    rr = r if r is not None else ["0"]
-                    new = (
-                        ["(", "floor", "(", "(", "("] + v + [")", "-", "("] + rr
-                        + [")", ")", "/", "("] + w + [")", ")", "*", "("] + w
-                        + [")", "+", "("] + s + [")", "*", "("] + w
-                        + [")", "+", "("] + rr + [")", ")"]
-                    )
-                out[i : close + 1] = new
-                i += 1
-                continue
-            if low == "extract":
-                # EXTRACT(field FROM expr) keyword form: normalize dow /
-                # epoch to PG semantics (date.c: Sunday=0; epoch seconds);
-                # all other fields are Spark-native already.
-                inner = out[i + 2 : close]
-                from_idx = next(
-                    (j for j, tk in enumerate(inner) if tk.lower() == "from"), None
-                )
-                if from_idx is not None:
-                    field = inner[0].lower() if inner else ""
-                    expr = inner[from_idx + 1 :]
-                    if field == "dow":
-                        out[i : close + 1] = ["(", "dayofweek", "("] + expr + [")", "-", "1", ")"]
-                        continue
-                    if field == "isodow":
-                        # ISO numbering: Monday=1 .. Sunday=7 (date.c)
-                        out[i : close + 1] = ["(", "weekday", "("] + expr + [")", "+", "1", ")"]
-                        continue
-                    if field == "isoyear":
-                        # year of the ISO week = year of that week's
-                        # Thursday (timestamp.c ISOYEAR via date2isoyear)
-                        out[i : close + 1] = tokenize(
-                            "year(date_add(CAST((" + " ".join(expr)
-                            + ") AS DATE), 3 - weekday(" + " ".join(expr)
-                            + ")))"
-                        )
-                        continue
-                    if field == "epoch":
-                        if expr and is_ident(expr[0]) and expr[0].lower() == "interval":
-                            # epoch of a day-time interval = total seconds
-                            # (timestamp.c interval_part); anchor at the
-                            # epoch and read the timestamp back
-                            out[i : close + 1] = (
-                                ["unix_timestamp", "(",
-                                 "TIMESTAMP", "'1970-01-01 00:00:00'", "+"]
-                                + expr + [")"]
-                            )
-                        else:
-                            out[i : close + 1] = (
-                                ["unix_timestamp", "("] + expr + [")"]
-                            )
-                        continue
-                    if field in ("century", "millennium", "decade"):
-                        out[i : close + 1] = _pg_era_field(field, expr)
-                        continue
-                    if field in ("microseconds", "milliseconds"):
-                        # timestamp.c: seconds INCLUDING fraction scaled
-                        mul = "1e6" if field == "microseconds" else "1e3"
-                        e = " ".join(expr)
-                        out[i : close + 1] = tokenize(
-                            f"CAST(round((second({e}) + (unix_micros(CAST(({e}) AS TIMESTAMP)) % 1000000) / 1e6) * {mul}) AS DOUBLE)"
-                        )
-                        continue
-                i += 2
-                continue
-            if low == "date_part" and len(args) == 2 and is_string(args[0][0]):
-                field = args[0][0].strip("'").lower()
-                if field == "dow":
-                    # PG: Sunday=0 .. Saturday=6; Spark dayofweek: Sunday=1
-                    out[i : close + 1] = ["(", "dayofweek", "("] + args[1] + [")", "-", "1", ")"]
-                    continue
-                if field == "isodow":
-                    out[i : close + 1] = ["(", "weekday", "("] + args[1] + [")", "+", "1", ")"]
-                    continue
-                if field == "isoyear":
-                    a1 = " ".join(args[1])
-                    out[i : close + 1] = tokenize(
-                        f"year(date_add(CAST(({a1}) AS DATE), "
-                        f"3 - weekday({a1})))"
-                    )
-                    continue
-                if field == "epoch":
-                    out[i : close + 1] = ["unix_timestamp", "("] + args[1] + [")"]
-                    continue
-                if field in ("century", "millennium", "decade"):
-                    out[i : close + 1] = _pg_era_field(field, args[1])
-                    continue
-                if field in ("microseconds", "milliseconds"):
-                    mul = "1e6" if field == "microseconds" else "1e3"
-                    e = " ".join(args[1])
-                    out[i : close + 1] = tokenize(
-                        f"CAST(round((second({e}) + (unix_micros(CAST(({e}) AS TIMESTAMP)) % 1000000) / 1e6) * {mul}) AS DOUBLE)"
-                    )
-                    continue
-            if low == "date_trunc" and len(args) == 2 and is_string(args[0][0]):
-                field = args[0][0].strip("'").lower()
-                if field in ("century", "millennium", "decade"):
-                    # timestamp.c timestamp_trunc: CENTURY xx01-01-01,
-                    # MILLENNIUM x001-01-01, DECADE xxx0-01-01 (AD branch)
-                    y = ["year", "(", "("] + args[1] + [")", ")"]
-                    if field == "decade":
-                        yr = (
-                            ["CAST", "(", "floor", "(", "("] + y
-                            + [")", "/", "10", ")", "*", "10", "AS", "INT", ")"]
-                        )
-                    else:
-                        d = "100" if field == "century" else "1000"
-                        yr = (
-                            ["CAST", "(", "floor", "(", "(", "("] + y
-                            + [")", "-", "1", ")", "/", d, ")", "*", d,
-                               "+", "1", "AS", "INT", ")"]
-                        )
-                    out[i : close + 1] = (
-                        ["CAST", "(", "make_date", "("] + yr
-                        + [",", "1", ",", "1", ")", "AS", "TIMESTAMP", ")"]
-                    )
-                    continue
-            if (
-                low in ("array_length", "array_upper", "array_lower",
-                        "array_ndims", "array_dims", "cardinality")
-                and args
-                and (md := _md_array_depth(args[0])) >= 2
-            ):
-                # multi-dimensional argument (arrayfuncs.c; arrays.sql
-                # md rows): nested array<array<T>> representation, depth
-                # known statically from the cast type / constructor shape
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(_md_array_fn(low, a, md, args))
-                continue
-            if low in ("array_length", "array_upper") and len(args) == 2:
-                # PG returns NULL (not 0) for an empty array
-                # (arrayfuncs.c array_length: no dimension → NULL)
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN size({a}) > 0 THEN size({a}) END)"
-                )
-                continue
-            if low == "array_dims" and len(args) == 1:
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN size({a}) > 0 "
-                    f"THEN concat('[1:', size({a}), ']') END)"
-                )
-                continue
-            if low == "array_ndims" and len(args) == 1:
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN size({a}) > 0 THEN 1 END)"
-                )
-                continue
-            if low == "array_lower" and len(args) == 2:
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN size({a}) > 0 THEN 1 END)"
-                )
-                continue
-            if low in ("convert_from", "convert_to") and len(args) == 2:
-                # mbutils.c pg_convert_from/to: bytea ↔ text in a named
-                # encoding.  Spark's encode/decode accept a fixed charset
-                # list with exact names, so the PG encoding name (almost
-                # always a literal) maps here; non-literals reject.
-                if len(args[1]) != 1 or not is_string(args[1][0]):
-                    raise NotImplementedError(
-                        f"{low}: the encoding name must be a literal"
-                    )
-                enc = args[1][0].strip("'").lower().replace("-", "").replace("_", "")
-                # SQL_ASCII in PG performs NO conversion — bytes pass
-                # through verbatim (mbutils.c pg_do_encoding_conversion
-                # short-circuits).  Java's us-ascii would replace >=0x80
-                # bytes with U+FFFD, so pick the byte-transparent charset
-                # per direction: bytea→text reads each byte as one char
-                # (iso-8859-1); text→bytea emits the internal utf-8 bytes
-                # unchanged, exactly what PG's UTF8 server encoding holds.
-                cmap = {
-                    "utf8": "utf-8", "unicode": "utf-8",
-                    "latin1": "iso-8859-1", "iso88591": "iso-8859-1",
-                    "sqlascii": "iso-8859-1", "ascii": "iso-8859-1",
-                    "utf16": "utf-16",
-                }
-                if enc not in cmap:
-                    raise NotImplementedError(
-                        f"{low} encoding {args[1][0]}: UTF8/LATIN1/"
-                        "SQL_ASCII/UTF16 are the supported names"
-                    )
-                a = " ".join(args[0])
-                if low == "convert_from":
-                    new = f"decode(({a}), '{cmap[enc]}')"
-                else:
-                    to_cs = "utf-8" if enc in ("sqlascii", "ascii") else cmap[enc]
-                    new = f"encode(CAST(({a}) AS STRING), '{to_cs}')"
-                out[i : close + 1] = tokenize(new)
-                i += 1
-                continue
-            if low == "encode" and len(args) == 2 and args[1] == ["'hex'"]:
-                out[i : close + 1] = ["lower", "(", "hex", "("] + args[0] + [")", ")"]
-                continue
-            if low == "decode" and len(args) == 2 and args[1] == ["'hex'"]:
-                out[i : close + 1] = ["unhex", "("] + args[0] + [")"]
-                continue
-            if (
-                low in ("json_build_object", "jsonb_build_object")
-                and args
-                and len(args) % 2 == 0
-            ):
-                # json.c json_build_object: alternating key/value arguments
-                # → to_json(named_struct(...)).  Keys must be foldable
-                # strings (the overwhelmingly common literal-key form);
-                # named_struct rejects non-literal keys loudly.
-                inner: list[str] = []
-                for a in args:
-                    inner += a + [","]
-                out[i : close + 1] = (
-                    ["to_json", "(", "named_struct", "("]
-                    + inner[:-1]
-                    + [")", ")"]
-                )
-                continue
-            if low in ("json_build_array", "jsonb_build_array") and args:
-                # homogeneous element types only (Spark arrays are typed)
-                inner = []
-                for a in args:
-                    inner += a + [","]
-                out[i : close + 1] = (
-                    ["to_json", "(", "array", "("] + inner[:-1] + [")", ")"]
-                )
-                continue
-            if low == "row_to_json" and len(args) == 1:
-                a0 = args[0]
-                if len(a0) == 1 and is_ident(a0[0]):
-                    # row_to_json(alias) over a FROM-item → whole-row struct
-                    out[i : close + 1] = [
-                        "to_json", "(", "struct", "(", a0[0], ".", "*", ")", ")",
-                    ]
-                else:
-                    out[i : close + 1] = ["to_json", "("] + a0 + [")"]
-                continue
-            if low == "json_extract_path_text":
-                path = "$." + ".".join(a[0].strip("'") for a in args[1:])
-                out[i : close + 1] = ["get_json_object", "("] + args[0] + [",", f"'{path}'", ")"]
-                continue
-            if low == "log" and len(args) == 1:
-                out[i] = "log10"
-                i += 1
-                continue
-            if low == "median" and len(args) == 1:
-                out[i : close + 1] = ["percentile", "("] + args[0] + [",", "0.5", ")"]
-                continue
-            if (
-                low in ("rank", "dense_rank", "percent_rank", "cume_dist")
-                and len(args) == 1
-                and args[0]
-                and close + 3 < len(out)
-                and is_ident(out[close + 1])
-                and out[close + 1].lower() == "within"
-                and is_ident(out[close + 2])
-                and out[close + 2].lower() == "group"
-                and out[close + 3] == "("
-            ):
-                # hypothetical-set aggregates (orderedsetaggs.c:155):
-                # rank(h) = count(v < h) + 1 over the group, etc. —
-                # conditional counts, fully partial-aggregatable (the
-                # DataFrame twins live in operators/aggregate.py)
-                wend = match_close(out, close + 3)
-                spec = out[close + 4 : wend]
-                if (
-                    len(spec) >= 3
-                    and is_ident(spec[0])
-                    and spec[0].lower() == "order"
-                    and spec[1].lower() == "by"
-                ):
-                    body = spec[2:]
-                    desc = False
-                    if body and is_ident(body[-1]) and body[-1].lower() in (
-                        "asc", "desc"
-                    ):
-                        desc = body[-1].lower() == "desc"
-                        body = body[:-1]
-                    v = "( " + join_tokens(body) + " )"
-                    h = "( " + " ".join(args[0]) + " )"
-                    lt = ">" if desc else "<"
-                    le = ">=" if desc else "<="
-                    if low == "rank":
-                        new = (
-                            f"(count(CASE WHEN {v} {lt} {h} THEN 1 END) + 1)"
-                        )
-                    elif low == "dense_rank":
-                        new = (
-                            f"(count(DISTINCT CASE WHEN {v} {lt} {h} "
-                            f"THEN {v} END) + 1)"
-                        )
-                    elif low == "percent_rank":
-                        new = (
-                            f"(CAST(count(CASE WHEN {v} {lt} {h} THEN 1 "
-                            f"END) AS DOUBLE) / greatest(count(1), 1))"
-                        )
-                    else:  # cume_dist
-                        new = (
-                            f"(CAST(count(CASE WHEN {v} {le} {h} THEN 1 "
-                            f"END) + 1 AS DOUBLE) / (count(1) + 1))"
-                        )
-                    out[i : wend + 1] = tokenize(new)
-                    continue
-            if (
-                low in ("percentile_cont", "percentile_disc")
-                and len(args) == 1
-                and len(args[0]) == 1
-                and args[0][0].lower() == "null"
-            ):
-                # PG ordered-set aggs return NULL for a NULL fraction
-                # (orderedsetaggs.c); Spark and DuckDB both reject a NULL
-                # percentage, so fold the whole aggregate — including a
-                # trailing WITHIN GROUP (ORDER BY ...) — to a NULL-valued
-                # aggregate (max keeps scalar/grouped cardinality intact).
-                end = close
-                j = close + 1
-                if (
-                    j + 2 < len(out)
-                    and is_ident(out[j])
-                    and out[j].lower() == "within"
-                    and is_ident(out[j + 1])
-                    and out[j + 1].lower() == "group"
-                    and out[j + 2] == "("
-                ):
-                    end = match_close(out, j + 2)
-                out[i : end + 1] = [
-                    "max", "(", "cast", "(", "null", "as", "double", ")", ")",
-                ]
-                continue
-            if low == "div" and len(args) == 2:
-                out[i : close + 1] = ["("] + args[0] + ["DIV"] + args[1] + [")"]
-                continue
-            if (
-                low == "trunc"
-                and len(args) == 2
-                and not (len(args[1]) == 1 and is_string(args[1][0]))
-            ):
-                # numeric.c trunc(v, s): truncate toward zero at scale s
-                # (string second arg is Spark's own trunc(date, fmt) —
-                # untouched)
-                v, s = " ".join(args[0]), " ".join(args[1])
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN ({v}) >= 0 THEN floor(({v}) * power(10, ({s}))) "
-                    f"ELSE ceil(({v}) * power(10, ({s}))) END / power(10, ({s})))"
-                )
-                continue
-            if (
-                low == "format"
-                and len(args) >= 1
-                and len(args[0]) == 1
-                and is_string(args[0][0])
-            ):
-                out[i : close + 1] = _lower_pg_format(args)
-                continue
-            if (
-                low == "regexp_matches"
-                and len(args) in (2, 3)
-                and len(args[1]) == 1
-                and is_string(args[1][0])
-            ):
-                out[i : close + 1] = _lower_regexp_matches(args)
-                continue
-            if (
-                low == "unnest"
-                and len(args) == 1
-                and (md := _md_array_depth(args[0])) >= 2
-            ):
-                # multi-dim arrays unnest to SCALARS in storage order
-                # (arrayfuncs.c array_unnest walks the flat data array)
-                inner = " ".join(args[0])
-                for _ in range(md - 1):
-                    inner = f"flatten({inner})"
-                out[i : close + 1] = tokenize(f"explode({inner})")
-                continue
-            if low in ("similarity", "show_trgm", "difference") and args:
-                # contrib/pg_trgm trgm_op.c; fuzzystrmatch difference
-                from greengage_spark.functions import trgm
-
-                if low == "similarity" and len(args) == 2:
-                    expansion = trgm.similarity_sql(
-                        " ".join(args[0]), " ".join(args[1])
-                    )
-                elif low == "show_trgm" and len(args) == 1:
-                    expansion = trgm.trigrams_sql(" ".join(args[0]))
-                elif low == "difference" and len(args) == 2:
-                    expansion = trgm.difference_sql(
-                        " ".join(args[0]), " ".join(args[1])
-                    )
-                else:
-                    i += 1
-                    continue
-                out[i : close + 1] = ["(" + expansion + ")"]
-                continue
-            if (
-                low == "digest"
-                and len(args) == 2
-                and len(args[1]) == 1
-                and is_string(args[1][0])
-            ):
-                # contrib/pgcrypto digest(data, algo) → bytea (px.c)
-                algo = args[1][0].strip("'").lower()
-                x = " ".join(args[0])
-                if algo == "md5":
-                    expr = f"unhex(md5(({x})))"
-                elif algo == "sha1":
-                    expr = f"unhex(sha1(({x})))"
-                elif algo in ("sha224", "sha256", "sha384", "sha512"):
-                    expr = f"unhex(sha2(({x}), {algo[3:]}))"
-                else:
-                    raise NotImplementedError(
-                        f"digest algorithm {algo!r} (md5, sha1, sha224, "
-                        "sha256, sha384, sha512)"
-                    )
-                out[i : close + 1] = tokenize(expr)
-                continue
-            if (
-                low == "hmac"
-                and len(args) == 3
-                and len(args[2]) == 1
-                and is_string(args[2][0])
-            ):
-                # contrib/pgcrypto hmac(data, key, type) → bytea
-                # (pgcrypto.c:161); Arrow-batched UDF — no JVM builtin
-                algo = args[2][0].strip("'").lower()
-                if algo not in (
-                    "md5", "sha1", "sha224", "sha256", "sha384", "sha512"
-                ):
-                    raise NotImplementedError(
-                        f"hmac algorithm {algo!r} (md5, sha1, sha224, "
-                        "sha256, sha384, sha512)"
-                    )
-                a, k = (" ".join(x) for x in args[:2])
-                out[i : close + 1] = tokenize(
-                    f"pg_hmac(CAST(({a}) AS STRING), "
-                    f"CAST(({k}) AS STRING), '{algo}')"
-                )
-                continue
-            if low in (
-                "nlevel", "subltree", "subpath", "lca",
-                "text2ltree", "ltree2text",
-            ) or (low == "index" and len(args) in (2, 3)):
-                # contrib/ltree function surface (ltree_op.c; emitters in
-                # functions/ltree_ops.py — all JVM array expressions)
-                from greengage_spark.functions import ltree_ops as L
-
-                a = ["(" + " ".join(x) + ")" for x in args]
-                if low == "nlevel" and len(a) == 1:
-                    expr = L.nlevel_sql(a[0])
-                elif low == "subltree" and len(a) == 3:
-                    expr = L.subltree_sql(*a)
-                elif low == "subpath" and len(a) in (2, 3):
-                    expr = L.subpath_sql(*a)
-                elif low == "index":
-                    expr = L.index_sql(*a)
-                elif low == "lca" and 1 <= len(a) <= 8:
-                    if len(a) == 1 and args[0] and is_string(args[0][0]) \
-                            and args[0][0].lstrip("'").startswith("{"):
-                        raise NotImplementedError(
-                            "lca('{...}') array form — pass the paths as "
-                            "separate arguments (up to 8, as in PG)"
-                        )
-                    expr = L.lca_sql(*a)
-                elif low in ("text2ltree", "ltree2text") and len(a) == 1:
-                    expr = a[0]  # identity: ltree IS its text form
-                else:
-                    i += 1
-                    continue
-                out[i : close + 1] = tokenize(expr)
-                continue
-            if low in ("xpath", "xpath_exists") and len(args) in (2, 3):
-                # xml.c:4082,4132 — child/attribute/text() subset over an
-                # Arrow-batched ElementTree UDF (functions/xmlquery.py);
-                # the 3-arg namespace array resolves prefixed steps and
-                # results serialize with the document's own prefixes
-                if len(args) == 3:
-                    p, x, n = (" ".join(a) for a in args)
-                    fn = (
-                        "pg_xpath_ns"
-                        if low == "xpath"
-                        else "pg_xpath_exists_ns"
-                    )
-                    out[i : close + 1] = tokenize(
-                        f"{fn}(CAST(({p}) AS STRING), "
-                        f"CAST(({x}) AS STRING), "
-                        f"CAST(({n}) AS ARRAY<ARRAY<STRING>>))"
-                    )
-                    continue
-                p, x = (" ".join(a) for a in args)
-                fn = "pg_xpath" if low == "xpath" else "pg_xpath_exists"
-                out[i : close + 1] = tokenize(
-                    f"{fn}(CAST(({p}) AS STRING), CAST(({x}) AS STRING))"
-                )
-                continue
-            if low == "instr" and len(args) in (3, 4):
-                # orafce plvstr.c instr(str, sub, pos [, nth]) — Spark's
-                # 2-arg instr passes through untouched
-                from greengage_spark.functions.orafce import instr_sql
-
-                a = [" ".join(x) for x in args]
-                nth = a[3] if len(a) == 4 else "1"
-                out[i : close + 1] = [
-                    "(" + instr_sql(a[0], a[1], a[2], nth) + ")"
-                ]
-                continue
-            if low == "lnnvl" and len(args) == 1:
-                # orafce lnnvl: TRUE when the condition is FALSE or NULL
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(f"(({a}) IS NOT TRUE)")
-                continue
-            if low == "nanvl" and len(args) == 2:
-                a, b = (" ".join(x) for x in args)
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN isnan(CAST(({a}) AS DOUBLE)) "
-                    f"THEN ({b}) ELSE ({a}) END)"
-                )
-                continue
-            if low == "wm_concat" and len(args) == 1:
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"string_agg(CAST(({a}) AS STRING), ',')"
-                )
-                continue
-            if (
-                low == "round"
-                and len(args) == 2
-                and len(args[1]) == 1
-                and is_string(args[1][0])
-            ):
-                # orafce ROUND(date, 'fmt') — numeric round keeps its
-                # normal lowering (second arg numeric)
-                from greengage_spark.functions.orafce import round_date_sql
-
-                out[i : close + 1] = [
-                    "("
-                    + round_date_sql(" ".join(args[0]), args[1][0])
-                    + ")"
-                ]
-                continue
-            if low in (
-                "xpath_string", "xpath_number", "xpath_bool"
-            ) and len(args) == 2:
-                # contrib/xml2 (xpath.c): (document, query) — argument
-                # order REVERSED vs xpath(query, document)
-                d, p = (" ".join(x) for x in args)
-                out[i : close + 1] = tokenize(
-                    f"pg_{low}(CAST(({d}) AS STRING), CAST(({p}) AS STRING))"
-                )
-                continue
-            if low == "xpath_list" and len(args) in (2, 3):
-                d, p = (" ".join(x) for x in args[:2])
-                sep = " ".join(args[2]) if len(args) == 3 else "','"
-                out[i : close + 1] = tokenize(
-                    f"pg_xpath_list(CAST(({d}) AS STRING), "
-                    f"CAST(({p}) AS STRING), CAST(({sep}) AS STRING))"
-                )
-                continue
-            if low == "xpath_nodeset" and len(args) in (2, 3, 4):
-                a = [" ".join(x) for x in args]
-                top = a[2] if len(a) >= 3 else "''"
-                item = a[3] if len(a) == 4 else "''"
-                out[i : close + 1] = tokenize(
-                    f"pg_xpath_nodeset(CAST(({a[0]}) AS STRING), "
-                    f"CAST(({a[1]}) AS STRING), CAST(({top}) AS STRING), "
-                    f"CAST(({item}) AS STRING))"
-                )
-                continue
-            if low in ("xml_valid", "xml_is_well_formed") and len(args) == 1:
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"pg_xml_valid(CAST(({a}) AS STRING))"
-                )
-                continue
-            if low == "timeofday" and len(args) == 0:
-                # misc.c timeofday(): wall clock as PG's asctime-style
-                # text ('Wed Aug 15 17:00:00.000000 2026 UTC')
-                out[i : close + 1] = tokenize(
-                    "date_format(now(), "
-                    "'EEE MMM dd HH:mm:ss.SSSSSS yyyy zz')"
-                )
-                continue
-            if low == "to_ascii" and len(args) in (1, 2):
-                # ascii.c to_ascii: LATIN-block accent fold to ASCII —
-                # the unaccent translate table covers the same block
-                from greengage_spark.functions.unaccent import unaccent_sql
-
-                out[i : close + 1] = tokenize(
-                    unaccent_sql(" ".join(args[0]))
-                )
-                continue
-            if low == "unaccent" and len(args) in (1, 2):
-                # contrib/unaccent unaccent.c:262 unaccent_dict — the
-                # 2-arg form names a dictionary; only the stock one
-                # exists.  Lowered to one JVM translate() (every stock
-                # rule is single-char → single-char).
-                if len(args) == 2:
-                    d = args[0]
-                    dname = (
-                        d[0].strip("'").lower().split(".")[-1]
-                        if len(d) == 1 and is_string(d[0])
-                        else None
-                    )
-                    # tolerate a ::regdictionary cast on the literal
-                    if dname is None and (
-                        len(d) == 3
-                        and is_string(d[0])
-                        and d[1] == "::"
-                        and d[2].lower() == "regdictionary"
-                    ):
-                        dname = d[0].strip("'").lower().split(".")[-1]
-                    if dname != "unaccent":
-                        raise NotImplementedError(
-                            "unaccent: only the stock 'unaccent' "
-                            "dictionary is available"
-                        )
-                    args = args[1:]
-                from greengage_spark.functions.unaccent import unaccent_sql
-
-                out[i : close + 1] = tokenize(
-                    unaccent_sql(" ".join(args[0]))
-                )
-                continue
-            if low == "crypt" and len(args) == 2:
-                # pgcrypto.c:204 crypt(password, salt) — md5-crypt scheme
-                a, b = (" ".join(x) for x in args)
-                out[i : close + 1] = tokenize(f"pg_crypt(({a}), ({b}))")
-                continue
-            if low in ("encrypt", "decrypt") and len(args) == 3:
-                # pgcrypto.h:43-44 encrypt/decrypt(data, key, type) —
-                # zero-IV block cipher (functions/pgcipher.py AES core)
-                a, k, t = ("(" + " ".join(x) + ")" for x in args)
-                out[i : close + 1] = tokenize(
-                    f"pg_{low}(CAST({a} AS BINARY), CAST({k} AS BINARY), "
-                    f"CAST({t} AS STRING))"
-                )
-                continue
-            if low in ("encrypt_iv", "decrypt_iv") and len(args) == 4:
-                # pgcrypto.h:45 — explicit IV variant
-                a, k, v, t = ("(" + " ".join(x) + ")" for x in args)
-                out[i : close + 1] = tokenize(
-                    f"pg_{low}(CAST({a} AS BINARY), CAST({k} AS BINARY), "
-                    f"CAST({v} AS BINARY), CAST({t} AS STRING))"
-                )
-                continue
-            if low == "pgp_sym_encrypt" and len(args) in (2, 3):
-                # pgp-pgsql.c:538 — RFC 4880 SymKey-ESK + SEIPD subset
-                a = ["(" + " ".join(x) + ")" for x in args]
-                opts = f"CAST({a[2]} AS STRING)" if len(a) == 3 else "NULL"
-                out[i : close + 1] = tokenize(
-                    f"pg_pgp_sym_encrypt(CAST({a[0]} AS STRING), "
-                    f"CAST({a[1]} AS STRING), {opts})"
-                )
-                continue
-            if low in (
-                "pgp_sym_decrypt", "pgp_sym_decrypt_bytea"
-            ) and len(args) in (2, 3):
-                a = ["(" + " ".join(x) + ")" for x in args]
-                opts = f"CAST({a[2]} AS STRING)" if len(a) == 3 else "NULL"
-                fn = (
-                    "pg_pgp_sym_decrypt_bytea"
-                    if low.endswith("bytea")
-                    else "pg_pgp_sym_decrypt"
-                )
-                out[i : close + 1] = tokenize(
-                    f"{fn}(CAST({a[0]} AS BINARY), "
-                    f"CAST({a[1]} AS STRING), {opts})"
-                )
-                continue
-            if low == "pgp_sym_encrypt_bytea" and len(args) in (2, 3):
-                # writes literal-format 'b' (pgp-encrypt.c:387) where the
-                # text variant writes 't'
-                a = ["(" + " ".join(x) + ")" for x in args]
-                opts = f"CAST({a[2]} AS STRING)" if len(a) == 3 else "NULL"
-                out[i : close + 1] = tokenize(
-                    f"pg_pgp_sym_encrypt_bytea(CAST({a[0]} AS BINARY), "
-                    f"CAST({a[1]} AS STRING), {opts})"
-                )
-                continue
-            if low == "armor" and len(args) == 1:
-                # pgp-armor.c — base64 + CRC-24 framing
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"pg_armor(CAST(({a}) AS BINARY))"
-                )
-                continue
-            if low == "dearmor" and len(args) == 1:
-                a = " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"pg_dearmor(CAST(({a}) AS STRING))"
-                )
-                continue
-            if low == "gen_salt" and len(args) in (1, 2):
-                # pgcrypto.c:232 gen_salt(type [, iter]) — md5 takes no
-                # iteration count; bf's is the log2 cost (px-crypt.c)
-                a = " ".join(args[0])
-                if len(args) == 2:
-                    b = " ".join(args[1])
-                    out[i : close + 1] = tokenize(
-                        f"pg_gen_salt2(({a}), CAST(({b}) AS INT))"
-                    )
-                else:
-                    out[i : close + 1] = tokenize(f"pg_gen_salt(({a}))")
-                continue
-            if low == "levenshtein_less_equal" and len(args) == 3:
-                # fuzzystrmatch: exact only up to k, anything larger may
-                # report k+1 (the documented contract)
-                a, b, k = (" ".join(x) for x in args)
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN levenshtein(({a}), ({b})) <= ({k}) "
-                    f"THEN levenshtein(({a}), ({b})) ELSE ({k}) + 1 END)"
-                )
-                continue
-            if low == "concat" and args:
-                # varlena.c text_concat is variadic and SKIPS NULLs
-                # (Spark's concat returns NULL on any NULL input);
-                # concat_ws('') has PG's skip semantics
-                new = ["concat_ws", "(", "''"]
-                for a in args:
-                    new += [","] + a
-                out[i : close + 1] = new + [")"]
-                continue
-            if low == "make_interval" and len(args) <= 7:
-                # timestamp.c make_interval: (years, months, weeks, days,
-                # hours, mins, secs).  Spark splits interval types, so
-                # the literal-argument form routes to make_ym_interval /
-                # make_dt_interval; a genuinely mixed call has no
-                # representable result type
-                vals = [" ".join(a) for a in args] + ["0"] * (7 - len(args))
-                ym_zero = all(v.strip() == "0" for v in vals[:2])
-                dt_zero = all(v.strip() == "0" for v in vals[2:])
-                if ym_zero:
-                    d = f"({vals[3]}) + 7 * ({vals[2]})"
-                    out[i : close + 1] = tokenize(
-                        f"make_dt_interval({d}, {vals[4]}, {vals[5]}, {vals[6]})"
-                    )
-                    continue
-                if dt_zero:
-                    out[i : close + 1] = tokenize(
-                        f"make_ym_interval({vals[0]}, {vals[1]})"
-                    )
-                    continue
-                raise NotImplementedError(
-                    "make_interval mixing year-month and day-time parts "
-                    "has no Spark interval type"
-                )
-            if low in ("to_json", "to_jsonb") and len(args) == 1:
-                # json.c to_json renders ANY value; Spark's only takes
-                # complex types.  Wrap in a one-element array and strip
-                # the brackets — scalars render as JSON scalars (strings
-                # keep their quotes, unlike get_json_object), complex
-                # values pass through unchanged.  An arg that is already
-                # an array constructor needs no wrap (and skipping it
-                # terminates the rewrite's own recursion).
-                head0 = (
-                    args[0][0].lower()
-                    if args[0] and is_ident(args[0][0])
-                    else None
-                )
-                if head0 == "array":
-                    out[i] = "to_json"
-                    i += 1
-                    continue
-                a0 = " ".join(args[0])
-                wrapped = f"to_json(array(({a0})))"
-                out[i : close + 1] = tokenize(
-                    f"(CASE WHEN ({a0}) IS NULL THEN NULL ELSE "
-                    f"substr({wrapped}, 2, length({wrapped}) - 2) END)"
-                )
-                continue
-            if low == "age" and len(args) in (1, 2):
-                # timestamp.c timestamp_age — symbolic interval, rendered
-                # as PG text (functions/horology.py documents the
-                # mixed-interval type divergence).  The 1-arg form ages
-                # against today's midnight (timestamptz_age vs
-                # CURRENT_DATE, gram.y func_expr)
-                if len(args) == 2:
-                    a0, a1 = " ".join(args[0]), " ".join(args[1])
-                else:
-                    a0, a1 = "CAST(current_date() AS STRING)", " ".join(args[0])
-                out[i : close + 1] = tokenize(
-                    f"pg_age(CAST(({a0}) AS TIMESTAMP_NTZ), "
-                    f"CAST(({a1}) AS TIMESTAMP_NTZ))"
-                )
-                continue
-            if (
-                low in ("substr", "substring")
-                and len(args) in (2, 3)
-                and not (len(args[1]) == 1 and is_string(args[1][0]))
-                and args[1][:1] != ["greatest"]  # already rewritten
-            ):
-                # varlena.c text_substr: a start below 1 clips from
-                # position 1 with the window shortened (substr('hello',
-                # -1, 3) = 'h'); Spark's negative start counts from the
-                # END — silently different rows, so always guard
-                s0, s1 = " ".join(args[0]), " ".join(args[1])
-                if len(args) == 3:
-                    s2 = " ".join(args[2])
-                    out[i : close + 1] = tokenize(
-                        f"substring(({s0}), greatest(({s1}), 1), "
-                        f"greatest(({s1}) + ({s2}) - greatest(({s1}), 1), 0))"
-                    )
-                else:
-                    out[i : close + 1] = tokenize(
-                        f"substring(({s0}), greatest(({s1}), 1))"
-                    )
-                continue
-            if low in (
-                "justify_days", "justify_hours", "justify_interval"
-            ) and len(args) == 1:
-                a0 = " ".join(args[0])
-                out[i : close + 1] = tokenize(f"pg_{low}(({a0}))")
-                continue
-            if low in ("num_nonnulls", "num_nulls") and args:
-                # variadic NULL counters (misc.c, PG 9.6)
-                neg = "NOT " if low == "num_nonnulls" else ""
-                body = " + ".join(
-                    f"(CASE WHEN ({' '.join(a)}) IS {neg}NULL THEN 1 ELSE 0 END)"
-                    for a in args
-                )
-                out[i : close + 1] = tokenize(f"CAST(({body}) AS INT)")
-                continue
-            if low in _FUNC_RENAME:
-                out[i] = _FUNC_RENAME[low]
-                i += 1
-                continue
+        lower = _CALL_LOWERINGS.get(out[i].lower()) if is_ident(out[i]) else None
+        if lower is not None and (hit := lower(out, i)) is not None:
+            out[i : hit[1]] = hit[0]
         i += 1
     return out
 

@@ -765,6 +765,11 @@ class TestCallLoweringForms:
         )
         assert out == [(86400, 20, 3, 199)]
 
+    def test_date_part_epoch_of_interval(self, spark):
+        # date_part and EXTRACT share one field lowering
+        out = self._rows(spark, "SELECT date_part('epoch', interval '1 day 2 hours') AS e")
+        assert out == [(93600,)]
+
     def test_fm_numeric_template_with_decimals(self, spark):
         assert self._rows(spark, "SELECT to_char(12.5, 'FM99.99') AS s") == [("12.5",)]
 
@@ -790,6 +795,11 @@ class TestCallLoweringForms:
             "SELECT regexp_split_to_array('aXbxc', p, 'i') AS a FROM (SELECT 'x' AS p) t",
         )
         assert out == [(["a", "b", "c"],)]
+
+    def test_substr_start_clamped_below_one(self, spark):
+        # a greatest() start can still be below 1, so it is clipped too
+        out = self._rows(spark, "SELECT substr('hello', greatest(-1, -2), 3) AS s")
+        assert out == [("h",)]
 
     def test_sha1_digest(self, spark):
         out = self._rows(spark, "SELECT encode(digest('abc', 'sha1'), 'hex') AS h")

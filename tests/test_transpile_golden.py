@@ -102,3 +102,31 @@ def test_every_pass_changes_an_entry(replay_state, monkeypatch):
     for e in _entries():
         _replay(e, replay_state)
     assert [n for n in names if n not in fired] == []
+
+
+def test_every_call_lowering_changes_an_entry(replay_state, monkeypatch):
+    """Each name-keyed entry of ``_CALL_LOWERINGS`` (a call's forms,
+    inline templates, type-name casts and renames alike) changes at
+    least one corpus entry; raising counts as a change."""
+    fired: set[str] = set()
+
+    def watch(name, lower):
+        def run(toks, i):
+            try:
+                hit = lower(toks, i)
+            except Exception:
+                fired.add(name)
+                raise
+            if hit is not None and toks[i : hit[1]] != hit[0]:
+                fired.add(name)
+            return hit
+
+        return run
+
+    table = transpiler._CALL_LOWERINGS
+    monkeypatch.setattr(
+        transpiler, "_CALL_LOWERINGS", {n: watch(n, f) for n, f in table.items()}
+    )
+    for e in _entries():
+        _replay(e, replay_state)
+    assert [n for n in table if n not in fired] == []
