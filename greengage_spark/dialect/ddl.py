@@ -92,6 +92,16 @@ def map_pg_type(pg_type: str) -> str:
     m = re.match(r"(varchar|character varying|char|character|bpchar)\s*(\(\s*\d+\s*\))?$", t)
     if m:
         return "string"  # char(n) pad semantics emulated at function level
+    # gram.y Numeric: FLOAT is float8; FLOAT(p) is float4 for p 1-24 and
+    # float8 for 25-53, and any other precision is an error
+    m = re.match(r"float\s*(\(\s*(\d+)\s*\))?$", t)
+    if m:
+        if m.group(1) is None:
+            return "double"
+        p = int(m.group(2))
+        if not 1 <= p <= 53:
+            raise ValueError(f"precision for type float must be 1-53, got {p}")
+        return "float" if p <= 24 else "double"
     m = re.match(r"timestamp(\s*\(\d+\))?( without time zone)?$", t)
     if m:
         return "timestamp_ntz"

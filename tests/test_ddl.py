@@ -43,6 +43,11 @@ class TestTypeMap:
             ("timestamp with time zone", "timestamp"),
             ("int4[]", "array<int>"),
             ("jsonb", "string"),
+            ("float", "double"),
+            ("float(1)", "float"),
+            ("float(24)", "float"),
+            ("float(25)", "double"),
+            ("float(53)", "double"),
         ],
     )
     def test_map(self, pg, spark):
@@ -51,6 +56,10 @@ class TestTypeMap:
     def test_numeric_over_cap_raises(self):
         with pytest.raises(ValueError):
             map_pg_type("numeric(45,10)")
+
+    def test_float_precision_over_53_raises(self):
+        with pytest.raises(ValueError, match="precision for type float"):
+            map_pg_type("float(54)")
 
     def test_unknown_raises(self):
         with pytest.raises(ValueError):
