@@ -2196,11 +2196,18 @@ def _geo_strip(toks: list[str]) -> str:
 def _geo_call(fn: str, inner_toks: list[str]) -> str:
     from greengage_spark.functions import geometry as geo
 
-    sqls = [_geo_strip(a) for a in split_top(inner_toks) if a]
+    args = [a for a in split_top(inner_toks) if a]
+    sqls = [_geo_strip(a) for a in args]
     if fn == "geo" or fn in _GEO_MARKERS2:
         return f"({sqls[0]})"  # identity markers: strip on emit
     if fn in _GEO_FUNCS:
         return getattr(geo, fn)(sqls[0])
+    if len(args) == 1:
+        # point('(1,2)'): PG's function-style cast of a literal, lowered
+        # as '(1,2)'::point is (the text is the value)
+        if len(args[0]) != 1 or not is_string(args[0][0]):
+            raise NotImplementedError(f"{fn}() of a non-literal argument is not routed")
+        return f"CAST({args[0][0]} AS STRING)"
     if fn == "point":
         return geo.make_point(sqls[0], sqls[1])
     if fn == "circle":
@@ -7578,9 +7585,20 @@ def _to_json(arg: list[str]) -> list[str]:
     get_json_object), complex values pass through unchanged.  An array
     constructor argument is already complex and stays a plain call,
     which is also how the wrapper's own ``to_json(array(…))`` reads
-    back when its body is rescanned."""
+    back when its body is rescanned.  An anonymous ``ROW(…)`` names its
+    fields f1…fn, as PG's record output does."""
     if arg and is_ident(arg[0]) and arg[0].lower() == "array":
         return ["to_json", "("] + arg + [")"]
+    if (
+        len(arg) > 3
+        and is_ident(arg[0])
+        and arg[0].lower() == "row"
+        and arg[1] == "("
+        and match_close(arg, 1) == len(arg) - 1
+    ):
+        fields = split_top(arg[2:-1])
+        named = [[f"'f{k}'", ","] + f for k, f in enumerate(fields, 1)]
+        arg = ["named_struct", "("] + _comma_joined(named) + [")"]
     a0 = " ".join(arg)
     wrapped = f"to_json(array(({a0})))"
     return tokenize(

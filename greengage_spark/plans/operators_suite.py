@@ -28,7 +28,7 @@ from greengage_spark.operators.aggregate import (
 from greengage_spark.operators.joins import asof_join, not_in_anti_join, range_join
 from greengage_spark.operators.recursive import recursive_cte
 from greengage_spark.operators.tablefunc import grouped_table_function
-from greengage_spark.plans.common import SQL_MONEY, Suite, cat, money, ts
+from greengage_spark.plans.common import SQL_MONEY, Suite, cat, cents, fsum, ts, unscale
 from greengage_spark.sources.external import ExternalTable, copy_to
 
 suite = Suite("operators")
@@ -54,7 +54,7 @@ def join_inner_hash(spark, sf_dir):
         c.table("orders")
         .join(c.table("customer"), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum(money("o_totalprice")).cast("double").alias("total"))
+        .agg(F.count(F.lit(1)).alias("cnt"), fsum(cents("o_totalprice"), 2).alias("total"))
     )
 
 
@@ -265,7 +265,7 @@ def join_theta_band(spark, sf_dir):
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum(money("p_retailprice")).cast("double").alias("total"),
+            fsum(cents("p_retailprice"), 2).alias("total"),
         )
     )
 
@@ -287,7 +287,7 @@ def join_asof_events(spark, sf_dir):
     ev = c.table("events")
     purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("ts").alias("click_ts"), money("value").alias("click_value")
+        "user_id", "ts", F.col("ts").alias("click_ts"), cents("value").alias("click_value")
     )
     joined = asof_join(
         purchases,
@@ -300,7 +300,7 @@ def join_asof_events(spark, sf_dir):
     )
     # DuckDB ASOF JOIN is inner: drop left rows with no match
     return joined.filter(F.col("click_ts").isNotNull()).select(
-        "event_id", "user_id", "ts", "click_ts", F.col("click_value").cast("double").alias("click_value")
+        "event_id", "user_id", "ts", "click_ts", unscale(F.col("click_value"), 2).alias("click_value")
     )
 
 
@@ -561,7 +561,7 @@ def partition_pruned_scan(spark, sf_dir):
         .groupBy(F.col("o_orderdate").cast("date").alias("order_day"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("total"),
+            fsum(cents("o_totalprice"), 2).alias("total"),
         )
     )
 
@@ -598,7 +598,7 @@ def join_salted_skew(spark, sf_dir):
     )
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(money("l_extendedprice")).cast("double").alias("total"),
+        fsum(cents("l_extendedprice"), 2).alias("total"),
     )
 
 
@@ -664,7 +664,7 @@ def partition_declared_bounds(spark, sf_dir):
         .groupBy(F.month("o_orderdate").alias("mon"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("total"),
+            fsum(cents("o_totalprice"), 2).alias("total"),
         )
     )
 
@@ -729,6 +729,6 @@ def partition_subpartition_pruning(spark, sf_dir):
         .groupBy(F.col("o_year").alias("yr"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("total"),
+            fsum(cents("o_totalprice"), 2).alias("total"),
         )
     )

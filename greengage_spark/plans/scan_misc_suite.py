@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 from greengage_spark.operators.aggregate import linear_interpolate
 from greengage_spark.operators.recursive import recursive_cte
 from greengage_spark.operators.tablefunc import grouped_table_function, table_function
-from greengage_spark.plans.common import Suite, cat, money, ts
+from greengage_spark.plans.common import Suite, cat, cents, ts, unscale, usum
 from greengage_spark.sources.external import ExternalTable, copy_to
 
 suite = Suite("scan_misc")
@@ -588,15 +588,16 @@ def cte_shared_materialize(spark, sf_dir):
     l = cat(spark, sf_dir).table("lineitem")
     hot = (
         l.groupBy("l_partkey")
-        .agg(F.sum(money("l_quantity")).alias("qty"))
-        .filter(F.col("qty") > 100)
+        .agg(usum(cents("l_quantity")).alias("qty"))
+        .filter(F.col("qty") > 10000)
+        .select("l_partkey", unscale(F.col("qty"), 2).alias("qty"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    stats = hot.agg(F.avg(F.col("qty").cast("double")).alias("avg_qty"))
+    stats = hot.agg(F.avg("qty").alias("avg_qty"))
     return hot.crossJoin(F.broadcast(stats)).select(
         "l_partkey",
-        F.col("qty").cast("double").alias("qty"),
-        F.when(F.col("qty").cast("double") > F.col("avg_qty"), "above")
+        "qty",
+        F.when(F.col("qty") > F.col("avg_qty"), "above")
         .otherwise("at_or_below")
         .alias("band"),
     )

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from greengage_spark.plans.common import Suite, cat, money
+from greengage_spark.plans.common import Suite, cat, cents, fsum
 from greengage_spark.streaming.windows import session_agg, sliding_agg, tumbling_agg
 
 suite = Suite("streaming")
@@ -41,7 +41,7 @@ def stream_tumbling_window(spark, sf_dir):
         ["event_type"],
         [
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(money("value")).cast("double").alias("total_value"),
+            fsum(cents("value"), 2).alias("total_value"),
         ],
     )
     return out.select(

@@ -26,11 +26,13 @@ from greengage_spark.plans.common import (
     SQL_DISC_PRICE,
     Suite,
     cat,
-    charge,
-    disc_price,
-    money,
-    rate,
+    cents,
+    charge_e6,
+    disc_price_e4,
+    fsum,
     ts,
+    unscale,
+    usum,
 )
 
 suite = Suite("tpch")
@@ -67,13 +69,13 @@ def q1_pricing_summary(spark, sf_dir):
         l.filter(F.col("l_shipdate") <= ts("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(money("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price()).cast("double").alias("sum_disc_price"),
-            F.sum(charge()).cast("double").alias("sum_charge"),
-            (F.sum(money("l_quantity")).cast("double") / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(money("l_extendedprice")).cast("double") / F.count(F.lit(1))).alias("avg_price"),
-            (F.sum(rate("l_discount")).cast("double") / F.count(F.lit(1))).alias("avg_disc"),
+            fsum(cents("l_quantity"), 2).alias("sum_qty"),
+            fsum(cents("l_extendedprice"), 2).alias("sum_base_price"),
+            fsum(disc_price_e4(), 4).alias("sum_disc_price"),
+            fsum(charge_e6(), 6).alias("sum_charge"),
+            (fsum(cents("l_quantity"), 2) / F.count(F.lit(1))).alias("avg_qty"),
+            (fsum(cents("l_extendedprice"), 2) / F.count(F.lit(1))).alias("avg_price"),
+            (fsum(cents("l_discount"), 2) / F.count(F.lit(1))).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -122,7 +124,7 @@ def q3_shipping_priority(spark, sf_dir):
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(line, F.col("o_orderkey") == line.l_orderkey)
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
+        .agg(fsum(disc_price_e4(), 4).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
@@ -213,7 +215,7 @@ def q5_local_supplier(spark, sf_dir):
         .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
+        .agg(fsum(disc_price_e4(), 4).alias("revenue"))
     )
 
 
@@ -242,7 +244,7 @@ def q6_revenue_forecast(spark, sf_dir):
         & (F.col("l_discount").between(0.05, 0.07))
         & (F.col("l_quantity") < 24)
     ).agg(
-        F.sum(money("l_extendedprice") * rate("l_discount")).cast("double").alias("revenue"),
+        fsum(cents("l_extendedprice") * cents("l_discount"), 4).alias("revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -297,7 +299,7 @@ def q7_volume_shipping(spark, sf_dir):
     return (
         df.withColumn("l_year", F.year("l_shipdate").cast("int"))
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
+        .agg(fsum(disc_price_e4(), 4).alias("revenue"))
     )
 
 
@@ -358,14 +360,14 @@ def q8_market_share(spark, sf_dir):
         .join(n2, F.col("s_nationkey") == F.col("n2_key"))
         .select(
             F.year("o_orderdate").cast("int").alias("o_year"),
-            disc_price().alias("volume"),
+            disc_price_e4().alias("volume"),
             "nation",
         )
     )
     return df.groupBy("o_year").agg(
         (
-            F.sum(F.when(F.col("nation") == "NATION_3", F.col("volume"))).cast("double")
-            / F.sum("volume").cast("double")
+            fsum(F.when(F.col("nation") == "NATION_3", F.col("volume")), 4)
+            / fsum(F.col("volume"), 4)
         ).alias("mkt_share")
     )
 
@@ -403,10 +405,10 @@ def q9_product_profit(spark, sf_dir):
         .select(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
-            disc_price().alias("volume"),
+            disc_price_e4().alias("volume"),
         )
         .groupBy("nation", "o_year")
-        .agg(F.sum("volume").cast("double").alias("sum_profit"))
+        .agg(fsum(F.col("volume"), 4).alias("sum_profit"))
     )
 
 
@@ -447,7 +449,7 @@ def q10_returned_items(spark, sf_dir):
         .join(line, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c.dim("nation"), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
+        .agg(fsum(disc_price_e4(), 4).alias("revenue"))
         .select(
             "c_custkey",
             "c_name",
@@ -558,8 +560,8 @@ def q14_promo_revenue(spark, sf_dir):
         .agg(
             (
                 F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == "PROMO", disc_price())).cast("double")
-                / F.sum(disc_price()).cast("double")
+                * fsum(F.when(F.col("p_type") == "PROMO", disc_price_e4()), 4)
+                / fsum(disc_price_e4(), 4)
             ).alias("promo_revenue")
         )
     )
@@ -567,7 +569,7 @@ def q14_promo_revenue(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Q15 — top supplier: CTE reused twice (ShareInputScan,
-# nodeShareInputScan.c:284) + scalar subquery max.  Exact decimal revenue →
+# nodeShareInputScan.c:284) + scalar subquery max.  Exact unscaled revenue →
 # equality against MAX is deterministic.
 # --------------------------------------------------------------------------
 @suite.add(
@@ -595,7 +597,7 @@ def q15_top_supplier(spark, sf_dir):
             (F.col("l_shipdate") >= ts("1997-01-01")) & (F.col("l_shipdate") < ts("1997-04-01"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(disc_price()).alias("total_revenue"))
+        .agg(usum(disc_price_e4()).alias("total_revenue"))
     )
     # Shared-CTE materialization: reference streams one materialization to
     # two consumers; Spark reuses the exchange, .cache() makes it explicit.
@@ -605,7 +607,7 @@ def q15_top_supplier(spark, sf_dir):
         c.dim("supplier")
         .join(revenue, F.col("s_suppkey") == F.col("supplier_no"))
         .join(max_rev, F.col("total_revenue") == F.col("m"))
-        .select("s_suppkey", "s_name", F.col("total_revenue").cast("double").alias("total_revenue"))
+        .select("s_suppkey", "s_name", unscale(F.col("total_revenue"), 4).alias("total_revenue"))
     )
 
 
@@ -666,14 +668,14 @@ def q17_small_qty_revenue(spark, sf_dir):
     c = cat(spark, sf_dir)
     l = c.table("lineitem")
     per_part = l.groupBy(F.col("l_partkey").alias("agg_pk")).agg(
-        F.sum(money("l_quantity")).alias("sum_qty"), F.count(F.lit(1)).alias("cnt")
+        usum(cents("l_quantity")).alias("sum_qty"), F.count(F.lit(1)).alias("cnt")
     )
     return (
         l.join(c.table("part").filter(F.col("p_brand") == "Brand#3"),
                F.col("p_partkey") == F.col("l_partkey"))
         .join(per_part, F.col("agg_pk") == F.col("l_partkey"))
-        .filter(F.lit(5) * money("l_quantity") * F.col("cnt") < F.col("sum_qty"))
-        .agg((F.sum(money("l_extendedprice")).cast("double") / F.lit(7.0)).alias("avg_yearly"))
+        .filter(F.lit(5) * cents("l_quantity") * F.col("cnt") < F.col("sum_qty"))
+        .agg((fsum(cents("l_extendedprice"), 2) / F.lit(7.0)).alias("avg_yearly"))
     )
 
 
@@ -722,8 +724,8 @@ def q18_large_volume_customer(spark, sf_dir):
     )
     big = (
         l.groupBy("l_orderkey")
-        .agg(F.sum(money("l_quantity")).alias("sq"))
-        .filter(F.col("sq") > 150)
+        .agg(usum(cents("l_quantity")).alias("sq"))
+        .filter(F.col("sq") > 15000)
     )
     return (
         c.table("customer")
@@ -732,7 +734,7 @@ def q18_large_volume_customer(spark, sf_dir):
         .select(
             "c_name", "c_custkey", "o_orderkey", "o_orderdate",
             F.col("o_totalprice").cast("double").alias("o_totalprice"),
-            F.col("sq").cast("double").alias("total_qty"),
+            unscale(F.col("sq"), 2).alias("total_qty"),
         )
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(100)
@@ -771,7 +773,7 @@ def q19_discounted_revenue(spark, sf_dir):
         & F.col("p_size").between(1, 15)
         & F.col("l_quantity").between(20, 30)
     )
-    return j.filter(p).agg(F.sum(disc_price()).cast("double").alias("revenue"))
+    return j.filter(p).agg(fsum(disc_price_e4(), 4).alias("revenue"))
 
 
 # --------------------------------------------------------------------------
@@ -801,8 +803,8 @@ def q20_excess_suppliers(spark, sf_dir):
         .join(c.table("part").filter(F.col("p_type") == "PROMO"),
               F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("l_suppkey")
-        .agg(F.sum(money("l_quantity")).alias("sq"))
-        .filter(F.col("sq") > 100)
+        .agg(usum(cents("l_quantity")).alias("sq"))
+        .filter(F.col("sq") > 10000)
         .select("l_suppkey")
     )
     return (
@@ -966,11 +968,11 @@ def q22_inactive_customers(spark, sf_dir):
     c = cat(spark, sf_dir)
     cust = c.table("customer")
     pos = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        F.sum(money("c_acctbal")).alias("sum_bal"), F.count(F.lit(1)).alias("cnt_bal")
+        usum(cents("c_acctbal")).alias("sum_bal"), F.count(F.lit(1)).alias("cnt_bal")
     )
     return (
         cust.crossJoin(F.broadcast(pos))
-        .filter(money("c_acctbal") * F.col("cnt_bal") > F.col("sum_bal"))
+        .filter(cents("c_acctbal") * F.col("cnt_bal") > F.col("sum_bal"))
         .join(
             c.table("orders").filter(F.col("o_orderdate") >= ts("2000-01-01")),
             F.col("o_custkey") == F.col("c_custkey"),
@@ -979,7 +981,7 @@ def q22_inactive_customers(spark, sf_dir):
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(money("c_acctbal")).cast("double").alias("totacctbal"),
+            fsum(cents("c_acctbal"), 2).alias("totacctbal"),
         )
     )
 
@@ -987,7 +989,7 @@ def q22_inactive_customers(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Q2 / Q11 — the two queries that need partsupp, which the driver testdata
 # lacks.  We derive the same relation from lineitem: one row per
-# (partkey, suppkey) with ps_supplycost := MIN(l_extendedprice as decimal)
+# (partkey, suppkey) with ps_supplycost := MIN(l_extendedprice in cents)
 # — keeping both operator shapes intact: Q2's correlated scalar-MIN
 # subquery (reference: ORCA CSubqueryHandler/CDecorrelator unnests it to a
 # join, gporca/libgpopt/src/xforms/CXformInnerApply2InnerJoin.cpp) and
@@ -1006,7 +1008,7 @@ def _derived_partsupp(c):
     l = c.table("lineitem")
     return l.groupBy(
         l.l_partkey.alias("ps_partkey"), l.l_suppkey.alias("ps_suppkey")
-    ).agg(F.min(money("l_extendedprice")).alias("ps_supplycost"))
+    ).agg(F.min(cents("l_extendedprice")).alias("ps_supplycost"))
 
 
 @suite.add(
@@ -1117,15 +1119,12 @@ def q11_important_stock(spark, sf_dir):
         )
         .groupBy("ps_partkey")
         .agg(
-            F.sum(
-                F.col("ps_supplycost")
-                * (F.col("s_suppkey") % 7 + 1).cast("decimal(4,0)")
-            ).alias("part_value")
+            usum(F.col("ps_supplycost") * (F.col("s_suppkey") % 7 + 1)).alias("part_value")
         )
     )
     tot = nat.agg(F.sum("part_value").alias("total"))
     return (
         nat.crossJoin(F.broadcast(tot))
         .filter(F.col("part_value") * 1000 > F.col("total"))
-        .select("ps_partkey", F.col("part_value").cast("double").alias("part_value"))
+        .select("ps_partkey", unscale(F.col("part_value"), 2).alias("part_value"))
     )

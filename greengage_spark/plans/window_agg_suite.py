@@ -19,7 +19,7 @@ from greengage_spark.operators.aggregate import (
     percentile_cont,
     percentile_disc,
 )
-from greengage_spark.plans.common import SQL_MONEY, Suite, cat, money, rate, ts
+from greengage_spark.plans.common import SQL_MONEY, Suite, cat, cents, fsum, ts, unscale, usum
 
 suite = Suite("window_agg")
 
@@ -123,8 +123,8 @@ def window_frames_rows(spark, sf_dir):
     return _slice(spark, sf_dir).select(
         "l_orderkey",
         "l_linenumber",
-        F.sum(money("l_quantity")).over(base.rowsBetween(-2, 0)).cast("double").alias("moving_sum"),
-        F.min(money("l_quantity")).over(base.rowsBetween(-1, 1)).cast("double").alias("local_min"),
+        unscale(usum(cents("l_quantity")).over(base.rowsBetween(-2, 0)), 2).alias("moving_sum"),
+        unscale(F.min(cents("l_quantity")).over(base.rowsBetween(-1, 1)), 2).alias("local_min"),
     )
 
 
@@ -167,9 +167,7 @@ def window_running_total(spark, sf_dir):
     return cat(spark, sf_dir).table("orders").select(
         "o_orderkey",
         "o_custkey",
-        F.sum(money("o_totalprice"))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("double")
+        unscale(usum(cents("o_totalprice")).over(w.rowsBetween(Window.unboundedPreceding, 0)), 2)
         .alias("running_total"),
         F.row_number().over(w).alias("order_seq"),
     )
@@ -200,7 +198,7 @@ def agg_grouping_sets(spark, sf_dir):
             "l_linestatus",
         )
         .agg(
-            F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
+            fsum(cents("l_quantity"), 2).alias("sum_qty"),
             F.count(F.lit(1)).alias("cnt"),
             F.grouping_id().alias("gid"),
         )
@@ -221,7 +219,7 @@ def agg_grouping_sets(spark, sf_dir):
 def agg_rollup(spark, sf_dir):
     l = cat(spark, sf_dir).table("lineitem")
     return l.rollup("l_returnflag", "l_linestatus").agg(
-        F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
+        fsum(cents("l_quantity"), 2).alias("sum_qty"),
         F.grouping_id().alias("gid"),
     )
 
@@ -240,7 +238,7 @@ def agg_rollup(spark, sf_dir):
 def agg_cube(spark, sf_dir):
     l = cat(spark, sf_dir).table("lineitem")
     return l.cube("l_returnflag", "l_linestatus").agg(
-        F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
+        fsum(cents("l_quantity"), 2).alias("sum_qty"),
         F.grouping_id().alias("gid"),
     )
 
@@ -298,7 +296,7 @@ def agg_pivot(spark, sf_dir):
     return (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.sum(money("o_totalprice")).cast("double"))
+        .agg(fsum(cents("o_totalprice"), 2))
     )
 
 

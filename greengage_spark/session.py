@@ -12,6 +12,13 @@ same plan shape survives a 1000-executor / 100 TB deployment:
   be 2-3× total executor cores — AQE coalescing makes over-partitioning
   cheap and under-partitioning is the only fatal choice at 100 TB.
 * parquet nanos tolerated (driver testdata writes ns timestamps).
+* the codegen cache holds a whole workload's generated classes.  Catalyst
+  compiles each plan to bytecode once and keys the class by its source,
+  but Spark's default cache keeps 100 classes in four LRU segments: one
+  pass of the 15 ``bench.py`` rows at sf0.1 compiles 220 distinct classes,
+  so every pass recompiled about 216 of them (Janino plus JIT of the new
+  classes).  ``CODEGEN_CACHE_ENTRIES`` leaves about 4x headroom over that
+  working set; with it a repeated pass compiles nothing.
 """
 
 from __future__ import annotations
@@ -19,6 +26,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries (static; default 100), sized in the
+# module docstring from the measured working set of 220 classes.
+CODEGEN_CACHE_ENTRIES = 1000
 
 # Runtime-settable confs every entry point applies defensively, because the
 # driver may hand us a session we didn't build.
@@ -67,6 +78,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

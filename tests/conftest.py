@@ -12,6 +12,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # (setdefault), and bench.py/production paths are unaffected (they read
 # the env at their own entry points).
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+# The suite's live heap stays under 1 GB (about 250 MB after a full GC at
+# the end of test_reference_parity), but under the session's 48g default
+# G1 grows the heap instead of collecting: the test JVM reached 8.3-15.4
+# GB resident on a 15.7 GB box, and once the OOM killer took it.  A 6g
+# heap keeps the suite inside the machine; the environment still wins.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -856,6 +856,14 @@ class TestQuoteAndJsonComposition:
         ).collect()[0]
         assert r.v == '{"a":1,"b":"x"}'
 
+    def test_row_to_json_of_anonymous_row(self, spark):
+        # PG names the fields of an anonymous record f1…fn
+        r = pg_sql(
+            spark, "SELECT row_to_json(ROW(1, 'a')) AS j, to_json(ROW(2, 'b')) AS k"
+        ).collect()[0]
+        assert r.j == '{"f1":1,"f2":"a"}'
+        assert r.k == '{"f1":2,"f2":"b"}'
+
     def test_json_aggregates(self, spark):
         r = pg_sql(
             spark,

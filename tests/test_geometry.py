@@ -76,6 +76,12 @@ class TestPointOps:
         df = pg_sql(spark, "SELECT point(3, 4) <-> point(0, 0) AS d")
         assert df.collect()[0]["d"] == 5.0
 
+    def test_point_cast_call(self, spark):
+        # point('(1,2)') is PG's function-style cast of a literal
+        df = pg_sql(spark, "SELECT point('(1,2)') AS p, point('(3,4)') <-> point(0, 0) AS d")
+        row = df.collect()[0]
+        assert row["p"] == "(1,2)" and row["d"] == 5.0
+
 
 class TestCircle:
     def test_center_radius_diameter_area(self, spark):
@@ -112,6 +118,10 @@ class TestCircle:
         df = pg_sql(spark, "SELECT circle(point(1, 2), 3) AS c")
         assert df.collect()[0]["c"] == "<(1,2),3>"
 
+    def test_circle_cast_call(self, spark):
+        df = pg_sql(spark, "SELECT circle('<(0,0),1>') AS c")
+        assert df.collect()[0]["c"] == "<(0,0),1>"
+
 
 class TestBox:
     def test_box_ops(self, spark):
@@ -134,6 +144,10 @@ class TestBox:
     def test_box_constructor_normalizes(self, spark):
         df = pg_sql(spark, "SELECT box(point(0, 5), point(3, 1)) AS b")
         assert df.collect()[0]["b"] == "(3,5),(0,1)"
+
+    def test_box_cast_call(self, spark):
+        df = pg_sql(spark, "SELECT box('(1,1),(0,0)') AS b")
+        assert df.collect()[0]["b"] == "(1,1),(0,0)"
 
 
 class TestRejections:

@@ -204,6 +204,33 @@ class TestAudit:
         assert not silent, silent
         assert ok >= 160  # round-13 floor; regressions would drop this
 
+    def test_extract_functions_splits_like_the_engine(self):
+        """A ``;`` inside a dollar-quoted body or a comment ends no statement."""
+        import os
+        import sys
+
+        sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+        from plpgsql_audit import extract_functions
+
+        script = """
+        -- two functions; the comment's ; ends nothing
+        CREATE FUNCTION add1(x int) RETURNS int AS $$
+        BEGIN
+          x := x + 1;  -- ;
+          RETURN x;
+        END $$ LANGUAGE plpgsql;
+        CREATE OR REPLACE FUNCTION greet(name text) RETURNS text AS $body$
+        BEGIN RETURN 'hi; ' || name; END
+        $body$ LANGUAGE plpgsql;
+        """
+        got = list(extract_functions(script))
+        assert [(n, a, r) for n, a, r, _ in got] == [
+            ("add1", ["x"], "int"),
+            ("greet", ["name"], "text"),
+        ]
+        assert "x := x + 1;  -- ;\n" in got[0][3]
+        assert got[1][3].strip() == "BEGIN RETURN 'hi; ' || name; END"
+
 
 class TestInterpSetof:
     """SETOF plpgsql bodies OUTSIDE the inline-lowering subset run

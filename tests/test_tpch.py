@@ -46,3 +46,21 @@ def test_q1_partial_aggregation(spark, sf_dir):
     df = suite.queries["q1_pricing_summary"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "partial_sum" in plan
+
+
+def test_codegen_cache_holds_the_olap_rows(spark, sf_dir):
+    """A repeated pass of the eight headline rows compiles no class: the
+    session's codegen cache holds every class the first pass generated."""
+    from bench import HEADLINE
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        before = metric.getCount()
+        for name in HEADLINE:
+            suite.queries[name].fn(spark, sf_dir).collect()
+            spark.catalog.clearCache()
+        return metric.getCount() - before
+
+    one_pass()  # compiles the working set
+    assert one_pass() == 0

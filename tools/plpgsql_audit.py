@@ -33,54 +33,16 @@ REGRESS = "/root/reference/src/test/regress/sql/plpgsql.sql"
 
 
 def split_statements(text: str) -> list[str]:
-    """Split on top-level ';' respecting '...', $tag$...$tag$, -- and
-    /* */ comments."""
-    out, buf = [], []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "-" and text[i : i + 2] == "--":
-            j = text.find("\n", i)
-            i = n if j < 0 else j + 1
-            continue
-        if c == "/" and text[i : i + 2] == "/*":
-            j = text.find("*/", i)
-            i = n if j < 0 else j + 2
-            continue
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if text[j : j + 2] == "''":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            buf.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if c == "$":
-            m = re.match(r"\$[A-Za-z_]*\$", text[i:])
-            if m:
-                tag = m.group(0)
-                j = text.find(tag, i + len(tag))
-                if j < 0:
-                    j = n
-                buf.append(text[i : j + len(tag)])
-                i = j + len(tag)
-                continue
-        if c == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                out.append(stmt)
-            buf = []
-            i += 1
-            continue
-        buf.append(c)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
+    """The script's statements (the engine's splitter), with comments
+    blanked: the header regexes below read SQL text only."""
+    from greengage_spark.dialect.spans import lex
+    from greengage_spark.engine import split_statements as split
+
+    out = []
+    for stmt in split(text):
+        for m in reversed([m for m in lex(stmt) if m.lastgroup == "comment"]):
+            stmt = stmt[: m.start()] + " " + stmt[m.end() :]
+        out.append(stmt.strip())
     return out
 
 
